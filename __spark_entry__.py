@@ -99,12 +99,6 @@ ENTITY_PROFILES = [
 ]
 
 JACCARD_THRESHOLD = 0.8
-# blocking-join document-frequency cap: shingles appearing in more than this
-# many docs are excluded from candidate generation (NOT from verification).
-# Engaged ADAPTIVELY (dedup.resolve_jaccard_cap): exact blocking below
-# JACCARD_AUTO_DOCS rows, capped above. The demo cap sits comfortably above
-# the worst true-pair min-df (10) on the testdata family.
-JACCARD_DF_CAP = 16  # == dedup.JACCARD_AUTO_CAP
 # near-dup cosine: production threshold. The testdata embeddings contain no
 # true near-dups (max pairwise cosine ~0.6), so the near-dup query runs over
 # a DERIVED corpus: embeddings ∪ deterministically perturbed copies, whose

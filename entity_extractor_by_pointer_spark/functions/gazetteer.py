@@ -72,101 +72,19 @@ PAGES_GAZETTEER: list[tuple[str, str, str]] = [
 ]
 
 
-def compile_gazetteer(
-    gazetteer: list[tuple[str, str, str]],
-) -> list[tuple[str, int, str]]:
-    """Pre-tokenize gazetteer names into stream-search needles for
-    :func:`gazetteer_spans_fast`: ``(needle, n_tokens, type)`` per name,
-    where ``needle`` is the name's token sequence joined and fenced by
-    ``\\x00`` separators. Compile once per executor batch, not per doc."""
-    compiled = []
-    for name, etype, _eid in gazetteer:
-        toks = [t for t, _, _ in basic_tokenize(name)]
-        if toks:
-            compiled.append(("\x00" + "\x00".join(toks) + "\x00", len(toks), etype))
-    return compiled
-
-
-def gazetteer_spans_fast(
-    text: str,
-    compiled: list[tuple[str, int, str]],
-    gazetteer: list[tuple[str, str, str]],
-    max_tokens: int | None = None,
-) -> list[tuple[str, str, int, int]]:
-    """C-speed equivalent of :func:`gazetteer_spans` (the hot path).
-
-    Tokenizes once, renders the token sequence as a ``\\x00``-separated
-    stream, and finds each pre-compiled needle with ``str.find`` — an
-    Aho-Corasick-lite that replaces the per-token-position Python loop with
-    one C-level substring scan per gazetteer name (the round-2 judge's
-    "vectorize the gazetteer matcher" item). A match in the stream is by
-    construction a token-aligned match, so output (including ordering:
-    gazetteer-major, position-minor) is identical to the reference
-    implementation — pinned by a hypothesis property test. Docs containing a
-    literal NUL token (would make the stream ambiguous) fall back to the
-    reference scan."""
-    toks = basic_tokenize(text)
-    if max_tokens is not None:
-        toks = toks[: max_tokens - 2]
-    if not toks:
-        return []
-    words = [t for t, _, _ in toks]
-    starts: list[int] = []  # stream index of each token's first char
-    pos = 1
-    for w in words:
-        starts.append(pos)
-        pos += len(w) + 1
-        if "\x00" in w:  # ambiguous stream — use the spec implementation
-            return gazetteer_spans(text, gazetteer, max_tokens)
-    stream = "\x00" + "\x00".join(words) + "\x00"
-    from bisect import bisect_left
-
-    out: list[tuple[str, str, int, int]] = []
-    find = stream.find
-    for needle, k, etype in compiled:
-        i = find(needle)
-        while i != -1:
-            ti = bisect_left(starts, i + 1)
-            s = toks[ti][1]
-            e = toks[ti + k - 1][2] - 1  # end-inclusive
-            out.append((etype, text[s : e + 1], s, e))
-            # adjacent occurrences share the fence \x00 → overlap-safe step
-            i = find(needle, i + 1)
-    return out
-
-
-# dictionaries above this size get the Aho-Corasick automaton (one pass per
-# doc regardless of dictionary size); small ones keep the per-needle C-find,
-# which benches faster below a few dozen names (no automaton dispatch cost)
-AC_THRESHOLD = 32
-
-
-def make_matcher(gazetteer: list[tuple[str, str, str]]):
-    """Matcher factory: ``f(text, max_tokens=None) -> spans``. Picks the
-    per-needle C-find for small gazetteers and the Aho-Corasick token
-    automaton above ``AC_THRESHOLD`` names. Build ONCE per executor task
-    (outside the per-doc loop); all paths emit identical spans (pytest)."""
-    if len(gazetteer) > AC_THRESHOLD:
-        return TokenAhoCorasick(gazetteer).spans
-    compiled = compile_gazetteer(gazetteer)
-
-    def match(text: str, max_tokens: int | None = None):
-        return gazetteer_spans_fast(text, compiled, gazetteer, max_tokens)
-
-    return match
-
-
 class TokenAhoCorasick:
-    """Aho-Corasick automaton over TOKEN sequences — the large-dictionary
-    scale path. One pass over a doc's tokens finds every gazetteer match in
-    O(n_tokens + n_matches), independent of dictionary size; the automaton
-    is built once per executor worker from the broadcast gazetteer (the
-    north rule's salted-broadcast linking dim is exactly this shape: ~10⁶
-    alias surfaces × 10¹² docs means per-needle scans are off the table).
+    """Aho-Corasick automaton over TOKEN sequences — the production
+    gazetteer matcher. One pass over a doc's tokens finds every gazetteer
+    match in O(n_tokens + n_matches), independent of dictionary size; build
+    it once per executor task from the gazetteer and call :meth:`spans` per
+    doc (the north rule's salted-broadcast linking dim is exactly this
+    shape: ~10⁶ alias surfaces × 10¹² docs means per-needle scans are off
+    the table). Matching whole tokens, it needs no separator character, so
+    names and texts containing NUL match like any other.
 
     Emits matches in the same order as :func:`gazetteer_spans` (gazetteer-
-    major, position-minor) so all three matchers are interchangeable —
-    equivalence is pytest-pinned on randomized dictionaries."""
+    major, position-minor); :func:`gazetteer_spans` is the spec it is
+    pytest-pinned against on randomized dictionaries."""
 
     def __init__(self, gazetteer: list[tuple[str, str, str]]):
         # trie over token tuples; each node: dict token -> node id
@@ -241,6 +159,8 @@ def gazetteer_spans(
     ``max_tokens`` reproduces the model path's truncation window: matches
     starting beyond the first ``max_tokens − 2`` tokens are invisible, like
     spans past ``max_sequence_length`` (``engines/data.py:24-29``).
+
+    Spec implementation, kept as the test oracle for :class:`TokenAhoCorasick`.
     """
     toks = basic_tokenize(text)
     if max_tokens is not None:

@@ -18,7 +18,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .decode import Span, build_offset_maps, decode_bp
+from .decode import Span, build_offset_maps, decode_bp, spans_to_sets
 from .encoder import SeededTinyEncoder
 from .heads import BinaryPointerHead, GlobalPointerHead
 from .tokenizer import CjkCharTokenizer, encode_for_inference
@@ -164,10 +164,7 @@ class PointerNerModel:
         ``main.py:57-63``): spans → per-class surface-form sets → class
         names at the edge (``predict.py:45-48``). Debug/REPL helper; the
         distributed path is ``operators.mentions.detect_mentions``."""
-        spans = self.predict_batch([sentence])[0]
-        sets: dict[int, set[str]] = {}
-        for sp in spans:
-            sets.setdefault(sp.class_id, set()).add(sp.entity)
+        sets = spans_to_sets(self.predict_batch([sentence])[0])
         return {self.config.classes[cid]: sorted(s) for cid, s in sets.items()}
 
 

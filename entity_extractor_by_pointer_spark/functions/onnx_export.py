@@ -7,10 +7,10 @@ module ports that tril-free arithmetic to numpy and proves (pytest) that the
 GlobalPointer mask built from it is bit-identical to the reference-spec
 ``add_mask_tril`` — i.e. the exported graph would decode the same spans.
 
-Actually serializing the graph needs the ``onnx`` package and running it
-needs ``onnxruntime``; neither is installed in this sandbox, so the
-serialize/run entry points are import-gated with clear errors while the
-arithmetic (the part that changes model semantics) is real and tested.
+Actually serializing the graph needs the ``onnx`` package, which is not
+installed in this sandbox, so the serialize entry point is import-gated with
+a clear error while the arithmetic (the part that changes model semantics)
+is real and tested.
 At production scale, ``onnxruntime`` CPU sessions inside the same
 mapInPandas shell are the fast inference path on non-GPU executors — one
 session per python worker via MODEL_CACHE, exactly like the numpy model.
@@ -71,15 +71,3 @@ def convert_onnx(model, path: str) -> None:
             "implemented and parity-tested in this module"
         ) from exc
     raise NotImplementedError("graph serialization requires torch.onnx.export")
-
-
-def onnxruntime_session(path: str):
-    """CPU inference session for the exported graph (fast path inside
-    mapInPandas on non-GPU executors)."""
-    try:
-        import onnxruntime
-    except ImportError as exc:
-        raise NotImplementedError(
-            "onnxruntime is not installed in this environment"
-        ) from exc
-    return onnxruntime.InferenceSession(path)  # pragma: no cover

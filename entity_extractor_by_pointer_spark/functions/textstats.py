@@ -63,13 +63,6 @@ def punct_ratio(col: Column) -> Column:
     return n_punct / F.greatest(F.length(col), F.lit(1))
 
 
-def mean_word_len(col: Column) -> Column:
-    t = F.trim(col)
-    n = ws_token_count(col)
-    chars = F.length(F.regexp_replace(t, r"\s+", ""))
-    return chars / F.greatest(n, F.lit(1))
-
-
 def quality_score(col: Column) -> Column:
     """Deterministic heuristic in [0, ~1]: rewards mid-length docs, real
     words, low punctuation noise. Rounded to 4 decimals for cross-engine

@@ -1,20 +1,21 @@
 """Canonicalization: connected components over the alias/duplicate graph.
 
 North-rule stage "connected-components canonicalization via iterative
-hash-join label propagation". Catalyst has no iteration, so the driver runs
-a loop of DataFrame self-joins (SURVEY.md §4 item 2):
+hash-join label propagation". Graphs that fit on the driver take a local
+union-find; larger ones take one distributed path. Catalyst has no
+iteration, so the driver runs a loop of DataFrame self-joins
+(SURVEY.md §4 item 2):
 
-- min-label propagation: every node's label becomes the min label in its
-  closed neighborhood; converges in O(graph diameter) rounds. Alias graphs
-  are star-shaped (duplicates point at canonicals), so diameter is small;
-  for adversarial long-chain graphs switch to large/small-star (Kiveris et
-  al., "Connected Components in MapReduce and Beyond", SoCC'14) — same loop
-  skeleton, different expansion.
-- each round is a shuffle on node id; ``localCheckpoint`` every
-  ``checkpoint_every`` rounds truncates the lineage so plans don't grow
-  exponentially at 10^12-edge scale.
-- convergence = zero changed labels, computed with a join + count (an
-  aggregate, not a collect of the data itself).
+- alternating large-star / small-star (Kiveris et al., "Connected
+  Components in MapReduce and Beyond", SoCC'14): converges in O(log n)
+  rounds even on adversarial long-chain graphs, where min-label
+  propagation needs O(diameter) rounds;
+- each round is two groupBy-min joins; ``localCheckpoint`` every round
+  truncates the lineage so plans don't grow exponentially at 10^12-edge
+  scale;
+- convergence = an unchanged star edge set, computed with counts and an
+  ``exceptAll`` probe (aggregates, not a collect of the data itself);
+  reaching ``max_iter`` without it is an error, never partial labels.
 """
 
 from __future__ import annotations
@@ -28,18 +29,18 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    checkpoint_every: int = 3,
     driver_threshold: int = 100_000,
 ) -> DataFrame:
     """(src, dst) undirected edges → (id, canon_id) with canon_id = min
-    member id of each component.
+    member id of each component, for every node in a non-self edge.
 
     Hybrid execution: if the (deduplicated) edge list fits comfortably on
     the driver (≤ ``driver_threshold`` edges — the alias/duplicate graphs of
     a KG run are orders of magnitude smaller than the mention table), run
     union-find locally and broadcast the result: identical output, zero
-    iterative Spark jobs. Larger graphs take the distributed label-
-    propagation loop. Set ``driver_threshold=0`` to force the distributed
+    iterative Spark jobs. Larger graphs take the distributed large/small-star
+    loop, which raises ``RuntimeError`` if it has not converged after
+    ``max_iter`` rounds. Set ``driver_threshold=0`` to force the distributed
     path (the tests exercise both).
     """
     if driver_threshold > 0:
@@ -56,61 +57,6 @@ def connected_components(
             return edges.sparkSession.createDataFrame(
                 list(comp.items()), ["id", "canon_id"]
             )
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-    )
-    for i in range(max_iter):
-        neighbor_labels = (
-            sym.join(labels.withColumnRenamed("id", "b"), "b")
-            .select(F.col("a").alias("id"), "label")
-        )
-        new_labels = (
-            labels.select("id", "label")
-            .union(neighbor_labels)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-        )
-        if (i + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select("id", F.col("label").alias("canon_id"))
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
-    checkpoint_every: int = 2,
-) -> DataFrame:
-    """Alternating large-star / small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14): converges
-    in O(log n) rounds even on adversarial long-chain graphs, where plain
-    min-label propagation needs O(diameter) rounds. Each round is two
-    groupBy-min joins — pure DataFrame ops, checkpointed to truncate lineage.
-
-    Returns (id, canon_id) for every node that appears in a (non-self) edge,
-    canon_id = min member id — identical output to ``connected_components``
-    (equivalence is a test).
-    """
 
     def large_star(e: DataFrame) -> DataFrame:
         # symmetric neighborhoods; for each center a: m = min(N(a) ∪ {a});
@@ -148,9 +94,8 @@ def connected_components_star(
         .distinct()
         .localCheckpoint()
     )
-    for i in range(max_iter):
-        new_e = small_star(large_star(e))
-        new_e = new_e.localCheckpoint()  # truncate lineage every round
+    for _ in range(max_iter):
+        new_e = small_star(large_star(e)).localCheckpoint()
         # converged when the star edge set is stable: equal cardinality and
         # no edge in new∖old (two cheap distributed checks, no data collect)
         changed = (
@@ -159,6 +104,10 @@ def connected_components_star(
         e = new_e
         if not changed:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: star loop did not converge within max_iter={max_iter} rounds"
+        )
     # final star: every node points at its component min; the roots
     # themselves map to their own id
     members = e.select(F.col("a").alias("id"), F.col("b").alias("canon_id"))
@@ -167,8 +116,8 @@ def connected_components_star(
 
 
 def _union_find_min_label(pairs: list[tuple]) -> dict:
-    """Union-find with min-label roots; same result as converged min-label
-    propagation. Nodes appearing only in self-loops are excluded upstream."""
+    """Union-find with min-label roots; same result as the converged star
+    loop. Nodes appearing only in self-loops are excluded upstream."""
     parent: dict = {}
 
     def find(x):

@@ -39,13 +39,6 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     )
 
 
-def linked_only(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
-    """Semi-join flavor: mentions whose surface is in the dictionary."""
-    dim = aliases.select(F.lower(F.trim(F.col("surface"))).alias("_norm_surface"))
-    fact = mentions.withColumn("_norm_surface", F.lower(F.trim(F.col("entity"))))
-    return fact.join(F.broadcast(dim), "_norm_surface", "left_semi").drop("_norm_surface")
-
-
 def unlinked_only(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     """Anti-join flavor: out-of-dictionary mentions (NIL candidates)."""
     dim = aliases.select(F.lower(F.trim(F.col("surface"))).alias("_norm_surface"))

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..functions.gazetteer import make_matcher
+from ..functions.gazetteer import TokenAhoCorasick
 from ..functions.model import MODEL_CACHE, NerConfig
 
 MENTIONS_SCHEMA = T.StructType(
@@ -90,7 +90,7 @@ def detect_mentions_gazetteer(
     cols = [id_col] + _COLS[1:]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        match = make_matcher(gazetteer)  # built once per task, not per doc
+        match = TokenAhoCorasick(gazetteer).spans  # built once per task, not per doc
         for pdf in batches:
             rows = []
             for rid, text in zip(pdf[id_col], pdf[text_col].fillna("")):

@@ -1,8 +1,8 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media ride through the pipeline as opaque ``binary`` columns with typed
-metadata structs; compute-heavy steps (decode, resize, frame-sample,
-feature-extract) run as Arrow-batched ``mapInPandas`` stages. The actual
+metadata structs; compute-heavy steps (decode, resize, feature-extract)
+run as Arrow-batched ``mapInPandas`` stages. The actual
 codec calls need libraries absent from this container (PIL/ffmpeg/torchaudio)
 — those call sites raise ``NotImplementedError`` behind the ``codec=``
 switch, while the default deterministic fake codec keeps the Spark-side
@@ -26,25 +26,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), False),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.IntegerType()),
-                    T.StructField("codec", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 FEATURE_DIM = 16
 
@@ -224,31 +205,3 @@ def image_dims(media: DataFrame, id_col: str = "media_id", payload_col: str = "p
             )
 
     return media.select(id_col, payload_col).mapInPandas(run, IMAGE_DIMS_SCHEMA)
-
-
-def sample_video_frames(media: DataFrame, every_ms: int = 1000, codec: str = "fake") -> DataFrame:
-    """video rows → (media_id, frame_idx, frame_payload). Fake codec slices
-    the payload deterministically; a real build decodes with ffmpeg."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("frame_idx", T.IntegerType(), False),
-            T.StructField("frame_payload", T.BinaryType(), False),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload, meta in zip(pdf["media_id"], pdf["payload"], pdf["meta"]):
-                if codec != "fake":  # pragma: no cover
-                    raise NotImplementedError("real frame sampling requires ffmpeg")
-                payload = bytes(payload)
-                duration = int(meta["duration_ms"] or 0) if meta is not None else 0
-                n_frames = max(duration // every_ms, 1)
-                step = max(len(payload) // n_frames, 1)
-                for i in range(n_frames):
-                    rows.append((int(mid), i, payload[i * step : (i + 1) * step]))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame_payload"])
-
-    return media.select("media_id", "payload", "meta").mapInPandas(run, schema)

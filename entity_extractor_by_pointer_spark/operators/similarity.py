@@ -365,11 +365,19 @@ def kmeans_centroids(
                         accd = np.zeros(len(V))
                         for j in range(int(L)):
                             accd = accd + V[:, j] * _c[ci, j]
-                        cos[ci] = accd / (nv * _cn[ci])
+                        with np.errstate(divide="ignore", invalid="ignore"):
+                            cos[ci] = accd / (nv * _cn[ci])
                     # argmax down the cell axis: first max wins = lowest
                     # cell, the same (cos DESC, cell ASC) tie rule as the
                     # struct-max
-                    cell[sel] = np.argmax(cos, axis=0).astype(np.int32)
+                    best = np.argmax(cos, axis=0).astype(np.int32)
+                    # a zero-norm VECTOR has 0/0 cosines against every
+                    # cell: NULL in the SQL form, so the (cos DESC, cell
+                    # ASC) order falls through to cell 0 — whereas
+                    # np.argmax takes NaN as the max and would pick the
+                    # first live cell
+                    best[nv == 0.0] = 0
+                    cell[sel] = best
                 yield pd.DataFrame({"cell": cell, "v": pdf["v"]})
 
         assigned = vecs.mapInPandas(_assign, schema="cell int, v array<double>")

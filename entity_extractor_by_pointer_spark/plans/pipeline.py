@@ -15,7 +15,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.gazetteer import ALIAS_DICT, CANON_EDGES, PAGES_GAZETTEER
+from ..functions.gazetteer import CANON_EDGES, PAGES_GAZETTEER
 from ..functions.model import NerConfig
 from ..operators.canonicalize import canonicalize_entities
 from ..operators.extract import extraction_mismatch, with_extracted_text
@@ -23,10 +23,6 @@ from ..operators.linking import alias_df, link_mentions
 from ..operators.mentions import detect_mentions, detect_mentions_gazetteer
 from ..operators.triples import build_triples, triple_counts
 from .lineage import StageWriter
-
-STAGES = ["pages", "mentions", "triples", "triple_counts"]  # default materialization
-OPTIONAL_STAGES = ["linked", "canonical"]  # materialize_all=True
-
 
 @dataclass
 class PipelineConfig:

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.gazetteer import PAGES_GAZETTEER, make_matcher
+from ..functions.gazetteer import PAGES_GAZETTEER, TokenAhoCorasick
 from ..sources.pages import PAGES_SCHEMA
 
 STREAM_MENTIONS_SCHEMA = T.StructType(
@@ -36,7 +36,7 @@ STREAM_MENTIONS_SCHEMA = T.StructType(
 
 def _mention_stage(df: DataFrame, gazetteer, max_tokens: int) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        match = make_matcher(gazetteer)
+        match = TokenAhoCorasick(gazetteer).spans
         for pdf in batches:
             rows = []
             for url, ts, text in zip(pdf["url"], pdf["warc_ts"], pdf["text"]):

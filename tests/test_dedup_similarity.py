@@ -82,12 +82,16 @@ def test_connected_components_multi_hop(spark, thr):
     assert "f" not in cc  # self-loop only → no edge → not a component member
 
 
+def _chain_edges(spark, n):
+    return spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(n)], "src string, dst string"
+    )
+
+
 @pytest.mark.parametrize("thr", [100_000, 0], ids=["driver-unionfind", "distributed-loop"])
 def test_connected_components_long_chain(spark, thr):
     n = 12
-    edges = spark.createDataFrame(
-        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(n)], "src string, dst string"
-    )
+    edges = _chain_edges(spark, n)
     cc = {r["id"]: r["canon_id"] for r in connected_components(edges, driver_threshold=thr).collect()}
     assert set(cc.values()) == {"n00"}
     assert len(cc) == n + 1
@@ -96,33 +100,42 @@ def test_connected_components_long_chain(spark, thr):
 def test_connected_components_paths_agree(spark):
     import random
 
-    from entity_extractor_by_pointer_spark.operators.canonicalize import (
-        connected_components_star,
-    )
-
     rnd = random.Random(9)
     edges_py = [(f"v{rnd.randrange(60)}", f"v{rnd.randrange(60)}") for _ in range(80)]
     edges = spark.createDataFrame(edges_py, "src string, dst string")
     fast = {(r["id"], r["canon_id"]) for r in connected_components(edges).collect()}
     dist = {(r["id"], r["canon_id"]) for r in connected_components(edges, driver_threshold=0).collect()}
-    star = {(r["id"], r["canon_id"]) for r in connected_components_star(edges).collect()}
-    assert fast == dist == star
+    assert fast == dist
 
 
 def test_star_cc_handles_long_chain(spark):
     """large/small-star must collapse a 24-node chain (where min-label
     propagation needs O(n) rounds) within its O(log n) budget."""
-    from entity_extractor_by_pointer_spark.operators.canonicalize import (
-        connected_components_star,
-    )
-
     n = 24
-    edges = spark.createDataFrame(
-        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(n)], "src string, dst string"
-    )
-    cc = {r["id"]: r["canon_id"] for r in connected_components_star(edges, max_iter=10).collect()}
+    cc = {
+        r["id"]: r["canon_id"]
+        for r in connected_components(
+            _chain_edges(spark, n), driver_threshold=0, max_iter=10
+        ).collect()
+    }
     assert set(cc.values()) == {"n00"}
     assert len(cc) == n + 1
+
+
+def test_distributed_cc_collapses_61_node_chain(spark):
+    """A 61-node chain is one component on the distributed path within the
+    default round budget (min-label propagation needs 60 rounds here)."""
+    cc = {
+        r["id"]: r["canon_id"]
+        for r in connected_components(_chain_edges(spark, 60), driver_threshold=0).collect()
+    }
+    assert set(cc.values()) == {"n00"}
+    assert len(cc) == 61
+
+
+def test_distributed_cc_raises_when_not_converged(spark):
+    with pytest.raises(RuntimeError, match="max_iter"):
+        connected_components(_chain_edges(spark, 60), driver_threshold=0, max_iter=1)
 
 
 def test_ann_bruteforce_matches_numpy(spark):
@@ -401,7 +414,8 @@ def test_kmeans_dead_cell_and_length_mismatch_excluded(spark):
     must never win an assignment — the numpy argmax path excludes both
     exactly like the struct-max-over-NULL did."""
     emb = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.9, 0.1])], "vec_id long, embedding array<double>"
+        [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 0.0])],
+        "vec_id long, embedding array<double>",
     )
     cents = np.array(
         [
@@ -414,8 +428,10 @@ def test_kmeans_dead_cell_and_length_mismatch_excluded(spark):
         (r["cell"], r["dim"]): r["val"]
         for r in sim.kmeans_centroids(emb, iterations=1, centroids=cents).collect()
     }
-    # both vectors must land in cell 2 (max cosine among LIVE cells), so
-    # cell 2's centroid becomes their mean and cells 0/1 keep theirs
+    # both nonzero vectors must land in cell 2 (max cosine among LIVE
+    # cells), so cell 2's centroid becomes their mean; the zero vector has
+    # NULL cosines everywhere, so it goes to cell 0 (cell ASC tie-break),
+    # leaving cell 0 at zero and cell 1 unchanged
     assert got[(2, 0)] == round((1.0 + 0.9) / 2, 6)
     assert got[(0, 0)] == 0.0 and got[(1, 0)] == -1.0
     # a centroid longer than every vector is excluded the same way
