@@ -16,8 +16,8 @@ reference:
   2C) → reshape (B, L, C, 2); reference ``engines/models/BinaryPointer.py:
   13-30``.
 
-These run *inside* mapInPandas UDFs on Arrow batches — the (C, L, L) GP
-score matrix is decoded to spans in-UDF and never crosses the Arrow boundary
+These run *inside* mapInPandas UDFs on Arrow batches — GP span scores are
+decoded to spans in-UDF and never cross the Arrow boundary
 (SURVEY.md §4).
 """
 
@@ -129,9 +129,10 @@ class GlobalPointerHead:
         bit-for-bit (the penalty adds exactly 0.0 there). Callers that skip
         the penalty must enforce validity at decode time — ``decode_gp``
         already checks ``start ≤ end`` and offset-mapping membership, which
-        after per-doc cropping is precisely the valid set. Per-class planes
-        are filled with ``out=`` adds so the (L, L) working set stays
-        cache-resident instead of streaming (C+1) full tensors through DRAM.
+        after per-doc cropping is precisely the valid set. This full tensor
+        is the spec the fused decode in ``PointerNerModel.predict_batch`` is
+        pinned against; that decode builds only the start rows whose exact
+        upper bound can clear the threshold.
         """
         qk, dense = self.qk_and_bias(hidden)
         b, seq_len = qk.shape[0], qk.shape[1]
@@ -147,8 +148,9 @@ class GlobalPointerHead:
     def qk_and_bias(self, hidden: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """Per-position pieces of the score: (B, L, L) rotary q·k matrix and
         the (B, 2C, L) start/end bias rows (reference GlobalPointer.py:87-91).
-        ``raw_scores`` / the fused decode loop assemble class planes from
-        these."""
+        ``raw_scores`` assembles full class planes from these; the fused
+        decode bounds each start row from their row maxima and assembles
+        only the rows that can fire."""
         hidden = hidden.astype(np.float32, copy=False)
         seq_len = hidden.shape[1]
         out = hidden @ self.w1 + self.b1  # (B, L, 2*inner)

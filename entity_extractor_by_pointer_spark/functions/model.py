@@ -121,34 +121,43 @@ class PointerNerModel:
             # positions above the sigmoid threshold consume starts via the
             # break rule — reference engines/data.py:98-106.)
             lengths = attention_mask.sum(axis=1)
-            num_labels = self.config.num_labels
-            buf: np.ndarray | None = None
             for i, text in enumerate(texts):
                 li = int(lengths[i])
-                # Fused score+decode per class plane: after cropping,
+                # Fused score+decode with an exact per-row bound: a cell is
+                # ((qk[s,e] + end_c[e]) + start_c[s]) + bias in float32 (the
+                # op order of GlobalPointerHead.raw_scores), and rounding is
+                # monotone, so the same sum over the row maxima of qk and
+                # end_c bounds every cell of row (c, s). Rows whose bound is
+                # not > 0 cannot fire and are never built; the candidate rows
+                # are gathered and scored in one vectorized pass, so every
+                # surviving score is bit-identical and the (C, l, l) tensor
+                # never exists. fmax ignores NaN cells (which never fire) so
+                # one NaN cannot hide the row's other cells. After cropping,
                 # decode's start≤end + offset-mapping checks enforce exactly
-                # the validity set the reference's −1e12 penalty would, and
-                # valid-cell scores (qk + end_bias + start_bias + logit_bias,
-                # float32, same op order as GlobalPointerHead.raw_scores) are
-                # bit-identical. The (L, L) plane is decoded while
-                # cache-resident — the (C, L, L) tensor never exists.
+                # the validity set the reference's −1e12 penalty would.
                 qk, dense = self.head.qk_and_bias(hidden[i : i + 1, :li])
-                if buf is None or buf.shape[0] < li:
-                    side = max(self.config.max_sequence_length, li)
-                    buf = np.empty((side, side), dtype=np.float32)
-                plane = buf[:li, :li]
+                qk, end, start = qk[0], dense[0, 0::2], dense[0, 1::2]
+                bound = np.fmax.reduce(qk, axis=1) + np.fmax.reduce(end, axis=1)[:, None]
+                bound += start
+                bound += bias
+                ci, si = np.nonzero(bound > 0)  # class-major, then start
+                rows = qk[si] + end[ci]
+                rows += start[ci, si][:, None]
+                rows += bias
+                hit_row, hit_end = np.nonzero(rows > 0)
+                upper = si[hit_row] <= hit_end
+                hit_row, hit_end = hit_row[upper], hit_end[upper]
                 start_mapping, end_mapping = build_offset_maps(offsets[i])
                 spans: list[Span] = []
-                for ci in range(num_labels):
-                    np.add(qk[0], dense[0, 2 * ci][None, :], out=plane)
-                    plane += dense[0, 2 * ci + 1][:, None]
-                    plane += bias
-                    for s, e in zip(*np.where(plane > 0)):
-                        if s <= e and s in start_mapping and e in end_mapping:
-                            cs, ce = start_mapping[int(s)], end_mapping[int(e)]
-                            spans.append(
-                                Span(ci, text[cs : ce + 1], cs, ce, float(plane[s, e]))
-                            )
+                for c, s, e, score in zip(
+                    ci[hit_row].tolist(),
+                    si[hit_row].tolist(),
+                    hit_end.tolist(),
+                    rows[hit_row, hit_end].tolist(),
+                ):
+                    if s in start_mapping and e in end_mapping:
+                        cs, ce = start_mapping[s], end_mapping[e]
+                        spans.append(Span(c, text[cs : ce + 1], cs, ce, score))
                 out.append(spans)
         else:
             logits = self.head(hidden, attention_mask) + bias

@@ -3,8 +3,8 @@
 SURVEY.md §3.1: tokenize → encode → pointer head → span decode are fused per
 Arrow batch; mention detection is embarrassingly parallel per page, so the
 stage induces **no shuffle** — the plan is Scan → (whole-stage project) →
-MapInPandas. The (C, L, L) GlobalPointer score matrix lives only inside the
-UDF (never serialized, SURVEY.md §4 row 1).
+MapInPandas. GlobalPointer span scores live only inside the UDF (never
+serialized, SURVEY.md §4 row 1).
 
 Output schema (SURVEY.md §1.2 ``mentions``):
 ``(url, type, entity, start_idx, end_idx, score, model)`` — one row per

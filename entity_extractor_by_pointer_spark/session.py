@@ -2,8 +2,8 @@
 
 Settings chosen for the 100 TB design point (SURVEY.md §4): AQE on (runtime
 coalescing + skew-join splitting), Arrow enabled for every pandas UDF
-boundary, bounded Arrow batch sizes so the in-UDF (C, L, L) GlobalPointer
-score matrix stays within executor memory, and broadcast-join threshold left
+boundary, bounded Arrow batch sizes so the in-UDF encoder and head tensors
+stay within executor memory, and broadcast-join threshold left
 to AQE. Shuffle partitions default to the local core count; on a real
 cluster this is overridden via spark-submit conf.
 """
