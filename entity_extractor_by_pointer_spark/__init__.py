@@ -15,7 +15,6 @@ Layout:
   operators/   DataFrame-level pipeline stages (extract, mentions, linking,
                canonicalize, triples, dedup, similarity, evaluate)
   plans/       end-to-end pipeline runner with lineage/metrics/resume
-  streaming/   Structured Streaming variants
 """
 
 __version__ = "0.1.0"

@@ -34,10 +34,6 @@ DOCS_GAZETTEER: list[tuple[str, str, str]] = [
     ("stream", "location", "LOC_STREAM"),
 ]
 
-# alias surface → entity id (linking dim table); includes the canonical
-# surfaces plus synthetic alias variants used by the pages generator
-ALIAS_DICT: list[tuple[str, str]] = [(name, eid) for name, _, eid in DOCS_GAZETTEER]
-
 # canonicalization: alias-graph edges merging entity ids into canonical ids.
 # ORG_VECTOR is declared a duplicate of ORG_SPARK and LOC_STREAM of
 # LOC_WINDOW, so connected components has real work to do.

@@ -91,9 +91,8 @@ def hash_split(id_col: Column, train_pct: int = 80, dev_pct: int = 10) -> Column
     The standard crawl-scale alternative to random splits: stable across
     runs, partitionings and engines (md5-derived bucket 0-99), so downstream
     training jobs see an identical split without coordinating state. The
-    reference splits positionally (``train.py:102-106``, operator P1 —
-    ``losses.train_dev_split`` mirrors that); positional splits don't
-    distribute, hash splits do."""
+    reference splits positionally (``train.py:102-106``, operator P1);
+    positional splits don't distribute, hash splits do."""
     bucket = F.pmod(md5_int64(id_col), F.lit(100))
     return (
         F.when(bucket < train_pct, F.lit("train"))

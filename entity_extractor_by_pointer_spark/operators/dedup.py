@@ -670,13 +670,10 @@ def minhash_est_pairs(
 ) -> DataFrame:
     """(id_a, id_b, est) — banded LSH candidates verified by the SIGNATURE
     Jaccard estimate (fraction of equal MinHash components), not the exact
-    shingle Jaccard. This is the batch twin of the streaming near-dup
-    operator (`streaming/neardup.py`): both flag exactly the pairs that
-    collide in ≥1 band with est ≥ threshold, so stream output can be
-    equivalence-tested against a corpus-at-rest sweep. Cheaper than
-    `minhash_lsh_pairs` (no second pass over shingles) at the cost of
-    estimate noise — the production pick when downstream tolerates ~1/k
-    resolution."""
+    shingle Jaccard: it flags exactly the pairs that collide in ≥1 band
+    with est ≥ threshold. Cheaper than `minhash_lsh_pairs` (no second pass
+    over shingles) at the cost of estimate noise — the production pick when
+    downstream tolerates ~1/k resolution."""
     sig = cached(minhash_signatures(docs, id_col, text_col, k))
     rows_per_band = k // bands
     band_cols = []

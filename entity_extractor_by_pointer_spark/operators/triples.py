@@ -140,12 +140,6 @@ def ntriples_lines(triples: DataFrame, base: str = NT_BASE) -> DataFrame:
     )
 
 
-def write_ntriples(triples: DataFrame, path: str, base: str = NT_BASE) -> None:
-    """Materialize the KG as an ``.nt`` text dataset (one statement per
-    line) — the export sink for RDF toolchains."""
-    ntriples_lines(triples, base).write.mode("overwrite").text(path)
-
-
 def write_triples(triples: DataFrame, path: str, buckets: int = TRIPLE_BUCKETS) -> None:
     """Materialize the graph table partitioned by subject hash."""
     (

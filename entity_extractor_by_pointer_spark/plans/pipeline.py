@@ -39,7 +39,7 @@ class PipelineConfig:
 
 def extract_checked(pages: DataFrame) -> DataFrame:
     """HTML extraction + byte-identity invariant enforcement (module-level so
-    batch, incremental and streaming paths share one implementation)."""
+    the batch and incremental paths share one implementation)."""
     extracted = with_extracted_text(pages)
     mismatches = extracted.agg(extraction_mismatch(extracted)).first()[0] or 0
     if mismatches:
@@ -96,7 +96,7 @@ def triples_for_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     Every stage through triples is per-document independent, so running this
     on ANY partition of a corpus into batches and unioning the outputs
     equals running it once on the whole corpus — the property the
-    incremental AND streaming ingest paths lean on (tested both ways)."""
+    incremental ingest path leans on (tested against a batch run)."""
     spark = pages.sparkSession
     pages_t = extract_checked(pages)
     mentions = mentions_for_pages(pages_t, cfg)
@@ -240,8 +240,8 @@ class KgPipeline:
         named stage's write, to exercise exactly those crash windows.
 
         ``triple_counts`` is re-aggregated from the full triples table (a
-        cheap salted count). This is the batch-side analog of the streaming
-        ingest path for periodic crawl drops.
+        cheap salted count). This is the ingest path for periodic crawl
+        drops.
 
         Like ``run``, operator-level persists are released in a ``finally``
         so periodic increments on a long-lived driver don't accumulate
