@@ -454,7 +454,7 @@ def q_table_profile(spark, sf_dir):
     computes exact count(DISTINCT): the auto census gate would silently
     switch this QUERY to HLL++ above 100k rows and make its correctness
     contract scale-dependent (round-5 ADVICE). The gate stays the default
-    for the CLI ``--profile-stage`` census, where the sketch is the point."""
+    for pipeline/drift callers, where the sketch is the point."""
     from entity_extractor_by_pointer_spark.operators.profile import profile_table
 
     return profile_table(
@@ -1369,10 +1369,11 @@ TRAIN_W0 = (0.1, -0.2, 0.3, -0.05)
 
 def q_train_grad_step(spark, sf_dir):
     """One full-batch logistic-regression gradient at seeded weights,
-    computed as a pure DataFrame aggregation (one allreduce-shaped job;
-    tests/test_training.py pins it against the single-process numpy
-    gradient). Rounded to 6 decimals so Spark's and DuckDB's libm exp/ln
-    ulps can't differ."""
+    computed as a pure DataFrame aggregation (the distributed training
+    loop's inner step — SURVEY.md §2 T3 evidence; the loop itself, with the
+    optimizer zoo / FGM / PGD / warmup / early-stop mirroring reference
+    train.py:80-233, is pinned by tests/test_training.py). Rounded to 6
+    decimals so Spark's and DuckDB's libm exp/ln ulps can't differ."""
     import numpy as np
 
     feats = td.doc_features(_t(spark, sf_dir, "documents"))

@@ -5,7 +5,6 @@ from entity_extractor_by_pointer_spark.functions.decode import (
     decode_gp,
     spans_to_sets,
 )
-from entity_extractor_by_pointer_spark.functions.model import NerConfig, PointerNerModel
 from entity_extractor_by_pointer_spark.functions.tokenizer import CjkCharTokenizer
 
 TOK = CjkCharTokenizer()
@@ -94,12 +93,3 @@ def test_set_semantics():
     spans = decode_gp(text, logits, offs)
     assert len(spans) == 2  # positions retained
     assert spans_to_sets(spans) == {0: {"广州"}}  # reference set semantics
-
-
-def test_predict_one_interactive_api():
-    cfg = NerConfig(classes=["person", "location", "organization"], logit_bias=-2.0)
-    m = PointerNerModel(cfg)
-    res = m.predict_one("1992年11月，在广州举行的博览会上李明发言。")
-    assert isinstance(res, dict)
-    assert all(k in cfg.classes for k in res)
-    assert all(isinstance(v, list) for v in res.values())

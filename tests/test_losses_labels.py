@@ -1,116 +1,6 @@
-"""Training-side parity: losses (L1/L2), label vectorization (P6),
-train/dev split (P1), predict_one (S2) — SURVEY.md §2."""
+"""S2 parity: the ``predict_one`` interactive API (SURVEY.md §2)."""
 
-import numpy as np
-import pytest
-
-from entity_extractor_by_pointer_spark.functions.losses import (
-    bce_with_logits,
-    build_label_tensors,
-    calculate_loss,
-    multilabel_categorical_crossentropy,
-    train_dev_split,
-)
 from entity_extractor_by_pointer_spark.functions.model import NerConfig, PointerNerModel
-
-
-def test_multilabel_cce_hand_computed():
-    # one row, 3 candidates: scores [2, -1, 0.5], label on candidate 0.
-    # neg group = logsumexp([-1, 0.5, 0]); pos group = logsumexp([-2, 0])
-    y_pred = np.array([[2.0, -1.0, 0.5]])
-    y_true = np.array([[1.0, 0.0, 0.0]])
-    neg = np.log(np.exp(-1.0) + np.exp(0.5) + 1.0)
-    pos = np.log(np.exp(-2.0) + 1.0)
-    assert multilabel_categorical_crossentropy(y_pred, y_true) == pytest.approx(neg + pos)
-
-
-def test_multilabel_cce_all_negative_row():
-    # no gold spans: pos group = logsumexp([zeros only]) = 0
-    y_pred = np.array([[3.0, -2.0]])
-    y_true = np.zeros((1, 2))
-    expected = np.log(np.exp(3.0) + np.exp(-2.0) + 1.0)
-    assert multilabel_categorical_crossentropy(y_pred, y_true) == pytest.approx(expected)
-
-
-def test_multilabel_cce_separable_scores_give_small_loss():
-    y_pred = np.array([[10.0, -10.0, -10.0]])
-    y_true = np.array([[1.0, 0.0, 0.0]])
-    assert multilabel_categorical_crossentropy(y_pred, y_true) < 1e-3
-
-
-def test_bce_with_logits_matches_definition():
-    x = np.array([-3.0, -0.5, 0.0, 2.0])
-    y = np.array([0.0, 1.0, 1.0, 0.0])
-    p = 1 / (1 + np.exp(-x))
-    expected = -(y * np.log(p) + (1 - y) * np.log(1 - p))
-    assert np.allclose(bce_with_logits(x, y), expected)
-
-
-def test_calculate_loss_reshapes():
-    # gp: (B, C, L, L) → (B*C, L*L) rows for the multilabel CCE
-    rng = np.random.default_rng(0)
-    logits = rng.normal(size=(2, 3, 4, 4)).astype(np.float32)
-    labels = (rng.random((2, 3, 4, 4)) > 0.9).astype(np.float32)
-    direct = multilabel_categorical_crossentropy(
-        logits.reshape(6, 16), labels.reshape(6, 16)
-    )
-    assert calculate_loss(logits, labels, None, "gp", True) == pytest.approx(direct)
-    # bp BCE variant: mean over the 2 heads, sum over classes, masked mean
-    logits_bp = rng.normal(size=(2, 4, 3, 2)).astype(np.float32)
-    labels_bp = (rng.random((2, 4, 3, 2)) > 0.8).astype(np.float32)
-    mask = np.array([[1, 1, 1, 0], [1, 1, 0, 0]], dtype=np.float32)
-    loss = bce_with_logits(logits_bp, labels_bp).mean(axis=3).sum(axis=2)
-    expected = (loss * mask).sum() / mask.sum()
-    got = calculate_loss(logits_bp, labels_bp, mask, "bp", use_multilabel_cce=False)
-    assert got == pytest.approx(float(expected))
-
-
-def test_build_label_tensors_gp_and_bp():
-    categories = {"person": 0, "location": 1}
-    text = "李明在北京。"
-    ents = [
-        {"start_idx": 0, "end_idx": 1, "type": "person", "entity": "李明"},
-        {"start_idx": 3, "end_idx": 4, "type": "location", "entity": "北京"},
-        # misaligned span (start inside a token? impossible for CJK chars —
-        # use an out-of-range span instead, dropped by the alignment filter)
-        {"start_idx": 50, "end_idx": 60, "type": "person", "entity": "幽灵"},
-    ]
-    gp = build_label_tensors(text, ents, categories, "gp", max_sequence_length=16)
-    # tokens: [CLS] 李 明 在 北 京 。 [SEP] → 李明 = tokens 1..2, 北京 = 4..5
-    assert gp[0, 1, 2] == 1 and gp[1, 4, 5] == 1
-    assert gp.sum() == 2
-    bp = build_label_tensors(text, ents, categories, "bp", max_sequence_length=16)
-    assert bp[1, 0, 0] == 1 and bp[2, 0, 1] == 1  # person start/end
-    assert bp[4, 1, 0] == 1 and bp[5, 1, 1] == 1  # location start/end
-    assert bp.sum() == 4
-    assert bp.shape == (16, 2, 2) and gp.shape == (2, 16, 16)
-
-
-def test_label_tensor_roundtrips_through_gp_decode():
-    """Labels built by P6, treated as logits, must decode back to exactly
-    the surviving gold spans — pins build/decode against each other."""
-    from entity_extractor_by_pointer_spark.functions.decode import decode_gp
-    from entity_extractor_by_pointer_spark.functions.tokenizer import CjkCharTokenizer
-
-    categories = {"person": 0, "location": 1}
-    text = "李明在北京。"
-    ents = [
-        {"start_idx": 0, "end_idx": 1, "type": "person", "entity": "李明"},
-        {"start_idx": 3, "end_idx": 4, "type": "location", "entity": "北京"},
-    ]
-    label = build_label_tensors(text, ents, categories, "gp", max_sequence_length=16)
-    offs = CjkCharTokenizer()(text, max_length=16, truncation=True).offset_mapping
-    spans = decode_gp(text, label, offs)
-    assert {(s.class_id, s.entity, s.start_idx, s.end_idx) for s in spans} == {
-        (0, "李明", 0, 1),
-        (1, "北京", 3, 4),
-    }
-
-
-def test_train_dev_split_positional():
-    recs = list(range(10))
-    train, dev = train_dev_split(recs, 0.3)
-    assert train == [0, 1, 2, 3, 4, 5, 6] and dev == [7, 8, 9]
 
 
 def test_predict_one_interactive_api():

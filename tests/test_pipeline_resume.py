@@ -534,3 +534,49 @@ def test_cli_compact_stage(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert rc == 0 and "compact 'pages': rewritten=True" in out
 
+
+def test_profile_drift_over_snapshots(spark, tmp_path):
+    """Drift report between time-traveled snapshot states of a stage:
+    stable columns stay quiet; a null-ratio jump injected into the newer
+    state raises the alert; range movement is flagged."""
+    from entity_extractor_by_pointer_spark.operators.profile import profile_drift
+
+    wd = str(tmp_path / "drift")
+    pipe = KgPipeline(spark, wd, "dr")
+    pipe.run(generate_pages(spark, 60, partitions=4))
+    pipe.run_incremental(generate_pages(spark, 90, partitions=4))
+    snaps = pipe.writer.list_snapshots()
+    pipe.run_incremental(generate_pages(spark, 120, partitions=4))
+    old = pipe.writer.read_stage("pages", as_of=snaps[0]).select("url", "lang")
+    new = pipe.writer.read_stage("pages").select("url", "lang")
+
+    quiet = {r["col_name"]: r for r in profile_drift(old, new).collect()}
+    assert quiet["url"]["n_rows_old"] == 90 and quiet["url"]["n_rows_new"] == 120
+    assert not quiet["url"]["alert"] and not quiet["lang"]["alert"]
+    assert quiet["url"]["range_changed"]  # new urls extend the max
+
+    # inject 20% nulls into the newer lang column → alert fires
+    from pyspark.sql import functions as F
+
+    broken = new.withColumn(
+        "lang",
+        F.when(F.pmod(F.hash("url"), F.lit(5)) == 0, F.lit(None)).otherwise(
+            F.col("lang")
+        ),
+    )
+    loud = {r["col_name"]: r for r in profile_drift(old, broken).collect()}
+    assert loud["lang"]["alert"] and loud["lang"]["null_ratio_new"] > 0.15
+
+    # schema rot: a column present in only one snapshot must be REPORTED
+    # (full outer join) with schema_changed + alert, not silently dropped
+    renamed = new.withColumnRenamed("lang", "language")
+    schema = {r["col_name"]: r for r in profile_drift(old, renamed).collect()}
+    assert schema["lang"]["schema_changed"] and schema["lang"]["alert"]
+    assert schema["language"]["schema_changed"] and schema["language"]["alert"]
+    assert not schema["url"]["schema_changed"]
+
+    # all-null old column vs populated new: range_changed must be True,
+    # not NULL (null-safe comparison)
+    nulled_old = old.withColumn("lang", F.lit(None).cast("string"))
+    rng = {r["col_name"]: r for r in profile_drift(nulled_old, new).collect()}
+    assert rng["lang"]["range_changed"] is True
