@@ -9,7 +9,10 @@ Pipeline order mirrors reference ``engines/predict.py:31-48`` (predict path)
 and ``engines/data.py:31-81`` (batch collate path): ids come from an
 UNtruncated encode then ``pad_or_truncate`` to ``max_sequence_length``
 (``data.py:41-44,24-29``) while the decode-side offset mapping comes from a
-``truncation=True`` encode (``data.py:88-90``).
+``truncation=True`` encode (``data.py:88-90``). On the seeded path both come
+from one vectorized tokenize pass per batch
+(``tokenizer.encode_batch_for_inference``), whose rows equal the
+per-document spec ``tokenizer.encode_for_inference``.
 """
 
 from __future__ import annotations
@@ -21,7 +24,9 @@ import numpy as np
 from .decode import Span, build_offset_maps, decode_bp, spans_to_sets
 from .encoder import SeededTinyEncoder
 from .heads import BinaryPointerHead, GlobalPointerHead
-from .tokenizer import CjkCharTokenizer, encode_for_inference
+# encode_for_inference (the per-document spec of the batch tokenizer) stays
+# importable from here: the benchmark's layer probe looks it up on this module
+from .tokenizer import CjkCharTokenizer, encode_batch_for_inference, encode_for_inference  # noqa: F401
 
 
 @dataclass
@@ -74,10 +79,14 @@ class PointerNerModel:
         else:
             self.head = BinaryPointerHead(hidden, config.num_labels, config.head_seed)
 
-    def _encode_batch(self, texts: list[str]) -> tuple[np.ndarray, np.ndarray, list]:
+    def _encode_batch(
+        self, texts: list[str]
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray | list]:
+        """ids and attention mask (B, L) int32, plus the per-document offset
+        mappings: a (B, L, 2) array on the seeded path, lists on ``bert``."""
         L = self.config.max_sequence_length
-        ids, masks, offsets = [], [], []
         if self.config.encoder == "bert":
+            ids, masks, offsets = [], [], []
             # the reference's two tokenizer calls verbatim: UNtruncated ids
             # right-padded/hard-truncated to L (data.py:41-44,24-29) + the
             # truncation=True offset mapping decode reads (data.py:88-90)
@@ -95,12 +104,7 @@ class PointerNerModel:
                 )["offset_mapping"]
                 offsets.append([tuple(o) for o in off])
             return np.asarray(ids, dtype=np.int32), np.asarray(masks, dtype=np.int32), offsets
-        for text in texts:
-            i, m, off = encode_for_inference(text, L)  # single tokenize pass
-            ids.append(i)
-            masks.append(m)
-            offsets.append(off)
-        return np.asarray(ids, dtype=np.int32), np.asarray(masks, dtype=np.int32), offsets
+        return encode_batch_for_inference(texts, L)
 
     def predict_batch(self, texts: list[str]) -> list[list[Span]]:
         if not texts:
@@ -147,7 +151,10 @@ class PointerNerModel:
                 hit_row, hit_end = np.nonzero(rows > 0)
                 upper = si[hit_row] <= hit_end
                 hit_row, hit_end = hit_row[upper], hit_end[upper]
-                start_mapping, end_mapping = build_offset_maps(offsets[i])
+                if not hit_row.size:  # most documents: no offset maps to build
+                    out.append([])
+                    continue
+                start_mapping, end_mapping = build_offset_maps(np.asarray(offsets[i]).tolist())
                 spans: list[Span] = []
                 for c, s, e, score in zip(
                     ci[hit_row].tolist(),
@@ -163,7 +170,12 @@ class PointerNerModel:
             logits = self.head(hidden, attention_mask) + bias
             for i, text in enumerate(texts):
                 out.append(
-                    decode_bp(text, logits[i], offsets[i], self.config.decision_threshold)
+                    decode_bp(
+                        text,
+                        logits[i],
+                        np.asarray(offsets[i]).tolist(),
+                        self.config.decision_threshold,
+                    )
                 )
         return out
 

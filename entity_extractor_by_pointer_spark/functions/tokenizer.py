@@ -20,6 +20,15 @@ same *structural* contract the reference's decode path depends on:
   the untruncated id list to L **without preserving [SEP]**
   (``engines/data.py:24-29,41-44``) — ``pad_or_truncate`` replicates that.
 
+The model tokenizes with ``encode_batch_for_inference``: one numpy pass per
+Arrow batch that classifies the joined texts' codepoints, finds the token
+starts, drops every token past the window and gathers ids from a dense
+per-codepoint table. Three per-document functions are its spec, pinned
+against it by ``tests/test_tokenizer.py``: ``basic_tokenize_slow`` (the
+per-char loop), ``basic_tokenize`` (the same split as a compiled regex, which
+the gazetteer also uses) and ``encode_for_inference`` (ids, mask and offsets
+of one document).
+
 Both the Spark pipeline UDFs and the single-process parity oracle import this
 module, so span parity is measured against shared tokenization — the contract
 BASELINE.md sets (parity vs the reference *algorithms*, not vs a particular
@@ -30,6 +39,8 @@ from __future__ import annotations
 
 import zlib
 from dataclasses import dataclass
+
+import numpy as np
 
 PAD_ID = 0
 CLS_ID = 101
@@ -172,7 +183,8 @@ def encode_for_inference(
     inference path: padded/hard-truncated ids + attention mask
     (``data.py:41-44,24-29``) AND the truncation=True offset mapping used by
     decode (``data.py:88-90``) from a single ``basic_tokenize`` — the
-    outputs are exactly what calling the tokenizer twice would produce."""
+    outputs are exactly what calling the tokenizer twice would produce.
+    The spec of ``encode_batch_for_inference``, which the model calls."""
     toks = basic_tokenize(text)
     L = max_sequence_length
     n = len(toks)
@@ -182,6 +194,96 @@ def encode_for_inference(
     mask = pad_or_truncate(mask, L)
     body = toks[: L - 2] if n > L - 2 else toks
     offsets = [(0, 0)] + [(s, e) for _, s, e in body] + [(0, 0)]
+    return ids, mask, offsets
+
+
+# Codepoint class tables for the batch pass. U+3000 is the highest codepoint
+# ``str.isspace()`` (and the regex's ``\s``) accepts; every larger codepoint
+# is clamped onto the final False entry, and likewise above ASCII.
+_SPACE_MAX = 0x3000
+_IS_SPACE = np.array([chr(c).isspace() for c in range(_SPACE_MAX + 1)] + [False])
+_IS_ALNUM = np.array([chr(c).isalnum() for c in range(128)] + [False])
+# token_id(chr(c)) for every BMP codepoint seen so far in this process
+# (0 = not yet computed; token ids start at _FIRST_REGULAR_ID)
+_BMP_IDS = np.zeros(0x10000, dtype=np.int32)
+
+
+def _char_ids(cps: np.ndarray) -> np.ndarray:
+    """token_id(chr(c)) for each codepoint, through the dense BMP table."""
+    out = np.empty(len(cps), dtype=np.int32)
+    bmp = cps < 0x10000
+    c = cps[bmp]
+    got = _BMP_IDS[c]
+    if not got.all():
+        for u in np.unique(c[got == 0]).tolist():
+            _BMP_IDS[u] = token_id(chr(u))
+        got = _BMP_IDS[c]
+    out[bmp] = got
+    out[~bmp] = [token_id(chr(u)) for u in cps[~bmp].tolist()]
+    return out
+
+
+def encode_batch_for_inference(
+    texts: list[str], max_sequence_length: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``encode_for_inference`` for a whole batch in one vectorized pass.
+
+    Returns ids and attention mask as (B, L) int32 and the offset mapping as
+    (B, L, 2) int32. Row i equals ``encode_for_inference(texts[i], L)``: the
+    ids and mask exactly, and the offsets as ``[(0, 0)] + body + [(0, 0)]``
+    followed by (0, 0) padding. Like the per-document path, a lone surrogate
+    anywhere in the batch raises ``UnicodeEncodeError``.
+
+    The joined texts are classified per codepoint (whitespace, ASCII alnum);
+    a token starts at every non-space codepoint that does not continue an
+    ASCII-alnum run of the same document. Tokens at rank ≥ L−1 are dropped
+    before any id is looked up, so long pages cost one classification pass.
+    """
+    L = max_sequence_length
+    if L < 2:
+        raise ValueError(f"max_sequence_length must be >= 2, got {L}")
+    B = len(texts)
+    joined = "".join(texts)
+    cp = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32)
+    lengths = np.fromiter(map(len, texts), dtype=np.int64, count=B)
+    doc_end = np.cumsum(lengths)
+    doc_start = doc_end - lengths
+
+    space = _IS_SPACE[np.minimum(cp, _SPACE_MAX + 1)]
+    alnum = _IS_ALNUM[np.minimum(cp, 128)]
+    cont = np.zeros(len(cp), dtype=bool)  # continues the previous alnum run
+    cont[1:] = alnum[1:] & alnum[:-1]
+    cont[doc_start[doc_start < doc_end]] = False  # runs restart per document
+    tok = np.flatnonzero(~space & ~cont)
+    end = tok + 1
+    is_run = alnum[tok]
+    run_last = alnum.copy()
+    run_last[:-1] &= ~cont[1:]
+    end[is_run] = np.flatnonzero(run_last) + 1
+
+    doc = np.searchsorted(doc_end, tok, side="right")
+    n = np.bincount(doc, minlength=B)
+    rank = np.arange(len(tok)) - (np.cumsum(n) - n)[doc]
+    keep = rank < L - 1
+    tok, end, is_run, doc, rank = tok[keep], end[keep], is_run[keep], doc[keep], rank[keep]
+
+    tid = np.empty(len(tok), dtype=np.int32)
+    tid[~is_run] = _char_ids(cp[tok[~is_run]])
+    tid[is_run] = [
+        token_id(joined[s:e].lower()) for s, e in zip(tok[is_run].tolist(), end[is_run].tolist())
+    ]
+
+    ids = np.zeros((B, L), dtype=np.int32)
+    ids[:, 0] = CLS_ID
+    ids[doc, rank + 1] = tid
+    sep = n + 2 <= L
+    ids[sep, n[sep] + 1] = SEP_ID
+    mask = (np.arange(L) < np.minimum(n + 2, L)[:, None]).astype(np.int32)
+    offsets = np.zeros((B, L, 2), dtype=np.int32)
+    body = rank < L - 2
+    doc, row = doc[body], rank[body] + 1
+    offsets[doc, row, 0] = tok[body] - doc_start[doc]
+    offsets[doc, row, 1] = end[body] - doc_start[doc]
     return ids, mask, offsets
 
 

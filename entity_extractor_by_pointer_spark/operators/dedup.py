@@ -535,31 +535,39 @@ def minhash_signatures(
     # pushdown inlines the whole array build interpreted above the scan).
     from ..partitioning import spread_small_scan
 
+    # _th (an xxhash64 of the text) tells apart rows that share a doc id, so
+    # the representative join below picks exactly one text
     words = spread_small_scan(docs.select(id_col, text_col)).select(
-        F.col(id_col), F.split(norm_text(F.col(text_col)), " ").alias("w")
+        F.col(id_col),
+        F.xxhash64(text_col).alias("_th"),
+        F.split(norm_text(F.col(text_col)), " ").alias("w"),
     )
     wh_words = words.select(
-        id_col, "w", F.expr("transform(w, x -> xxhash64(x))").alias("wh")
+        id_col, "_th", "w", F.expr("transform(w, x -> xxhash64(x))").alias("wh")
     )
     occ = wh_words.select(
         id_col,
+        "_th",
         F.posexplode_outer(
             F.expr(_shingle_arr_sql(NGRAM_N, hashed=True, positional=True))
         ).alias("pos", "_hsh"),
     ).where(F.col("_hsh").isNotNull())
     reps = cached(
-        occ.groupBy("_hsh").agg(F.min(F.struct(id_col, "pos")).alias("r"))
+        occ.groupBy("_hsh").agg(F.min(F.struct(id_col, "_th", "pos")).alias("r"))
     )
     if reps.count() <= BROADCAST_ROWS_MAX:
         # rebuild one string per DISTINCT shingle: broadcast the (hash,
-        # doc, offset) representatives back onto the word arrays (equal
-        # strings share a hash, so any representative yields the same
-        # string — and therefore the same digests)
+        # doc, text hash, offset) representatives back onto the word arrays
+        # (equal strings share a hash, so any representative yields the
+        # same string — and therefore the same digests)
         rep_rows = reps.select(
-            "_hsh", F.col(f"r.{id_col}").alias(id_col), F.col("r.pos").alias("pos")
+            "_hsh",
+            F.col(f"r.{id_col}").alias(id_col),
+            F.col("r._th").alias("_th"),
+            F.col("r.pos").alias("pos"),
         )
         vocab = F.broadcast(rep_rows).join(
-            words, id_col
+            words, [id_col, "_th"]
         ).select(
             "_hsh",
             F.concat_ws(

@@ -53,6 +53,27 @@ def test_minhash_lsh_finds_exact_and_near_dups(spark):
     assert (1, 4) not in pairs
 
 
+def test_minhash_signatures_with_duplicate_doc_id(spark, monkeypatch):
+    """A doc id held by two rows with different text: the distinct-shingle
+    dim must rebuild each shingle from the one text its representative came
+    from, so the signatures equal the inline-digest branch's."""
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha beta gamma delta epsilon zeta eta theta"),
+            (1, "one two three four five six seven eight"),
+            (2, "alpha beta gamma delta epsilon zeta eta theta"),
+            (3, "one two three four five six seven eight nine"),
+            (4, "completely different words entirely here now okay yes"),
+        ],
+        "doc_id long, text string",
+    )
+    dim = sorted(tuple(r) for r in dd.minhash_signatures(docs).collect())
+    monkeypatch.setattr(dd, "BROADCAST_ROWS_MAX", 0)
+    inline = sorted(tuple(r) for r in dd.minhash_signatures(docs).collect())
+    assert len(dim) == 4
+    assert dim == inline
+
+
 def test_simhash_blocking_is_lossless(spark):
     """Pigeonhole blocking must find every pair that exact O(n²) finds."""
     docs = _docs(spark)

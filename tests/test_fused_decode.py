@@ -70,3 +70,22 @@ def test_fused_decode_keeps_rows_holding_nan_and_inf(monkeypatch):
     starts = {(s[0], s[4]) for s in spec[0] if s[2] == offs[0][row][0]}
     assert {(c, np.inf) for c in range(3)} <= starts
     assert sum(1 for c, score in starts if np.isfinite(score)) >= 3
+
+
+@pytest.mark.parametrize("bias", [-4.0, 0.0])
+@pytest.mark.parametrize("model_type", ["gp", "bp"])
+def test_spans_do_not_depend_on_batch_composition(model_type, bias):
+    """Each document's spans are the same scored alone or inside a
+    256-document batch of mixed lengths: the Spark UDF sees whatever Arrow
+    batches the scan yields, and its parity with the single-process model
+    rests on this."""
+    model = PointerNerModel(NerConfig(classes=CLASSES2, model_type=model_type, logit_bias=bias))
+    texts = [
+        _synth_text(i, min_sents=1 + i % 12, extra_sents=1 + i % 5) for i in range(256 - len(TEXTS))
+    ] + list(TEXTS)
+    batch = model.predict_batch(texts)
+    assert len(batch) == 256
+    if bias == 0.0:
+        assert any(batch)  # BP fires nothing at -4.0 on these pages
+    for text, spans in zip(texts, batch):
+        assert model.predict_batch([text])[0] == spans

@@ -1,8 +1,14 @@
+import hypothesis.strategies as st
+import pytest
+from hypothesis import given, settings
+
 from entity_extractor_by_pointer_spark.functions.tokenizer import (
     CLS_ID,
     SEP_ID,
     CjkCharTokenizer,
     basic_tokenize,
+    encode_batch_for_inference,
+    encode_for_inference,
     pad_or_truncate,
     token_id,
 )
@@ -71,3 +77,60 @@ def test_token_ids_deterministic_and_in_vocab_range():
     a, b = token_id("广"), token_id("广")
     assert a == b and 104 <= a < 21128
     assert token_id("gdp") != token_id("gpd")
+
+
+# every str.isspace() codepoint (U+0085, U+00A0, U+1680, U+2000-U+200A,
+# U+2028/9, U+202F, U+205F, U+3000, \x1c-\x1f, ...), ASCII alnum in both
+# cases, punctuation, BMP and astral CJK, NUL and combining marks; the lone
+# surrogate has its own case below
+_SPACES = [chr(c) for c in range(0x3001) if chr(c).isspace()]
+_BATCH_ALPHABET = _SPACES + list("abzAZ019,.!?、。中国广州\x00é１") + [
+    "\U00020001",
+    "\u0301",
+    "\u20dd",
+]
+_BATCH_TEXT = st.text(alphabet=st.sampled_from(_BATCH_ALPHABET), max_size=40)
+
+
+def _assert_batch_equals_spec(texts, max_len):
+    try:
+        spec = [encode_for_inference(t, max_len) for t in texts]
+    except UnicodeEncodeError:  # a lone surrogate has no utf-8 token id
+        with pytest.raises(UnicodeEncodeError):
+            encode_batch_for_inference(texts, max_len)
+        return
+    ids, mask, offsets = encode_batch_for_inference(texts, max_len)
+    assert ids.shape == mask.shape == (len(texts), max_len)
+    assert offsets.shape == (len(texts), max_len, 2)
+    for i, (s_ids, s_mask, s_offs) in enumerate(spec):
+        assert ids[i].tolist() == s_ids
+        assert mask[i].tolist() == s_mask
+        row = [tuple(o) for o in offsets[i].tolist()]
+        assert row[: len(s_offs)] == s_offs
+        assert set(row[len(s_offs) :]) <= {(0, 0)}
+
+
+@given(st.lists(_BATCH_TEXT, max_size=8), st.sampled_from([2, 3, 5, 200]))
+@settings(max_examples=400, deadline=None)
+def test_batch_encoding_equals_per_document_spec(texts, max_len):
+    _assert_batch_equals_spec(texts, max_len)
+
+
+@pytest.mark.parametrize("max_len", [2, 3, 5, 200])
+def test_batch_encoding_document_boundaries(max_len):
+    # empty documents at the start, middle and end; ASCII runs of adjacent
+    # documents must not merge across the boundary
+    texts = ["", "abc", "def", "", "中 x1 Y", "x" * 300 + " 广", ""]
+    _assert_batch_equals_spec(texts, max_len)
+    _assert_batch_equals_spec([], max_len)
+    ids = encode_batch_for_inference(["abc", "def"], max_len)[0]
+    if max_len >= 3:
+        assert ids[0, 1] == token_id("abc") and ids[1, 1] == token_id("def")
+
+
+@pytest.mark.parametrize("texts", [["ab", "x\ud800y"], ["a" * 300 + " \ud800"], ["\ud800"]])
+def test_batch_encoding_raises_on_lone_surrogate_like_spec(texts):
+    # the spec raises wherever the surrogate sits, inside the window or not
+    _assert_batch_equals_spec(texts, 5)
+    with pytest.raises(UnicodeEncodeError):
+        encode_batch_for_inference(texts, 5)
