@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from entity_extractor_by_pointer_spark.functions.gazetteer import (
+    CANON_EDGES,
     DOCS_GAZETTEER,
     PREDICATE_RULE,
 )
@@ -38,10 +39,7 @@ from entity_extractor_by_pointer_spark.functions.textstats import (
 )
 from entity_extractor_by_pointer_spark.operators import dedup as dd
 from entity_extractor_by_pointer_spark.operators import similarity as sim
-from entity_extractor_by_pointer_spark.operators.canonicalize import (
-    canonicalize_entities,
-    connected_components,
-)
+from entity_extractor_by_pointer_spark.operators.canonicalize import connected_components
 from entity_extractor_by_pointer_spark.operators.linking import (
     alias_df,
     link_mentions,
@@ -245,16 +243,13 @@ def _canon_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     written once per (dataset, fingerprint) and read thereafter. Values are
     bit-identical to the inline chain (strings/longs; parquet round-trip is
     exact), so every oracle row stays hash-green."""
+    from entity_extractor_by_pointer_spark.plans.pipeline import canonical_mentions
+
     path = _stamped_store_path(sf_dir, "documents", "kg_canon")
 
     def build(p: str) -> None:
-        m = _mention_store(spark, sf_dir)
-        aliases = alias_df(spark, [(n, e) for n, _t2, e in DOCS_GAZETTEER])
-        linked = link_mentions(m, aliases).where(F.col("entity_id").isNotNull())
-        edges = spark.createDataFrame(
-            [("ORG_VECTOR", "ORG_SPARK"), ("LOC_STREAM", "LOC_WINDOW")], "src string, dst string"
-        )
-        canonicalize_entities(linked, edges).write.mode("overwrite").parquet(p)
+        canon = canonical_mentions(_mention_store(spark, sf_dir), DOCS_GAZETTEER, CANON_EDGES)
+        canon.write.mode("overwrite").parquet(p)
 
     _write_once(path, build)
     return spark.read.parquet(path)
@@ -332,30 +327,26 @@ def _plane_dot_sql(vec: str, plane: list[float]) -> str:
 # KG pipeline queries (documents table, gazetteer scorer)
 
 
-def _doc_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _mention_store(spark, sf_dir)
-
-
 def q_ner_mentions(spark, sf_dir):
-    return mention_sets(_doc_mentions(spark, sf_dir), id_col="doc_id")
+    return mention_sets(_mention_store(spark, sf_dir), id_col="doc_id")
 
 
 def q_ner_mention_positions(spark, sf_dir):
-    m = _doc_mentions(spark, sf_dir)
+    m = _mention_store(spark, sf_dir)
     return m.groupBy("doc_id", "type", "entity").agg(
         F.min("start_idx").cast("int").alias("first_pos")
     )
 
 
 def q_entity_linking(spark, sf_dir):
-    m = _doc_mentions(spark, sf_dir)
+    m = _mention_store(spark, sf_dir)
     aliases = alias_df(spark, LINK_ALIASES)
     linked = link_mentions(m, aliases).where(F.col("entity_id").isNotNull())
     return linked.select("doc_id", "entity", "entity_id").dropDuplicates()
 
 
 def q_linking_unlinked(spark, sf_dir):
-    m = _doc_mentions(spark, sf_dir)
+    m = _mention_store(spark, sf_dir)
     aliases = alias_df(spark, LINK_ALIASES)
     return unlinked_only(m, aliases).select("doc_id", "entity").dropDuplicates()
 
@@ -369,7 +360,7 @@ def q_entity_disambiguation(spark, sf_dir):
         disambiguate_mentions,
     )
 
-    m = _doc_mentions(spark, sf_dir)
+    m = _mention_store(spark, sf_dir)
     cand = spark.createDataFrame(AMBIG_CANDIDATES, "surface string, entity_id string")
     prof = spark.createDataFrame(ENTITY_PROFILES, "entity_id string, term string")
     return disambiguate_mentions(m, cand, prof, _t(spark, sf_dir, "documents"))
@@ -380,12 +371,8 @@ def q_canonical_mentions(spark, sf_dir):
     return canon.select("doc_id", "canon_id").dropDuplicates()
 
 
-def _doc_triples(spark, sf_dir):
-    return _triples_store(spark, sf_dir)
-
-
 def q_triples_flagship(spark, sf_dir):
-    return triple_counts(_doc_triples(spark, sf_dir))
+    return triple_counts(_triples_store(spark, sf_dir))
 
 
 PAGERANK_ITERS = 5
@@ -397,7 +384,7 @@ def q_graph_degrees(spark, sf_dir):
     per canonical entity."""
     from entity_extractor_by_pointer_spark.operators.graph import entity_degrees
 
-    return entity_degrees(_doc_triples(spark, sf_dir))
+    return entity_degrees(_triples_store(spark, sf_dir))
 
 
 def q_graph_pagerank(spark, sf_dir):
@@ -406,7 +393,7 @@ def q_graph_pagerank(spark, sf_dir):
     from entity_extractor_by_pointer_spark.operators.graph import pagerank
 
     return pagerank(
-        _doc_triples(spark, sf_dir), iterations=PAGERANK_ITERS, damping=PAGERANK_DAMPING
+        _triples_store(spark, sf_dir), iterations=PAGERANK_ITERS, damping=PAGERANK_DAMPING
     )
 
 
@@ -468,7 +455,7 @@ def q_graph_export_ntriples(spark, sf_dir):
     expressions over the distinct edge set."""
     from entity_extractor_by_pointer_spark.operators.triples import ntriples_lines
 
-    return ntriples_lines(_doc_triples(spark, sf_dir))
+    return ntriples_lines(_triples_store(spark, sf_dir))
 
 
 def q_graph_pred_stats(spark, sf_dir):
@@ -476,7 +463,7 @@ def q_graph_pred_stats(spark, sf_dir):
     mean fan-out) — the KG schema-induction census."""
     from entity_extractor_by_pointer_spark.operators.graph import predicate_stats
 
-    return predicate_stats(_doc_triples(spark, sf_dir))
+    return predicate_stats(_triples_store(spark, sf_dir))
 
 
 def q_graph_metapaths(spark, sf_dir):
@@ -485,7 +472,7 @@ def q_graph_metapaths(spark, sf_dir):
     feeding rule mining; mid-hub capped at scale (inert here)."""
     from entity_extractor_by_pointer_spark.operators.graph import metapath_counts
 
-    return metapath_counts(_doc_triples(spark, sf_dir))
+    return metapath_counts(_triples_store(spark, sf_dir))
 
 
 KG_NEG_K = 2
@@ -498,7 +485,7 @@ def q_kg_negatives(spark, sf_dir):
     distribution-friendly)."""
     from entity_extractor_by_pointer_spark.operators.kgprep import corrupt_triples
 
-    return corrupt_triples(_doc_triples(spark, sf_dir), k=KG_NEG_K)
+    return corrupt_triples(_triples_store(spark, sf_dir), k=KG_NEG_K)
 
 
 def q_graph_pagerank_weighted(spark, sf_dir):
@@ -510,7 +497,7 @@ def q_graph_pagerank_weighted(spark, sf_dir):
     from entity_extractor_by_pointer_spark.operators.triples import triple_counts
 
     return pagerank(
-        triple_counts(_doc_triples(spark, sf_dir)),
+        triple_counts(_triples_store(spark, sf_dir)),
         iterations=PAGERANK_ITERS,
         damping=PAGERANK_DAMPING,
         weight_col="n_docs",
@@ -527,7 +514,7 @@ def q_graph_ppr(spark, sf_dir):
     from entity_extractor_by_pointer_spark.operators.graph import pagerank
 
     return pagerank(
-        _doc_triples(spark, sf_dir),
+        _triples_store(spark, sf_dir),
         iterations=PAGERANK_ITERS,
         damping=PAGERANK_DAMPING,
         seeds=PPR_SEEDS,
@@ -540,7 +527,7 @@ def q_graph_triangles(spark, sf_dir):
     formulation that survives crawl-scale hub skew."""
     from entity_extractor_by_pointer_spark.operators.graph import triangle_counts
 
-    return triangle_counts(_doc_triples(spark, sf_dir))
+    return triangle_counts(_triples_store(spark, sf_dir))
 
 
 def q_graph_related(spark, sf_dir):
@@ -550,7 +537,7 @@ def q_graph_related(spark, sf_dir):
     materialize; ultra-hub centers are capped out (inert on testdata)."""
     from entity_extractor_by_pointer_spark.operators.graph import related_entities
 
-    return related_entities(_doc_triples(spark, sf_dir))
+    return related_entities(_triples_store(spark, sf_dir))
 
 
 def q_entity_pmi_edges(spark, sf_dir):
@@ -565,7 +552,7 @@ def q_entity_pmi_edges(spark, sf_dir):
 
 
 def q_top_entities_per_type(spark, sf_dir):
-    m = mention_sets(_doc_mentions(spark, sf_dir).withColumnRenamed("doc_id", "url"))
+    m = mention_sets(_mention_store(spark, sf_dir).withColumnRenamed("doc_id", "url"))
     freq = m.groupBy("type", "entity").agg(F.count(F.lit(1)).alias("n_docs"))
     w = Window.partitionBy("type").orderBy(F.desc("n_docs"), F.asc("entity"))
     return freq.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 2)
@@ -1369,11 +1356,10 @@ TRAIN_W0 = (0.1, -0.2, 0.3, -0.05)
 
 def q_train_grad_step(spark, sf_dir):
     """One full-batch logistic-regression gradient at seeded weights,
-    computed as a pure DataFrame aggregation (the distributed training
-    loop's inner step — SURVEY.md §2 T3 evidence; the loop itself, with the
-    optimizer zoo / FGM / PGD / warmup / early-stop mirroring reference
-    train.py:80-233, is pinned by tests/test_training.py). Rounded to 6
-    decimals so Spark's and DuckDB's libm exp/ln ulps can't differ."""
+    computed as a pure DataFrame aggregation (a data-parallel training
+    step — SURVEY.md §2 T3 evidence; tests/test_training.py pins it against
+    the numpy gradient). Rounded to 6 decimals so Spark's and DuckDB's libm
+    exp/ln ulps can't differ."""
     import numpy as np
 
     feats = td.doc_features(_t(spark, sf_dir, "documents"))

@@ -201,7 +201,8 @@ def main(argv: list[str] | None = None) -> int:
         if args.pages_parquet
         else generate_pages(spark, args.synth_pages, partitions=64)
     )
-    pipe = KgPipeline(spark, args.workdir, run_id, PipelineConfig(scorer=args.scorer))
+    cfg = PipelineConfig(scorer=args.scorer, classes=tuple(args.classes.split(",")))
+    pipe = KgPipeline(spark, args.workdir, run_id, cfg)
     counts = pipe.run(pages, resume=args.resume)
     top = counts.orderBy("n_docs", ascending=False).limit(10).collect()
     print(f"run_id={run_id} top triples:")

@@ -14,7 +14,6 @@ import re
 
 import pandas as pd
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -44,7 +43,3 @@ def with_extracted_text(df, html_col: str = "html", out_col: str = "extracted_te
     never flows through a shuffle.
     """
     return df.withColumn(out_col, extract_text_udf(F.col(html_col)))
-
-
-def extraction_mismatch(df, text_col: str = "text", extracted_col: str = "extracted_text") -> Column:
-    return F.sum((F.col(text_col) != F.col(extracted_col)).cast("int"))

@@ -102,77 +102,3 @@ def profile_table(
         "min_val",
         "max_val",
     )
-
-
-def profile_drift(
-    old: DataFrame,
-    new: DataFrame,
-    columns: list[str] | None = None,
-    null_ratio_alert: float = 0.01,
-    distinct_ratio_alert: float = 0.5,
-) -> DataFrame:
-    """(col_name, n_rows_old, n_rows_new, null_ratio_old, null_ratio_new,
-    distinct_ratio_old, distinct_ratio_new, schema_changed, range_changed,
-    alert) — the snapshot-to-snapshot DRIFT report an ingest pipeline checks before
-    trusting a new crawl drop against the previous one (pair it with
-    ``StageWriter.read_stage(as_of=...)`` for Iceberg-style time-travel
-    inputs). ``alert`` fires when the null ratio jumps more than
-    ``null_ratio_alert`` (absolute), the distinct-per-row ratio moves by
-    more than ``distinct_ratio_alert`` (relative), or a column appears /
-    disappears between snapshots (``schema_changed``, reported via a full
-    outer join — the classic silent schema-rot signals); ``range_changed``
-    flags min/max movement with null-safe comparisons.
-
-    Scale shape: two ``profile_table`` single-aggregation scans + a join on
-    the tiny (one row per column) profile frames."""
-    po = profile_table(old, columns)
-    pn = profile_table(new, columns)
-
-    def ratios(p: DataFrame, tag: str) -> DataFrame:
-        return p.select(
-            "col_name",
-            F.col("n_rows").alias(f"n_rows_{tag}"),
-            F.round(F.col("n_nulls") / F.greatest(F.col("n_rows"), F.lit(1)), 6).alias(
-                f"null_ratio_{tag}"
-            ),
-            F.round(
-                F.col("n_distinct") / F.greatest(F.col("n_rows"), F.lit(1)), 6
-            ).alias(f"distinct_ratio_{tag}"),
-            F.col("min_val").alias(f"min_{tag}"),
-            F.col("max_val").alias(f"max_{tag}"),
-        )
-
-    # FULL OUTER on col_name: a column added or removed between snapshots
-    # is itself the most drastic drift (classic schema rot) — an inner join
-    # would silently drop it from the report
-    j = ratios(po, "old").join(ratios(pn, "new"), "col_name", "full_outer")
-    schema_changed = F.col("n_rows_old").isNull() | F.col("n_rows_new").isNull()
-    null_jump = (
-        F.abs(F.col("null_ratio_new") - F.col("null_ratio_old")) > null_ratio_alert
-    )
-    distinct_jump = (
-        F.abs(F.col("distinct_ratio_new") - F.col("distinct_ratio_old"))
-        > F.lit(distinct_ratio_alert) * F.greatest(F.col("distinct_ratio_old"), F.lit(1e-12))
-    )
-    return j.select(
-        "col_name",
-        "n_rows_old",
-        "n_rows_new",
-        "null_ratio_old",
-        "null_ratio_new",
-        "distinct_ratio_old",
-        "distinct_ratio_new",
-        schema_changed.alias("schema_changed"),
-        # null-SAFE comparisons: an all-null column profiles to NULL
-        # min/max, and (NULL != x) would evaluate to NULL — masking the
-        # very change (all-null → populated) the flag exists to surface
-        (
-            (~F.col("min_old").eqNullSafe(F.col("min_new")))
-            | (~F.col("max_old").eqNullSafe(F.col("max_new")))
-        ).alias("range_changed"),
-        (
-            schema_changed
-            | F.coalesce(null_jump, F.lit(True))
-            | F.coalesce(distinct_jump, F.lit(True))
-        ).alias("alert"),
-    )

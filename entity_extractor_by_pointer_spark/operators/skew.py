@@ -1,16 +1,10 @@
-"""Explicit skew-handling join: salt-and-replicate.
+"""Hot-key detection: the observable first step of explicit skew handling.
 
 AQE's skew-join splitting (enabled globally in ``session.get_spark``) covers
-most cases at runtime; this operator is the explicit fallback for joins AQE
-cannot rebalance — e.g. when one key holds a double-digit percentage of all
-rows ("中国"-grade entities at crawl scale) or when the build side must stay
-a shuffle join (too big to broadcast).
-
-Technique: the fact side gets a uniform random-ish salt in [0, K) appended
-to the join key; the dim side is replicated K× with every salt value; the
-join key becomes (key, salt) so a hot key's rows spread over K reducers.
-Exactly one dim replica matches each fact row → result is row-identical to
-the unsalted join (asserted in tests/test_skew.py).
+skewed joins at runtime, and the hot (subj, pred, obj) aggregation is the
+two-phase ``triples.salted_count``. ``detect_hot_keys`` makes the skew
+itself visible: the pipeline logs the keys it finds to ``_metrics`` on
+every run.
 """
 
 from __future__ import annotations
@@ -28,8 +22,7 @@ def detect_hot_keys(
     """First-pass hot-key detection (SURVEY.md §4 item 1): keys holding more
     than ``min_share`` of all rows, by exact count-by-key (map-side combined
     — one row per key per partition crosses the shuffle). The pipeline logs
-    these to ``_metrics`` so skew decisions are observable per run; callers
-    route detected keys through ``salted_join``/``salted_count``."""
+    these to ``_metrics`` so skew is observable per run."""
     total = df.count()
     if total == 0:
         return []
@@ -42,34 +35,3 @@ def detect_hot_keys(
         .collect()
     )
     return [(r[key], int(r["n"])) for r in rows]
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Join ``fact`` (large, possibly skewed on ``key``) with ``dim``
-    (smaller, but above the broadcast threshold) on ``key``.
-
-    Only fact-preserving join types are row-identical to the unsalted join:
-    the dim side is replicated ``salt_buckets`` times, so right/full joins
-    would emit each unmatched dim row once per replica."""
-    if how not in ("inner", "left", "left_semi", "left_anti", "left_outer"):
-        raise ValueError(
-            f"salted_join supports fact-preserving join types only, got {how!r}: "
-            "the salt-replicated dim side would duplicate unmatched dim rows "
-            "under right/full joins"
-        )
-    salted_fact = fact.withColumn(
-        "_salt", F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(), F.lit(salt_buckets)).cast("int")
-    )
-    replicas = dim.crossJoin(
-        F.broadcast(
-            fact.sparkSession.range(salt_buckets).select(F.col("id").cast("int").alias("_salt"))
-        )
-    )
-    out = salted_fact.join(replicas, [key, "_salt"], how)
-    return out.drop("_salt")

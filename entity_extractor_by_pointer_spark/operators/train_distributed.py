@@ -1,27 +1,21 @@
-"""Distributed data-parallel training loop (SURVEY.md §2 T1–T3 evidence).
+"""Distributed logistic-regression gradient step (SURVEY.md §2 T3 evidence).
 
 The reference trains single-process on a GPU (``engines/train.py:162-213``).
-The Spark-native re-expression: per-batch gradients are **DataFrame
-aggregations** — the current parameters are broadcast into the plan as
-literals, each row contributes its gradient terms through built-in JVM
-expressions (no Python UDF anywhere), and one partial-aggregated job returns
-the full-batch gradient + loss to the driver, which applies the optimizer /
-warmup schedule / adversarial attack exactly as the reference loop does.
-This is the classic "map-side-combined gradient allreduce" shape: at 100 TB
-the gradient job shuffles exactly ONE row per partition (the partial sums),
-so step cost is a scan, not a shuffle.
+The Spark-native re-expression of one training step: the full-batch
+gradient is a **DataFrame aggregation** — the current parameters are
+broadcast into the plan as literals, each row contributes its gradient terms
+through built-in JVM expressions (no Python UDF anywhere), and one
+partial-aggregated job returns the gradient + loss. This is the classic
+"map-side-combined gradient allreduce" shape: at 100 TB the gradient job
+shuffles exactly ONE row per partition (the partial sums), so step cost is a
+scan, not a shuffle.
 
 Demo model: logistic regression (is the document English?) over
-deterministic per-doc features — small enough that a single gradient step is
-SQL-expressible and oracle-checked by the driver (query ``train_grad_step``),
-while the full loop (optimizer zoo × FGM/PGD × warmup × early-stop, mirroring
-reference ``train.py:162-233`` / ``gan_utils.py``) is pinned by pytest
-against a single-process numpy trainer on the same data.
-
-The trainable weight vector is registered under the name
-``word_embeddings.w`` so the adversarial attacks' parameter-name matching
-(reference ``gan_utils.py:17``, ``emb_name='word_embeddings.'``) is exercised
-for real.
+deterministic per-doc features — small enough that the gradient step is
+SQL-expressible and checked against a DuckDB oracle (query
+``train_grad_step``); ``logistic_grad_local`` is its single-process numpy
+oracle in the tests. No optimizer loop drives it: the reference's
+optimizer zoo, warmup, FGM/PGD and early stopping are not implemented.
 """
 
 from __future__ import annotations
@@ -31,10 +25,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.training import FGM, PGD, Params, make_optimizer, warmup_schedule
-
 N_FEATURES = 4
-PARAM_NAME = "word_embeddings.w"
 
 
 def doc_features(docs: DataFrame) -> DataFrame:
@@ -79,12 +70,6 @@ def logistic_grad_df(features: DataFrame, w: np.ndarray) -> DataFrame:
     )
 
 
-def logistic_grad(features: DataFrame, w: np.ndarray) -> tuple[np.ndarray, float, int]:
-    row = logistic_grad_df(features, w).first()
-    g = np.array([row[f"g{j}"] for j in range(N_FEATURES)], dtype=np.float64)
-    return g, float(row["loss"]), int(row["n"])
-
-
 def logistic_grad_local(X: np.ndarray, y: np.ndarray, w: np.ndarray) -> tuple[np.ndarray, float]:
     """Single-process oracle for the distributed gradient (same math)."""
     z = X @ w
@@ -92,70 +77,3 @@ def logistic_grad_local(X: np.ndarray, y: np.ndarray, w: np.ndarray) -> tuple[np
     g = ((p - y) @ X) / len(y)
     loss = float(np.mean(np.maximum(z, 0.0) - z * y + np.log1p(np.exp(-np.abs(z)))))
     return g, loss
-
-
-def train_logistic(
-    features_or_fn,
-    steps: int = 10,
-    optimizer: str = "Adam",
-    lr: float = 0.1,
-    gan_method: str | None = None,
-    attack_round: int = 3,
-    scheduler_type: str | None = None,
-    num_warmup_steps: int = -1,
-    w0: np.ndarray | None = None,
-) -> tuple[np.ndarray, list[float]]:
-    """Full-batch training loop mirroring reference ``train.py:162-213``:
-    zero_grad → backward → (FGM: attack + accumulate / PGD: K projected
-    rounds with the grad backup-restore protocol) → optimizer.step() →
-    scheduler.step(). ``features_or_fn`` is a DataFrame (distributed path)
-    or a ``(w) -> (grad, loss)`` callable (single-process oracle path) —
-    both run the IDENTICAL driver-side loop, which is what the pytest
-    equivalence test leans on."""
-    w = np.zeros(N_FEATURES, dtype=np.float64) if w0 is None else w0.astype(np.float64).copy()
-    params: Params = {PARAM_NAME: w}
-    opt = make_optimizer(optimizer, params, lr)
-    sched = (
-        warmup_schedule(scheduler_type, num_warmup_steps, steps) if scheduler_type else None
-    )
-    fgm = FGM(params) if gan_method == "fgm" else None
-    pgd = PGD(params) if gan_method == "pgd" else None
-
-    if isinstance(features_or_fn, DataFrame):
-        grad_fn = lambda ww: logistic_grad(features_or_fn, ww)[:2]  # noqa: E731
-    else:
-        grad_fn = features_or_fn
-
-    base_lr = opt.lr
-    losses: list[float] = []
-    for step in range(steps):
-        g, loss = grad_fn(w)
-        losses.append(loss)
-        grads = {PARAM_NAME: g}
-        if fgm is not None:
-            # reference train.py:179-184: adversarial grad ACCUMULATES onto
-            # the clean grad (no zero_grad between the two backwards)
-            fgm.attack(grads)
-            g_adv, _ = grad_fn(w)
-            grads = {PARAM_NAME: g + g_adv}
-            fgm.restore()
-        elif pgd is not None:
-            # reference train.py:185-196
-            pgd.backup_grad(grads)
-            cur = grads
-            for t in range(attack_round):
-                pgd.attack(cur, is_first_attack=(t == 0))
-                if t != attack_round - 1:
-                    g_t, _ = grad_fn(w)
-                    cur = {PARAM_NAME: g_t}
-                else:
-                    restored = pgd.restore_grad()
-                    g_t, _ = grad_fn(w)
-                    cur = {PARAM_NAME: restored[PARAM_NAME] + g_t}
-            pgd.restore()
-            grads = cur
-        if sched is not None:
-            # transformers schedulers multiply the base lr by the step factor
-            opt.lr = base_lr * sched(step)
-        opt.step(grads)
-    return w, losses

@@ -22,7 +22,7 @@ Scale notes (SURVEY.md §4):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import cached
@@ -140,10 +140,16 @@ def ntriples_lines(triples: DataFrame, base: str = NT_BASE) -> DataFrame:
     )
 
 
+def subj_bucket(buckets: int) -> Column:
+    """Subject-hash bucket of a triple: the parquet partition value standing
+    in for an Iceberg ``bucket(N, subj)`` transform."""
+    return F.pmod(F.hash("subj"), F.lit(buckets))
+
+
 def write_triples(triples: DataFrame, path: str, buckets: int = TRIPLE_BUCKETS) -> None:
     """Materialize the graph table partitioned by subject hash."""
     (
-        triples.withColumn("subj_bucket", F.pmod(F.hash("subj"), F.lit(buckets)))
+        triples.withColumn("subj_bucket", subj_bucket(buckets))
         .repartition("subj_bucket")
         .sortWithinPartitions("subj", "pred", "obj")
         .write.mode("overwrite")

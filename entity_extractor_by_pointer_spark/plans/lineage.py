@@ -421,22 +421,14 @@ class StageWriter:
         stage: str,
         df: DataFrame,
         partition_by: list[str] | None = None,
-        validate=None,
     ) -> DataFrame:
-        """Materialize a stage, then append per-partition lineage rows.
-
-        ``validate`` (optional callable) runs after the data write but
-        BEFORE the lineage commit — if it raises, the stage has no lineage
-        row, ``is_done`` stays false, and a resume recomputes it (used for
-        single-pass Observation invariant checks)."""
+        """Materialize a stage, then append per-partition lineage rows."""
         started = time.time()
         path = self._stage_path(stage)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-        if validate is not None:
-            validate()
         # persist the stage schema in the manifest: a zero-row partitioned
         # write leaves no data files, so later schema inference would fail
         # (hit by pipelines whose scorer links no entities → zero triples)

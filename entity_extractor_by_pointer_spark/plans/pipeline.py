@@ -1,16 +1,21 @@
 """End-to-end KG-construction pipeline with stage-level resume.
 
-pages → extract (byte-identity check) → mentions → linked → canonical →
-triples → triple_counts, each stage materialized with per-partition lineage
-(``plans.lineage``). ``resume=True`` skips stages whose output + lineage
-exist — the distributed analog of the reference's best-checkpoint resume
+The KG build chain is written once, here: pages → extract (byte-identity
+check) → mentions (``mentions_for_pages``) → link → canonicalize
+(``canonical_mentions``) → triples. ``triples_for_pages`` runs it fused;
+``KgPipeline.run`` materializes the pages, mentions, triples and
+triple_counts stages with per-partition lineage (``plans.lineage``);
+``run_incremental`` appends snapshot increments; the canonical-mention
+store of ``__spark_entry__`` calls ``canonical_mentions`` with its own
+gazetteer. ``resume=True`` skips stages whose output + lineage exist — the
+distributed analog of the reference's best-checkpoint resume
 (``engines/train.py:126-130``), at stage granularity (SURVEY.md §2 S4/T4).
 """
 
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,76 +23,60 @@ from pyspark.sql import functions as F
 from ..functions.gazetteer import CANON_EDGES, PAGES_GAZETTEER
 from ..functions.model import NerConfig
 from ..operators.canonicalize import canonicalize_entities
-from ..operators.extract import extraction_mismatch, with_extracted_text
+from ..operators.extract import with_extracted_text
 from ..operators.linking import alias_df, link_mentions
 from ..operators.mentions import detect_mentions, detect_mentions_gazetteer
-from ..operators.triples import build_triples, triple_counts
+from ..operators.triples import build_triples, subj_bucket, triple_counts
 from .lineage import StageWriter
+
+MAX_SEQUENCE_LENGTH = 200
+# parquet partition count of the triples table (Iceberg bucket(N, subj))
+SUBJ_BUCKETS = 16
+
 
 @dataclass
 class PipelineConfig:
     scorer: str = "gazetteer"  # 'gazetteer' | 'gp' | 'bp'
     classes: tuple[str, ...] = ("person", "location", "organization")
-    max_sequence_length: int = 200
-    gazetteer: list = field(default_factory=lambda: list(PAGES_GAZETTEER))
-    aliases: list = field(default_factory=lambda: list(PAGES_GAZETTEER))
-    canon_edges: list = field(default_factory=lambda: list(CANON_EDGES))
-    # materialize the narrow linked/canonical stages as their own tables
-    # (finer resume granularity; default keeps them fused into triples)
-    materialize_all: bool = False
 
 
 def extract_checked(pages: DataFrame) -> DataFrame:
-    """HTML extraction + byte-identity invariant enforcement (module-level so
-    the batch and incremental paths share one implementation)."""
+    """HTML extraction with the byte-identity invariant checked in the same
+    pass: the output ``text`` raises, naming the url, on any row whose stored
+    text differs from its html's extraction. The check lives on ``text``
+    because Catalyst prunes it wherever ``text`` is unread; every caller
+    reads it. html is pruned here: downstream stages never shuffle it."""
     extracted = with_extracted_text(pages)
-    mismatches = extracted.agg(extraction_mismatch(extracted)).first()[0] or 0
-    if mismatches:
-        raise ValueError(f"extraction invariant violated on {mismatches} pages")
-    # html pruned here: downstream stages never shuffle the binary column
-    return extracted.select("url", "warc_ts", F.col("extracted_text").alias("text"), "lang")
-
-
-def extract_checked_observed(pages: DataFrame):
-    """Single-pass variant of ``extract_checked``: the invariant aggregate
-    rides the FIRST action on the returned frame via ``Observation`` (zero
-    extra extraction pass — at crawl scale the check is free instead of
-    doubling the most expensive narrow stage). Returns ``(df, finish)``;
-    call ``finish()`` after the materializing action to enforce the
-    invariant."""
-    from pyspark.sql import Observation
-
-    extracted = with_extracted_text(pages)
-    obs = Observation()
-    observed = extracted.observe(
-        obs, extraction_mismatch(extracted).alias("mismatches")
-    )
-    df = observed.select(
-        "url", "warc_ts", F.col("extracted_text").alias("text"), "lang"
-    )
-
-    def finish() -> None:
-        mismatches = obs.get["mismatches"] or 0
-        if mismatches:
-            raise ValueError(f"extraction invariant violated on {mismatches} pages")
-
-    return df, finish
+    text = F.when(
+        F.col("text") != F.col("extracted_text"),
+        F.raise_error(F.concat(F.lit("extraction invariant violated: "), F.col("url"))),
+    ).otherwise(F.col("extracted_text"))
+    return extracted.select("url", "warc_ts", text.alias("text"), "lang")
 
 
 def mentions_for_pages(pages_t: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Extracted pages → mentions under the configured scorer."""
     if cfg.scorer == "gazetteer":
-        return detect_mentions_gazetteer(
-            pages_t, cfg.gazetteer, max_tokens=cfg.max_sequence_length
-        )
+        return detect_mentions_gazetteer(pages_t, PAGES_GAZETTEER, max_tokens=MAX_SEQUENCE_LENGTH)
     return detect_mentions(
         pages_t,
         NerConfig(
             classes=list(cfg.classes),
             model_type=cfg.scorer,
-            max_sequence_length=cfg.max_sequence_length,
+            max_sequence_length=MAX_SEQUENCE_LENGTH,
         ),
     )
+
+
+def canonical_mentions(mentions: DataFrame, gazetteer: list, canon_edges: list) -> DataFrame:
+    """mentions → linked against the gazetteer's aliases (unlinked dropped)
+    → + ``canon_id`` from the duplicate-entity edges. Linking and
+    canonicalization are broadcast joins, narrow against the mention table."""
+    spark = mentions.sparkSession
+    aliases = alias_df(spark, [(name, eid) for name, _t, eid in gazetteer])
+    linked = link_mentions(mentions, aliases).where(F.col("entity_id").isNotNull())
+    edges = spark.createDataFrame(canon_edges, "src string, dst string")
+    return canonicalize_entities(linked, edges)
 
 
 def triples_for_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -97,13 +86,8 @@ def triples_for_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     on ANY partition of a corpus into batches and unioning the outputs
     equals running it once on the whole corpus — the property the
     incremental ingest path leans on (tested against a batch run)."""
-    spark = pages.sparkSession
-    pages_t = extract_checked(pages)
-    mentions = mentions_for_pages(pages_t, cfg)
-    aliases = alias_df(spark, [(name, eid) for name, _t, eid in cfg.aliases])
-    canon_edges = spark.createDataFrame(cfg.canon_edges, "src string, dst string")
-    linked = link_mentions(mentions, aliases).where(F.col("entity_id").isNotNull())
-    return build_triples(canonicalize_entities(linked, canon_edges))
+    mentions = mentions_for_pages(extract_checked(pages), cfg)
+    return build_triples(canonical_mentions(mentions, PAGES_GAZETTEER, CANON_EDGES))
 
 
 class KgPipeline:
@@ -132,31 +116,11 @@ class KgPipeline:
             release_all()
 
     def _run(self, pages: DataFrame, resume: bool = False) -> DataFrame:
-        cfg = self.config
         t0 = time.time()
-
-        if resume and self.writer.is_done("pages"):
-            pages_t = self.writer.read_stage("pages")
-        else:
-            # invariant check rides the stage write (Observation — one pass);
-            # a failed check aborts BEFORE the lineage commit, so the bad
-            # stage is never marked done
-            observed, finish_check = extract_checked_observed(pages)
-            pages_t = self.writer.write_stage("pages", observed, validate=finish_check)
-
-        def mentions_stage() -> DataFrame:
-            if cfg.scorer == "gazetteer":
-                return detect_mentions_gazetteer(
-                    pages_t, cfg.gazetteer, max_tokens=cfg.max_sequence_length
-                )
-            ner = NerConfig(
-                classes=list(cfg.classes),
-                model_type=cfg.scorer,
-                max_sequence_length=cfg.max_sequence_length,
-            )
-            return detect_mentions(pages_t, ner)
-
-        mentions = self._stage("mentions", resume, mentions_stage)
+        # the invariant check rides the pages write; a violation aborts it
+        # BEFORE the lineage commit, so the stage is never marked done
+        pages_t = self._stage("pages", resume, lambda: extract_checked(pages))
+        mentions = self._stage("mentions", resume, lambda: mentions_for_pages(pages_t, self.config))
 
         # observability for skew decisions: persist hot mention surfaces
         # (share ≥ 2%) into _metrics (SURVEY.md §4 hot-key detection)
@@ -168,34 +132,14 @@ class KgPipeline:
                 "hot_keys", {f"mentions.entity:{k}": float(n) for k, n in hot}
             )
 
-        aliases = alias_df(
-            self.spark, [(name, eid) for name, _t, eid in cfg.aliases]
-        )
-        canon_edges = self.spark.createDataFrame(cfg.canon_edges, "src string, dst string")
-
-        # linking + canonicalization are NARROW against the mention table
-        # (broadcast hash joins, no shuffle): at crawl scale re-materializing
-        # two extra copies of the mention table would dominate I/O, so by
-        # default they stay lazy and fuse into the triples stage. Set
-        # ``materialize_all=True`` to checkpoint them individually (finer
-        # resume granularity at the cost of 2 extra table writes).
-        def linked_fn() -> DataFrame:
-            return link_mentions(mentions, aliases).where(F.col("entity_id").isNotNull())
-
-        if cfg.materialize_all:
-            linked = self._stage("linked", resume, linked_fn)
-            canonical = self._stage(
-                "canonical", resume, lambda: canonicalize_entities(linked, canon_edges)
-            )
-        else:
-            canonical = canonicalize_entities(linked_fn(), canon_edges)
-
-        # graph table materialized bucketed by subject hash (north rule):
-        # parquet partition column standing in for Iceberg bucket(N, subj)
+        # linking + canonicalization stay lazy and fuse into the triples
+        # stage: re-materializing two more copies of the mention table would
+        # dominate I/O at crawl scale. The graph table is bucketed by
+        # subject hash (parquet stand-in for Iceberg bucket(N, subj)).
         def triples_stage() -> DataFrame:
-            t = build_triples(canonical)
+            t = build_triples(canonical_mentions(mentions, PAGES_GAZETTEER, CANON_EDGES))
             return (
-                t.withColumn("subj_bucket", F.pmod(F.hash("subj"), F.lit(16)))
+                t.withColumn("subj_bucket", subj_bucket(SUBJ_BUCKETS))
                 .repartition("subj_bucket")
                 .sortWithinPartitions("subj", "pred", "obj")
             )
@@ -257,7 +201,6 @@ class KgPipeline:
     def _run_incremental(self, new_pages: DataFrame, _fail_after: str | None = None) -> DataFrame:
         import os
 
-        cfg = self.config
         if not self.writer.is_done("pages"):
             return self.run(new_pages)
 
@@ -265,16 +208,17 @@ class KgPipeline:
         fresh = new_pages.join(existing_urls, "url", "left_anti")
         from ..cache import cached
 
-        # registered persist: the wrapper's finally releases it even on the
-        # injected-crash paths, where the explicit unpersist is never reached
-        fresh_t = cached(self._extract_checked(fresh))
-        # deterministic increment id: order-insensitive xor of url hashes +
-        # count — a single aggregate row, no driver-side url collection
-        # two independent order-insensitive folds: xor of one 60-bit url hash
-        # AND sum of a second (md5 hex 17-31). xor alone cancels across
-        # multisets (two equal-size fresh sets could collide and silently
-        # reuse an orphaned snapshot dir); a colliding set would now need to
-        # match both folds simultaneously
+        # registered persist (released by the wrapper's finally, even on the
+        # injected-crash paths); the signature aggregate below is its first
+        # action, so an extraction-invariant violation raises there, before
+        # any increment is written
+        fresh_t = cached(extract_checked(fresh))
+        # deterministic increment id from two independent order-insensitive
+        # folds in one aggregate row (no driver-side url collection): xor of
+        # one 60-bit url hash AND sum of a second (md5 hex 17-31). xor alone
+        # cancels across multisets (two equal-size fresh sets could collide
+        # and silently reuse an orphaned snapshot dir); a colliding set would
+        # now need to match both folds simultaneously
         sig = fresh_t.agg(
             F.count(F.lit(1)).alias("n"),
             F.expr(
@@ -289,7 +233,6 @@ class KgPipeline:
         ).first()
         n_new = int(sig["n"])
         if n_new == 0:
-            fresh_t.unpersist()
             self.writer.log_metrics("incremental", {"new_pages": 0.0})
             # re-aggregate counts even with no new pages: a prior run may
             # have crashed AFTER its pages commit but BEFORE the counts
@@ -304,32 +247,16 @@ class KgPipeline:
         def _inc_path(stage: str) -> str:
             return os.path.join(self.writer.workdir, f"{stage}_inc", inc_id)
 
-        if cfg.scorer == "gazetteer":
-            mentions_new = detect_mentions_gazetteer(
-                fresh_t, cfg.gazetteer, max_tokens=cfg.max_sequence_length
-            )
-        else:
-            mentions_new = detect_mentions(
-                fresh_t,
-                NerConfig(
-                    classes=list(cfg.classes),
-                    model_type=cfg.scorer,
-                    max_sequence_length=cfg.max_sequence_length,
-                ),
-            )
-        mentions_new.write.mode("overwrite").parquet(_inc_path("mentions"))
+        mentions_for_pages(fresh_t, self.config).write.mode("overwrite").parquet(
+            _inc_path("mentions")
+        )
         if _fail_after == "mentions":
             raise RuntimeError("injected failure after mentions increment")
 
         mentions_inc = self.spark.read.parquet(_inc_path("mentions"))
-        aliases = alias_df(self.spark, [(name, eid) for name, _t2, eid in cfg.aliases])
-        canon_edges = self.spark.createDataFrame(cfg.canon_edges, "src string, dst string")
-        linked_new = link_mentions(mentions_inc, aliases).where(F.col("entity_id").isNotNull())
-        canonical_new = canonicalize_entities(linked_new, canon_edges)
-        triples_new = (
-            build_triples(canonical_new)
-            .withColumn("subj_bucket", F.pmod(F.hash("subj"), F.lit(16)))
-        )
+        triples_new = build_triples(
+            canonical_mentions(mentions_inc, PAGES_GAZETTEER, CANON_EDGES)
+        ).withColumn("subj_bucket", subj_bucket(SUBJ_BUCKETS))
         triples_new.write.mode("overwrite").partitionBy("subj_bucket").parquet(
             _inc_path("triples")
         )
@@ -341,7 +268,6 @@ class KgPipeline:
         # stamp the snapshot-log ordinal (mtime is not a reliable order);
         # a crash before the stamp is healed by list_snapshots in mtime order
         self.writer.assign_commit_seq(inc_id)
-        fresh_t.unpersist()
         if _fail_after == "pages":
             raise RuntimeError("injected failure after pages commit")
 
@@ -349,7 +275,3 @@ class KgPipeline:
         counts = self.writer.write_stage("triple_counts", triple_counts(all_triples))
         self.writer.log_metrics("incremental", {"new_pages": float(n_new)})
         return counts
-
-    def _extract_checked(self, pages: DataFrame) -> DataFrame:
-        """Run HTML extraction and enforce the byte-identity invariant."""
-        return extract_checked(pages)

@@ -1,8 +1,11 @@
-"""Every package module is reachable from a production entry point.
+"""Every package module is reachable from a production entry point, and
+every public package def is referenced.
 
 Walks the ``import`` graph (module-level, function-local and relative
 imports alike) from the driver contract, the CLI, the benches, perfbench
 and tools; a package module no root reaches is dead code and fails here.
+A public top-level def or class whose name no root and no package module
+mentions fails too, unless it is a listed spec oracle.
 """
 
 import ast
@@ -51,3 +54,39 @@ def test_every_package_module_is_reachable_from_a_production_root():
     modules = set((ROOT / PKG).rglob("*.py"))
     dead = sorted(str(p.relative_to(ROOT / PKG)) for p in modules - seen)
     assert not dead, f"package modules no production root imports: {dead}"
+
+
+# public defs no production code calls that stay on purpose: the spec
+# implementations tests compare production code against
+SPEC_ORACLES = {
+    "basic_tokenize_slow": "spec of the batch tokenizer (test_tokenizer.py)",
+    "gazetteer_spans": "spec of the gazetteer matcher (test_properties.py)",
+    "decode_gp": "spec of the fused GP decode (test_fused_decode.py)",
+    "add_mask_tril": "reference GP-head masking (test_heads.py)",
+    "apply_rope": "reference rotary embedding (test_heads.py)",
+    "embedding_cosine_pairs": "brute-force oracle of embedding_cosine_pairs_blocked",
+    "logistic_grad_local": "numpy oracle of logistic_grad_df (test_training.py)",
+    "resolve_jaccard_cap": "census-gate reader; goes with _cap_for (ROADMAP item 5)",
+}
+
+
+def test_every_public_package_def_is_referenced():
+    """Every public top-level def or class of the package is referenced by
+    name from a production root or the package, or is a listed spec oracle."""
+    sources = [*ROOTS, *(ROOT / PKG).rglob("*.py")]
+    defined, used = {}, set()
+    for path in sources:
+        tree = ast.parse(path.read_text())
+        if path.is_relative_to(ROOT / PKG):
+            for node in tree.body:
+                if isinstance(node, (ast.FunctionDef, ast.ClassDef)) and not node.name.startswith("_"):
+                    defined[node.name] = path.relative_to(ROOT / PKG)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+    dead = sorted(f"{defined[n]}:{n}" for n in defined.keys() - used - SPEC_ORACLES.keys())
+    assert not dead, f"public defs nothing references: {dead}"
+    stale = sorted(SPEC_ORACLES.keys() - defined.keys())
+    assert not stale, f"SPEC_ORACLES names no package def: {stale}"

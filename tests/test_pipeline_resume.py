@@ -31,19 +31,6 @@ def test_pipeline_deterministic_and_resumable(spark, tmp_path):
     assert out3 == out1
 
 
-def test_fused_and_materialized_pipelines_agree(spark, tmp_path):
-    from entity_extractor_by_pointer_spark.plans.pipeline import PipelineConfig
-
-    pages = generate_pages(spark, 80, partitions=4)
-    fused = _triples(KgPipeline(spark, str(tmp_path / "f"), "f").run(pages))
-    mat = _triples(
-        KgPipeline(
-            spark, str(tmp_path / "m"), "m", PipelineConfig(materialize_all=True)
-        ).run(pages)
-    )
-    assert fused == mat
-
-
 def test_incremental_run_equals_full_recompute(spark, tmp_path):
     first = generate_pages(spark, 100, partitions=4)
     second_drop = generate_pages(spark, 150, partitions=4, start=100)
@@ -65,15 +52,13 @@ def test_incremental_run_equals_full_recompute(spark, tmp_path):
 
 
 def test_lineage_and_metrics_written(spark, tmp_path):
-    from entity_extractor_by_pointer_spark.plans.pipeline import PipelineConfig
-
     pages = generate_pages(spark, 60, partitions=4)
     wd = str(tmp_path / "runL")
-    pipe = KgPipeline(spark, wd, "rL", PipelineConfig(materialize_all=True))
+    pipe = KgPipeline(spark, wd, "rL")
     pipe.run(pages)
     lineage = pipe.writer.read_lineage()
     stages = {r["stage"] for r in lineage.select("stage").distinct().collect()}
-    assert {"pages", "mentions", "linked", "canonical", "triples", "triple_counts"} <= stages
+    assert {"pages", "mentions", "triples", "triple_counts"} <= stages
     # per-partition rows recorded
     assert lineage.where("rows_out > 0").count() > 0
     metrics = pipe.writer.read_metrics()
@@ -535,48 +520,51 @@ def test_cli_compact_stage(spark, tmp_path, capsys):
     assert rc == 0 and "compact 'pages': rewritten=True" in out
 
 
-def test_profile_drift_over_snapshots(spark, tmp_path):
-    """Drift report between time-traveled snapshot states of a stage:
-    stable columns stay quiet; a null-ratio jump injected into the newer
-    state raises the alert; range movement is flagged."""
-    from entity_extractor_by_pointer_spark.operators.profile import profile_drift
-
-    wd = str(tmp_path / "drift")
-    pipe = KgPipeline(spark, wd, "dr")
-    pipe.run(generate_pages(spark, 60, partitions=4))
-    pipe.run_incremental(generate_pages(spark, 90, partitions=4))
-    snaps = pipe.writer.list_snapshots()
-    pipe.run_incremental(generate_pages(spark, 120, partitions=4))
-    old = pipe.writer.read_stage("pages", as_of=snaps[0]).select("url", "lang")
-    new = pipe.writer.read_stage("pages").select("url", "lang")
-
-    quiet = {r["col_name"]: r for r in profile_drift(old, new).collect()}
-    assert quiet["url"]["n_rows_old"] == 90 and quiet["url"]["n_rows_new"] == 120
-    assert not quiet["url"]["alert"] and not quiet["lang"]["alert"]
-    assert quiet["url"]["range_changed"]  # new urls extend the max
-
-    # inject 20% nulls into the newer lang column → alert fires
+def test_extraction_invariant_violation_fails_before_commit(spark, tmp_path):
+    """A page whose stored text differs from its html's extraction fails the
+    batch run, the increment and the fused chain, before any stage or
+    increment commits."""
+    import pytest
     from pyspark.sql import functions as F
 
-    broken = new.withColumn(
-        "lang",
-        F.when(F.pmod(F.hash("url"), F.lit(5)) == 0, F.lit(None)).otherwise(
-            F.col("lang")
-        ),
+    from entity_extractor_by_pointer_spark.plans.pipeline import (
+        PipelineConfig,
+        triples_for_pages,
     )
-    loud = {r["col_name"]: r for r in profile_drift(old, broken).collect()}
-    assert loud["lang"]["alert"] and loud["lang"]["null_ratio_new"] > 0.15
 
-    # schema rot: a column present in only one snapshot must be REPORTED
-    # (full outer join) with schema_changed + alert, not silently dropped
-    renamed = new.withColumnRenamed("lang", "language")
-    schema = {r["col_name"]: r for r in profile_drift(old, renamed).collect()}
-    assert schema["lang"]["schema_changed"] and schema["lang"]["alert"]
-    assert schema["language"]["schema_changed"] and schema["language"]["alert"]
-    assert not schema["url"]["schema_changed"]
+    def tampered(n):
+        pages = generate_pages(spark, n, partitions=2)
+        last = F.col("url") == f"https://example.org/page/{n - 1}"
+        return pages.withColumn(
+            "text", F.when(last, F.concat("text", F.lit("!"))).otherwise(F.col("text"))
+        )
 
-    # all-null old column vs populated new: range_changed must be True,
-    # not NULL (null-safe comparison)
-    nulled_old = old.withColumn("lang", F.lit(None).cast("string"))
-    rng = {r["col_name"]: r for r in profile_drift(nulled_old, new).collect()}
-    assert rng["lang"]["range_changed"] is True
+    match = "extraction invariant violated"
+    pipe = KgPipeline(spark, str(tmp_path / "bad"), "bad")
+    with pytest.raises(Exception, match=match):
+        pipe.run(tampered(40))
+    assert not pipe.writer.is_done("pages")
+
+    wd = tmp_path / "inc"
+    inc = KgPipeline(spark, str(wd), "inc")
+    inc.run(generate_pages(spark, 40, partitions=2))
+    with pytest.raises(Exception, match=match):
+        inc.run_incremental(tampered(60))
+    assert not list(wd.glob("*_inc/*/_SUCCESS"))
+
+    with pytest.raises(Exception, match=match):
+        triples_for_pages(tampered(40), PipelineConfig()).collect()
+
+
+def test_cli_pipeline_run_honours_classes(spark, tmp_path):
+    """--classes reaches the model scorer of a pipeline run: a one-class GP
+    model emits mentions of that class only."""
+    from entity_extractor_by_pointer_spark.__main__ import main
+
+    wd = str(tmp_path / "cli_cls")
+    argv = ["--synth-pages", "40", "--scorer", "gp", "--classes", "person", "--workdir", wd]
+    assert main(argv) == 0
+    mentions = KgPipeline(spark, wd, "read").writer.read_stage("mentions")
+    types = {r["type"] for r in mentions.select("type").distinct().collect()}
+    assert mentions.count() > 0
+    assert types == {"person"}

@@ -30,22 +30,6 @@ def test_salted_count_correct_under_skew(spark):
     assert len(got) == 51
 
 
-def test_salted_join_equals_plain_join(spark):
-    """Salt-and-replicate join must be row-identical to the plain join,
-    including duplicate dim keys and (for inner) unmatched fact keys."""
-    from entity_extractor_by_pointer_spark.operators.skew import salted_join
-
-    fact = _skewed(spark, hot=20_000, cold=30).repartition(8)
-    dim = spark.createDataFrame(
-        [("中国", "CN"), ("e1", "E1"), ("e1", "E1b"), ("e7", "E7"), ("zz", "ZZ")],
-        "subj string, label string",
-    )
-    plain = sorted(tuple(r) for r in fact.join(dim, "subj").collect())
-    salted = sorted(tuple(r) for r in salted_join(fact, dim, "subj", 8).collect())
-    assert salted == plain
-    assert len(plain) == 20_000 + 2 + 1  # hot + dup-key e1 + e7
-
-
 def test_pagerank_inflow_absorbs_hub_skew(spark):
     """Round-4 verdict item 8: PageRank's per-iteration inflow aggregation
     (groupBy(obj).sum) under a 10⁵-in-degree hub. sum is combinable, so the

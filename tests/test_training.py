@@ -1,166 +1,9 @@
-"""T1/T2/T3 parity: adversarial attacks, optimizer zoo, warmup schedules,
-early stopping — checked against independently hand-derived updates — and
-the distributed (Spark-aggregated) gradient/training loop against the
-single-process numpy oracle."""
-
-import math
+"""T3 evidence: the distributed (Spark-aggregated) logistic-regression
+gradient step against the single-process numpy oracle."""
 
 import numpy as np
-import pytest
 
-from entity_extractor_by_pointer_spark.functions import training as tr
 from entity_extractor_by_pointer_spark.operators import train_distributed as td
-
-
-def _params(v):
-    return {"word_embeddings.w": np.array(v, dtype=np.float64)}
-
-
-# ---------------------------------------------------------------------------
-# FGM (reference gan_utils.py:10-31)
-
-
-def test_fgm_attack_steps_along_normalized_grad_and_restores():
-    params = _params([1.0, 2.0])
-    orig = params["word_embeddings.w"].copy()
-    g = np.array([3.0, 4.0])  # ||g|| = 5
-    fgm = tr.FGM(params)
-    fgm.attack({"word_embeddings.w": g}, epsilon=1.0)
-    np.testing.assert_allclose(
-        params["word_embeddings.w"], orig + g / 5.0, rtol=0, atol=0
-    )
-    fgm.restore()
-    np.testing.assert_array_equal(params["word_embeddings.w"], orig)
-
-
-def test_fgm_skips_zero_grad_and_non_embedding_params():
-    params = {"word_embeddings.w": np.ones(2), "head.w": np.ones(2)}
-    fgm = tr.FGM(params)
-    fgm.attack({"word_embeddings.w": np.zeros(2), "head.w": np.full(2, 9.0)})
-    np.testing.assert_array_equal(params["word_embeddings.w"], np.ones(2))
-    np.testing.assert_array_equal(params["head.w"], np.ones(2))  # name-filtered
-    fgm.restore()
-
-
-# ---------------------------------------------------------------------------
-# PGD (reference gan_utils.py:34-77)
-
-
-def test_pgd_projects_back_onto_epsilon_ball():
-    params = _params([0.0, 0.0])
-    pgd = tr.PGD(params)
-    g = np.array([1.0, 0.0])
-    eps = 0.5
-    for t in range(5):
-        pgd.attack({"word_embeddings.w": g}, epsilon=eps, alpha=0.3, is_first_attack=(t == 0))
-        r = params["word_embeddings.w"] - pgd.emb_backup["word_embeddings.w"]
-        assert np.linalg.norm(r) <= eps + 1e-12
-    # 5 × alpha=0.3 along +x, clipped at eps → exactly (0.5, 0)
-    np.testing.assert_allclose(params["word_embeddings.w"], [0.5, 0.0], atol=1e-12)
-    pgd.restore()
-    np.testing.assert_array_equal(params["word_embeddings.w"], [0.0, 0.0])
-
-
-def test_pgd_grad_backup_roundtrip():
-    pgd = tr.PGD(_params([0.0]))
-    g = {"word_embeddings.w": np.array([1.5]), "head.b": None}
-    pgd.backup_grad(g)
-    g["word_embeddings.w"][0] = 99.0  # mutate after backup
-    restored = pgd.restore_grad()
-    assert restored["word_embeddings.w"][0] == 1.5 and restored["head.b"] is None
-
-
-# ---------------------------------------------------------------------------
-# optimizer zoo (reference train.py:80-94; torch-default hyperparameters)
-
-
-def test_sgd_and_adam_match_hand_derived_updates():
-    g = np.array([0.5])
-    p = _params([1.0])
-    tr.make_optimizer("SGD", p, 0.1).step({"word_embeddings.w": g})
-    assert p["word_embeddings.w"][0] == 1.0 - 0.1 * 0.5
-
-    p = _params([1.0])
-    opt = tr.make_optimizer("Adam", p, 0.1)
-    m = v = 0.0
-    expect = 1.0
-    for t in (1, 2):
-        opt.step({"word_embeddings.w": g})
-        m = 0.9 * m + 0.1 * 0.5
-        v = 0.999 * v + 0.001 * 0.25
-        mhat, vhat = m / (1 - 0.9**t), v / (1 - 0.999**t)
-        expect -= 0.1 * mhat / (math.sqrt(vhat) + 1e-8)
-    np.testing.assert_allclose(p["word_embeddings.w"][0], expect, rtol=1e-12)
-
-
-def test_adamw_decoupled_weight_decay():
-    g = np.array([0.0])  # zero grad isolates the decay term
-    p = _params([1.0])
-    tr.make_optimizer("AdamW", p, 0.1).step({"word_embeddings.w": g})
-    np.testing.assert_allclose(p["word_embeddings.w"][0], 1.0 - 0.1 * 0.01 * 1.0)
-
-
-@pytest.mark.parametrize("name", ["Adagrad", "Adadelta", "RMSprop"])
-def test_remaining_optimizers_first_step(name):
-    g = np.array([0.5])
-    p = _params([1.0])
-    tr.make_optimizer(name, p, 0.1).step({"word_embeddings.w": g})
-    got = p["word_embeddings.w"][0]
-    if name == "Adagrad":
-        expect = 1.0 - 0.1 * 0.5 / (math.sqrt(0.25) + 1e-10)
-    elif name == "RMSprop":
-        expect = 1.0 - 0.1 * 0.5 / (math.sqrt((1 - 0.99) * 0.25) + 1e-8)
-    else:  # Adadelta
-        sq = (1 - 0.9) * 0.25
-        delta = math.sqrt(1e-6) / math.sqrt(sq + 1e-6) * 0.5
-        expect = 1.0 - 0.1 * delta
-    np.testing.assert_allclose(got, expect, rtol=1e-12)
-
-
-def test_unknown_optimizer_raises():
-    with pytest.raises(ValueError, match="optimizer_type does not exist"):
-        tr.make_optimizer("LBFGS", _params([0.0]), 0.1)
-
-
-# ---------------------------------------------------------------------------
-# warmup schedules (reference train.py:142-160)
-
-
-def test_linear_warmup_schedule_shape():
-    f = tr.warmup_schedule("linear", 10, 100)
-    assert f(0) == 0.0
-    assert f(5) == 0.5
-    assert f(10) == 1.0
-    np.testing.assert_allclose(f(55), (100 - 55) / 90)
-    assert f(100) == 0.0
-
-
-def test_cosine_warmup_schedule_shape_and_default_warmup():
-    f = tr.warmup_schedule("cosine", -1, 100)  # -1 → 10% of total
-    assert f(5) == 0.5  # warmup = 10 steps
-    np.testing.assert_allclose(f(10), 1.0)
-    np.testing.assert_allclose(f(55), 0.5 * (1 + math.cos(math.pi * 0.5)))
-    np.testing.assert_allclose(f(100), 0.0, atol=1e-15)
-    with pytest.raises(ValueError, match="scheduler_type does not exist"):
-        tr.warmup_schedule("polynomial", 10, 100)
-
-
-# ---------------------------------------------------------------------------
-# early stop (reference train.py:214-233 — ties count as improvements)
-
-
-def test_early_stopper_tie_resets_patience():
-    es = tr.EarlyStopper(patient=1)
-    assert not es.update(1, 0.5)
-    assert not es.update(2, 0.4)  # worse: unprocessed=1 == patient → continue
-    assert not es.update(3, 0.5)  # TIE with best → reset, best_epoch moves
-    assert es.best_epoch == 3
-    assert not es.update(4, 0.4)
-    assert es.update(5, 0.3)  # unprocessed=2 > patient → stop
-
-
-# ---------------------------------------------------------------------------
-# distributed gradients + training loop vs single-process numpy oracle
 
 
 def _local_xy(spark):
@@ -176,38 +19,9 @@ def test_distributed_gradient_matches_local(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     X, y = _local_xy(spark)
     w = np.array([0.1, -0.2, 0.3, -0.05])
-    g_d, loss_d, n = td.logistic_grad(td.doc_features(docs), w)
+    row = td.logistic_grad_df(td.doc_features(docs), w).first()
+    g_d = np.array([row[f"g{j}"] for j in range(td.N_FEATURES)])
     g_l, loss_l = td.logistic_grad_local(X, y, w)
-    assert n == len(y)
+    assert row["n"] == len(y)
     np.testing.assert_allclose(g_d, g_l, rtol=1e-12)
-    np.testing.assert_allclose(loss_d, loss_l, rtol=1e-12)
-
-
-@pytest.mark.parametrize(
-    "optimizer,gan", [("Adam", "fgm"), ("SGD", "pgd"), ("AdamW", None)]
-)
-def test_distributed_training_loop_matches_local(spark, optimizer, gan):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    X, y = _local_xy(spark)
-    kw = dict(
-        steps=5,
-        optimizer=optimizer,
-        lr=0.1,
-        gan_method=gan,
-        scheduler_type="linear",
-        num_warmup_steps=2,
-    )
-    w_dist, losses_dist = td.train_logistic(td.doc_features(docs), **kw)
-    w_loc, losses_loc = td.train_logistic(
-        lambda w: td.logistic_grad_local(X, y, w), **kw
-    )
-    np.testing.assert_allclose(w_dist, w_loc, rtol=1e-9)
-    np.testing.assert_allclose(losses_dist, losses_loc, rtol=1e-9)
-
-
-def test_training_reduces_loss(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    _w, losses = td.train_logistic(
-        td.doc_features(docs), steps=20, optimizer="Adam", lr=0.1
-    )
-    assert losses[-1] < losses[0]
+    np.testing.assert_allclose(row["loss"], loss_l, rtol=1e-12)
