@@ -18,11 +18,15 @@ The gazetteer scorer applies the same decode-side char conventions as the
 model path (inclusive end offsets, set semantics downstream) but matches
 token-aligned surface forms directly — it is the deterministic stand-in for
 a trained model when the pipeline output must be semantically meaningful.
+``GazetteerMatcher`` is the production matcher; it reads the batch tokenizer
+the model uses. ``gazetteer_spans`` is its per-document spec.
 """
 
 from __future__ import annotations
 
-from .tokenizer import basic_tokenize
+import numpy as np
+
+from .tokenizer import VOCAB_SIZE, basic_tokenize, tokenize_batch
 
 # name → (type, canonical entity id)
 DOCS_GAZETTEER: list[tuple[str, str, str]] = [
@@ -68,79 +72,99 @@ PAGES_GAZETTEER: list[tuple[str, str, str]] = [
 ]
 
 
-class TokenAhoCorasick:
-    """Aho-Corasick automaton over TOKEN sequences — the production
-    gazetteer matcher. One pass over a doc's tokens finds every gazetteer
-    match in O(n_tokens + n_matches), independent of dictionary size; build
-    it once per executor task from the gazetteer and call :meth:`spans` per
-    doc (the north rule's salted-broadcast linking dim is exactly this
-    shape: ~10⁶ alias surfaces × 10¹² docs means per-needle scans are off
-    the table). Matching whole tokens, it needs no separator character, so
-    names and texts containing NUL match like any other.
+_KEY_TOKENS = 4  # token ids packed into one int64 probe key
+_ID_BITS = 15
 
-    Emits matches in the same order as :func:`gazetteer_spans` (gazetteer-
-    major, position-minor); :func:`gazetteer_spans` is the spec it is
-    pytest-pinned against on randomized dictionaries."""
+
+def _pack(tid: np.ndarray, pos: np.ndarray, k: int) -> np.ndarray:
+    """One int64 key per position: the ids of tokens pos .. pos+k−1."""
+    key = np.zeros(len(pos), dtype=np.int64)
+    for j in range(k):
+        key |= tid[pos + j].astype(np.int64) << (_ID_BITS * j)
+    return key
+
+
+def _token_text(text: str, start: int, end: int) -> str:
+    """The token string of ``text[start:end]``: ASCII-alnum runs are
+    lowercased, a single other codepoint is kept as is."""
+    tok = text[start:end]
+    return tok.lower() if tok.isascii() else tok
+
+
+class GazetteerMatcher:
+    """Every token-aligned occurrence of every gazetteer name in a batch of
+    texts, from one ``tokenize_batch`` pass over the batch — the production
+    gazetteer matcher. Build it once per task; it equals
+    :func:`gazetteer_spans` applied to each text (pinned by hypothesis
+    tests), including names and texts that contain NUL.
+
+    Names are grouped by k = min(name tokens, 4). For each k, the ids of k
+    consecutive tokens of one document are packed into one int64 key and
+    probed against the group's sorted name keys with ``np.searchsorted``.
+    Token ids are crc32 hashes and can collide, so every candidate is then
+    checked against the name's token strings, which also checks the tokens
+    of a longer name past its key."""
 
     def __init__(self, gazetteer: list[tuple[str, str, str]]):
-        # trie over token tuples; each node: dict token -> node id
-        self.next: list[dict[str, int]] = [{}]
-        self.out: list[list[tuple[int, int]]] = [[]]  # (gaz_index, n_tokens)
-        self.fail: list[int] = [0]
-        self.gazetteer = gazetteer
-        for gi, (name, _etype, _eid) in enumerate(gazetteer):
-            toks = [t for t, _, _ in basic_tokenize(name)]
-            if not toks:
-                continue
-            node = 0
-            for tok in toks:
-                nxt = self.next[node].get(tok)
-                if nxt is None:
-                    nxt = len(self.next)
-                    self.next[node][tok] = nxt
-                    self.next.append({})
-                    self.out.append([])
-                    self.fail.append(0)
-                node = nxt
-            self.out[node].append((gi, len(toks)))
-        # BFS failure links (standard construction)
-        from collections import deque
+        assert VOCAB_SIZE < 1 << _ID_BITS, "token ids must fit the key packing"
+        names = [name for name, _etype, _eid in gazetteer]
+        doc, start, end, tid = tokenize_batch(names)
+        self.types = np.array([etype for _name, etype, _eid in gazetteer], dtype=object)
+        self.tokens: list[list[str]] = [[] for _ in names]
+        for d, s, e in zip(doc.tolist(), start.tolist(), end.tolist()):
+            self.tokens[d].append(_token_text(names[d], s, e))
+        self.n_tokens = np.bincount(doc, minlength=len(names))
+        first = np.cumsum(self.n_tokens) - self.n_tokens
+        self.groups = []  # (k, sorted name keys, gazetteer index of each key)
+        for k in range(1, _KEY_TOKENS + 1):
+            gi = np.flatnonzero(np.minimum(self.n_tokens, _KEY_TOKENS) == k)
+            keys = _pack(tid, first[gi], k)
+            order = np.argsort(keys, kind="stable")
+            if len(gi):
+                self.groups.append((k, keys[order], gi[order]))
 
-        q = deque()
-        for child in self.next[0].values():
-            q.append(child)
-        while q:
-            node = q.popleft()
-            for tok, child in self.next[node].items():
-                q.append(child)
-                f = self.fail[node]
-                while f and tok not in self.next[f]:
-                    f = self.fail[f]
-                self.fail[child] = self.next[f].get(tok, 0) if self.next[f].get(tok, 0) != child else 0
-                self.out[child] = self.out[child] + self.out[self.fail[child]]
+    def __call__(
+        self, texts: list[str], max_tokens: int | None = None
+    ) -> tuple[np.ndarray, np.ndarray, list[str], np.ndarray, np.ndarray]:
+        """Columns (doc, type, surface, char_start, char_end_inclusive), one
+        entry per match, ordered by (doc, gazetteer index, token start);
+        ``max_tokens`` is the window of :func:`gazetteer_spans`."""
+        if max_tokens is not None and max_tokens < 2:
+            raise ValueError(f"max_tokens must be >= 2, got {max_tokens}")
+        doc, start, end, tid = tokenize_batch(texts, None if max_tokens is None else max_tokens - 2)
+        stop = np.searchsorted(doc, doc, side="right")  # end of each token's document
+        hit_pos, hit_gi = [np.zeros(0, dtype=np.int64)], [np.zeros(0, dtype=np.int64)]
+        for k, keys, gis in self.groups:
+            pos = np.arange(len(doc) - k + 1)
+            pos = pos[pos + k <= stop[pos]]
+            key = _pack(tid, pos, k)
+            lo = np.searchsorted(keys, key)
+            found = keys[np.minimum(lo, len(keys) - 1)] == key
+            pos, key, lo = pos[found], key[found], lo[found]
+            n = np.searchsorted(keys, key, side="right") - lo
+            hit_pos.append(np.repeat(pos, n))
+            hit_gi.append(gis[np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(n.sum())])
+        pos, gi = np.concatenate(hit_pos), np.concatenate(hit_gi)
+        last = pos + self.n_tokens[gi] - 1
+        fits = last < stop[pos]  # a name longer than its key must end in its document
+        pos, gi, last = pos[fits], gi[fits], last[fits]
+        order = np.lexsort((pos, gi, doc[pos]))
+        pos, gi, last = pos[order], gi[order], last[order]
 
-    def spans(
-        self, text: str, max_tokens: int | None = None
-    ) -> list[tuple[str, str, int, int]]:
-        toks = basic_tokenize(text)
-        if max_tokens is not None:
-            toks = toks[: max_tokens - 2]
-        node = 0
-        hits: list[tuple[int, int, int]] = []  # (gaz_index, tok_start, tok_end)
-        nxt, fail, out = self.next, self.fail, self.out
-        for i, (tok, _s, _e) in enumerate(toks):
-            while node and tok not in nxt[node]:
-                node = fail[node]
-            node = nxt[node].get(tok, 0)
-            for gi, k in out[node]:
-                hits.append((gi, i - k + 1, i))
-        hits.sort()  # gazetteer-major, position-minor — reference order
-        res: list[tuple[str, str, int, int]] = []
-        for gi, ti, tj in hits:
-            s = toks[ti][1]
-            e = toks[tj][2] - 1  # end-inclusive
-            res.append((self.gazetteer[gi][1], text[s : e + 1], s, e))
-        return res
+        # a surface covers whole tokens, so its token strings follow from it:
+        # check each distinct (surface, name) pair once
+        d_of, s_of, e_of = doc[pos].tolist(), start[pos].tolist(), end[last].tolist()
+        surfaces = [texts[d][s:e] for d, s, e in zip(d_of, s_of, e_of)]
+        spelled, keep = {}, []
+        for h, key in enumerate(zip(surfaces, gi.tolist())):
+            if key not in spelled:
+                p, q = pos[h], last[h] + 1
+                toks = [_token_text(texts[doc[p]], s, e) for s, e in zip(start[p:q], end[p:q])]
+                spelled[key] = toks == self.tokens[key[1]]
+            keep.append(spelled[key])
+        pos, gi, last = pos[keep], gi[keep], last[keep]
+        surfaces = [s for s, ok in zip(surfaces, keep) if ok]
+        return doc[pos], self.types[gi], surfaces, start[pos], end[last] - 1
 
 
 def gazetteer_spans(
@@ -153,16 +177,18 @@ def gazetteer_spans(
     Returns (type, surface, char_start, char_end_inclusive) per occurrence —
     the reference's inclusive-end char convention (``engines/data.py:104``).
     ``max_tokens`` reproduces the model path's truncation window: matches
-    starting beyond the first ``max_tokens − 2`` tokens are invisible, like
-    spans past ``max_sequence_length`` (``engines/data.py:24-29``).
+    not inside the first ``max_tokens − 2`` tokens are invisible, like spans
+    past ``max_sequence_length`` (``engines/data.py:24-29``); a window
+    under 2 tokens raises ``ValueError``.
 
-    Spec implementation, kept as the test oracle for :class:`TokenAhoCorasick`.
+    Spec implementation, kept as the test oracle for :class:`GazetteerMatcher`.
     """
+    if max_tokens is not None and max_tokens < 2:
+        raise ValueError(f"max_tokens must be >= 2, got {max_tokens}")
     toks = basic_tokenize(text)
     if max_tokens is not None:
         toks = toks[: max_tokens - 2]
     n = len(toks)
-    # index token sequences by first-token surface for O(n·G) matching
     out: list[tuple[str, str, int, int]] = []
     for name, etype, _eid in gazetteer:
         name_toks = [t for t, _, _ in basic_tokenize(name)]

@@ -71,7 +71,7 @@ class PointerNerModel:
             self.tokenizer = BertTokenizerFast.from_pretrained(config.hf_model_name)
             self.encoder = load_torch_bert_encoder(config.hf_model_name)
         else:
-            self.tokenizer = CjkCharTokenizer(config.max_sequence_length)
+            self.tokenizer = CjkCharTokenizer()
             self.encoder = SeededTinyEncoder(config.hidden_size, config.encoder_seed)
         hidden = self.encoder.hidden_size  # head width follows the encoder
         if config.model_type == "gp":

@@ -20,14 +20,15 @@ same *structural* contract the reference's decode path depends on:
   the untruncated id list to L **without preserving [SEP]**
   (``engines/data.py:24-29,41-44``) — ``pad_or_truncate`` replicates that.
 
-The model tokenizes with ``encode_batch_for_inference``: one numpy pass per
-Arrow batch that classifies the joined texts' codepoints, finds the token
-starts, drops every token past the window and gathers ids from a dense
-per-codepoint table. Three per-document functions are its spec, pinned
-against it by ``tests/test_tokenizer.py``: ``basic_tokenize_slow`` (the
-per-char loop), ``basic_tokenize`` (the same split as a compiled regex, which
-the gazetteer also uses) and ``encode_for_inference`` (ids, mask and offsets
-of one document).
+Production code tokenizes with ``tokenize_batch``: one numpy pass per Arrow
+batch that classifies the joined texts' codepoints, finds the token starts,
+drops every token past each document's window and gathers ids from a dense
+per-codepoint table. The model reads it through ``encode_batch_for_inference``
+((B, L) ids, mask and offsets); the gazetteer matcher and the gold-span
+alignment filter read its flat per-token arrays. Two per-document functions
+are its spec, pinned against it by ``tests/test_tokenizer.py``:
+``basic_tokenize`` (the per-char loop) and ``encode_for_inference`` (ids,
+mask and offsets of one document).
 
 Both the Spark pipeline UDFs and the single-process parity oracle import this
 module, so span parity is measured against shared tokenization — the contract
@@ -42,26 +43,10 @@ from dataclasses import dataclass
 
 import numpy as np
 
-PAD_ID = 0
 CLS_ID = 101
 SEP_ID = 102
 VOCAB_SIZE = 21128  # bert-base-chinese vocab size, for id-space parity
 _FIRST_REGULAR_ID = 104
-
-
-def _is_cjk(cp: int) -> bool:
-    """CJK ranges per BERT's BasicTokenizer._is_chinese_char."""
-    return (
-        0x4E00 <= cp <= 0x9FFF
-        or 0x3400 <= cp <= 0x4DBF
-        or 0x20000 <= cp <= 0x2A6DF
-        or 0x2A700 <= cp <= 0x2B73F
-        or 0x2B740 <= cp <= 0x2B81F
-        or 0x2B820 <= cp <= 0x2CEAF
-        or 0xF900 <= cp <= 0xFAFF
-        or 0x2F800 <= cp <= 0x2FA1F
-    )
-
 
 _TOKEN_ID_CACHE: dict[str, int] = {}
 
@@ -79,46 +64,19 @@ def token_id(token: str) -> int:
     return tid
 
 
-import re
-
-# ascii-alnum runs | whitespace runs (skipped) | any other single codepoint.
-# CJK codepoints fall into the single-codepoint branch, giving one token per
-# CJK char exactly like BERT's basic tokenizer; _is_cjk is kept for callers
-# and for the reference (loop) implementation the equivalence test pins.
-_TOKEN_RE = re.compile(r"([A-Za-z0-9]+)|(\s+)|(.)", re.DOTALL)
-
-
 def basic_tokenize(text: str) -> list[tuple[str, int, int]]:
     """Split text into (token, char_start, char_end_exclusive) triples.
 
-    Compiled-regex scanner (C speed); semantics identical to the reference
-    per-char loop (``basic_tokenize_slow``), pinned by
-    ``tests/test_tokenizer.py::test_fast_tokenizer_equals_reference_loop``.
+    Whitespace emits no token, an ASCII alphanumeric run is one lowercased
+    token, and every other codepoint (each CJK char included, as in BERT's
+    basic tokenizer) is a token of its own. The per-document spec of
+    ``tokenize_batch``; do not use in hot paths.
     """
-    out: list[tuple[str, int, int]] = []
-    append = out.append
-    for m in _TOKEN_RE.finditer(text):
-        run = m.group(1)
-        if run is not None:
-            append((run.lower(), m.start(), m.end()))
-        elif m.group(2) is None:  # single non-space, non-ascii-alnum char
-            append((m.group(3), m.start(), m.start() + 1))
-    return out
-
-
-def basic_tokenize_slow(text: str) -> list[tuple[str, int, int]]:
-    """Reference implementation (per-char loop) — kept as the spec for the
-    equivalence test; do not use in hot paths."""
     out: list[tuple[str, int, int]] = []
     i, n = 0, len(text)
     while i < n:
         ch = text[i]
         if ch.isspace():
-            i += 1
-            continue
-        cp = ord(ch)
-        if _is_cjk(cp):
-            out.append((ch, i, i + 1))
             i += 1
         elif ch.isascii() and ch.isalnum():
             j = i + 1
@@ -141,20 +99,15 @@ class Encoding:
 
 
 class CjkCharTokenizer:
-    """Callable with the subset of the HF fast-tokenizer API the reference
-    exercises: ``tokenizer(text)``, ``tokenizer(text, return_offsets_mapping
-    =True, max_length=L, truncation=True)``, ``tokenizer(text,
-    padding='max_length')`` (the last needs ``max_sequence_length`` set)."""
-
-    def __init__(self, max_sequence_length: int = 200):
-        self.max_sequence_length = max_sequence_length
+    """Callable with the subset of the HF fast-tokenizer API the reference's
+    span path exercises: ``tokenizer(text)`` and ``tokenizer(text,
+    max_length=L, truncation=True)``; the offset mapping is always set."""
 
     def __call__(
         self,
         text: str,
         max_length: int | None = None,
         truncation: bool = False,
-        padding: str | None = None,
     ) -> Encoding:
         toks = basic_tokenize(text)
         if truncation and max_length is not None and len(toks) > max_length - 2:
@@ -162,18 +115,7 @@ class CjkCharTokenizer:
         ids = [CLS_ID] + [token_id(t) for t, _, _ in toks] + [SEP_ID]
         offsets = [(0, 0)] + [(s, e) for _, s, e in toks] + [(0, 0)]
         mask = [1] * len(ids)
-        types = [0] * len(ids)
-        if padding == "max_length":
-            L = max_length or self.max_sequence_length
-            pad = L - len(ids)
-            if pad > 0:
-                ids += [PAD_ID] * pad
-                mask += [0] * pad
-                types += [0] * pad
-                offsets += [(0, 0)] * pad
-            else:
-                ids, mask, types, offsets = ids[:L], mask[:L], types[:L], offsets[:L]
-        return Encoding(ids, types, mask, offsets)
+        return Encoding(ids, [0] * len(ids), mask, offsets)
 
 
 def encode_for_inference(
@@ -187,19 +129,17 @@ def encode_for_inference(
     The spec of ``encode_batch_for_inference``, which the model calls."""
     toks = basic_tokenize(text)
     L = max_sequence_length
-    n = len(toks)
     ids = [CLS_ID] + [token_id(t) for t, _, _ in toks] + [SEP_ID]
     mask = [1] * len(ids)
     ids = pad_or_truncate(ids, L)
     mask = pad_or_truncate(mask, L)
-    body = toks[: L - 2] if n > L - 2 else toks
-    offsets = [(0, 0)] + [(s, e) for _, s, e in body] + [(0, 0)]
+    offsets = [(0, 0)] + [(s, e) for _, s, e in toks[: L - 2]] + [(0, 0)]
     return ids, mask, offsets
 
 
 # Codepoint class tables for the batch pass. U+3000 is the highest codepoint
-# ``str.isspace()`` (and the regex's ``\s``) accepts; every larger codepoint
-# is clamped onto the final False entry, and likewise above ASCII.
+# ``str.isspace()`` accepts; every larger codepoint is clamped onto the final
+# False entry, and likewise above ASCII.
 _SPACE_MAX = 0x3000
 _IS_SPACE = np.array([chr(c).isspace() for c in range(_SPACE_MAX + 1)] + [False])
 _IS_ALNUM = np.array([chr(c).isalnum() for c in range(128)] + [False])
@@ -223,25 +163,24 @@ def _char_ids(cps: np.ndarray) -> np.ndarray:
     return out
 
 
-def encode_batch_for_inference(
-    texts: list[str], max_sequence_length: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """``encode_for_inference`` for a whole batch in one vectorized pass.
+def tokenize_batch(
+    texts: list[str], limit: int | None = None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """``basic_tokenize`` and ``token_id`` for a whole batch in one pass.
 
-    Returns ids and attention mask as (B, L) int32 and the offset mapping as
-    (B, L, 2) int32. Row i equals ``encode_for_inference(texts[i], L)``: the
-    ids and mask exactly, and the offsets as ``[(0, 0)] + body + [(0, 0)]``
-    followed by (0, 0) padding. Like the per-document path, a lone surrogate
-    anywhere in the batch raises ``UnicodeEncodeError``.
+    Returns flat arrays ``(doc, start, end, id)`` with one entry per token,
+    in (document, position) order: the index into ``texts``, the char start
+    and exclusive char end within that document, and the token id. Each
+    document keeps its first ``limit`` tokens (``None``: all of them). A
+    lone surrogate anywhere in the batch raises ``UnicodeEncodeError``.
 
     The joined texts are classified per codepoint (whitespace, ASCII alnum);
     a token starts at every non-space codepoint that does not continue an
-    ASCII-alnum run of the same document. Tokens at rank ≥ L−1 are dropped
+    ASCII-alnum run of the same document. Tokens past the limit are dropped
     before any id is looked up, so long pages cost one classification pass.
     """
-    L = max_sequence_length
-    if L < 2:
-        raise ValueError(f"max_sequence_length must be >= 2, got {L}")
+    if limit is not None and limit < 0:
+        raise ValueError(f"limit must be >= 0, got {limit}")
     B = len(texts)
     joined = "".join(texts)
     cp = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32)
@@ -262,16 +201,40 @@ def encode_batch_for_inference(
     end[is_run] = np.flatnonzero(run_last) + 1
 
     doc = np.searchsorted(doc_end, tok, side="right")
-    n = np.bincount(doc, minlength=B)
-    rank = np.arange(len(tok)) - (np.cumsum(n) - n)[doc]
-    keep = rank < L - 1
-    tok, end, is_run, doc, rank = tok[keep], end[keep], is_run[keep], doc[keep], rank[keep]
+    if limit is not None:
+        n = np.bincount(doc, minlength=B)
+        keep = np.arange(len(tok)) - (np.cumsum(n) - n)[doc] < limit
+        tok, end, is_run, doc = tok[keep], end[keep], is_run[keep], doc[keep]
 
     tid = np.empty(len(tok), dtype=np.int32)
     tid[~is_run] = _char_ids(cp[tok[~is_run]])
     tid[is_run] = [
         token_id(joined[s:e].lower()) for s, e in zip(tok[is_run].tolist(), end[is_run].tolist())
     ]
+    return doc, tok - doc_start[doc], end - doc_start[doc], tid
+
+
+def encode_batch_for_inference(
+    texts: list[str], max_sequence_length: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``encode_for_inference`` for a whole batch, scattered from one
+    ``tokenize_batch`` pass.
+
+    Returns ids and attention mask as (B, L) int32 and the offset mapping as
+    (B, L, 2) int32. Row i equals ``encode_for_inference(texts[i], L)``: the
+    ids and mask exactly, and the offsets as ``[(0, 0)] + body + [(0, 0)]``
+    followed by (0, 0) padding. Like the per-document path, a lone surrogate
+    anywhere in the batch raises ``UnicodeEncodeError``. Only the first L−1
+    tokens of a document are needed: they fill the id row past ``[CLS]``,
+    and whether there are more decides where ``[SEP]`` goes.
+    """
+    L = max_sequence_length
+    if L < 2:
+        raise ValueError(f"max_sequence_length must be >= 2, got {L}")
+    B = len(texts)
+    doc, start, end, tid = tokenize_batch(texts, L - 1)
+    n = np.bincount(doc, minlength=B)
+    rank = np.arange(len(doc)) - (np.cumsum(n) - n)[doc]
 
     ids = np.zeros((B, L), dtype=np.int32)
     ids[:, 0] = CLS_ID
@@ -282,8 +245,8 @@ def encode_batch_for_inference(
     offsets = np.zeros((B, L, 2), dtype=np.int32)
     body = rank < L - 2
     doc, row = doc[body], rank[body] + 1
-    offsets[doc, row, 0] = tok[body] - doc_start[doc]
-    offsets[doc, row, 1] = end[body] - doc_start[doc]
+    offsets[doc, row, 0] = start[body]
+    offsets[doc, row, 1] = end[body]
     return ids, mask, offsets
 
 

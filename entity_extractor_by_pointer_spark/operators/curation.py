@@ -70,7 +70,7 @@ BOILERPLATE_MIN_DF = 4
 # hot-set broadcast gate: rows of the df>=min_df shingle set are short
 # strings, so ~1M rows ≈ tens of MB — the practical broadcast ceiling.
 BOILERPLATE_BROADCAST_HOT_MAX = 1_000_000
-# census short-circuit (the ``resolve_jaccard_cap`` pattern, dedup.py): at
+# census short-circuit (the ``_cap_for`` pattern, dedup.py): at
 # or below this many docs the df>=min_df hot set is bounded by
 # total_shingle_occurrences / min_df ≤ docs · shingles_per_doc / min_df,
 # so with ≲200 distinct shingles per doc (a ~200-word page) the worst case

@@ -80,27 +80,11 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def _cap_for(
-    n_docs: int,
-    auto_docs_threshold: int = JACCARD_AUTO_DOCS,
-    cap: int = JACCARD_AUTO_CAP,
-) -> int | None:
+def _cap_for(n_docs: int, auto_docs_threshold: int = JACCARD_AUTO_DOCS) -> int | None:
     """The one blocking-strategy rule: ``None`` (exact blocking) for
-    corpora at/below ``auto_docs_threshold`` rows, ``cap`` above — shared
-    by :func:`resolve_jaccard_cap` and the engine's internal census so
-    the policy has a single source of truth."""
-    return None if n_docs <= auto_docs_threshold else cap
-
-
-def resolve_jaccard_cap(
-    docs: DataFrame,
-    auto_docs_threshold: int = JACCARD_AUTO_DOCS,
-    cap: int = JACCARD_AUTO_CAP,
-) -> int | None:
-    """Pick the blocking strategy from a cheap corpus census (see
-    :func:`_cap_for`). ``count()`` on a parquet scan is a metadata-only
-    job — no column is read."""
-    return _cap_for(docs.count(), auto_docs_threshold, cap)
+    corpora at/below ``auto_docs_threshold`` rows, ``JACCARD_AUTO_CAP``
+    above. The engine applies it to its corpus census."""
+    return None if n_docs <= auto_docs_threshold else JACCARD_AUTO_CAP
 
 
 def _shingle_arr_sql(n: int, hashed: bool, positional: bool = False) -> str:
@@ -217,7 +201,7 @@ def ngram_jaccard_pairs(
     (3) exact-verifies only the tiny survivor set by counting its hot-shingle
     overlap, so reported scores equal the exact path's. Only pairs whose
     every shared shingle is hot can be missed (standard near-dup practice).
-    ``None`` = exact blocking; ``"auto"`` = :func:`resolve_jaccard_cap`
+    ``None`` = exact blocking; ``"auto"`` = :func:`_cap_for` on the row count
     (exact below ``auto_docs_threshold`` rows, ``JACCARD_AUTO_CAP`` above —
     small corpora keep the cheaper exact plan, crawl-scale corpora get the
     bounded one; plan selection is pytest-pinned at both ends).

@@ -4,10 +4,11 @@
 Semantics reproduced exactly:
 
 - gold sets are built with the SAME tokenizer-alignment filter the reference
-  applies at collate time (``engines/data.py:55-60``): a gold span survives
-  only if its char start is a token start and its char end an (inclusive)
-  token end within the truncated encoding; surviving spans collapse to
-  per-(doc, class) surface-form sets (``data.py:62``);
+  applies at collate time (``engines/data.py:55-60``), read from the batch
+  tokenizer the mention stage uses: a gold span survives only if its char
+  start is a token start and its char end an (inclusive) token end within
+  the truncated encoding; surviving spans collapse to per-(doc, class)
+  surface-form sets (``data.py:62``);
 - per class: A = |pred ∩ gold|, B = |pred|, C = |gold| — accumulated ONLY
   over documents where the gold set has that class (``train.py:263-267``
   iterates gold classes per doc: predictions for classes absent from a doc's
@@ -22,14 +23,14 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.decode import build_offset_maps
-from ..functions.tokenizer import CjkCharTokenizer
+from ..functions.tokenizer import tokenize_batch
 
 GOLD_SCHEMA = T.StructType(
     [
@@ -48,29 +49,27 @@ def gold_mention_sets(
     gold_col: str = "gold_entities",
 ) -> DataFrame:
     """Explode gold spans with the reference's alignment filter + set
-    semantics. Narrow mapInPandas stage + a distinct."""
+    semantics. Narrow mapInPandas stage + a distinct. A document's token
+    starts and inclusive token ends come from one ``tokenize_batch`` pass per
+    Arrow batch, truncated like the ``truncation=True`` encoding the
+    reference filters against (``[CLS]`` + L−2 tokens + ``[SEP]``)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tokenizer = CjkCharTokenizer(max_sequence_length)
         for pdf in batches:
             rows = []
-            for rid, text, entities in zip(pdf[id_col], pdf[text_col], pdf[gold_col]):
+            doc, start, end, _ids = tokenize_batch(
+                pdf[text_col].fillna("").tolist(), max_sequence_length - 2
+            )
+            bounds = np.searchsorted(doc, np.arange(len(pdf) + 1)).tolist()
+            start, last = start.tolist(), (end - 1).tolist()
+            for d, (rid, entities) in enumerate(zip(pdf[id_col], pdf[gold_col])):
                 if entities is None or len(entities) == 0:
                     continue
-                offs = tokenizer(
-                    text or "", max_length=max_sequence_length, truncation=True
-                ).offset_mapping
-                start_mapping, end_mapping = build_offset_maps(offs)
-                starts = set(start_mapping.values())
-                ends = set(end_mapping.values())
-                for ent in entities:
-                    # dict or Row-like
-                    s = ent["start_idx"] if isinstance(ent, dict) else ent.start_idx
-                    e = ent["end_idx"] if isinstance(ent, dict) else ent.end_idx
-                    ty = ent["type"] if isinstance(ent, dict) else ent.type
-                    surface = ent["entity"] if isinstance(ent, dict) else ent.entity
-                    if s in starts and e in ends:  # data.py:60 alignment filter
-                        rows.append((rid, ty, surface))
+                starts = set(start[bounds[d] : bounds[d + 1]])
+                ends = set(last[bounds[d] : bounds[d + 1]])
+                for ent in entities:  # a dict, or a Row (it indexes by name too)
+                    if ent["start_idx"] in starts and ent["end_idx"] in ends:  # data.py:60
+                        rows.append((rid, ent["type"], ent["entity"]))
             yield pd.DataFrame(rows, columns=["url", "type", "entity"])
 
     exploded = pages_with_gold.select(id_col, text_col, gold_col).mapInPandas(run, GOLD_SCHEMA)

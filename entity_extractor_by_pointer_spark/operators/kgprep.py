@@ -172,7 +172,7 @@ def entity_related_by_embedding(
     (long-form → dim-sorted arrays via ``array_sort`` over (dim, val)
     structs, so partition order can't permute components), then the ANN
     operators consume them unchanged. The ranker is CENSUS-GATED (the
-    ``resolve_jaccard_cap`` pattern): one count over the cached vector
+    ``dedup._cap_for`` pattern): one count over the cached vector
     frame — the count doubles as the cache fill — keeps the exact
     brute-force ranking while the entity census stays at/below
     ``brute_max`` and routes the same frame through the hyperplane-LSH

@@ -12,12 +12,13 @@ decoded span occurrence. The reference's per-(doc, class) surface-form SET
 semantics (``engines/data.py:105,114``) is applied by downstream views via
 ``dropDuplicates`` (operator D3), keeping positions available for triples.
 
-Two scorers:
+Two scorers, each tokenizing an Arrow batch in one ``tokenize_batch`` pass:
 - model path (``detect_mentions``): deterministic pointer-NER model
   (SeededTinyEncoder + GP/BP head) — exercised by the pytest parity suite;
-- gazetteer path (``detect_mentions_gazetteer``): closed-form token-aligned
-  matcher sharing the decode char conventions — used where the output must
-  be semantically meaningful *and* SQL-oracle-checkable (driver contract).
+- gazetteer path (``detect_mentions_gazetteer``): ``GazetteerMatcher``, the
+  closed-form token-aligned matcher sharing the decode char conventions —
+  used where the output must be semantically meaningful *and*
+  SQL-oracle-checkable (driver contract).
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..functions.gazetteer import TokenAhoCorasick
+from ..functions.gazetteer import GazetteerMatcher
 from ..functions.model import MODEL_CACHE, NerConfig
 
 MENTIONS_SCHEMA = T.StructType(
@@ -87,16 +88,13 @@ def detect_mentions_gazetteer(
     schema = T.StructType(
         [T.StructField(id_col, id_type, False)] + list(MENTIONS_SCHEMA.fields[1:])
     )
-    cols = [id_col] + _COLS[1:]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        match = TokenAhoCorasick(gazetteer).spans  # built once per task, not per doc
+        match = GazetteerMatcher(gazetteer)  # built once per task, not per batch
         for pdf in batches:
-            rows = []
-            for rid, text in zip(pdf[id_col], pdf[text_col].fillna("")):
-                for etype, surface, s, e in match(text, max_tokens):
-                    rows.append((rid, etype, surface, s, e, 1.0, "gazetteer"))
-            yield pd.DataFrame(rows, columns=cols)
+            doc, etype, surface, start, end = match(pdf[text_col].fillna("").tolist(), max_tokens)
+            cols = (pdf[id_col].to_numpy()[doc], etype, surface, start, end, 1.0, "gazetteer")
+            yield pd.DataFrame(dict(zip(schema.fieldNames(), cols)))
 
     return df.select(id_col, text_col).mapInPandas(run, schema)
 

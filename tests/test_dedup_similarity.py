@@ -501,9 +501,9 @@ def test_jaccard_auto_cap_plan_selection(spark):
         "doc_id long, text string",
     )
     # census below threshold → exact (cap resolves to None)
-    assert dd.resolve_jaccard_cap(docs, auto_docs_threshold=100) is None
+    assert dd._cap_for(docs.count(), auto_docs_threshold=100) is None
     # census above threshold → capped
-    assert dd.resolve_jaccard_cap(docs, auto_docs_threshold=4) == dd.JACCARD_AUTO_CAP
+    assert dd._cap_for(docs.count(), auto_docs_threshold=4) == dd.JACCARD_AUTO_CAP
 
     exact_plan = dd.ngram_jaccard_pairs(
         docs, 0.8, max_shingle_df="auto", auto_docs_threshold=100

@@ -59,14 +59,12 @@ def test_every_package_module_is_reachable_from_a_production_root():
 # public defs no production code calls that stay on purpose: the spec
 # implementations tests compare production code against
 SPEC_ORACLES = {
-    "basic_tokenize_slow": "spec of the batch tokenizer (test_tokenizer.py)",
     "gazetteer_spans": "spec of the gazetteer matcher (test_properties.py)",
     "decode_gp": "spec of the fused GP decode (test_fused_decode.py)",
     "add_mask_tril": "reference GP-head masking (test_heads.py)",
     "apply_rope": "reference rotary embedding (test_heads.py)",
     "embedding_cosine_pairs": "brute-force oracle of embedding_cosine_pairs_blocked",
     "logistic_grad_local": "numpy oracle of logistic_grad_df (test_training.py)",
-    "resolve_jaccard_cap": "census-gate reader; goes with _cap_for (ROADMAP item 5)",
 }
 
 

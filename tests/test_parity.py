@@ -1,26 +1,88 @@
 """Golden parity suite: the Spark pipeline must emit byte-identical spans to
-a single-process oracle executing the reference algorithms on the
-reference's own dev datasets (BASELINE.md gate: P/R ≥ 0.95; expected 1.0
-with shared weights — SURVEY.md §7.2)."""
+a single-process oracle executing the reference algorithms, on a
+deterministic synthetic corpus in the reference dev-set record shape and, when
+present, on the reference's own dev datasets (BASELINE.md gate: P/R ≥ 0.95;
+expected 1.0 with shared weights — SURVEY.md §7.2)."""
 
 import json
+import os
+from collections import Counter
 
 import pytest
 
+from entity_extractor_by_pointer_spark.functions.gazetteer import PAGES_GAZETTEER, gazetteer_spans
 from entity_extractor_by_pointer_spark.functions.model import NerConfig, PointerNerModel
+from entity_extractor_by_pointer_spark.functions.tokenizer import CjkCharTokenizer, basic_tokenize
 from entity_extractor_by_pointer_spark.operators.evaluate import gold_mention_sets, span_f1
 from entity_extractor_by_pointer_spark.operators.mentions import detect_mentions, mention_sets
-from entity_extractor_by_pointer_spark.sources.pages import reference_dataset_as_pages
+from entity_extractor_by_pointer_spark.sources.pages import _synth_text, reference_dataset_as_pages
 
 from .reference_oracle import gold_sets_reference, validate_counts
 
 DS2 = "/root/reference/data/example_datasets2/dev_data.json"
 DS1 = "/root/reference/data/example_datasets1/dev_data.json"
 DS3 = "/root/reference/data/example_datasets3/dev_data.json"
+SYNTH = "synthetic"  # the corpus the parity_corpus fixture writes
 CLASSES2 = ["person", "location", "organization"]
 CLASSES1 = ["company", "position", "detail"]
 CLASSES3 = ["pro", "dis", "sym", "ite", "bod", "dru", "mic", "equ", "dep"]
 N_DOCS = 400  # subset for test runtime; full-set parity holds by construction
+
+
+def _dev_set(path):
+    return pytest.mark.skipif(not os.path.exists(path), reason=f"reference dev set {path} is absent")
+
+
+@pytest.fixture(scope="module")
+def parity_corpus(tmp_path_factory):
+    """Deterministic dev set in the reference record shape, built from the
+    page generator with gazetteer gold spans. It holds filler-only documents
+    with no entity, repeated mentions, a hot entity, documents over 200
+    tokens, and gold spans the alignment filter must drop: ``cme`` inside
+    ``Acme`` (not token-aligned), spans starting past token 198, and a span
+    on tokens 197-198 whose surface is nowhere else in its document (page 268),
+    which only the exact window edge drops."""
+    texts = [_synth_text(i) for i in range(120)] + [
+        _synth_text(i, min_sents=10, extra_sents=5) for i in [*range(120, 150), 268]
+    ]
+    one_sentence = [_synth_text(i, min_sents=1, extra_sents=2) for i in range(150, 170)]
+    texts += one_sentence  # every fourth one is filler only
+    records = [
+        {
+            "text": text,
+            "entities": [
+                {"start_idx": s, "end_idx": e, "type": etype, "entity": surface}
+                for etype, surface, s, e in gazetteer_spans(text, PAGES_GAZETTEER)
+            ],
+        }
+        for text in texts
+    ]
+    acme = next(r for r in records if "Acme" in r["text"])
+    s = acme["text"].index("Acme") + 1
+    acme["entities"].append({"start_idx": s, "end_idx": s + 2, "type": "organization", "entity": "cme"})
+
+    token_starts = [[ts for _t, ts, _e in basic_tokenize(r["text"])] for r in records]
+    late = [ent for r, ts in zip(records, token_starts) for ent in r["entities"] if ent["start_idx"] in ts[198:]]
+    assert late, "no gold span starts past token 198"
+    edge = records[150]
+    (guangzhou,) = [e for e in edge["entities"] if e["start_idx"] == token_starts[150][197]]
+    assert [e["entity"] for e in edge["entities"]].count(guangzhou["entity"]) == 1
+    assert sum(not r["entities"] for r in records) >= 3
+    assert any(len(basic_tokenize(t)) > 200 for t in texts)
+    assert any(n > 1 for r in records for n in Counter(e["entity"] for e in r["entities"]).values())
+    docs_per_entity = Counter(e for r in records for e in {x["entity"] for x in r["entities"]})
+    assert docs_per_entity.most_common(1)[0][1] > len(records) / 10, "no hot entity"
+    categories = {c: i for i, c in enumerate(CLASSES2)}
+    kept = sum(
+        len(v)
+        for r in records
+        for v in gold_sets_reference(r["text"], r["entities"], categories, CjkCharTokenizer()).values()
+    )
+    assert kept < sum(len({(e["type"], e["entity"]) for e in r["entities"]}) for r in records)
+
+    path = tmp_path_factory.mktemp("parity") / "dev_data.json"
+    path.write_text(json.dumps(records, ensure_ascii=False), encoding="utf-8")
+    return str(path)
 
 
 def _records(path, n):
@@ -31,14 +93,22 @@ def _records(path, n):
 @pytest.mark.parametrize(
     "path,classes,model_type,bias",
     [
-        (DS2, CLASSES2, "gp", -4.0),
-        (DS2, CLASSES2, "bp", -2.0),
-        (DS1, CLASSES1, "gp", -4.0),
-        (DS3, CLASSES3, "gp", -4.0),
-        (DS3, CLASSES3, "bp", -2.0),
+        (SYNTH, CLASSES2, "gp", -4.0),
+        (SYNTH, CLASSES2, "bp", -2.0),
+        (SYNTH, CLASSES1, "gp", -4.0),
+        (SYNTH, CLASSES3, "gp", -4.0),
+        (SYNTH, CLASSES3, "bp", -2.0),
+        pytest.param(DS2, CLASSES2, "gp", -4.0, marks=_dev_set(DS2)),
+        pytest.param(DS2, CLASSES2, "bp", -2.0, marks=_dev_set(DS2)),
+        pytest.param(DS1, CLASSES1, "gp", -4.0, marks=_dev_set(DS1)),
+        pytest.param(DS3, CLASSES3, "gp", -4.0, marks=_dev_set(DS3)),
+        pytest.param(DS3, CLASSES3, "bp", -2.0, marks=_dev_set(DS3)),
     ],
 )
-def test_spark_pipeline_matches_single_process_oracle(spark, path, classes, model_type, bias):
+def test_spark_pipeline_matches_single_process_oracle(
+    spark, parity_corpus, path, classes, model_type, bias
+):
+    path = parity_corpus if path == SYNTH else path
     records = _records(path, N_DOCS)
     cfg = NerConfig(classes=classes, model_type=model_type, logit_bias=bias)
 
@@ -75,13 +145,17 @@ def test_spark_pipeline_matches_single_process_oracle(spark, path, classes, mode
         assert rows[cls]["recall"] >= 0.95
 
 
-def test_distributed_eval_matches_reference_validate(spark):
+@pytest.mark.parametrize("path", [SYNTH, pytest.param(DS2, marks=_dev_set(DS2))])
+def test_distributed_eval_matches_reference_validate(spark, parity_corpus, path):
     """span_f1 (distributed) == Train.validate (verbatim python) on real
-    predictions vs real gold sets from the reference dev data."""
-    records = _records(DS2, 300)
+    predictions vs gold sets from a dev set in the reference record shape."""
+    path = parity_corpus if path == SYNTH else path
+    records = _records(path, 300)
     classes = CLASSES2
     categories = {c: i for i, c in enumerate(classes)}
-    cfg = NerConfig(classes=classes, model_type="gp", logit_bias=-4.0)
+    # bias 0: at -4 the random-weight model hits no gold surface, every
+    # count A is 0, and the comparison would hold whatever the gold filter did
+    cfg = NerConfig(classes=classes, model_type="gp", logit_bias=0.0)
     model = PointerNerModel(cfg)
 
     texts = [r.get("text") or "" for r in records]
@@ -96,9 +170,10 @@ def test_distributed_eval_matches_reference_validate(spark):
         )
         docs.append((pred_sets, gold_sets))
     ref = validate_counts(docs, len(classes))
+    assert any(ref[str(cid)]["recall"] > 0 for cid in categories.values()), "no prediction hits gold"
 
     # distributed path
-    pages = reference_dataset_as_pages(spark, DS2).limit(300)
+    pages = reference_dataset_as_pages(spark, path).limit(300)
     mentions = detect_mentions(pages, cfg)
     pred_df = mention_sets(mentions)
     gold_df = gold_mention_sets(pages, cfg.max_sequence_length)
@@ -111,7 +186,8 @@ def test_distributed_eval_matches_reference_validate(spark):
     assert macro == pytest.approx(ref["_macro"]["f1"], abs=1e-9)
 
 
-def test_fused_decode_equals_reference_spec_path():
+@pytest.mark.parametrize("path", [SYNTH, pytest.param(DS2, marks=_dev_set(DS2))])
+def test_fused_decode_equals_reference_spec_path(parity_corpus, path):
     """The model's fused per-class-plane score+decode must emit exactly the
     spans of the unfused path (full raw_scores tensor → decode_gp), which in
     turn matches the reference-masked spec (test_heads)."""
@@ -119,7 +195,7 @@ def test_fused_decode_equals_reference_spec_path():
 
     from entity_extractor_by_pointer_spark.functions.decode import decode_gp
 
-    records = _records(DS2, 80)
+    records = _records(parity_corpus if path == SYNTH else path, 80)
     texts = [r.get("text") or "" for r in records]
     cfg = NerConfig(classes=CLASSES2, model_type="gp")
     m = PointerNerModel(cfg)

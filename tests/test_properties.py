@@ -2,14 +2,18 @@
 whole span pipeline rests on."""
 
 import hypothesis.strategies as st
+import pytest
 from hypothesis import given, settings
 
 from entity_extractor_by_pointer_spark.functions.decode import build_offset_maps
-from entity_extractor_by_pointer_spark.functions.gazetteer import gazetteer_spans
+from entity_extractor_by_pointer_spark.functions.gazetteer import GazetteerMatcher, gazetteer_spans
 from entity_extractor_by_pointer_spark.functions.tokenizer import (
     CjkCharTokenizer,
     basic_tokenize,
+    token_id,
 )
+
+from .test_tokenizer import _BATCH_ALPHABET
 
 # mixed CJK / ascii / punctuation / whitespace alphabet
 TEXT = st.text(
@@ -75,21 +79,26 @@ TEXT_NUL = st.text(
 )
 
 
+def _matcher_spans(gaz, texts, max_tokens=None):
+    """GazetteerMatcher's columns as rows (doc, type, surface, start, end)."""
+    doc, etype, surface, start, end = GazetteerMatcher(gaz)(texts, max_tokens)
+    return list(zip(doc.tolist(), etype.tolist(), surface, start.tolist(), end.tolist()))
+
+
+def _spec_spans(gaz, texts, max_tokens=None):
+    return [(d, *span) for d, text in enumerate(texts) for span in gazetteer_spans(text, gaz, max_tokens)]
+
+
 @given(TEXT_NUL, st.sampled_from([None, 6, 32]))
 @settings(max_examples=300, deadline=None)
-def test_aho_corasick_equals_reference_scan(text, max_tokens):
-    from entity_extractor_by_pointer_spark.functions.gazetteer import TokenAhoCorasick
-
-    ac = TokenAhoCorasick(_GAZ_FAST)
-    assert ac.spans(text, max_tokens) == gazetteer_spans(text, _GAZ_FAST, max_tokens)
+def test_batch_matcher_equals_reference_scan(text, max_tokens):
+    assert _matcher_spans(_GAZ_FAST, [text], max_tokens) == _spec_spans(_GAZ_FAST, [text], max_tokens)
 
 
-def test_aho_corasick_large_dictionary_and_dispatch():
+def test_batch_matcher_large_dictionary():
     """A 500-name dictionary (shared prefixes/suffixes, nested names, CJK +
     ASCII, multi-token) matches the reference scan exactly."""
     import random
-
-    from entity_extractor_by_pointer_spark.functions.gazetteer import TokenAhoCorasick
 
     rng = random.Random(42)
     vocab = ["alpha", "beta", "gamma", "中", "国", "北", "京", "x1", "y2"]
@@ -103,7 +112,69 @@ def test_aho_corasick_large_dictionary_and_dispatch():
     texts = [
         " ".join(rng.choices(vocab, k=rng.randint(0, 60))) for _ in range(50)
     ] + ["中国北京 alpha beta gamma x1", ""]
-    ac = TokenAhoCorasick(gaz)
-    for text in texts:
-        assert ac.spans(text, 64) == gazetteer_spans(text, gaz, 64)
-        assert ac.spans(text) == gazetteer_spans(text, gaz)
+    assert _matcher_spans(gaz, texts, 64) == _spec_spans(gaz, texts, 64)
+    assert _matcher_spans(gaz, texts) == _spec_spans(gaz, texts)
+
+
+# overlapping and nested names, one name under two types, names of 5 and 6
+# tokens (past the 4-token probe key), a name with no token, NUL
+_GAZ_BATCH = [
+    ("中国", "location", "LOC_CN"),
+    ("中国 中国", "location", "LOC_CN2"),
+    ("国 中", "location", "LOC_OVERLAP"),
+    ("中", "person", "PER_ZHONG"),
+    ("中", "location", "LOC_ZHONG"),
+    ("ab", "organization", "ORG_AB"),
+    ("AB 01", "organization", "ORG_AB01"),
+    ("ab 01 ab 01 ab", "person", "PER_LONG5"),
+    ("中 国 ab 1 é 中", "person", "PER_LONG6"),
+    ("x\x00y", "person", "PER_NUL"),
+    ("é", "location", "LOC_E"),
+    (" \t ", "location", "LOC_NO_TOKEN"),
+]
+_BATCH_WORDS = _BATCH_ALPHABET + ["ab", "AB", "01", "中国", " ab 01 ", "x\x00y"]
+
+
+@given(
+    st.lists(st.lists(st.sampled_from(_BATCH_WORDS), max_size=30).map("".join), max_size=6),
+    st.sampled_from([None, 2, 3, 200]),
+)
+@settings(max_examples=400, deadline=None)
+def test_batch_matcher_equals_spec_on_batches(texts, max_tokens):
+    assert _matcher_spans(_GAZ_BATCH, texts, max_tokens) == _spec_spans(_GAZ_BATCH, texts, max_tokens)
+
+
+def test_batch_matcher_empty_batch_and_empty_texts():
+    assert _matcher_spans(_GAZ_BATCH, []) == []
+    assert _matcher_spans(_GAZ_BATCH, ["", "", "中国"], 3) == [(2, "person", "中", 0, 0), (2, "location", "中", 0, 0)]
+    assert _matcher_spans([], ["中国"]) == []
+
+
+def test_batch_matcher_rejects_a_token_id_collision():
+    """Token ids are crc32 hashes: a text token with a name token's id but
+    another string must not match."""
+    import itertools
+    import string
+
+    target = token_id("spark")
+    twin = next(
+        w
+        for n in range(1, 6)
+        for w in map("".join, itertools.product(string.ascii_lowercase, repeat=n))
+        if w != "spark" and token_id(w) == target
+    )
+    gaz = [("spark", "organization", "ORG_SPARK")]
+    texts = [f"{twin} and spark", twin]
+    assert _matcher_spans(gaz, texts) == [(0, "organization", "spark", len(twin) + 5, len(twin) + 9)]
+    assert _matcher_spans(gaz, texts) == _spec_spans(gaz, texts)
+
+
+@pytest.mark.parametrize("max_tokens", [-1, 0, 1])
+def test_window_under_two_tokens_is_rejected(max_tokens):
+    # [CLS] and [SEP] leave no room for a token; slicing the token list with
+    # a negative bound would silently drop only the last one or two tokens
+    gaz = [("中国", "location", "LOC_CN")]
+    with pytest.raises(ValueError):
+        gazetteer_spans("中国 中国 中国", gaz, max_tokens)
+    with pytest.raises(ValueError):
+        GazetteerMatcher(gaz)(["中国 中国 中国"], max_tokens)

@@ -11,6 +11,7 @@ from entity_extractor_by_pointer_spark.functions.tokenizer import (
     encode_for_inference,
     pad_or_truncate,
     token_id,
+    tokenize_batch,
 )
 
 
@@ -56,19 +57,21 @@ def test_pad_or_truncate_reference_semantics():
 
 
 def test_fast_tokenizer_equals_reference_loop():
-    import hypothesis.strategies as st
-    from hypothesis import given, settings
-
-    from entity_extractor_by_pointer_spark.functions.tokenizer import basic_tokenize_slow
-
     alphabet = st.sampled_from(
         list("中国广州 abzAZ019,.!?、。\t\n\r\xa0　\x1c​é½１﹏")
     )
 
-    @given(st.text(alphabet=alphabet, max_size=200))
+    @given(st.lists(st.text(alphabet=alphabet, max_size=200), max_size=6), st.sampled_from([None, 0, 1, 5]))
     @settings(max_examples=500, deadline=None)
-    def check(text):
-        assert basic_tokenize(text) == basic_tokenize_slow(text)
+    def check(texts, limit):
+        doc, start, end, ids = tokenize_batch(texts, limit)
+        got = list(zip(doc.tolist(), start.tolist(), end.tolist(), ids.tolist()))
+        spec = [
+            (d, s, e, token_id(tok))
+            for d, text in enumerate(texts)
+            for tok, s, e in basic_tokenize(text)[:limit]
+        ]
+        assert got == spec
 
     check()
 
