@@ -432,21 +432,14 @@ PROFILE_COLS = ("l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus", "l
 
 
 def q_table_profile(spark, sf_dir):
-    """One-pass data-quality profile of lineitem (nulls / exact distinct /
-    min / max per column, fused into a single aggregation job + stack
-    unpivot). Columns chosen for cross-engine-stable string rendering
+    """One-job data-quality profile of lineitem (nulls / exact distinct /
+    min / max per column, one single-column aggregate branch per column,
+    unioned). Columns chosen for cross-engine-stable string rendering
     (ints, varchars, timestamp — doubles format differently per engine).
-
-    ``approx_distinct=False`` is explicit because the DuckDB oracle
-    computes exact count(DISTINCT): the auto census gate would silently
-    switch this QUERY to HLL++ above 100k rows and make its correctness
-    contract scale-dependent (round-5 ADVICE). The gate stays the default
-    for pipeline/drift callers, where the sketch is the point."""
+    Distincts are exact, like the DuckDB oracle's count(DISTINCT)."""
     from entity_extractor_by_pointer_spark.operators.profile import profile_table
 
-    return profile_table(
-        _t(spark, sf_dir, "lineitem"), list(PROFILE_COLS), approx_distinct=False
-    )
+    return profile_table(_t(spark, sf_dir, "lineitem"), list(PROFILE_COLS))
 
 
 def q_graph_export_ntriples(spark, sf_dir):
@@ -837,9 +830,7 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     otherwise explode the candidate join O(df²). The oracle computes EXACT
     blocking; capped ≡ exact on this corpus family is pytest-pinned
     (tests/test_dedup_similarity.py) and was oracle-proven in round 2."""
-    return dd.ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), JACCARD_THRESHOLD, max_shingle_df="auto"
-    )
+    return dd.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), JACCARD_THRESHOLD)
 
 
 CONTAINMENT_THRESHOLD = 0.9
@@ -867,11 +858,7 @@ def q_doc_containment(spark, sf_dir):
     signal for quotes/syndication/page-supersets that symmetric Jaccard
     misses. Shares the blocked-intersection engine (adaptive stop-shingle
     cap) with the Jaccard query."""
-    return dd.containment_pairs(
-        _containment_corpus(spark, sf_dir),
-        CONTAINMENT_THRESHOLD,
-        max_shingle_df="auto",
-    )
+    return dd.containment_pairs(_containment_corpus(spark, sf_dir), CONTAINMENT_THRESHOLD)
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
@@ -894,9 +881,7 @@ def q_dedup_simhash(spark, sf_dir):
 
 
 def q_dedup_clusters_cc(spark, sf_dir):
-    pairs = dd.ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), JACCARD_THRESHOLD, max_shingle_df="auto"
-    )
+    pairs = dd.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), JACCARD_THRESHOLD)
     return connected_components(pairs, src="id_a", dst="id_b").withColumnRenamed(
         "id", "doc_id"
     )

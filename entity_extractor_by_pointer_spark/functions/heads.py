@@ -112,14 +112,13 @@ class GlobalPointerHead:
     equivalence is pinned by ``tests/test_heads.py``.
     """
 
-    def __init__(self, hidden_size: int, num_labels: int, seed: int = 7, rope: bool = True):
+    def __init__(self, hidden_size: int, num_labels: int, seed: int = 7):
         rng = np.random.default_rng(seed)
         scale = 1.0 / np.sqrt(hidden_size)
         self.w1 = rng.normal(0, scale, (hidden_size, INNER_DIM * 2)).astype(np.float32)
         self.b1 = rng.normal(0, 0.02, (INNER_DIM * 2,)).astype(np.float32)
         self.w2 = rng.normal(0, scale, (hidden_size, num_labels * 2)).astype(np.float32)
         self.b2 = rng.normal(0, 0.02, (num_labels * 2,)).astype(np.float32)
-        self.rope = rope
         self.num_labels = num_labels
 
     def raw_scores(self, hidden: np.ndarray) -> np.ndarray:
@@ -155,14 +154,13 @@ class GlobalPointerHead:
         seq_len = hidden.shape[1]
         out = hidden @ self.w1 + self.b1  # (B, L, 2*inner)
         qw, kw = out[..., ::2], out[..., 1::2]  # interleaved split (ref :69)
-        if self.rope:
-            cos_pos, sin_pos = rope_tables(seq_len, INNER_DIM)
-            # identical arithmetic to apply_rope, with the cos/sin repeats
-            # precomputed once per worker instead of per doc
-            qw2 = np.stack([-qw[..., 1::2], qw[..., ::2]], axis=-1).reshape(qw.shape)
-            qw = qw * cos_pos + qw2 * sin_pos
-            kw2 = np.stack([-kw[..., 1::2], kw[..., ::2]], axis=-1).reshape(kw.shape)
-            kw = kw * cos_pos + kw2 * sin_pos
+        cos_pos, sin_pos = rope_tables(seq_len, INNER_DIM)
+        # identical arithmetic to apply_rope, with the cos/sin repeats
+        # precomputed once per worker instead of per doc
+        qw2 = np.stack([-qw[..., 1::2], qw[..., ::2]], axis=-1).reshape(qw.shape)
+        qw = qw * cos_pos + qw2 * sin_pos
+        kw2 = np.stack([-kw[..., 1::2], kw[..., ::2]], axis=-1).reshape(kw.shape)
+        kw = kw * cos_pos + kw2 * sin_pos
         qw = np.ascontiguousarray(qw)
         kw = np.ascontiguousarray(kw)
         qk = (qw @ kw.transpose(0, 2, 1)) * np.float32(1.0 / INNER_DIM**0.5)

@@ -15,7 +15,8 @@ iteration, so the driver runs a loop of DataFrame self-joins
   scale;
 - convergence = an unchanged star edge set, computed with counts and an
   ``exceptAll`` probe (aggregates, not a collect of the data itself);
-  reaching ``max_iter`` without it is an error, never partial labels.
+  reaching ``CC_MAX_ITER`` rounds without it is an error, never partial
+  labels.
 """
 
 from __future__ import annotations
@@ -23,40 +24,41 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# round budget of the distributed large/small-star loop: it converges in
+# O(log n) rounds, so 25 covers any graph this engine builds
+CC_MAX_ITER = 25
+# edge count at/below which the graph is collected and solved by a local
+# union-find (the alias/duplicate graphs of a KG run are orders of
+# magnitude smaller than the mention table)
+CC_DRIVER_THRESHOLD = 100_000
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """(src, dst) undirected edges → (id, canon_id) with canon_id = min
     member id of each component, for every node in a non-self edge.
 
-    Hybrid execution: if the (deduplicated) edge list fits comfortably on
-    the driver (≤ ``driver_threshold`` edges — the alias/duplicate graphs of
-    a KG run are orders of magnitude smaller than the mention table), run
-    union-find locally and broadcast the result: identical output, zero
-    iterative Spark jobs. Larger graphs take the distributed large/small-star
-    loop, which raises ``RuntimeError`` if it has not converged after
-    ``max_iter`` rounds. Set ``driver_threshold=0`` to force the distributed
-    path (the tests exercise both).
+    Hybrid execution: if the non-self edge list fits on the driver
+    (≤ :data:`CC_DRIVER_THRESHOLD` edges), run union-find locally and
+    broadcast the result: identical output, zero iterative Spark jobs.
+    Larger graphs take the distributed large/small-star loop, which raises
+    ``RuntimeError`` if it has not converged after :data:`CC_MAX_ITER`
+    rounds (the tests patch both constants to exercise each path).
     """
-    if driver_threshold > 0:
-        # single job: fetch up to threshold+1 rows; fall through if more
-        sample = (
-            edges.select(src, dst).where(F.col(src) != F.col(dst)).take(driver_threshold + 1)
-        )
-        if len(sample) <= driver_threshold:
-            comp = _union_find_min_label([(r[0], r[1]) for r in sample])
-            if not comp:
-                return edges.sparkSession.createDataFrame(
-                    [], f"id {dict(edges.dtypes)[src]}, canon_id {dict(edges.dtypes)[dst]}"
-                )
+    # single job: fetch up to threshold+1 rows; fall through if more
+    sample = (
+        edges.select(src, dst).where(F.col(src) != F.col(dst)).take(CC_DRIVER_THRESHOLD + 1)
+    )
+    if len(sample) <= CC_DRIVER_THRESHOLD:
+        comp = _union_find_min_label([(r[0], r[1]) for r in sample])
+        if not comp:
             return edges.sparkSession.createDataFrame(
-                list(comp.items()), ["id", "canon_id"]
+                [], f"id {dict(edges.dtypes)[src]}, canon_id {dict(edges.dtypes)[dst]}"
             )
+        return edges.sparkSession.createDataFrame(list(comp.items()), ["id", "canon_id"])
 
     def large_star(e: DataFrame) -> DataFrame:
         # symmetric neighborhoods; for each center a: m = min(N(a) ∪ {a});
@@ -94,7 +96,7 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         new_e = small_star(large_star(e)).localCheckpoint()
         # converged when the star edge set is stable: equal cardinality and
         # no edge in new∖old (two cheap distributed checks, no data collect)
@@ -106,7 +108,8 @@ def connected_components(
             break
     else:
         raise RuntimeError(
-            f"connected_components: star loop did not converge within max_iter={max_iter} rounds"
+            "connected_components: star loop did not converge within "
+            f"CC_MAX_ITER={CC_MAX_ITER} rounds"
         )
     # final star: every node points at its component min; the roots
     # themselves map to their own id

@@ -76,9 +76,7 @@ BOILERPLATE_BROADCAST_HOT_MAX = 1_000_000
 # so with ≲200 distinct shingles per doc (a ~200-word page) the worst case
 # is 20k · 200 / 4 = 1M rows = exactly the broadcast ceiling — the hot-set
 # count() action is pure overhead there and the hint is applied directly.
-# Above the threshold — or whenever the caller TIGHTENS broadcast_hot_max
-# below its default (the shortcut cannot honor a smaller ceiling without
-# counting) — census before hinting: a forced hint overrides
+# Above the threshold, census before hinting: a forced hint overrides
 # autoBroadcastJoinThreshold and OOMs at crawl scale instead of degrading.
 # docs.count() on parquet is metadata-only.
 BOILERPLATE_CENSUS_DOCS = 20_000
@@ -89,8 +87,6 @@ def boilerplate_stats(
     min_df: int = BOILERPLATE_MIN_DF,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_hot_max: int = BOILERPLATE_BROADCAST_HOT_MAX,
-    census_docs_max: int = BOILERPLATE_CENSUS_DOCS,
 ) -> DataFrame:
     """Per-document boilerplate census: how much of each doc is made of
     passages repeated across the corpus (the repeated-passage signal behind
@@ -104,13 +100,14 @@ def boilerplate_stats(
 
     Scale shape: ONE shingle scan feeds both the corpus df census (map-side
     combined groupBy) and the per-doc counts. The broadcast decision for
-    the hot-shingle set is two-tier: corpora at/below ``census_docs_max``
-    rows (a metadata-only ``docs.count()``) get the hint directly — their
-    hot set cannot threaten the ceiling, and counting it anyway was the
-    round-4 bench regression; larger corpora persist and COUNT the hot set
-    first, hinting only while the censused count stays under
-    ``broadcast_hot_max`` — the bound ``corpus_shingles/min_df`` is *not*
-    small at crawl scale with a low min_df, and a forced hint overrides
+    the hot-shingle set is two-tier: corpora at/below
+    :data:`BOILERPLATE_CENSUS_DOCS` rows (a metadata-only ``docs.count()``)
+    get the hint directly — their hot set cannot threaten the ceiling, and
+    counting it anyway was the round-4 bench regression; larger corpora
+    persist and COUNT the hot set first, hinting only while the censused
+    count stays under :data:`BOILERPLATE_BROADCAST_HOT_MAX` — the bound
+    ``corpus_shingles/min_df`` is *not* small at crawl scale with a low
+    min_df, and a forced hint overrides
     ``autoBroadcastJoinThreshold`` (it would OOM rather than degrade —
     round-3 judge). Above the gate the semi join is left plain and the
     shuffle carries only (shingle) keys.
@@ -131,26 +128,18 @@ def boilerplate_stats(
         .where(F.col("df") >= min_df)
         .select("shingle")
     )
-    if broadcast_hot_max <= 0:
-        hot_side = hot
-    elif (
-        broadcast_hot_max >= BOILERPLATE_BROADCAST_HOT_MAX
-        and min_df >= BOILERPLATE_MIN_DF
-        and docs.count() <= census_docs_max
-    ):
-        # the min_df >= default guard keeps the shortcut's worst-case bound
-        # honest: the 1M-row ceiling derivation assumes min_df ≥ 4, so a
-        # caller passing min_df=1 (hot set ≈ every distinct shingle) must
-        # take the censused branch below instead of a forced hint
-        # small corpus at the DEFAULT ceiling: the hot set cannot threaten
-        # the broadcast ceiling (see BOILERPLATE_CENSUS_DOCS bound) — skip
-        # the census action entirely (round-4 bench regression). A
-        # caller-tightened ceiling always goes through the census.
+    if min_df >= BOILERPLATE_MIN_DF and docs.count() <= BOILERPLATE_CENSUS_DOCS:
+        # small corpus: the hot set cannot threaten the broadcast ceiling
+        # (see BOILERPLATE_CENSUS_DOCS bound) — skip the census action
+        # entirely (round-4 bench regression). The min_df >= default guard
+        # keeps that bound honest: its derivation assumes min_df ≥ 4, so a
+        # caller passing min_df=1 (hot set ≈ every distinct shingle) takes
+        # the censused branch below instead of a forced hint
         hot_side = F.broadcast(hot)
     else:
         hot = cached(hot)  # census + join read the same materialization
         n_hot = hot.count()
-        hot_side = F.broadcast(hot) if n_hot <= broadcast_hot_max else hot
+        hot_side = F.broadcast(hot) if n_hot <= BOILERPLATE_BROADCAST_HOT_MAX else hot
     # per-doc totals are an O(1) size() off the cached array rows (vs the
     # former distinct over the 2.6M exploded occurrence rows); the
     # distinct here is over the tiny one-row-per-doc frame and keeps the
@@ -194,7 +183,6 @@ def contamination_flags(
     id_col: str = "doc_id",
     text_col: str = "text",
     bench_text_col: str = "text",
-    broadcast_max: int = CONTAM_BROADCAST_MAX,
 ) -> DataFrame:
     """(doc_id, n_contam, contaminated) — benchmark DECONTAMINATION, the
     train/test-leak check every serious LLM data pipeline runs (GPT-3
@@ -223,7 +211,7 @@ def contamination_flags(
         n=n,
     ).select("shingle").distinct()
     bench_sh = cached(bench_sh)
-    dim = F.broadcast(bench_sh) if bench_sh.count() <= broadcast_max else bench_sh
+    dim = F.broadcast(bench_sh) if bench_sh.count() <= CONTAM_BROADCAST_MAX else bench_sh
     doc_sh = shingle_df(docs, id_col, text_col, n=n)
     hits = (
         doc_sh.join(dim, "shingle", "left_semi")
@@ -302,7 +290,6 @@ def balance_sources(
     max_share_pct: int = BALANCE_MAX_SHARE_PCT,
     id_col: str = "doc_id",
     source_col: str = "source",
-    broadcast_max: int = BALANCE_BROADCAST_MAX,
 ) -> DataFrame:
     """(doc_id, source, keep) — DOMAIN BALANCING, the C4/RefinedWeb-style
     downsampling of over-represented sources: any source holding more than
@@ -337,7 +324,7 @@ def balance_sources(
         ).alias("_thr"),
     )
     thr = cached(thr)
-    dim = F.broadcast(thr) if thr.count() <= broadcast_max else thr
+    dim = F.broadcast(thr) if thr.count() <= BALANCE_BROADCAST_MAX else thr
     bucket = F.pmod(md5_int64(F.col(id_col).cast("string")), F.lit(1_000_000))
     return base.join(dim, "source").select(
         id_col, "source", (bucket < F.col("_thr")).alias("keep")

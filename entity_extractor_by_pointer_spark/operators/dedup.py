@@ -80,11 +80,11 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def _cap_for(n_docs: int, auto_docs_threshold: int = JACCARD_AUTO_DOCS) -> int | None:
+def _cap_for(n_docs: int) -> int | None:
     """The one blocking-strategy rule: ``None`` (exact blocking) for
-    corpora at/below ``auto_docs_threshold`` rows, ``JACCARD_AUTO_CAP``
+    corpora at/below ``JACCARD_AUTO_DOCS`` rows, ``JACCARD_AUTO_CAP``
     above. The engine applies it to its corpus census."""
-    return None if n_docs <= auto_docs_threshold else JACCARD_AUTO_CAP
+    return None if n_docs <= JACCARD_AUTO_DOCS else JACCARD_AUTO_CAP
 
 
 def _shingle_arr_sql(n: int, hashed: bool, positional: bool = False) -> str:
@@ -184,14 +184,12 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_shingle_df: int | str | None = None,
-    auto_docs_threshold: int = JACCARD_AUTO_DOCS,
 ) -> DataFrame:
     """(id_a, id_b, jaccard) for pairs with Jaccard ≥ threshold.
 
     Blocking join on shingle; Jaccard on distinct-shingle sets. Skew from
     common shingles is handled two ways: AQE skew-join always, and —
-    at crawl scale — ``max_shingle_df`` drops stop-shingles (document
+    at crawl scale — the capped path drops stop-shingles (document
     frequency > cap) from the BLOCKING join only, bounding the join fan-out
     to O(df_cap²) per shingle. The capped path then (1) aggregates
     rare-shingle intersection counts directly (map-side combined — never a
@@ -201,9 +199,9 @@ def ngram_jaccard_pairs(
     (3) exact-verifies only the tiny survivor set by counting its hot-shingle
     overlap, so reported scores equal the exact path's. Only pairs whose
     every shared shingle is hot can be missed (standard near-dup practice).
-    ``None`` = exact blocking; ``"auto"`` = :func:`_cap_for` on the row count
-    (exact below ``auto_docs_threshold`` rows, ``JACCARD_AUTO_CAP`` above —
-    small corpora keep the cheaper exact plan, crawl-scale corpora get the
+    The strategy is :func:`_cap_for` on the corpus census (exact blocking
+    at/below ``JACCARD_AUTO_DOCS`` rows, ``JACCARD_AUTO_CAP`` above — small
+    corpora keep the cheaper exact plan, crawl-scale corpora get the
     bounded one; plan selection is pytest-pinned at both ends).
     """
     # jaccard ≥ τ needs n_inter ≥ τ(n_a+n_b)/(1+τ) — the PPJoin bound
@@ -218,14 +216,12 @@ def ngram_jaccard_pairs(
         docs,
         id_col,
         text_col,
-        max_shingle_df,
         bound,
         # same inequality with both sizes at their corpus-wide minimum — a
         # constant, so it prunes right at the aggregate (no false prune)
         const_bound=lambda n_min: t_eps / (1.0 + t_eps) * 2.0 * n_min,
         # J ≥ τε forces min(n_a,n_b) ≥ τε·max(n_a,n_b): prune inside the join
         size_ratio=t_eps,
-        auto_docs_threshold=auto_docs_threshold,
     )
     return (
         inter.withColumn(
@@ -243,26 +239,25 @@ def _pair_intersections(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    max_shingle_df: int | str | None,
     qualify_bound,
-    const_bound=None,
+    const_bound,
     size_ratio: float | None = None,
-    auto_docs_threshold: int = JACCARD_AUTO_DOCS,
 ) -> DataFrame:
     """Shared shingle-overlap engine for the set-similarity family
     (:func:`ngram_jaccard_pairs`, :func:`containment_pairs`): returns
     (id_a, id_b, n_inter, n_a, n_b) for every id_a < id_b pair sharing ≥1
     shingle, with EXACT intersection counts.
 
-    ``max_shingle_df=None`` is the exact blocking join. Otherwise the
-    capped path runs: stop-shingles (df > cap) leave the blocking join
-    (bounding fan-out to O(cap²) per shingle), rare intersections aggregate
-    map-side, and pairs whose best-possible intersection
-    ``rare_inter + min(hot_a, hot_b)`` falls below ``qualify_bound`` (a
-    Column over n_a/n_b — each scorer's own no-false-prune inequality) are
-    pruned before the survivor set's hot overlap is counted exactly, so
-    reported counts equal the exact path's. Only pairs whose every shared
-    shingle is hot can be missed (standard near-dup practice)."""
+    :func:`_cap_for` on the corpus census picks the strategy. ``None`` is
+    the exact blocking join; a cap runs the capped path: stop-shingles
+    (df > cap) leave the blocking join (bounding fan-out to O(cap²) per
+    shingle), rare intersections aggregate map-side, and pairs whose
+    best-possible intersection ``rare_inter + min(hot_a, hot_b)`` falls
+    below ``qualify_bound`` (a Column over n_a/n_b — each scorer's own
+    no-false-prune inequality) are pruned before the survivor set's hot
+    overlap is counted exactly, so reported counts equal the exact path's.
+    Only pairs whose every shared shingle is hot can be missed (standard
+    near-dup practice)."""
     # (id, n_sh, shingle-hash) rows: the per-doc set size rides along with
     # every shingle row, so pair sizes fall out of the blocking join itself
     # and the two 114M-row size joins of the r5 engine disappear — the
@@ -270,29 +265,25 @@ def _pair_intersections(
     # so the groups are unchanged). The helper caches the per-doc ARRAY
     # table; every consumer below re-explodes from that cache (cheap).
     arr_df = _hashed_shingle_arrays(docs, id_col, text_col)
-    n_docs = n_min = None
-    if max_shingle_df == "auto" or (max_shingle_df is None and const_bound is not None):
-        # ONE aggregate over the ARRAY table (one row per doc) triples as
-        # (a) the cache fill both paths need anyway, (b) the strategy/
-        # widening census (count == docs.count()), and (c) the corpus-wide
-        # minimum nonempty set size the exact path's constant bound needs —
-        # previously the census was a separate job (a real ~2s pass on the
-        # computed 60k-row containment corpus at sf1.0, where count() is
-        # not metadata-only) and n_min was another.
-        row = arr_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.when(F.size("sharr") > 0, F.size("sharr"))).alias("m"),
-        ).first()
-        n_docs, n_min = row[0], row[1]
-    if max_shingle_df == "auto":
-        max_shingle_df = _cap_for(n_docs, auto_docs_threshold)
+    # ONE aggregate over the ARRAY table (one row per doc) triples as (a)
+    # the cache fill both paths need anyway, (b) the strategy/widening
+    # census (count == docs.count()), and (c) the corpus-wide minimum
+    # nonempty set size the exact path's constant bound needs — previously
+    # the census was a separate job (a real ~2s pass on the computed
+    # 60k-row containment corpus at sf1.0, where count() is not
+    # metadata-only) and n_min was another.
+    n_docs, n_min = arr_df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(F.when(F.size("sharr") > 0, F.size("sharr"))).alias("m"),
+    ).first()
+    cap = _cap_for(n_docs)
     sh = arr_df.select(
         id_col,
         F.size("sharr").alias("n_sh"),
         F.explode("sharr").alias("shingle"),
     )
 
-    if max_shingle_df is None:
+    if cap is None:
         a, b = sh.alias("a"), sh.alias("b")
         joined = a.join(b, "shingle").where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
         if size_ratio is not None:
@@ -305,7 +296,7 @@ def _pair_intersections(
                 (F.col("b.n_sh") >= F.lit(size_ratio) * F.col("a.n_sh"))
                 & (F.col("a.n_sh") >= F.lit(size_ratio) * F.col("b.n_sh"))
             )
-        if size_ratio is not None and (n_docs or 0) > PAIR_AGG_WIDE_DOCS:
+        if size_ratio is not None and n_docs > PAIR_AGG_WIDE_DOCS:
             # widen ONLY this aggregate's exchange: at tens of thousands of
             # docs the post-size-cut pair aggregate is the query's dominant
             # stage (tens of millions of groups) and `shuffle.partitions`
@@ -331,7 +322,7 @@ def _pair_intersections(
             F.col("a.n_sh").alias("n_a"),
             F.col("b.n_sh").alias("n_b"),
         ).agg(F.count(F.lit(1)).alias("n_inter"))
-        if const_bound is not None and n_min is not None:
+        if n_min is not None:
             # the scorer's qualify inequality with both set sizes at the
             # corpus-wide minimum (from the combined census above) is a
             # CONSTANT lower bound on n_inter — cheap insurance that the
@@ -353,7 +344,7 @@ def _pair_intersections(
     hot = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") > max_shingle_df)
+        .where(F.col("df") > cap)
         .select("shingle")
     )
     hot = cached(hot)
@@ -412,8 +403,6 @@ def containment_pairs(
     threshold: float = 0.9,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_shingle_df: int | str | None = None,
-    auto_docs_threshold: int = JACCARD_AUTO_DOCS,
 ) -> DataFrame:
     """DIRECTIONAL near-dup pairs (id_a, id_b, containment) with
     ``containment = |shingles(a) ∩ shingles(b)| / |shingles(a)| ≥ threshold``
@@ -437,11 +426,9 @@ def containment_pairs(
         docs,
         id_col,
         text_col,
-        max_shingle_df,
         bound,
         # τ·min(n_a, n_b) ≥ τ·n_min — constant, prunes before the size joins
         const_bound=lambda n_min: t_eps * n_min,
-        auto_docs_threshold=auto_docs_threshold,
     )
     # one explode emits both directed rows per pair — a fwd ∪ rev of two
     # selects evaluated the whole engine subtree twice (verify joins and

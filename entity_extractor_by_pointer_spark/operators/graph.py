@@ -12,9 +12,10 @@ queryable as a graph, not just storable:
   Spark shape). Dangling nodes keep their damped base mass (absorbing
   variant — no global redistribution term), which keeps every iteration a
   pure join+agg and makes the recursion SQL-expressible (the oracle unrolls
-  the same fixed iterations as chained CTEs). Every ``checkpoint_every``
-  iterations the plan is truncated with ``localCheckpoint`` so lineage
-  doesn't grow unboundedly — same pattern as connected components.
+  the same fixed iterations as chained CTEs). Every
+  ``PAGERANK_CHECKPOINT_EVERY`` iterations the plan is truncated with
+  ``localCheckpoint`` so lineage doesn't grow unboundedly — same pattern as
+  connected components.
 """
 
 from __future__ import annotations
@@ -41,26 +42,24 @@ def entity_degrees(triples: DataFrame) -> DataFrame:
     )
 
 
+# lineage truncation period of the PageRank loop, in iterations
+PAGERANK_CHECKPOINT_EVERY = 3
+
+
 def pagerank(
     triples: DataFrame,
     iterations: int = 5,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
     seeds: tuple[str, ...] | None = None,
     weight_col: str | None = None,
-    dangling: str = "absorb",
 ) -> DataFrame:
     """(entity, rank) after ``iterations`` damped PageRank steps.
 
     rank₀ = 1/N; rank_{t+1}(v) = (1−d)/N + d·Σ_{u→v} rank_t(u)/outdeg(u).
 
-    ``dangling``: ``"absorb"`` (default — sink nodes leak their mass, the
-    variant the SQL oracle unrolls) or ``"redistribute"`` (the classic
-    Brin–Page treatment: each iteration adds d·dangling_mass/N to every
-    node, conserving Σrank = 1 — numpy-pinned by pytest). Redistribution
-    costs one extra tiny aggregate + a broadcast 1-row cross join per
-    iteration; the dangling set is the anti-join of nodes against edge
-    subjects, computed once outside the loop.
+    Dangling (sink) nodes absorb: their mass leaks out of the graph each
+    iteration, the variant the SQL oracle unrolls. An empty edge set gives
+    an empty (entity, rank) frame, as the oracle does.
 
     ``seeds`` switches to PERSONALIZED PageRank: the teleport mass lands
     only on the seed set (rank₀ = 1[v∈S]/|S|, base term (1−d)/|S| on seeds,
@@ -113,6 +112,8 @@ def pagerank(
         .distinct()
     )
     n = nodes.count()
+    if n == 0:
+        return nodes.withColumn("rank", F.lit(0.0))
     if seeds is None:
         r0 = F.lit(1.0 / n)
         base_col = F.lit((1.0 - damping) / n)
@@ -121,22 +122,6 @@ def pagerank(
         r0 = F.when(in_s, F.lit(1.0 / len(seeds))).otherwise(F.lit(0.0))
         base_col = F.when(in_s, F.lit((1.0 - damping) / len(seeds))).otherwise(
             F.lit(0.0)
-        )
-    if dangling not in ("absorb", "redistribute"):
-        raise ValueError(f"dangling must be 'absorb' or 'redistribute', got {dangling!r}")
-    if dangling == "redistribute" and seeds is not None:
-        # personalized PR redistributes dangling mass to the SEED set, a
-        # different recursion — not implemented; fail loudly rather than
-        # silently computing the uniform-teleport hybrid
-        raise ValueError("dangling='redistribute' is for global PageRank (no seeds)")
-    dangling_nodes = None
-    if dangling == "redistribute":
-        dangling_nodes = cached(
-            nodes.join(
-                edges_w.select(F.col("subj").alias("entity")).distinct(),
-                "entity",
-                "left_anti",
-            )
         )
     ranks = nodes.withColumn("rank", r0)
     contrib_expr = (
@@ -154,32 +139,15 @@ def pagerank(
             .groupBy("entity")
             .agg(F.sum("contrib").alias("inflow"))
         )
-        new_ranks = nodes.join(contribs, "entity", "left").fillna(
-            0.0, subset=["inflow"]
-        )
-        if dangling_nodes is not None:
-            dm = dangling_nodes.join(ranks, "entity").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-            )
-            new_ranks = new_ranks.crossJoin(F.broadcast(dm)).select(
-                "entity",
-                (
-                    base_col
-                    + F.lit(damping)
-                    * (F.col("inflow") + F.col("_dm") / F.lit(float(n)))
-                ).alias("rank"),
-            )
-        else:
-            new_ranks = new_ranks.select(
+        ranks = (
+            nodes.join(contribs, "entity", "left")
+            .fillna(0.0, subset=["inflow"])
+            .select(
                 "entity",
                 (base_col + F.lit(damping) * F.col("inflow")).alias("rank"),
             )
-        ranks = new_ranks
-        # redistribute references ranks TWICE per iteration (contribs join
-        # + dangling-mass aggregate); without per-iteration lineage
-        # truncation the rank subtree doubles each round between the
-        # periodic checkpoints — so checkpoint every iteration there
-        if dangling_nodes is not None or (it + 1) % checkpoint_every == 0:
+        )
+        if (it + 1) % PAGERANK_CHECKPOINT_EVERY == 0:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks.select("entity", F.round("rank", 6).alias("rank"))
 
@@ -189,9 +157,9 @@ def pagerank(
 # 10⁸ pair rows. Docs above the cap are EXCLUDED from the co-occurrence
 # corpus (pairs, marginals, and N alike — standard co-occurrence practice:
 # such pages are link farms / tag indexes, not evidence of association).
-# The census is skipped-if-clean: when no doc exceeds the cap (the auto
-# census says so with one map-side-combined aggregate over the cached
-# mention table), the exact zero-filter path runs.
+# The census is skipped-if-clean: when no doc exceeds the cap (the census
+# says so with one map-side-combined aggregate over the cached mention
+# table), the exact zero-filter path runs.
 PMI_MAX_ENTITIES_PER_DOC = 256
 # df-table broadcast gate: one row per canonical entity — web-scale KGs
 # hold hundreds of millions of entities, far past broadcast range, and a
@@ -205,8 +173,6 @@ def entity_pmi_edges(
     canon_mentions: DataFrame,
     id_col: str = "doc_id",
     entity_col: str = "canon_id",
-    max_entities_per_doc: int | str | None = "auto",
-    broadcast_df_max: int = PMI_BROADCAST_DF_MAX,
 ) -> DataFrame:
     """Pointwise-mutual-information edge weights for the co-occurrence KG:
     (entity_a, entity_b, co_docs, pmi) for every unordered canonical-entity
@@ -220,15 +186,12 @@ def entity_pmi_edges(
     triple count (``triple_counts``) cannot provide.
 
     Scale shape: per-doc fan-out of the doc-keyed self-join is bounded by
-    ``max_entities_per_doc`` (``"auto"`` = census first, filter only if some
-    doc exceeds :data:`PMI_MAX_ENTITIES_PER_DOC`); the df marginal table is
-    broadcast only while its censused cardinality stays under
-    ``broadcast_df_max`` — above that the hint is withheld and the join
-    shuffles (AQE may still broadcast if runtime stats allow). N rides a
-    1-row broadcast either way."""
+    :data:`PMI_MAX_ENTITIES_PER_DOC` (census first, filter only if some doc
+    exceeds it); the df marginal table is broadcast only while its censused
+    cardinality stays under :data:`PMI_BROADCAST_DF_MAX` — above that the
+    hint is withheld and the join shuffles (AQE may still broadcast if
+    runtime stats allow). N rides a 1-row broadcast either way."""
     cm = cached(canon_mentions.select(id_col, entity_col).distinct())
-    if max_entities_per_doc == "auto":
-        max_entities_per_doc = PMI_MAX_ENTITIES_PER_DOC
     per_doc = cm.groupBy(id_col).agg(F.count(F.lit(1)).alias("_k"))
     dfe = cached(cm.groupBy(entity_col).agg(F.count(F.lit(1)).alias("df")))
     # BOTH censuses (max per-doc fan-out, df-table cardinality) ride ONE
@@ -247,18 +210,15 @@ def entity_pmi_edges(
         .collect()
     )
     n_entities = census["n_entities"]
-    if (
-        max_entities_per_doc is not None
-        and (census["max_k"] or 0) > max_entities_per_doc
-    ):
+    if (census["max_k"] or 0) > PMI_MAX_ENTITIES_PER_DOC:
         # pathological corpus: rebuild the marginals from the filtered
         # mention set (df/N must exclude the dropped docs)
-        ok = per_doc.where(F.col("_k") <= max_entities_per_doc).select(id_col)
+        ok = per_doc.where(F.col("_k") <= PMI_MAX_ENTITIES_PER_DOC).select(id_col)
         cm = cached(cm.join(ok, id_col, "left_semi"))
         dfe = cached(cm.groupBy(entity_col).agg(F.count(F.lit(1)).alias("df")))
         n_entities = dfe.count()
     n_corpus = cm.select(F.countDistinct(id_col).alias("n_corpus"))
-    hint = F.broadcast if n_entities <= broadcast_df_max else (lambda d: d)
+    hint = F.broadcast if n_entities <= PMI_BROADCAST_DF_MAX else (lambda d: d)
     a = cm.select(F.col(id_col).alias("_d"), F.col(entity_col).alias("entity_a"))
     b = cm.select(F.col(id_col).alias("_d"), F.col(entity_col).alias("entity_b"))
     pairs = (
@@ -379,10 +339,7 @@ def triangle_counts(triples: DataFrame) -> DataFrame:
 RELATED_MAX_CENTER_DEGREE = 10_000
 
 
-def related_entities(
-    triples: DataFrame,
-    max_center_degree: int = RELATED_MAX_CENTER_DEGREE,
-) -> DataFrame:
+def related_entities(triples: DataFrame) -> DataFrame:
     """(entity_a, entity_b, common_nbrs, nbr_jaccard, linked) — 2-hop
     structural relatedness over the undirected KG: for every entity pair
     sharing ≥1 neighbor, the common-neighbor count, the Jaccard of their
@@ -395,8 +352,8 @@ def related_entities(
     Scale shape: pairs are generated by a self-join on the shared neighbor
     (the wedge center), so only pairs with actual common evidence ever
     materialize — never an all-pairs join; centers above
-    ``max_center_degree`` are excluded from evidence (see the cap's
-    rationale above). Neighbor-set sizes ride one map-side-combined
+    :data:`RELATED_MAX_CENTER_DEGREE` are excluded from evidence (see the
+    cap's rationale above). Neighbor-set sizes ride one map-side-combined
     aggregate; the direct-link flag is a left join against the edge set."""
     und = cached(
         triples.select(
@@ -413,7 +370,7 @@ def related_entities(
     ctr_deg = adj.groupBy("ctr").agg(F.count(F.lit(1)).alias("cdeg"))
     ev = cached(
         adj.join(
-            ctr_deg.where(F.col("cdeg") <= max_center_degree).select("ctr"),
+            ctr_deg.where(F.col("cdeg") <= RELATED_MAX_CENTER_DEGREE).select("ctr"),
             "ctr",
             "left_semi",
         )
@@ -485,10 +442,7 @@ def predicate_stats(triples: DataFrame) -> DataFrame:
 METAPATH_MAX_MID_DEGREE = 10_000
 
 
-def metapath_counts(
-    triples: DataFrame,
-    max_mid_degree: int = METAPATH_MAX_MID_DEGREE,
-) -> DataFrame:
+def metapath_counts(triples: DataFrame) -> DataFrame:
     """(pred_a, pred_b, n_paths) — count of 2-hop path instances
     a ─pred_a→ m ─pred_b→ c with a ≠ c, per ordered predicate pair. The
     metapath census: which relation compositions actually occur (e.g.
@@ -497,7 +451,7 @@ def metapath_counts(
 
     Scale shape: one self-join on the shared mid entity — the join key the
     subject-hash-bucketed graph table is already partitioned by; mid nodes
-    above ``max_mid_degree`` (in+out) are excluded (hub wedge explosion,
+    above :data:`METAPATH_MAX_MID_DEGREE` (in+out) are excluded (hub wedge explosion,
     see the cap's rationale). Inert on testdata; counted per ordered pair
     map-side."""
     t = cached(triples.select("subj", "pred", "obj").distinct())
@@ -507,7 +461,7 @@ def metapath_counts(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    ok_mid = deg.where(F.col("d") <= max_mid_degree).select("node")
+    ok_mid = deg.where(F.col("d") <= METAPATH_MAX_MID_DEGREE).select("node")
     left = t.select(
         F.col("subj").alias("a"), F.col("pred").alias("pred_a"), F.col("obj").alias("m")
     ).join(ok_mid.withColumnRenamed("node", "m"), "m", "left_semi")

@@ -160,7 +160,6 @@ def entity_related_by_embedding(
     k: int = 3,
     id_col: str = "doc_id",
     entity_col: str = "canon_id",
-    brute_max: int = ENTITY_ANN_BRUTE_MAX,
 ) -> DataFrame:
     """(query_id, neighbor_id, rank) — nearest entities by context-embedding
     cosine: the "related entities" ranking driven by the documents entities
@@ -175,7 +174,7 @@ def entity_related_by_embedding(
     ``dedup._cap_for`` pattern): one count over the cached vector
     frame — the count doubles as the cache fill — keeps the exact
     brute-force ranking while the entity census stays at/below
-    ``brute_max`` and routes the same frame through the hyperplane-LSH
+    :data:`ENTITY_ANN_BRUTE_MAX` and routes the same frame through the hyperplane-LSH
     bucketed ranker above it (queries NOT force-broadcast there: at the
     scale the gate trips, the query side IS the corpus). Earlier rounds
     left brute force as an undefended default — the last O(E²) path in
@@ -197,6 +196,6 @@ def entity_related_by_embedding(
         .withColumnRenamed(entity_col, "vec_id")
     )
     arr = cached(arr)
-    if arr.count() <= brute_max:
+    if arr.count() <= ENTITY_ANN_BRUTE_MAX:
         return ann_topk_bruteforce(arr, arr, k)
     return ann_topk_lsh(arr, arr, k, broadcast_queries=False)

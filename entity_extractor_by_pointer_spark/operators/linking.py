@@ -4,9 +4,9 @@ North-rule stage "salted-broadcast entity linking against an alias
 dictionary". The alias dict is small (≤ millions of rows) → a plain
 broadcast hash join with **zero shuffle** of the mention fact table; skew in
 mention surfaces is irrelevant under broadcast because no partitioning by
-key happens. (Salting only matters for the downstream *aggregations* over
-hot canonical entities — see ``triples.salted_count``.) Surfaces are
-normalized (lower/trim) on both sides before matching.
+key happens. (The downstream count over hot canonical entities combines
+map-side — see ``triples.triple_counts``.) Surfaces are normalized
+(lower/trim) on both sides before matching.
 """
 
 from __future__ import annotations

@@ -2,12 +2,11 @@
 
 Media ride through the pipeline as opaque ``binary`` columns with typed
 metadata structs; compute-heavy steps (decode, resize, feature-extract)
-run as Arrow-batched ``mapInPandas`` stages. The actual
-codec calls need libraries absent from this container (PIL/ffmpeg/torchaudio)
-— those call sites raise ``NotImplementedError`` behind the ``codec=``
-switch, while the default deterministic fake codec keeps the Spark-side
-contract (schemas, batching, partitioning) real and testable, per the
-project brief.
+run as Arrow-batched ``mapInPandas`` stages. Feature extraction runs a
+deterministic stand-in decoder (real image/audio/video decoders need
+PIL/ffmpeg/torchaudio), which keeps the Spark-side contract (schemas,
+batching, partitioning) real and testable; image dimensions come from a
+real pure-stdlib header parser.
 
 Design points for 100 TB of media:
 - binary payloads are NEVER shuffled: features are extracted in a narrow
@@ -41,7 +40,7 @@ FEATURES_SCHEMA = T.StructType(
 
 def _fake_decode_features(payload: bytes) -> np.ndarray:
     """Deterministic stand-in for decode→embed: md5 bytes tiled to a unit
-    float vector. Replace with a real decoder via ``codec='pil'`` etc."""
+    float vector."""
     d = hashlib.md5(payload).digest()
     raw = np.frombuffer((d * ((FEATURE_DIM * 4) // len(d) + 1))[: FEATURE_DIM * 4], dtype=np.uint32)
     v = (raw.astype(np.float64) / np.iinfo(np.uint32).max).astype(np.float32)
@@ -49,7 +48,7 @@ def _fake_decode_features(payload: bytes) -> np.ndarray:
     return v / n if n else v
 
 
-def extract_media_features(media: DataFrame, codec: str = "fake") -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """media(media_id, payload, ...) → per-item digest + feature vector."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -57,12 +56,7 @@ def extract_media_features(media: DataFrame, codec: str = "fake") -> DataFrame:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 payload = bytes(payload)
-                if codec == "fake":
-                    feat = _fake_decode_features(payload)
-                else:  # pragma: no cover - real codecs unavailable in sandbox
-                    raise NotImplementedError(
-                        f"codec {codec!r} requires PIL/ffmpeg; install on the cluster image"
-                    )
+                feat = _fake_decode_features(payload)
                 digest = int.from_bytes(hashlib.md5(payload).digest()[:7], "big")
                 rows.append((int(mid), len(payload), digest, feat.tolist()))
             yield pd.DataFrame(rows, columns=["media_id", "n_bytes", "digest64", "feature"])

@@ -1,16 +1,11 @@
 """One-pass table profiling — the data-quality census an ingest pipeline
 runs before trusting a new crawl drop or table snapshot.
 
-``profile_table`` computes per-column null counts, distinct counts, and
-min/max in a SINGLE aggregation job (one row of fused aggregates, unpivoted
-driver-side into one output row per column). The distinct strategy is
-census-gated (``approx_distinct=None``, the default): tables at/below
-``PROFILE_EXACT_ROWS_MAX`` rows — a metadata-only ``count()`` on parquet —
-pay the exact multi-DISTINCT price (Spark's Expand operator re-expands the
-input once per distinct column), larger tables switch to HLL++ sketches
-(±2%), whose fused aggregate needs NO Expand at all. At 100 TB the exact
-default was the wrong one (round-4 verdict item 4); pass ``True``/``False``
-to force a strategy.
+``profile_table`` computes per-column row counts, null counts, exact
+distinct counts, and min/max in ONE job: a union of independent
+single-column aggregate branches, which the scheduler runs as concurrent
+stages over column-pruned scans. Distincts are exact so the result equals
+the DuckDB oracle's ``COUNT(DISTINCT ...)``.
 """
 
 from __future__ import annotations
@@ -18,87 +13,43 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# exact-distinct ceiling: below this the Expand-style multi-DISTINCT plan is
-# cheap (one in-memory re-expansion per profiled column); above it the HLL++
-# sketch path wins — its error (rsd 2%) is noise at census row counts.
-PROFILE_EXACT_ROWS_MAX = 100_000
 
-
-def profile_table(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    approx_distinct: bool | None = None,
-    exact_rows_max: int = PROFILE_EXACT_ROWS_MAX,
-) -> DataFrame:
+def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """(col_name, n_rows, n_nulls, n_distinct, min_val, max_val) — one row per
     profiled column; min/max rendered as strings so heterogeneous column
     types share one schema (timestamps/dates via ISO cast, floats via
-    plain string cast — deterministic and SQL-mirrorable).
-
-    ``approx_distinct``: None = census-gated auto (exact at/below
-    ``exact_rows_max`` rows, HLL++ above), True/False = forced."""
-    if approx_distinct is None:
-        approx_distinct = df.count() > exact_rows_max
+    plain string cast — deterministic and SQL-mirrorable)."""
     cols = columns or df.columns
-    if not approx_distinct:
-        # EXACT path: one single-distinct aggregate branch PER COLUMN,
-        # unioned. The fused multi-DISTINCT aggregate re-expands the input
-        # once per profiled column (Expand: cols x rows through one
-        # pipeline — 6.4s on 6M rows x 5 cols), while the union's branches
-        # are independent stages of one job that the scheduler runs
-        # CONCURRENTLY, each over a single column-pruned scan (1-2s for the
-        # same profile; columnar input means total I/O is unchanged).
-        out = None
-        for c in cols:
-            branch = (
-                df.select(F.col(c))
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_rows"),
-                    F.count(F.when(F.col(c).isNull(), F.lit(1)))
-                    .cast("long")
-                    .alias("n_nulls"),
-                    F.countDistinct(c).cast("long").alias("n_distinct"),
-                    # min/max on the NATIVE type (string-cast first would
-                    # compare lexicographically — "10" < "9"), rendered after
-                    F.min(F.col(c)).cast("string").alias("min_val"),
-                    F.max(F.col(c)).cast("string").alias("max_val"),
-                )
-                .select(
-                    F.lit(c).alias("col_name"),
-                    "n_rows",
-                    "n_nulls",
-                    "n_distinct",
-                    "min_val",
-                    "max_val",
-                )
-            )
-            out = branch if out is None else out.unionAll(branch)
-        return out
-    aggs = [F.count(F.lit(1)).alias("_n")]
+    # one single-distinct aggregate branch PER COLUMN, unioned. The fused
+    # multi-DISTINCT aggregate re-expands the input once per profiled
+    # column (Expand: cols x rows through one pipeline — 6.4s on 6M rows x
+    # 5 cols), while the union's branches are independent stages of one
+    # job that the scheduler runs CONCURRENTLY, each over a single
+    # column-pruned scan (1-2s for the same profile; columnar input means
+    # total I/O is unchanged).
+    out = None
     for c in cols:
-        aggs += [
-            F.count(F.when(F.col(c).isNull(), F.lit(1))).alias(f"_nulls_{c}"),
-            F.approx_count_distinct(c).alias(f"_dist_{c}"),
-            F.min(F.col(c)).cast("string").alias(f"_min_{c}"),
-            F.max(F.col(c)).cast("string").alias(f"_max_{c}"),
-        ]
-    one = df.agg(*aggs)
-    # unpivot the single aggregate row into per-column rows with stack —
-    # stays one job, no second scan
-    stack_args = ", ".join(
-        f"'{c}', _nulls_{c}, _dist_{c}, _min_{c}, _max_{c}" for c in cols
-    )
-    return one.select(
-        F.col("_n").alias("n_rows"),
-        F.expr(
-            f"stack({len(cols)}, {stack_args})"
-            " AS (col_name, n_nulls, n_distinct, min_val, max_val)"
-        ),
-    ).select(
-        "col_name",
-        F.col("n_rows").cast("long").alias("n_rows"),
-        F.col("n_nulls").cast("long").alias("n_nulls"),
-        F.col("n_distinct").cast("long").alias("n_distinct"),
-        "min_val",
-        "max_val",
-    )
+        branch = (
+            df.select(F.col(c))
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_rows"),
+                F.count(F.when(F.col(c).isNull(), F.lit(1)))
+                .cast("long")
+                .alias("n_nulls"),
+                F.countDistinct(c).cast("long").alias("n_distinct"),
+                # min/max on the NATIVE type (string-cast first would
+                # compare lexicographically — "10" < "9"), rendered after
+                F.min(F.col(c)).cast("string").alias("min_val"),
+                F.max(F.col(c)).cast("string").alias("max_val"),
+            )
+            .select(
+                F.lit(c).alias("col_name"),
+                "n_rows",
+                "n_nulls",
+                "n_distinct",
+                "min_val",
+                "max_val",
+            )
+        )
+        out = branch if out is None else out.unionAll(branch)
+    return out

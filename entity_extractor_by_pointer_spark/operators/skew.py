@@ -1,10 +1,11 @@
 """Hot-key detection: the observable first step of explicit skew handling.
 
 AQE's skew-join splitting (enabled globally in ``session.get_spark``) covers
-skewed joins at runtime, and the hot (subj, pred, obj) aggregation is the
-two-phase ``triples.salted_count``. ``detect_hot_keys`` makes the skew
-itself visible: the pipeline logs the keys it finds to ``_metrics`` on
-every run.
+skewed joins at runtime, and the hot (subj, pred, obj) count in
+``triples.triple_counts`` is a combinable aggregate: its map-side partial
+reduces each hot key to one row per input partition before the shuffle.
+``detect_hot_keys`` makes the skew itself visible: the pipeline logs the
+keys it finds to ``_metrics`` on every run.
 """
 
 from __future__ import annotations

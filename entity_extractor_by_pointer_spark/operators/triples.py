@@ -13,8 +13,10 @@ Scale notes (SURVEY.md §4):
   aggregation applies; the subsequent pair join is a self-join on ``url``
   (documents have few distinct entities, so fan-out is bounded);
 - hot canonical entities ("中国"-class heads at crawl scale) skew the
-  (subj, pred, obj) aggregation → ``salted_count`` does a two-phase
-  salt-then-sum aggregation; AQE skew-join handles the join side;
+  (subj, pred, obj) count, but a count combines map-side: Spark's partial
+  aggregate reduces each hot key to at most one row per input partition
+  before the one shuffle, so no salt is needed; AQE skew-join handles the
+  join side;
 - the triples table is written partitioned by ``pmod(hash(subj), N)`` —
   parquet stand-in for an Iceberg ``bucket(N, subj)`` transform, per the
   north rule's subject-hash partitioning.
@@ -73,26 +75,13 @@ def build_triples(canon_mentions: DataFrame, id_col: str = "url") -> DataFrame:
     ).withColumn("pred", predicate_expr()).select("subj", "pred", "obj", "url")
 
 
-def salted_count(df: DataFrame, keys: list[str], salt_buckets: int = 16) -> DataFrame:
-    """Two-phase aggregation for skewed keys: count per (keys, salt) first,
-    then sum the partials per keys.
+def triple_counts(triples: DataFrame) -> DataFrame:
+    """Document frequency per (subj, pred, obj) — the flagship aggregate.
 
-    The salt MUST vary within a key (a hash of the key itself is constant
-    per key and spreads nothing - caught by ``tests/test_skew.py``), so it
-    is derived from the input partition id: phase 1 reduces each hot key to
-    at most #input-partitions rows before any shuffle, phase 2 sums the
-    partials. This is map-side combine made explicit, per the north rule's
-    "skew handled explicitly"; Spark's hash aggregate does the same
-    implicitly for counts, but the pattern generalizes to aggregates that
-    don't partially combine and documents the skew contract."""
-    salted = df.withColumn("_salt", F.pmod(F.spark_partition_id(), F.lit(salt_buckets)))
-    partial = salted.groupBy(*keys, "_salt").agg(F.count(F.lit(1)).alias("_partial"))
-    return partial.groupBy(*keys).agg(F.sum("_partial").alias("n_docs"))
-
-
-def triple_counts(triples: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Document frequency per (subj, pred, obj) — the flagship aggregate."""
-    return salted_count(triples, ["subj", "pred", "obj"], salt_buckets)
+    One hash aggregate and one Exchange: the partial count runs before the
+    shuffle, so a hot key crosses it as at most one row per input
+    partition (pinned by ``tests/test_skew.py``)."""
+    return triples.groupBy("subj", "pred", "obj").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
 NT_BASE = "http://kg.example/"

@@ -66,11 +66,11 @@ def _effective_row_groups(df: DataFrame, target: int) -> int | None:
     return total
 
 
-def spread_small_scan(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Round-robin repartition ``df`` up to ``factor * defaultParallelism``
+def spread_small_scan(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` up to ``defaultParallelism``
     partitions iff its effective parallelism is lower — a no-op on
     well-split inputs."""
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     rgs = _effective_row_groups(df, target)

@@ -184,8 +184,8 @@ class KgPipeline:
         named stage's write, to exercise exactly those crash windows.
 
         ``triple_counts`` is re-aggregated from the full triples table (a
-        cheap salted count). This is the ingest path for periodic crawl
-        drops.
+        cheap map-side-combined count). This is the ingest path for periodic
+        crawl drops.
 
         Like ``run``, operator-level persists are released in a ``finally``
         so periodic increments on a long-lived driver don't accumulate

@@ -1,8 +1,21 @@
+import contextlib
+
 import numpy as np
 
+from entity_extractor_by_pointer_spark.operators import canonicalize
 from entity_extractor_by_pointer_spark.operators import dedup as dd
 from entity_extractor_by_pointer_spark.operators import similarity as sim
 from entity_extractor_by_pointer_spark.operators.canonicalize import connected_components
+
+
+@contextlib.contextmanager
+def _capped_blocking(monkeypatch, cap):
+    """Force the pair engine's capped blocking path with stop-shingle cap
+    ``cap``: every corpus is above a ``JACCARD_AUTO_DOCS`` of -1."""
+    with monkeypatch.context() as m:
+        m.setattr(dd, "JACCARD_AUTO_DOCS", -1)
+        m.setattr(dd, "JACCARD_AUTO_CAP", cap)
+        yield
 
 
 def _docs(spark):
@@ -30,7 +43,7 @@ def test_ngram_jaccard_finds_near_dup(spark):
     assert (1, 4) not in pairs
 
 
-def test_ngram_jaccard_df_pruned_blocking_matches_exact(spark):
+def test_ngram_jaccard_df_pruned_blocking_matches_exact(spark, monkeypatch):
     """Stop-shingle pruning (blocking only) must find the same ≥τ pairs on
     testdata, with identical jaccard values (verification uses full sets)."""
     import pyspark.sql.functions as F  # noqa: F401
@@ -40,10 +53,11 @@ def test_ngram_jaccard_df_pruned_blocking_matches_exact(spark):
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in dd.ngram_jaccard_pairs(docs, 0.8).collect()
     }
-    pruned = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dd.ngram_jaccard_pairs(docs, 0.8, max_shingle_df=20).collect()
-    }
+    with _capped_blocking(monkeypatch, 20):
+        pruned = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in dd.ngram_jaccard_pairs(docs, 0.8).collect()
+        }
     assert pruned == exact
 
 
@@ -93,11 +107,12 @@ import pytest
 
 
 @pytest.mark.parametrize("thr", [100_000, 0], ids=["driver-unionfind", "distributed-loop"])
-def test_connected_components_multi_hop(spark, thr):
+def test_connected_components_multi_hop(spark, monkeypatch, thr):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f")], "src string, dst string"
     )
-    cc = {r["id"]: r["canon_id"] for r in connected_components(edges, driver_threshold=thr).collect()}
+    monkeypatch.setattr(canonicalize, "CC_DRIVER_THRESHOLD", thr)
+    cc = {r["id"]: r["canon_id"] for r in connected_components(edges).collect()}
     assert cc["a"] == cc["b"] == cc["c"] == "a"
     assert cc["d"] == cc["e"] == "d"
     assert "f" not in cc  # self-loop only → no edge → not a component member
@@ -110,53 +125,52 @@ def _chain_edges(spark, n):
 
 
 @pytest.mark.parametrize("thr", [100_000, 0], ids=["driver-unionfind", "distributed-loop"])
-def test_connected_components_long_chain(spark, thr):
+def test_connected_components_long_chain(spark, monkeypatch, thr):
     n = 12
     edges = _chain_edges(spark, n)
-    cc = {r["id"]: r["canon_id"] for r in connected_components(edges, driver_threshold=thr).collect()}
+    monkeypatch.setattr(canonicalize, "CC_DRIVER_THRESHOLD", thr)
+    cc = {r["id"]: r["canon_id"] for r in connected_components(edges).collect()}
     assert set(cc.values()) == {"n00"}
     assert len(cc) == n + 1
 
 
-def test_connected_components_paths_agree(spark):
+def test_connected_components_paths_agree(spark, monkeypatch):
     import random
 
     rnd = random.Random(9)
     edges_py = [(f"v{rnd.randrange(60)}", f"v{rnd.randrange(60)}") for _ in range(80)]
     edges = spark.createDataFrame(edges_py, "src string, dst string")
     fast = {(r["id"], r["canon_id"]) for r in connected_components(edges).collect()}
-    dist = {(r["id"], r["canon_id"]) for r in connected_components(edges, driver_threshold=0).collect()}
+    monkeypatch.setattr(canonicalize, "CC_DRIVER_THRESHOLD", 0)
+    dist = {(r["id"], r["canon_id"]) for r in connected_components(edges).collect()}
     assert fast == dist
 
 
-def test_star_cc_handles_long_chain(spark):
+def test_star_cc_handles_long_chain(spark, monkeypatch):
     """large/small-star must collapse a 24-node chain (where min-label
     propagation needs O(n) rounds) within its O(log n) budget."""
     n = 24
-    cc = {
-        r["id"]: r["canon_id"]
-        for r in connected_components(
-            _chain_edges(spark, n), driver_threshold=0, max_iter=10
-        ).collect()
-    }
+    monkeypatch.setattr(canonicalize, "CC_DRIVER_THRESHOLD", 0)
+    monkeypatch.setattr(canonicalize, "CC_MAX_ITER", 10)
+    cc = {r["id"]: r["canon_id"] for r in connected_components(_chain_edges(spark, n)).collect()}
     assert set(cc.values()) == {"n00"}
     assert len(cc) == n + 1
 
 
-def test_distributed_cc_collapses_61_node_chain(spark):
+def test_distributed_cc_collapses_61_node_chain(spark, monkeypatch):
     """A 61-node chain is one component on the distributed path within the
     default round budget (min-label propagation needs 60 rounds here)."""
-    cc = {
-        r["id"]: r["canon_id"]
-        for r in connected_components(_chain_edges(spark, 60), driver_threshold=0).collect()
-    }
+    monkeypatch.setattr(canonicalize, "CC_DRIVER_THRESHOLD", 0)
+    cc = {r["id"]: r["canon_id"] for r in connected_components(_chain_edges(spark, 60)).collect()}
     assert set(cc.values()) == {"n00"}
     assert len(cc) == 61
 
 
-def test_distributed_cc_raises_when_not_converged(spark):
-    with pytest.raises(RuntimeError, match="max_iter"):
-        connected_components(_chain_edges(spark, 60), driver_threshold=0, max_iter=1)
+def test_distributed_cc_raises_when_not_converged(spark, monkeypatch):
+    monkeypatch.setattr(canonicalize, "CC_DRIVER_THRESHOLD", 0)
+    monkeypatch.setattr(canonicalize, "CC_MAX_ITER", 1)
+    with pytest.raises(RuntimeError, match="did not converge within CC_MAX_ITER=1"):
+        connected_components(_chain_edges(spark, 60))
 
 
 def test_ann_bruteforce_matches_numpy(spark):
@@ -243,7 +257,7 @@ def test_jaccard_prunes_respect_rounding_window(spark):
     assert got == {(1, 2): 0.8}, got
 
 
-def test_jaccard_df_cap_prunes_hot_shingles_from_blocking(spark):
+def test_jaccard_df_cap_prunes_hot_shingles_from_blocking(spark, monkeypatch):
     """A pair whose ONLY shared shingles are hotter than the cap must be
     dropped by capped blocking (and found by exact blocking) — i.e. the cap
     genuinely bounds the candidate join's per-shingle fan-out."""
@@ -253,10 +267,8 @@ def test_jaccard_df_cap_prunes_hot_shingles_from_blocking(spark):
     rows += [(10, "the quick brown"), (11, "the quick brown")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     exact = {(r["id_a"], r["id_b"]) for r in dd.ngram_jaccard_pairs(docs, 0.9).collect()}
-    capped = {
-        (r["id_a"], r["id_b"])
-        for r in dd.ngram_jaccard_pairs(docs, 0.9, max_shingle_df=4).collect()
-    }
+    with _capped_blocking(monkeypatch, 4):
+        capped = {(r["id_a"], r["id_b"]) for r in dd.ngram_jaccard_pairs(docs, 0.9).collect()}
     assert (10, 11) in exact
     assert (10, 11) not in capped  # its only shingle has df=8 > cap
     assert capped <= exact
@@ -329,7 +341,7 @@ def test_tfidf_terms_hand_computed(spark):
     assert rows["cherry"]["tfidf"] == round(1 * math.log(3.0 / 1), 6)
 
 
-def test_capped_jaccard_semantics_on_randomized_corpora(spark):
+def test_capped_jaccard_semantics_on_randomized_corpora(spark, monkeypatch):
     """Randomized check of the capped path's contract: capped ⊆ exact with
     identical scores, and every missed pair shares ONLY hot shingles
     (df > cap) — i.e. the bound-prune never drops a findable pair."""
@@ -354,10 +366,11 @@ def test_capped_jaccard_semantics_on_randomized_corpora(spark):
             (r["id_a"], r["id_b"]): r["jaccard"]
             for r in dd.ngram_jaccard_pairs(docs, thr).collect()
         }
-        capped = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in dd.ngram_jaccard_pairs(docs, thr, max_shingle_df=cap).collect()
-        }
+        with _capped_blocking(monkeypatch, cap):
+            capped = {
+                (r["id_a"], r["id_b"]): r["jaccard"]
+                for r in dd.ngram_jaccard_pairs(docs, thr).collect()
+            }
         assert set(capped) <= set(exact), (trial, cap, thr)
         for k, v in capped.items():
             assert v == exact[k], (trial, k)
@@ -489,10 +502,10 @@ def test_winnow_fingerprint_content_defined(spark):
     assert fp[4] is not None and fp[5] is not None  # short docs don't crash
 
 
-def test_jaccard_auto_cap_plan_selection(spark):
-    """'auto' blocking: exact plan for small corpora (no hot-shingle
-    anti-join), capped plan above the census threshold — at both ends the
-    pair set matches exact blocking."""
+def test_jaccard_auto_cap_plan_selection(spark, monkeypatch):
+    """Census-picked blocking: exact plan for corpora at/below
+    ``JACCARD_AUTO_DOCS`` (no hot-shingle anti-join), capped plan above it —
+    at both ends the pair set matches exact blocking."""
     import entity_extractor_by_pointer_spark.operators.dedup as dd
 
     docs = spark.createDataFrame(
@@ -500,21 +513,19 @@ def test_jaccard_auto_cap_plan_selection(spark):
         + [(10, "one two three four five"), (11, "one two three four five")],
         "doc_id long, text string",
     )
-    # census below threshold → exact (cap resolves to None)
-    assert dd._cap_for(docs.count(), auto_docs_threshold=100) is None
-    # census above threshold → capped
-    assert dd._cap_for(docs.count(), auto_docs_threshold=4) == dd.JACCARD_AUTO_CAP
-
-    exact_plan = dd.ngram_jaccard_pairs(
-        docs, 0.8, max_shingle_df="auto", auto_docs_threshold=100
-    )
-    assert "LeftAnti" not in exact_plan._jdf.queryExecution().executedPlan().toString()
-    capped_plan = dd.ngram_jaccard_pairs(
-        docs, 0.8, max_shingle_df="auto", auto_docs_threshold=4
-    )
-    assert "LeftAnti" in capped_plan._jdf.queryExecution().executedPlan().toString()
-    # both ends agree with explicit exact blocking
+    # exact blocking at the default threshold is the reference
     ref = sorted(tuple(r) for r in dd.ngram_jaccard_pairs(docs, 0.8).collect())
+    # census (8 docs) at the threshold → exact (cap resolves to None)
+    monkeypatch.setattr(dd, "JACCARD_AUTO_DOCS", 8)
+    assert dd._cap_for(docs.count()) is None
+    exact_plan = dd.ngram_jaccard_pairs(docs, 0.8)
+    assert "LeftAnti" not in exact_plan._jdf.queryExecution().executedPlan().toString()
+    # census above threshold → capped
+    monkeypatch.setattr(dd, "JACCARD_AUTO_DOCS", 7)
+    assert dd._cap_for(docs.count()) == dd.JACCARD_AUTO_CAP
+    capped_plan = dd.ngram_jaccard_pairs(docs, 0.8)
+    assert "LeftAnti" in capped_plan._jdf.queryExecution().executedPlan().toString()
+    # both ends agree with exact blocking
     assert sorted(tuple(r) for r in exact_plan.collect()) == ref
     assert sorted(tuple(r) for r in capped_plan.collect()) == ref
 
@@ -581,13 +592,11 @@ def test_jaccard_wide_agg_gate_plan_and_equivalence(spark, monkeypatch):
         return plan.count("REPARTITION_BY_NUM")
 
     # census (8 docs) below the wide gate → no extra repartition exchange
-    below = dd.ngram_jaccard_pairs(docs, 0.8, max_shingle_df="auto",
-                                   auto_docs_threshold=100)
+    below = dd.ngram_jaccard_pairs(docs, 0.8)
     n_below = _n_reparts(below)
     # lower the gate under the corpus size → exactly one more
     monkeypatch.setattr(dd, "PAIR_AGG_WIDE_DOCS", 4)
-    above = dd.ngram_jaccard_pairs(docs, 0.8, max_shingle_df="auto",
-                                   auto_docs_threshold=100)
+    above = dd.ngram_jaccard_pairs(docs, 0.8)
     assert _n_reparts(above) == n_below + 1
     assert sorted(tuple(r) for r in above.collect()) == ref
     assert sorted(tuple(r) for r in below.collect()) == ref
@@ -756,7 +765,7 @@ def test_containment_is_directional(spark):
     assert dd.ngram_jaccard_pairs(docs, 0.9).count() == 0
 
 
-def test_capped_containment_matches_exact(spark):
+def test_capped_containment_matches_exact(spark, monkeypatch):
     """The directional no-false-prune bound (n_inter ≥ τ·min(n_a, n_b)):
     capped ⊆ exact with identical scores on randomized corpora, and equal
     on testdata where no qualifying pair is hot-only."""
@@ -778,10 +787,11 @@ def test_capped_containment_matches_exact(spark):
             (r["id_a"], r["id_b"]): r["containment"]
             for r in dd.containment_pairs(docs, thr).collect()
         }
-        capped = {
-            (r["id_a"], r["id_b"]): r["containment"]
-            for r in dd.containment_pairs(docs, thr, max_shingle_df=cap).collect()
-        }
+        with _capped_blocking(monkeypatch, cap):
+            capped = {
+                (r["id_a"], r["id_b"]): r["containment"]
+                for r in dd.containment_pairs(docs, thr).collect()
+            }
         assert set(capped) <= set(exact), (trial, cap, thr)
         assert all(capped[k] == exact[k] for k in capped), (trial, cap, thr)
 
@@ -790,10 +800,11 @@ def test_capped_containment_matches_exact(spark):
         (r["id_a"], r["id_b"]): r["containment"]
         for r in dd.containment_pairs(docs, 0.9).collect()
     }
-    capped = {
-        (r["id_a"], r["id_b"]): r["containment"]
-        for r in dd.containment_pairs(docs, 0.9, max_shingle_df=20).collect()
-    }
+    with _capped_blocking(monkeypatch, 20):
+        capped = {
+            (r["id_a"], r["id_b"]): r["containment"]
+            for r in dd.containment_pairs(docs, 0.9).collect()
+        }
     assert capped == exact
 
 

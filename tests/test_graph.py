@@ -152,11 +152,13 @@ def test_pagerank_random_graph_matches_numpy(spark):
         assert abs(got[v] - round(rank[v], 6)) <= 2e-6, (v, got[v], rank[v])
 
 
-def test_pmi_per_doc_fanout_cap_excludes_pathological_doc(spark):
+def test_pmi_per_doc_fanout_cap_excludes_pathological_doc(spark, monkeypatch):
     """A link-farm page with more canonical entities than the cap must be
     excluded from the co-occurrence corpus (pairs AND marginals), bounding
-    the self-join fan-out; clean corpora take the exact zero-filter path."""
+    the self-join fan-out; clean corpora take the exact zero-filter path,
+    and so does the link farm once the cap sits above it."""
     from entity_extractor_by_pointer_spark.cache import release_all
+    from entity_extractor_by_pointer_spark.operators import graph
     from entity_extractor_by_pointer_spark.operators.graph import entity_pmi_edges
 
     normal = [(d, f"E{e}") for d in range(10) for e in (d % 3, d % 3 + 1)]
@@ -169,9 +171,12 @@ def test_pmi_per_doc_fanout_cap_excludes_pathological_doc(spark):
         assert len(out) <= 10 * 2  # bounded: no 300²/2 explosion
         # exact path when under the cap: same input minus the hot doc
         clean = spark.createDataFrame(normal, "doc_id int, canon_id string")
-        exact = sorted(map(tuple, entity_pmi_edges(clean, max_entities_per_doc=None).collect()))
         capped = sorted(map(tuple, entity_pmi_edges(clean).collect()))
+        monkeypatch.setattr(graph, "PMI_MAX_ENTITIES_PER_DOC", 300)  # = the farm's k
+        exact = sorted(map(tuple, entity_pmi_edges(clean).collect()))
         assert exact == capped
+        kept = entity_pmi_edges(cm).collect()
+        assert sum(r["entity_a"].startswith("H") for r in kept) == 300 * 299 // 2
     finally:
         release_all()
 
@@ -215,13 +220,14 @@ def test_triangle_counts_random_graph_vs_bruteforce(spark):
     assert sum(expect.values()) > 0  # the graph actually has triangles
 
 
-def test_related_entities_hand_computed_and_hub_cap(spark):
+def test_related_entities_hand_computed_and_hub_cap(spark, monkeypatch):
     """Path graph a-b-c-d plus hub h linked to everything: (a, c) share b;
     with the hub capped out, hub-mediated evidence disappears AND the
     jaccard denominator uses the same capped neighborhoods as the numerator
     (round-4 ADVICE: a mixed denominator was inconsistent with common_nbrs
     on hub graphs)."""
     from entity_extractor_by_pointer_spark.cache import release_all
+    from entity_extractor_by_pointer_spark.operators import graph
     from entity_extractor_by_pointer_spark.operators.graph import related_entities
 
     edges = [("a", "b"), ("b", "c"), ("c", "d")]
@@ -245,9 +251,10 @@ def test_related_entities_hand_computed_and_hub_cap(spark):
         }
         assert jacc_full[("a", "c")] == round(2 / 3, 4)
         # cap excludes the degree-4 hub as evidence: a-d vanish, a-c keep b
+        monkeypatch.setattr(graph, "RELATED_MAX_CENTER_DEGREE", 3)
         capped = {
             (r["entity_a"], r["entity_b"]): (r["common_nbrs"], r["linked"], r["nbr_jaccard"])
-            for r in related_entities(tr, max_center_degree=3).collect()
+            for r in related_entities(tr).collect()
         }
         # capped neighborhoods: N(a)={b}, N(c)={b,d} → jaccard 1/2, and the
         # numerator can never exceed its own denominator's evidence
@@ -354,7 +361,7 @@ def test_weighted_pagerank_vs_numpy(spark):
         assert abs(got[name] - round(r[i], 6)) <= 2e-6, name
 
 
-def test_predicate_stats_and_metapaths_hand_computed(spark):
+def test_predicate_stats_and_metapaths_hand_computed(spark, monkeypatch):
     from entity_extractor_by_pointer_spark.cache import release_all
     from entity_extractor_by_pointer_spark.operators.graph import (
         metapath_counts,
@@ -381,7 +388,10 @@ def test_predicate_stats_and_metapaths_hand_computed(spark):
         assert mp == {("p", "q"): 3}
         # hub cap: excluding mid nodes of degree > 1 removes b (deg 3) and
         # c (deg 2) → no paths survive
-        assert metapath_counts(tr, max_mid_degree=1).count() == 0
+        from entity_extractor_by_pointer_spark.operators import graph
+
+        monkeypatch.setattr(graph, "METAPATH_MAX_MID_DEGREE", 1)
+        assert metapath_counts(tr).count() == 0
     finally:
         release_all()
 
@@ -458,7 +468,7 @@ def test_entity_related_by_embedding_ranks_by_cosine(spark):
     assert got[("E1", 2)] == "E3"  # orthogonal last
 
 
-def test_entity_related_census_gate_selects_ranker(spark):
+def test_entity_related_census_gate_selects_ranker(spark, monkeypatch):
     """Round-5 verdict item 1: the related-entities ranker must census the
     entity count and pick brute force below the gate (exact, BNLJ plan) vs
     the LSH-bucketed ranker above it (no BNLJ anywhere in the plan). On a
@@ -467,6 +477,7 @@ def test_entity_related_census_gate_selects_ranker(spark):
     every band), so the gate trades only far-neighbor recall, never the
     near-duplicate signal."""
     from entity_extractor_by_pointer_spark.cache import release_all
+    from entity_extractor_by_pointer_spark.operators import kgprep
     from entity_extractor_by_pointer_spark.operators.kgprep import (
         entity_related_by_embedding,
     )
@@ -484,7 +495,8 @@ def test_entity_related_census_gate_selects_ranker(spark):
     try:
         brute = entity_related_by_embedding(cm, emb, k=1)
         assert "BroadcastNestedLoopJoin" in _plan(brute)
-        lsh = entity_related_by_embedding(cm, emb, k=1, brute_max=0)
+        monkeypatch.setattr(kgprep, "ENTITY_ANN_BRUTE_MAX", 3)  # 4 entities
+        lsh = entity_related_by_embedding(cm, emb, k=1)
         assert "BroadcastNestedLoopJoin" not in _plan(lsh)
         got = {
             (r["query_id"], r["rank"]): r["neighbor_id"] for r in lsh.collect()
@@ -529,53 +541,16 @@ def test_ntriples_export_encoding_and_sink(spark):
     assert "%%" not in line
 
 
-def test_pagerank_dangling_redistribution_matches_numpy(spark):
-    """dangling='redistribute' (Brin-Page treatment) vs numpy power
-    iteration on a random graph WITH dangling sinks: ranks match to the
-    rounding grid and total mass is conserved at 1."""
-    import random
-
-    import pytest
-
-    from entity_extractor_by_pointer_spark.cache import release_all
-
-    rng = random.Random(21)
-    n_nodes = 60
-    edges = set()
-    while len(edges) < 150:
-        a, b = rng.randrange(n_nodes), rng.randrange(n_nodes)
-        # nodes 50-59 are forced sinks: never sources
-        if a != b and a < 50:
-            edges.add((f"n{a}", f"n{b}"))
-    rows = [(a, "p", b, "u") for a, b in edges]
-    t = spark.createDataFrame(rows, "subj string, pred string, obj string, url string")
-    try:
-        got = {
-            r["entity"]: r["rank"]
-            for r in pagerank(t, iterations=5, dangling="redistribute").collect()
-        }
-        nodes = sorted({x for e in edges for x in e})
-        out_deg = {}
-        for a, _b in edges:
-            out_deg[a] = out_deg.get(a, 0) + 1
-        n = len(nodes)
-        rank = {v: 1.0 / n for v in nodes}
-        for _ in range(5):
-            dm = sum(rank[v] for v in nodes if v not in out_deg)
-            inflow = {v: 0.0 for v in nodes}
-            for a, b in edges:
-                inflow[b] += rank[a] / out_deg[a]
-            rank = {
-                v: (1 - 0.85) / n + 0.85 * (inflow[v] + dm / n) for v in nodes
-            }
-        assert abs(sum(got.values()) - 1.0) < 1e-4  # mass conserved
-        for v in nodes:
-            assert abs(got[v] - round(rank[v], 6)) <= 2e-6, (v, got[v], rank[v])
-        # seeds + redistribute is a different recursion: fail loudly
-        with pytest.raises(ValueError, match="redistribute"):
-            pagerank(t, iterations=1, seeds=("n1",), dangling="redistribute")
-    finally:
-        release_all()
+def test_pagerank_empty_graph_returns_empty_frame(spark):
+    """No triples → no nodes: global, weighted and seeded PageRank all return
+    an empty (entity, rank) frame, as the unrolled SQL oracle does (global
+    and weighted used to divide by the node count of 0)."""
+    t = spark.createDataFrame([], "subj string, pred string, obj string, n_docs long")
+    for kwargs in ({}, {"weight_col": "n_docs"}, {"seeds": ("a",)}):
+        ranks = pagerank(t, iterations=3, **kwargs)
+        assert ranks.columns == ["entity", "rank"], kwargs
+        assert dict(ranks.dtypes) == {"entity": "string", "rank": "double"}, kwargs
+        assert ranks.collect() == [], kwargs
 
 
 def test_repetition_stats_matches_python_reference_randomized(spark):

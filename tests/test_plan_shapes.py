@@ -94,12 +94,13 @@ def test_kmeans_assignment_is_aggregate_not_window(spark):
     release_all()
 
 
-def test_pmi_df_broadcast_is_census_gated(spark):
+def test_pmi_df_broadcast_is_census_gated(spark, monkeypatch):
     """The PMI marginal join must carry the broadcast hint only under the
     entity-count gate. With autoBroadcastJoinThreshold disabled, the hint is
     the ONLY way a broadcast can appear — so: default gate (tiny testdata)
     → BroadcastHashJoin present; gate forced to 0 → none (shuffle join)."""
     from entity_extractor_by_pointer_spark.cache import release_all
+    from entity_extractor_by_pointer_spark.operators import graph
     from entity_extractor_by_pointer_spark.operators.graph import entity_pmi_edges
 
     cm = spark.createDataFrame(
@@ -111,7 +112,8 @@ def test_pmi_df_broadcast_is_census_gated(spark):
     try:
         below = _plan(entity_pmi_edges(cm))
         assert "BroadcastHashJoin" in below, below
-        above = _plan(entity_pmi_edges(cm, broadcast_df_max=0))
+        monkeypatch.setattr(graph, "PMI_BROADCAST_DF_MAX", 3)  # 4 entities
+        above = _plan(entity_pmi_edges(cm))
         assert "BroadcastHashJoin" not in above.split("Exchange", 1)[0] or True
         # the df-marginal joins specifically must not be broadcast: only the
         # 1-row n_corpus cross join may remain a broadcast nested loop
@@ -121,8 +123,9 @@ def test_pmi_df_broadcast_is_census_gated(spark):
         release_all()
 
 
-def test_boilerplate_hot_broadcast_is_census_gated(spark):
+def test_boilerplate_hot_broadcast_is_census_gated(spark, monkeypatch):
     from entity_extractor_by_pointer_spark.cache import release_all
+    from entity_extractor_by_pointer_spark.operators import curation
     from entity_extractor_by_pointer_spark.operators.curation import boilerplate_stats
 
     docs = spark.createDataFrame(
@@ -133,30 +136,33 @@ def test_boilerplate_hot_broadcast_is_census_gated(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
+        hot_max = curation.BOILERPLATE_BROADCAST_HOT_MAX
         below = _plan(boilerplate_stats(docs))
         assert "BroadcastHashJoin" in below, below
-        above = _plan(boilerplate_stats(docs, broadcast_hot_max=0))
-        assert "BroadcastHashJoin" not in above, above
-        # censused tier (census_docs_max=0 forces the hot-set count): hint
-        # applied under the ceiling, withheld above it
-        censused = _plan(boilerplate_stats(docs, census_docs_max=0))
-        assert "BroadcastHashJoin" in censused, censused
-        censused_big = _plan(
-            boilerplate_stats(docs, census_docs_max=0, broadcast_hot_max=1)
-        )
+        # 15 docs, at/below the census threshold: the hint is applied without
+        # counting the hot set, so even a 1-row ceiling does not withhold it
+        monkeypatch.setattr(curation, "BOILERPLATE_BROADCAST_HOT_MAX", 1)
+        uncensused = _plan(boilerplate_stats(docs))
+        assert "BroadcastHashJoin" in uncensused, uncensused
+        # censused tier (15 docs above the threshold forces the hot-set
+        # count): hint withheld above the ceiling, applied under it
+        monkeypatch.setattr(curation, "BOILERPLATE_CENSUS_DOCS", 14)
+        censused_big = _plan(boilerplate_stats(docs))
         assert "BroadcastHashJoin" not in censused_big, censused_big
+        monkeypatch.setattr(curation, "BOILERPLATE_BROADCAST_HOT_MAX", hot_max)
+        censused = _plan(boilerplate_stats(docs))
+        assert "BroadcastHashJoin" in censused, censused
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         release_all()
 
 
-def test_profile_distinct_strategy_is_census_gated(spark):
-    """Round-4 verdict item 4 lock (shape updated in r6): profile_table's
-    auto mode picks EXACT distincts at/below the row ceiling — now as a
-    union of independent per-column single-distinct branches (the fused
-    multi-DISTINCT Expand plan pushed cols x rows through one pipeline;
-    the branches run as concurrent stages of one job) — and HLL++ (fused,
-    no Expand, no Union) above it."""
+def test_profile_distincts_are_exact_per_column_union(spark):
+    """Round-4 verdict item 4 lock (shape updated in r6): profile_table
+    counts EXACT distincts as a union of independent per-column
+    single-distinct branches (the fused multi-DISTINCT Expand plan pushed
+    cols x rows through one pipeline; the branches run as concurrent stages
+    of one job)."""
     from entity_extractor_by_pointer_spark.operators.profile import profile_table
 
     li = spark.read.parquet(f"{SF}/lineitem.parquet")  # 6,000 rows
@@ -164,10 +170,6 @@ def test_profile_distinct_strategy_is_census_gated(spark):
     exact = _plan(profile_table(li, cols))
     assert "approx_count_distinct" not in exact, exact
     assert "Union" in exact, exact
-    approx = _plan(profile_table(li, cols, exact_rows_max=0))
-    assert "Expand" not in approx, approx
-    assert "Union" not in approx, approx
-    assert "approx_count_distinct" in approx, approx
 
 
 def test_triples_build_runs_ner_once(spark):
@@ -226,7 +228,7 @@ def test_graph_queries_read_materialized_store(spark):
         assert "eeps_kg_triples_" in plan, plan
 
 
-def test_pagerank_pays_one_exchange_per_iteration(spark):
+def test_pagerank_pays_one_exchange_per_iteration(spark, monkeypatch):
     """Round-3 judge item lock: with out-degree windowed into the cached
     subj-partitioned edge table and ranks inheriting entity partitioning,
     each PageRank iteration must add exactly ONE shuffle (the contribution
@@ -237,6 +239,7 @@ def test_pagerank_pays_one_exchange_per_iteration(spark):
     import re
 
     from entity_extractor_by_pointer_spark.cache import release_all
+    from entity_extractor_by_pointer_spark.operators import graph
     from entity_extractor_by_pointer_spark.operators.graph import pagerank
 
     tr = spark.createDataFrame(
@@ -248,12 +251,13 @@ def test_pagerank_pays_one_exchange_per_iteration(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         return len(set(re.findall(r"Exchange hashpartitioning.*?\[plan_id=(\d+)\]", plan)))
 
+    monkeypatch.setattr(graph, "PAGERANK_CHECKPOINT_EVERY", 100)  # no truncation
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        c1 = distinct_exchanges(pagerank(tr, iterations=1, checkpoint_every=100))
+        c1 = distinct_exchanges(pagerank(tr, iterations=1))
         release_all()
-        c3 = distinct_exchanges(pagerank(tr, iterations=3, checkpoint_every=100))
+        c3 = distinct_exchanges(pagerank(tr, iterations=3))
         release_all()
         per_iter = (c3 - c1) / 2
         assert per_iter <= 1, f"{per_iter} exchanges per iteration (want 1)"

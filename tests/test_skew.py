@@ -1,10 +1,13 @@
-"""Skew handling (SURVEY.md §4 item 1 / §5 invariant 4): the salted
-two-phase aggregation must be correct under a pathological hot key and must
-actually spread the hot key's rows across reducers."""
+"""Skew handling (SURVEY.md §4 item 1 / §5 invariant 4): the combinable
+aggregates over hot keys (triple counts, PageRank inflow) must be correct
+under a pathological hot key and must reduce it map-side, before their one
+Exchange."""
+
+import re
 
 from pyspark.sql import functions as F
 
-from entity_extractor_by_pointer_spark.operators.triples import salted_count
+from entity_extractor_by_pointer_spark.operators.triples import triple_counts
 
 
 def _skewed(spark, hot=50_000, cold=50):
@@ -19,12 +22,19 @@ def _skewed(spark, hot=50_000, cold=50):
     return hot_df.union(cold_df)
 
 
-def test_salted_count_correct_under_skew(spark):
+def test_triple_counts_correct_under_skew(spark):
+    """The hot key's count is exact, and the plan is one two-phase
+    aggregate: ``partial_count`` runs below exactly one Exchange, so the
+    hot key crosses the shuffle as at most one row per input partition."""
     df = _skewed(spark)
-    got = {
-        (r["subj"], r["pred"], r["obj"]): r["n_docs"]
-        for r in salted_count(df, ["subj", "pred", "obj"], salt_buckets=16).collect()
-    }
+    counts = triple_counts(df)
+    # the initial adaptive plan (read before execution adds the final one)
+    plan = counts._jdf.queryExecution().executedPlan().toString()
+    exchanges = set(re.findall(r"Exchange .*?\[plan_id=(\d+)\]", plan))
+    assert len(exchanges) == 1, plan
+    assert "partial_count" in plan.split("Exchange ", 1)[1], plan
+    assert dict(counts.dtypes)["n_docs"] == "bigint"
+    got = {(r["subj"], r["pred"], r["obj"]): r["n_docs"] for r in counts.collect()}
     assert got[("中国", "near", "北京")] == 50_000
     assert got[("e7", "near", "x")] == 1
     assert len(got) == 51
@@ -53,7 +63,7 @@ def test_pagerank_inflow_absorbs_hub_skew(spark):
         .repartition(8)
     )
     try:
-        ranks = pagerank(tr, iterations=2, checkpoint_every=100)
+        ranks = pagerank(tr, iterations=2)
         # 1) plan proof: the inflow aggregate is two-phase (partial_sum
         #    before the exchange, final sum after)
         plan = ranks._jdf.queryExecution().executedPlan().toString()
@@ -80,13 +90,3 @@ def test_pagerank_inflow_absorbs_hub_skew(spark):
     finally:
         release_all()
 
-
-def test_salt_spreads_hot_key_partials(spark):
-    """The salt must split a single hot key into multiple phase-1 partial
-    groups, so no one reducer owns the full hot stream. (Regression test: a
-    salt derived from the key itself is constant per key and spreads
-    nothing.)"""
-    df = _skewed(spark, hot=10_000, cold=0).repartition(8)
-    salted = df.withColumn("_salt", F.pmod(F.spark_partition_id(), F.lit(16)))
-    n_groups = salted.select("subj", "_salt").distinct().count()
-    assert n_groups > 1, "salt must vary within a hot key"

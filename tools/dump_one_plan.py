@@ -12,7 +12,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from entity_extractor_by_pointer_spark.session import get_spark  # noqa: E402

@@ -8,7 +8,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from entity_extractor_by_pointer_spark.session import get_spark  # noqa: E402
@@ -34,7 +35,7 @@ def main() -> None:
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         out.append(f"## {name}\n\n```\n{buf.getvalue().strip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md with {len(entry_mod.queries())} plans")
 

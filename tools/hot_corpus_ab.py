@@ -8,7 +8,9 @@ on every ``hot_period``-th doc (so its internal 3-gram shingles reach
 df = N/hot_period ≈ 10³–10⁴), and one true near-dup twin per
 ``twin_period`` docs (jaccard ≈ 0.913 through low-df shingles) — then runs
 ``ngram_jaccard_pairs`` with exact blocking vs the df-16 cap on the SAME
-corpus and asserts identical output.
+corpus and asserts identical output. Each side is forced by setting
+``dedup.JACCARD_AUTO_DOCS``, the corpus size the strategy census compares
+against, below or above ``n_docs``.
 
 Why the exact path explodes: each hot shingle contributes C(df, 2)
 candidate rows to the blocking self-join — at df 4,000 that is 8M rows per
@@ -76,7 +78,7 @@ def hot_corpus(spark, n_docs: int, hot_period: int, twin_period: int = 1000):
 
 def run_ab(spark, n_docs: int, hot_period: int) -> dict:
     from entity_extractor_by_pointer_spark.cache import release_all
-    from entity_extractor_by_pointer_spark.operators.dedup import ngram_jaccard_pairs
+    from entity_extractor_by_pointer_spark.operators import dedup
 
     docs = hot_corpus(spark, n_docs, hot_period)
     # materialize the corpus once so neither side pays generation cost
@@ -87,16 +89,18 @@ def run_ab(spark, n_docs: int, hot_period: int) -> dict:
 
     results = {}
     timings = {}
-    for label, cap in (("capped", 16), ("exact", None)):
-        release_all()
-        spark.catalog.clearCache()
-        t0 = time.time()
-        rows = sorted(
-            tuple(r)
-            for r in ngram_jaccard_pairs(docs, 0.8, max_shingle_df=cap).collect()
-        )
-        timings[label] = round(time.time() - t0, 2)
-        results[label] = rows
+    auto_docs = dedup.JACCARD_AUTO_DOCS
+    try:
+        for label, threshold in (("capped", -1), ("exact", sys.maxsize)):
+            dedup.JACCARD_AUTO_DOCS = threshold
+            release_all()
+            spark.catalog.clearCache()
+            t0 = time.time()
+            rows = sorted(tuple(r) for r in dedup.ngram_jaccard_pairs(docs, 0.8).collect())
+            timings[label] = round(time.time() - t0, 2)
+            results[label] = rows
+    finally:
+        dedup.JACCARD_AUTO_DOCS = auto_docs
     assert results["capped"] == results["exact"], (
         len(results["capped"]),
         len(results["exact"]),
