@@ -53,6 +53,7 @@ from entity_extractor_by_pointer_spark.operators.mentions import (
 from entity_extractor_by_pointer_spark.operators import train_distributed as td
 from entity_extractor_by_pointer_spark.operators.multimodal import extract_media_features
 from entity_extractor_by_pointer_spark.operators.triples import build_triples, triple_counts
+from entity_extractor_by_pointer_spark.session import _ship_package
 
 # ---------------------------------------------------------------------------
 # shared constants (mirrored verbatim into the oracle SQL)
@@ -109,28 +110,8 @@ ANN_K = 5
 ANN_QUERIES = 10  # vec_id < 10 are the query set
 
 
-_PYFILES_SESSIONS: set[int] = set()
-
-
-def _ensure_package_on_executors(spark: SparkSession) -> None:
-    """Ship the package to executor python workers (the spark-submit
-    --py-files analog), so queries work regardless of the driver's CWD.
-    Idempotent per session."""
-    key = id(spark.sparkContext)
-    if key in _PYFILES_SESSIONS:
-        return
-    import shutil
-    import tempfile
-
-    pkg_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "entity_extractor_by_pointer_spark")
-    base = os.path.join(tempfile.gettempdir(), f"eeps_pkg_{os.getpid()}")
-    zip_path = shutil.make_archive(base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir=os.path.basename(pkg_dir))
-    spark.sparkContext.addPyFile(zip_path)
-    _PYFILES_SESSIONS.add(key)
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    _ensure_package_on_executors(spark)
+    _ship_package(spark)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 

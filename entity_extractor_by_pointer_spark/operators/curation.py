@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import cached
+from ..cache import broadcast_small, cached
 from ..functions.textstats import fingerprint64, quality_score
 
 DEFAULT_KEEP_LANGS = ("en", "de", "fr", "es", "zh")
@@ -67,15 +67,13 @@ def curate_corpus(
 
 
 BOILERPLATE_MIN_DF = 4
-# hot-set broadcast gate: rows of the df>=min_df shingle set are short
-# strings, so ~1M rows ≈ tens of MB — the practical broadcast ceiling.
-BOILERPLATE_BROADCAST_HOT_MAX = 1_000_000
 # census short-circuit (the ``_cap_for`` pattern, dedup.py): at
 # or below this many docs the df>=min_df hot set is bounded by
 # total_shingle_occurrences / min_df ≤ docs · shingles_per_doc / min_df,
 # so with ≲200 distinct shingles per doc (a ~200-word page) the worst case
-# is 20k · 200 / 4 = 1M rows = exactly the broadcast ceiling — the hot-set
-# count() action is pure overhead there and the hint is applied directly.
+# is 20k · 200 / 4 = 1M rows = exactly ``cache.BROADCAST_ROWS_MAX`` — the
+# hot-set count() action is pure overhead there and the hint is applied
+# directly.
 # Above the threshold, census before hinting: a forced hint overrides
 # autoBroadcastJoinThreshold and OOMs at crawl scale instead of degrading.
 # docs.count() on parquet is metadata-only.
@@ -104,8 +102,8 @@ def boilerplate_stats(
     :data:`BOILERPLATE_CENSUS_DOCS` rows (a metadata-only ``docs.count()``)
     get the hint directly — their hot set cannot threaten the ceiling, and
     counting it anyway was the round-4 bench regression; larger corpora
-    persist and COUNT the hot set first, hinting only while the censused
-    count stays under :data:`BOILERPLATE_BROADCAST_HOT_MAX` — the bound
+    take ``cache.broadcast_small`` (persist and COUNT the hot set first,
+    hinting only under ``cache.BROADCAST_ROWS_MAX``) — the bound
     ``corpus_shingles/min_df`` is *not* small at crawl scale with a low
     min_df, and a forced hint overrides
     ``autoBroadcastJoinThreshold`` (it would OOM rather than degrade —
@@ -137,9 +135,7 @@ def boilerplate_stats(
         # the censused branch below instead of a forced hint
         hot_side = F.broadcast(hot)
     else:
-        hot = cached(hot)  # census + join read the same materialization
-        n_hot = hot.count()
-        hot_side = F.broadcast(hot) if n_hot <= BOILERPLATE_BROADCAST_HOT_MAX else hot
+        hot_side = broadcast_small(hot)  # census + join read one materialization
     # per-doc totals are an O(1) size() off the cached array rows (vs the
     # former distinct over the 2.6M exploded occurrence rows); the
     # distinct here is over the tiny one-row-per-doc frame and keeps the
@@ -168,13 +164,6 @@ def boilerplate_stats(
     )
 
 
-# benchmark-shingle broadcast gate: eval benchmarks are ~10^5-10^6 short
-# items; their distinct n-gram set usually broadcasts, but a forced hint
-# would OOM on a pathological benchmark instead of degrading (same policy
-# as every other dim-side gate in this repo)
-CONTAM_BROADCAST_MAX = 1_000_000
-
-
 def contamination_flags(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -193,8 +182,9 @@ def contamination_flags(
 
     Scale shape: the corpus side is ONE shingle explode (same normalized
     tokenization as the dedup family) joined against the DISTINCT benchmark
-    shingle dim — benchmark suites are tiny next to a crawl, so the dim is
-    census-gated broadcast (plain shuffle join above the gate, AQE decides);
+    shingle dim — benchmark suites are tiny next to a crawl, so the dim
+    takes ``cache.broadcast_small`` (hinted under
+    ``cache.BROADCAST_ROWS_MAX`` rows, a plain shuffle join above it);
     the hit count is a map-side-combined groupBy on doc_id. Nothing about
     the corpus is ever collected or re-scanned."""
     from .dedup import shingle_df
@@ -210,8 +200,7 @@ def contamination_flags(
         bench_text_col,
         n=n,
     ).select("shingle").distinct()
-    bench_sh = cached(bench_sh)
-    dim = F.broadcast(bench_sh) if bench_sh.count() <= CONTAM_BROADCAST_MAX else bench_sh
+    dim = broadcast_small(bench_sh)
     doc_sh = shingle_df(docs, id_col, text_col, n=n)
     hits = (
         doc_sh.join(dim, "shingle", "left_semi")
@@ -280,9 +269,6 @@ def source_stats(
 # per-source share ceiling for domain balancing, in integer percent so the
 # keep-threshold arithmetic is exact integer math on both engines
 BALANCE_MAX_SHARE_PCT = 20
-# source-threshold dim broadcast gate (same policy as every dim gate):
-# distinct sources are bounded in practice, but never force an unbounded hint
-BALANCE_BROADCAST_MAX = 1_000_000
 
 
 def balance_sources(
@@ -323,8 +309,7 @@ def balance_sources(
             F.expr(f"CAST({cap}L * 1000000L DIV _c AS BIGINT)"),
         ).alias("_thr"),
     )
-    thr = cached(thr)
-    dim = F.broadcast(thr) if thr.count() <= BALANCE_BROADCAST_MAX else thr
+    dim = broadcast_small(thr)
     bucket = F.pmod(md5_int64(F.col(id_col).cast("string")), F.lit(1_000_000))
     return base.join(dim, "source").select(
         id_col, "source", (bucket < F.col("_thr")).alias("keep")

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import cached
+from ..cache import broadcast_small, cached, fits_broadcast
 from ..functions.textstats import fingerprint64, md5_int64, norm_text
 
 NGRAM_N = 3
@@ -49,11 +49,6 @@ SIMHASH_BITS = 60
 # O(cap²) rows — far below one shuffle partition.
 JACCARD_AUTO_DOCS = 50_000
 JACCARD_AUTO_CAP = 16
-# broadcast gate shared by the capped path's dim tables (hot shingles,
-# survivor pairs): short rows, so ~1M rows ≈ tens of MB — the practical
-# broadcast ceiling. Forced hints override autoBroadcastJoinThreshold and
-# OOM at crawl scale instead of degrading (round-3/4 judge pattern).
-BROADCAST_ROWS_MAX = 1_000_000
 # the scorers accept on round(score, 4) ≥ τ, which admits score ≥ τ - 5e-5;
 # every candidate-pruning inequality must therefore use τ - ROUND4_EPS
 # (slightly wider than the exact 0.5e-4 HALF_UP boundary to also absorb
@@ -347,8 +342,7 @@ def _pair_intersections(
         .where(F.col("df") > cap)
         .select("shingle")
     )
-    hot = cached(hot)
-    hot_dim = F.broadcast(hot) if hot.count() <= BROADCAST_ROWS_MAX else hot
+    hot_dim = broadcast_small(hot)
     block = sh.join(hot_dim, "shingle", "left_anti")
     a, b = block.alias("a"), block.alias("b")
     joined = a.join(b, "shingle").where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
@@ -389,8 +383,7 @@ def _pair_intersections(
     # censused for the same reason as `hot`: a dup-heavy crawl can leave
     # an arbitrarily large survivor set, and a forced broadcast of it
     # would OOM instead of degrading to a shuffle join.
-    surv = cached(bounded.select("id_a", "id_b", "n_a", "n_b"))
-    cand = F.broadcast(surv) if surv.count() <= BROADCAST_ROWS_MAX else surv
+    cand = broadcast_small(bounded.select("id_a", "id_b", "n_a", "n_b"))
     return (
         _attach_pair_arrays(cand, arr_df, id_col)
         .withColumn("n_inter", F.size(F.array_intersect("_sa", "_sb")))
@@ -526,7 +519,7 @@ def minhash_signatures(
     reps = cached(
         occ.groupBy("_hsh").agg(F.min(F.struct(id_col, "_th", "pos")).alias("r"))
     )
-    if reps.count() <= BROADCAST_ROWS_MAX:
+    if fits_broadcast(reps.count()):
         # rebuild one string per DISTINCT shingle: broadcast the (hash,
         # doc, text hash, offset) representatives back onto the word arrays
         # (equal strings share a hash, so any representative yields the
@@ -581,6 +574,37 @@ def minhash_signatures(
     )
 
 
+def _minhash_bands(sig: DataFrame, id_col: str, k: int, bands: int) -> DataFrame:
+    """(id, band, bh) — one row per (doc, band), ``bh`` the md5 of the
+    band's ``k // bands`` MinHash components (one explode over ``sig``)."""
+    rows_per_band = k // bands
+    band_cols = []
+    for bidx in range(bands):
+        cols = [F.col(f"mh_{bidx * rows_per_band + j}") for j in range(rows_per_band)]
+        band_cols.append(
+            F.struct(
+                F.lit(bidx).alias("band"),
+                F.md5(F.concat_ws("|", *cols).cast("binary")).alias("bh"),
+            )
+        )
+    return sig.select(id_col, F.explode(F.array(*band_cols)).alias("bb")).select(
+        id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
+    )
+
+
+def _band_candidates(buckets: DataFrame, id_col: str, key: str) -> DataFrame:
+    """Distinct (id_a, id_b) with id_a < id_b for every pair that collides
+    on (band, ``key``) in at least one band — the banded LSH self-join,
+    with no cross join anywhere."""
+    a, b = buckets.alias("a"), buckets.alias("b")
+    return (
+        a.join(b, ["band", key])
+        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
@@ -606,23 +630,7 @@ def minhash_lsh_pairs(
     sig = cached(
         minhash_signatures(docs, id_col, text_col, k, hashed_arrays=arr_h)
     )
-    rows_per_band = k // bands
-    band_cols = []
-    for bidx in range(bands):
-        cols = [F.col(f"mh_{bidx * rows_per_band + j}") for j in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(bidx).alias("band"), F.md5(F.concat_ws("|", *cols).cast("binary")).alias("bh"))
-        )
-    buckets = sig.select(
-        id_col, F.explode(F.array(*band_cols)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    cand = _band_candidates(_minhash_bands(sig, id_col, k, bands), id_col, "bh")
     # verify candidates with exact Jaccard via the per-doc hash arrays
     # (the same cached table the signature rows exploded from) — the
     # shared _attach_pair_arrays shape with array_intersect per pair
@@ -654,26 +662,7 @@ def minhash_est_pairs(
     over shingles) at the cost of estimate noise — the production pick when
     downstream tolerates ~1/k resolution."""
     sig = cached(minhash_signatures(docs, id_col, text_col, k))
-    rows_per_band = k // bands
-    band_cols = []
-    for bidx in range(bands):
-        cols = [F.col(f"mh_{bidx * rows_per_band + j}") for j in range(rows_per_band)]
-        band_cols.append(
-            F.struct(
-                F.lit(bidx).alias("band"),
-                F.md5(F.concat_ws("|", *cols).cast("binary")).alias("bh"),
-            )
-        )
-    buckets = sig.select(id_col, F.explode(F.array(*band_cols)).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    cand = _band_candidates(_minhash_bands(sig, id_col, k, bands), id_col, "bh")
     arr = sig.select(
         id_col, F.array(*[F.col(f"mh_{i}") for i in range(k)]).alias("sig")
     )
@@ -863,13 +852,7 @@ def embedding_cosine_pairs_blocked(
             _bucket_batches, schema=f"{id_col} {id_type}, band int, bucket long"
         )
     )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    cand = _band_candidates(buckets, id_col, "bucket")
     va = n.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
     vb = n.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
     dot = F.aggregate(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import cached
+from ..cache import cached, fits_broadcast
 
 
 def entity_degrees(triples: DataFrame) -> DataFrame:
@@ -161,12 +161,6 @@ def pagerank(
 # says so with one map-side-combined aggregate over the cached mention
 # table), the exact zero-filter path runs.
 PMI_MAX_ENTITIES_PER_DOC = 256
-# df-table broadcast gate: one row per canonical entity — web-scale KGs
-# hold hundreds of millions of entities, far past broadcast range, and a
-# *forced* hint overrides autoBroadcastJoinThreshold and OOMs rather than
-# degrading (round-3 judge). Hint only under a censused row count; above
-# it the join is left plain and AQE/threshold decide.
-PMI_BROADCAST_DF_MAX = 1_000_000
 
 
 def entity_pmi_edges(
@@ -187,10 +181,11 @@ def entity_pmi_edges(
 
     Scale shape: per-doc fan-out of the doc-keyed self-join is bounded by
     :data:`PMI_MAX_ENTITIES_PER_DOC` (census first, filter only if some doc
-    exceeds it); the df marginal table is broadcast only while its censused
-    cardinality stays under :data:`PMI_BROADCAST_DF_MAX` — above that the
-    hint is withheld and the join shuffles (AQE may still broadcast if
-    runtime stats allow). N rides a 1-row broadcast either way."""
+    exceeds it); the df marginal table (one row per canonical entity) is
+    broadcast only while ``cache.fits_broadcast`` passes its censused
+    cardinality — above ``cache.BROADCAST_ROWS_MAX`` the hint is withheld
+    and the join shuffles (AQE may still broadcast if runtime stats
+    allow). N rides a 1-row broadcast either way."""
     cm = cached(canon_mentions.select(id_col, entity_col).distinct())
     per_doc = cm.groupBy(id_col).agg(F.count(F.lit(1)).alias("_k"))
     dfe = cached(cm.groupBy(entity_col).agg(F.count(F.lit(1)).alias("df")))
@@ -218,7 +213,7 @@ def entity_pmi_edges(
         dfe = cached(cm.groupBy(entity_col).agg(F.count(F.lit(1)).alias("df")))
         n_entities = dfe.count()
     n_corpus = cm.select(F.countDistinct(id_col).alias("n_corpus"))
-    hint = F.broadcast if n_entities <= PMI_BROADCAST_DF_MAX else (lambda d: d)
+    hint = F.broadcast if fits_broadcast(n_entities) else (lambda d: d)
     a = cm.select(F.col(id_col).alias("_d"), F.col(entity_col).alias("entity_a"))
     b = cm.select(F.col(id_col).alias("_d"), F.col(entity_col).alias("entity_b"))
     pairs = (

@@ -28,6 +28,17 @@ LINEAGE_SCHEMA = (
 METRICS_SCHEMA = "run_id string, stage string, key string, value double"
 
 
+def _data_files(path: str) -> list[str]:
+    """Parquet data files under ``path``, through partition subdirs;
+    hidden/_ files skipped."""
+    return [
+        os.path.join(root, n)
+        for root, _dirs, names in os.walk(path)
+        for n in names
+        if n.endswith(".parquet") and not n.startswith(("_", "."))
+    ]
+
+
 class StageWriter:
     def __init__(self, spark: SparkSession, workdir: str, run_id: str):
         self.spark = spark
@@ -78,18 +89,23 @@ class StageWriter:
         existing = self._read_seq(inc_id)
         if existing is not None:
             return existing
+        self._heal_unstamped(skip=inc_id)
+        return self._assign_next_seq(inc_id)
+
+    def _heal_unstamped(self, skip: str | None = None) -> None:
+        """Stamp every committed-but-unstamped increment except ``skip``,
+        oldest ``_SUCCESS`` mtime first, each with the next sequence."""
         root = os.path.join(self.workdir, "pages_inc")
-        unstamped_others = [
+        unstamped = [
             d
             for d in self._committed_dirs()
-            if d != inc_id and self._read_seq(d) is None
+            if d != skip and self._read_seq(d) is None
         ]
         for d in sorted(
-            unstamped_others,
+            unstamped,
             key=lambda d: os.path.getmtime(os.path.join(root, d, "_SUCCESS")),
         ):
             self._assign_next_seq(d)
-        return self._assign_next_seq(inc_id)
 
     def _assign_next_seq(self, inc_id: str) -> int:
         """Stamp ``inc_id`` with max(existing seq)+1 — no healing, no
@@ -126,16 +142,8 @@ class StageWriter:
         here: assigned the next sequence in mtime order — idempotent, and
         strictly after every stamped snapshot, which matches true commit
         order because the stamp is written immediately at commit."""
-        done = self._committed_dirs()
-        unstamped = [d for d in done if self._read_seq(d) is None]
-        if unstamped:
-            root = os.path.join(self.workdir, "pages_inc")
-            for d in sorted(
-                unstamped,
-                key=lambda d: os.path.getmtime(os.path.join(root, d, "_SUCCESS")),
-            ):
-                self.assign_commit_seq(d)
-        return sorted(done, key=lambda d: self._read_seq(d) or 0)
+        self._heal_unstamped()
+        return sorted(self._committed_dirs(), key=lambda d: self._read_seq(d) or 0)
 
     def expire_snapshots(
         self,
@@ -266,16 +274,7 @@ class StageWriter:
             raise ValueError(f"target_file_bytes must be positive, got {target_file_bytes}")
         self._recover_compaction(stage)
         base = self._stage_path(stage)
-
-        def data_files() -> list[str]:
-            out = []
-            for root, _dirs, names in os.walk(base):
-                for n in names:
-                    if n.endswith(".parquet") and not n.startswith(("_", ".")):
-                        out.append(os.path.join(root, n))
-            return out
-
-        files = data_files()
+        files = _data_files(base)
         total = sum(os.path.getsize(f) for f in files)
         part_cols = self._detect_partition_cols(base)
         target_n = max(1, math.ceil(total / target_file_bytes))
@@ -294,7 +293,7 @@ class StageWriter:
         return {
             "rewritten": True,
             "files_before": len(files),
-            "files_after": len(data_files()),
+            "files_after": len(_data_files(base)),
         }
 
     def _recover_compaction(self, stage: str) -> None:
@@ -392,18 +391,7 @@ class StageWriter:
         layouts stay per-root."""
         self._recover_compaction(stage)
         base = self._stage_path(stage)
-        schema_path = os.path.join(base, "_stage_schema.json")
-        if os.path.exists(schema_path):
-            import json
-
-            from pyspark.sql.types import StructType
-
-            with open(schema_path) as f:
-                schema = StructType.fromJson(json.load(f))
-            reader = self.spark.read.schema(schema)
-        else:
-            reader = self.spark.read
-        df = reader.parquet(base)
+        df = self._read_root(base)
         snapshots = self.list_snapshots()
         if as_of is not None:
             if as_of not in snapshots:
@@ -413,7 +401,7 @@ class StageWriter:
         for d in snapshots:
             p = os.path.join(inc_root, d)
             if os.path.isdir(p) and os.path.exists(os.path.join(p, "_SUCCESS")):
-                df = df.unionByName(reader.parquet(p))
+                df = df.unionByName(self._read_root(base, p))
         return df
 
     def write_stage(
@@ -470,18 +458,12 @@ class StageWriter:
 
     def _per_file_counts(self, path: str) -> list[tuple[int, int]]:
         """(part_id, rows) per written parquet data file, from the parquet
-        footers (pyarrow metadata read — no Spark job, no data scan).
-        Recurses through partition subdirs; hidden/_ files skipped."""
+        footers (pyarrow metadata read — no Spark job, no data scan)."""
         import pyarrow.parquet as pq
 
-        files: list[str] = []
-        for root, _dirs, names in os.walk(path):
-            for n in names:
-                if n.endswith(".parquet") and not n.startswith(("_", ".")):
-                    files.append(os.path.join(root, n))
         return [
             (i, pq.ParquetFile(f).metadata.num_rows)
-            for i, f in enumerate(sorted(files))
+            for i, f in enumerate(sorted(_data_files(path)))
         ]
 
     def _append_rows(self, table: str, rows: list[tuple], fields) -> None:

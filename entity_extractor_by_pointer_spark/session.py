@@ -10,6 +10,7 @@ cluster this is overridden via spark-submit conf.
 
 from __future__ import annotations
 
+import functools
 import os
 
 # Best-effort driver-side BLAS pinning (effective if this module is imported
@@ -60,6 +61,26 @@ def get_spark(
 _SHIPPED: set[int] = set()
 
 
+@functools.cache
+def _package_zip() -> str:
+    """Zip this package once per process, into a private temp dir that is
+    removed when the process exits (Spark fetches the zip lazily, so it
+    must outlive every SparkContext it was added to)."""
+    import atexit
+    import shutil
+    import tempfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    tmp = tempfile.mkdtemp(prefix="eeps_pkg_")
+    atexit.register(shutil.rmtree, tmp, True)
+    return shutil.make_archive(
+        os.path.join(tmp, "eeps_pkg"),
+        "zip",
+        root_dir=os.path.dirname(pkg_dir),
+        base_dir=os.path.basename(pkg_dir),
+    )
+
+
 def _ship_package(spark: SparkSession) -> None:
     """addPyFile this package so executor python workers can unpickle our
     UDF closures regardless of the driver process CWD (the in-repo analog
@@ -67,13 +88,5 @@ def _ship_package(spark: SparkSession) -> None:
     key = id(spark.sparkContext)
     if key in _SHIPPED:
         return
-    import shutil
-    import tempfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    base = os.path.join(tempfile.gettempdir(), f"eeps_session_pkg_{os.getpid()}")
-    zip_path = shutil.make_archive(
-        base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir=os.path.basename(pkg_dir)
-    )
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(_package_zip())
     _SHIPPED.add(key)

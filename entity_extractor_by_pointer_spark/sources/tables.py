@@ -1,10 +1,4 @@
-"""Loaders for the driver-generated testdata tables (TESTDATA.md)."""
-
-from __future__ import annotations
-
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+"""Names of the generated testdata tables (TESTDATA.md)."""
 
 TABLES = (
     "region",
@@ -18,7 +12,3 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

@@ -82,7 +82,9 @@ def test_minhash_signatures_with_duplicate_doc_id(spark, monkeypatch):
         "doc_id long, text string",
     )
     dim = sorted(tuple(r) for r in dd.minhash_signatures(docs).collect())
-    monkeypatch.setattr(dd, "BROADCAST_ROWS_MAX", 0)
+    from entity_extractor_by_pointer_spark import cache
+
+    monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 0)
     inline = sorted(tuple(r) for r in dd.minhash_signatures(docs).collect())
     assert len(dim) == 4
     assert dim == inline

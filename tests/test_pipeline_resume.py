@@ -291,6 +291,34 @@ def test_commit_seq_heals_before_new_allocation(spark, tmp_path):
     assert pipe2.writer._read_seq(snaps[1]) == 2
 
 
+def test_commit_seq_heals_unstamped_in_mtime_order(tmp_path):
+    """Several committed-but-unstamped increments are stamped oldest
+    ``_SUCCESS`` first, whether ``list_snapshots`` or a new commit's
+    ``assign_commit_seq`` heals them. Filesystem only: no Spark job."""
+    import os
+
+    from entity_extractor_by_pointer_spark.plans.lineage import StageWriter
+
+    def commit(wd, inc_id, mtime):
+        d = os.path.join(wd, "pages_inc", inc_id)
+        os.makedirs(d)
+        open(os.path.join(d, "_SUCCESS"), "w").close()
+        os.utime(os.path.join(d, "_SUCCESS"), (mtime, mtime))
+
+    listed = StageWriter(None, str(tmp_path / "listed"), "r")
+    for inc_id, mtime in (("inc_b", 2000), ("inc_c", 3000), ("inc_a", 1000)):
+        commit(listed.workdir, inc_id, mtime)
+    assert listed.list_snapshots() == ["inc_a", "inc_b", "inc_c"]
+    assert [listed._read_seq(d) for d in ("inc_a", "inc_b", "inc_c")] == [1, 2, 3]
+
+    new = StageWriter(None, str(tmp_path / "new"), "r")
+    for inc_id, mtime in (("inc_b", 2000), ("inc_a", 1000), ("inc_new", 500)):
+        commit(new.workdir, inc_id, mtime)
+    # the committing increment is stamped last, whatever its mtime
+    assert new.assign_commit_seq("inc_new") == 3
+    assert new.list_snapshots() == ["inc_a", "inc_b", "inc_new"]
+
+
 def test_expire_compaction_crash_recovery(spark, tmp_path):
     """Round-3 ADVICE: the compaction swap is crash-safe at every point.
     Simulates the worst window — base renamed away, complete tmp not yet

@@ -2,6 +2,8 @@
 (predicate pushdown, column pruning, broadcast dims, no shuffle in the
 mention stage) must not silently regress."""
 
+import pytest
+
 import __spark_entry__ as E
 
 SF = "/root/testdata/sf0.001"
@@ -99,8 +101,8 @@ def test_pmi_df_broadcast_is_census_gated(spark, monkeypatch):
     entity-count gate. With autoBroadcastJoinThreshold disabled, the hint is
     the ONLY way a broadcast can appear — so: default gate (tiny testdata)
     → BroadcastHashJoin present; gate forced to 0 → none (shuffle join)."""
+    from entity_extractor_by_pointer_spark import cache
     from entity_extractor_by_pointer_spark.cache import release_all
-    from entity_extractor_by_pointer_spark.operators import graph
     from entity_extractor_by_pointer_spark.operators.graph import entity_pmi_edges
 
     cm = spark.createDataFrame(
@@ -112,7 +114,7 @@ def test_pmi_df_broadcast_is_census_gated(spark, monkeypatch):
     try:
         below = _plan(entity_pmi_edges(cm))
         assert "BroadcastHashJoin" in below, below
-        monkeypatch.setattr(graph, "PMI_BROADCAST_DF_MAX", 3)  # 4 entities
+        monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 3)  # 4 entities
         above = _plan(entity_pmi_edges(cm))
         assert "BroadcastHashJoin" not in above.split("Exchange", 1)[0] or True
         # the df-marginal joins specifically must not be broadcast: only the
@@ -124,6 +126,7 @@ def test_pmi_df_broadcast_is_census_gated(spark, monkeypatch):
 
 
 def test_boilerplate_hot_broadcast_is_census_gated(spark, monkeypatch):
+    from entity_extractor_by_pointer_spark import cache
     from entity_extractor_by_pointer_spark.cache import release_all
     from entity_extractor_by_pointer_spark.operators import curation
     from entity_extractor_by_pointer_spark.operators.curation import boilerplate_stats
@@ -136,12 +139,12 @@ def test_boilerplate_hot_broadcast_is_census_gated(spark, monkeypatch):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        hot_max = curation.BOILERPLATE_BROADCAST_HOT_MAX
+        hot_max = cache.BROADCAST_ROWS_MAX
         below = _plan(boilerplate_stats(docs))
         assert "BroadcastHashJoin" in below, below
         # 15 docs, at/below the census threshold: the hint is applied without
         # counting the hot set, so even a 1-row ceiling does not withhold it
-        monkeypatch.setattr(curation, "BOILERPLATE_BROADCAST_HOT_MAX", 1)
+        monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 1)
         uncensused = _plan(boilerplate_stats(docs))
         assert "BroadcastHashJoin" in uncensused, uncensused
         # censused tier (15 docs above the threshold forces the hot-set
@@ -149,12 +152,100 @@ def test_boilerplate_hot_broadcast_is_census_gated(spark, monkeypatch):
         monkeypatch.setattr(curation, "BOILERPLATE_CENSUS_DOCS", 14)
         censused_big = _plan(boilerplate_stats(docs))
         assert "BroadcastHashJoin" not in censused_big, censused_big
-        monkeypatch.setattr(curation, "BOILERPLATE_BROADCAST_HOT_MAX", hot_max)
+        monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", hot_max)
         censused = _plan(boilerplate_stats(docs))
         assert "BroadcastHashJoin" in censused, censused
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         release_all()
+
+
+@pytest.fixture
+def no_auto_broadcast(spark):
+    """autoBroadcastJoinThreshold off, so a forced hint is the only way a
+    broadcast can appear; cached frames are released afterwards."""
+    from entity_extractor_by_pointer_spark.cache import release_all
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield spark
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    release_all()
+
+
+def test_broadcast_ceiling_is_inclusive(no_auto_broadcast, monkeypatch):
+    """``fits_broadcast`` and ``broadcast_small`` read the one ceiling at
+    call time: a dim of exactly ``BROADCAST_ROWS_MAX`` rows is hinted, one
+    row more is not."""
+    from entity_extractor_by_pointer_spark import cache
+
+    spark = no_auto_broadcast
+    monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 5)
+    assert cache.fits_broadcast(5) and not cache.fits_broadcast(6)
+    fact = spark.range(20)
+    at = _plan(fact.join(cache.broadcast_small(spark.range(5)), "id"))
+    assert "BroadcastHashJoin" in at, at
+    above = _plan(fact.join(cache.broadcast_small(spark.range(6)), "id"))
+    assert "BroadcastHashJoin" not in above, above
+
+
+def _contamination(spark):
+    from entity_extractor_by_pointer_spark.operators.curation import contamination_flags
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame(
+        [(1, base + " extra words"), (2, "short doc")], "doc_id long, text string"
+    )
+    bench = spark.createDataFrame([(base,)], "text string")
+    return contamination_flags(docs, bench, n=8)
+
+
+def _balance(spark):
+    from entity_extractor_by_pointer_spark.operators.curation import balance_sources
+
+    docs = spark.createDataFrame(
+        [(i, f"s{i % 3}") for i in range(30)], "doc_id long, source string"
+    )
+    return balance_sources(docs)
+
+
+@pytest.mark.parametrize("build", [_contamination, _balance], ids=["contamination", "balance"])
+def test_curation_dim_broadcast_is_census_gated(no_auto_broadcast, monkeypatch, build):
+    """The benchmark-shingle dim (contamination) and the per-source
+    threshold dim (balance) are hinted under the ceiling and joined plain
+    above it."""
+    from entity_extractor_by_pointer_spark import cache
+
+    below = _plan(build(no_auto_broadcast))
+    assert "BroadcastHashJoin" in below, below
+    monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 0)
+    above = _plan(build(no_auto_broadcast))
+    assert "BroadcastHashJoin" not in above, above
+
+
+def test_capped_dedup_dims_broadcast_is_census_gated(no_auto_broadcast, monkeypatch):
+    """The capped pair engine's two dims (hot shingles, survivor pairs)
+    are hinted under the ceiling and joined plain above it."""
+    import re
+
+    from entity_extractor_by_pointer_spark import cache
+    from entity_extractor_by_pointer_spark.operators import dedup as dd
+
+    # 20 copies make the fox shingles hot (df > JACCARD_AUTO_CAP); the three
+    # greek docs share rare shingles, so the survivor set is not empty
+    docs = no_auto_broadcast.createDataFrame(
+        [(i, "the quick brown fox jumps over the lazy dog") for i in range(20)]
+        + [(100 + i, "alpha beta gamma delta epsilon zeta eta theta") for i in range(3)],
+        "doc_id long, text string",
+    )
+    monkeypatch.setattr(dd, "JACCARD_AUTO_DOCS", -1)
+    below = _plan(dd.ngram_jaccard_pairs(docs))
+    assert re.search(r"BroadcastHashJoin \[shingle#\d+L\], \[shingle#\d+L\], LeftAnti", below), below
+    assert re.search(r"BroadcastHashJoin \[id_a#\d+L\], \[id_a#\d+L\], Inner", below), below
+    cache.release_all()  # else the cached survivors keep the hot-set hint
+    monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 0)
+    above = _plan(dd.ngram_jaccard_pairs(docs))
+    assert "BroadcastHashJoin" not in above, above
 
 
 def test_profile_distincts_are_exact_per_column_union(spark):
