@@ -134,11 +134,12 @@ def _stamped_store_path(sf_dir: str, src_table: str, kind: str) -> str:
     import time
 
     src = os.path.join(sf_dir, f"{src_table}.parquet")
+    # a directory table folds its files' stats; a single-file table its own
+    files = [os.path.join(src, f) for f in sorted(os.listdir(src))] if os.path.isdir(src) else [src]
     stamp = 0
-    if os.path.isdir(src):
-        for f in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, f))
-            stamp = (stamp * 1_000_003 + st.st_size + int(st.st_mtime)) % (1 << 60)
+    for f in filter(os.path.exists, files):
+        st = os.stat(f)
+        stamp = (stamp * 1_000_003 + st.st_size + st.st_mtime_ns) % (1 << 60)
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
     tmp = tempfile.gettempdir()
     path = os.path.join(tmp, f"eeps_{kind}_{tag}_{stamp:x}")

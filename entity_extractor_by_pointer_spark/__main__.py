@@ -56,14 +56,6 @@ def main(argv: list[str] | None = None) -> int:
         "column) of an existing --workdir stage table",
     )
     parser.add_argument(
-        "--expire-snapshots",
-        type=int,
-        metavar="KEEP_LAST",
-        help="retention maintenance on --workdir: compact all but the last "
-        "KEEP_LAST increments into the base tables and drop orphans "
-        "(the Iceberg expireSnapshots analog)",
-    )
-    parser.add_argument(
         "--compact-stage",
         metavar="STAGE",
         help="small-file compaction of an existing --workdir stage base "
@@ -97,21 +89,13 @@ def main(argv: list[str] | None = None) -> int:
         for cls, surfaces in PointerNerModel(cfg).predict_one(args.predict_text).items():
             print(f"{cls}: {surfaces}")
         return 0
-    # one maintenance/read-only block: --profile-stage, --expire-snapshots
-    # and --graph-stats compose (sequential execution over one session) —
-    # the old early-return maintenance branch silently ignored a combined
+    # one maintenance/read-only block: --profile-stage, --compact-stage and
+    # --graph-stats compose (sequential execution over one session) — the
+    # old early-return maintenance branch silently ignored a combined
     # --graph-stats (round-4 ADVICE)
-    if (
-        args.profile_stage
-        or args.expire_snapshots is not None
-        or args.graph_stats
-        or args.compact_stage
-    ):
+    if args.profile_stage or args.graph_stats or args.compact_stage:
         if not args.workdir:
-            parser.error(
-                "--profile-stage/--expire-snapshots/--compact-stage/"
-                "--graph-stats need --workdir"
-            )
+            parser.error("--profile-stage/--compact-stage/--graph-stats need --workdir")
         from .plans.lineage import StageWriter
         from .session import get_spark as _get_spark
 
@@ -127,12 +111,6 @@ def main(argv: list[str] | None = None) -> int:
                     f"  {r['col_name']}: rows={r['n_rows']} nulls={r['n_nulls']} "
                     f"distinct={r['n_distinct']} min={r['min_val']} max={r['max_val']}"
                 )
-        if args.expire_snapshots is not None:
-            res = writer.expire_snapshots(keep_last=args.expire_snapshots)
-            print(
-                f"expired {len(res['expired'])} snapshot(s), "
-                f"removed {len(res['orphans_removed'])} orphan dir(s)"
-            )
         if args.compact_stage:
             if args.target_file_mb <= 0:
                 parser.error("--target-file-mb must be positive")

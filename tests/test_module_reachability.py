@@ -1,14 +1,18 @@
 """Every package module is reachable from a production entry point, and
-every public package def is referenced.
+every public package def and method is referenced.
 
 Walks the ``import`` graph (module-level, function-local and relative
 imports alike) from the driver contract, the CLI, the benches, perfbench
 and tools; a package module no root reaches is dead code and fails here.
-A public top-level def or class whose name no root and no package module
-mentions fails too, unless it is a listed spec oracle.
+A public top-level def or class, or a public method of a top-level class,
+whose name no root and no package module mentions fails too, unless it is
+a listed spec oracle. ``mod.name`` where ``mod`` is an imported module
+alias refers to that module only: ``json.load`` keeps no package ``load``
+alive.
 """
 
 import ast
+import importlib.util
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -27,15 +31,20 @@ def _module_files(dotted: str) -> list[Path]:
     return out
 
 
-def _imported(path: Path) -> set[Path]:
+def _from_module(node: ast.ImportFrom, path: Path) -> str:
+    """The dotted module a ``from`` import in ``path`` names."""
     pkg = path.relative_to(ROOT).parts[:-1]  # the package relative imports resolve against
+    base = list(pkg[: len(pkg) - node.level + 1]) if node.level else []
+    return ".".join(base + ([node.module] if node.module else []))
+
+
+def _imported(path: Path) -> set[Path]:
     found: set[Path] = set()
     for node in ast.walk(ast.parse(path.read_text())):
         if isinstance(node, ast.Import):
             names = [a.name for a in node.names]
         elif isinstance(node, ast.ImportFrom):
-            base = list(pkg[: len(pkg) - node.level + 1]) if node.level else []
-            mod = ".".join(base + ([node.module] if node.module else []))
+            mod = _from_module(node, path)
             names = [mod] + [f"{mod}.{a.name}" for a in node.names]
         else:
             continue
@@ -56,6 +65,38 @@ def test_every_package_module_is_reachable_from_a_production_root():
     assert not dead, f"package modules no production root imports: {dead}"
 
 
+def _import_names(node: ast.AST, path: Path) -> list[tuple[str, str]]:
+    """(bound name, dotted target) per name an import statement binds; a
+    ``from`` target is ``module.name``, which may be a module or a def."""
+    if isinstance(node, ast.Import):
+        return [(a.asname or a.name.split(".")[0], a.name if a.asname else a.name.split(".")[0])
+                for a in node.names]
+    if isinstance(node, ast.ImportFrom):
+        mod = _from_module(node, path)
+        return [(a.asname or a.name, f"{mod}.{a.name}" if mod else a.name) for a in node.names]
+    return []
+
+
+def _module_file(dotted: str) -> Path | None:
+    """The file of ``dotted`` if it names a module, found on disk without
+    importing it; None if it names no module (a def, or nothing found)."""
+    top, *rest = dotted.split(".")
+    if top == PKG:
+        base = ROOT.joinpath(*dotted.split("."))
+        return next((p for p in (base / "__init__.py", base.with_suffix(".py")) if p.is_file()), None)
+    spec = importlib.util.find_spec(top)  # a top-level lookup imports nothing
+    if spec is None:
+        return None
+    if not rest:
+        return Path(spec.origin or top)  # built-in and namespace modules have no file
+    for loc in spec.submodule_search_locations or []:
+        base = Path(loc).joinpath(*rest)
+        for p in (base / "__init__.py", base.with_suffix(".py")):
+            if p.is_file():
+                return p
+    return None
+
+
 # public defs no production code calls that stay on purpose: the spec
 # implementations tests compare production code against
 SPEC_ORACLES = {
@@ -69,22 +110,48 @@ SPEC_ORACLES = {
 
 
 def test_every_public_package_def_is_referenced():
-    """Every public top-level def or class of the package is referenced by
-    name from a production root or the package, or is a listed spec oracle."""
+    """Every public top-level def or class of the package, and every public
+    method of a top-level class, is referenced from a production root or the
+    package, or is a listed spec oracle. A bare name or an attribute on any
+    receiver but a module alias counts for every def of that name; an
+    attribute on a module alias counts for that module's def only."""
     sources = [*ROOTS, *(ROOT / PKG).rglob("*.py")]
-    defined, used = {}, set()
+    defs = []  # (file, qualified name, top-level name or None for a method)
+    names, qualified = set(), set()  # bare uses; (module file, name) uses
     for path in sources:
         tree = ast.parse(path.read_text())
         if path.is_relative_to(ROOT / PKG):
             for node in tree.body:
                 if isinstance(node, (ast.FunctionDef, ast.ClassDef)) and not node.name.startswith("_"):
-                    defined[node.name] = path.relative_to(ROOT / PKG)
+                    defs.append((path, node.name, node.name))
+                if isinstance(node, ast.ClassDef):
+                    defs += [(path, f"{node.name}.{m.name}", None) for m in node.body
+                             if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+                             and not m.name.startswith("_")]
+        aliases = {}
+        for node in ast.walk(tree):
+            for bound, target in _import_names(node, path):
+                if (mod := _module_file(target)) is not None:
+                    aliases[bound] = mod
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
-                used.add(node.id)
+                names.add(node.id)
             elif isinstance(node, ast.Attribute):
-                used.add(node.attr)
-    dead = sorted(f"{defined[n]}:{n}" for n in defined.keys() - used - SPEC_ORACLES.keys())
+                if isinstance(node.value, ast.Name) and node.value.id in aliases:
+                    qualified.add((aliases[node.value.id], node.attr))
+                else:
+                    names.add(node.attr)
+    top = {(p, n) for p, _q, n in defs if n}
+    # a package module's qualified use of a name it does not define is a
+    # re-export: count it by name
+    names |= {n for p, n in qualified if p.is_relative_to(ROOT / PKG) and (p, n) not in top}
+    dead = sorted(
+        f"{p.relative_to(ROOT / PKG)}: {q}"
+        for p, q, n in defs
+        if q.rpartition(".")[2] not in names
+        and (p, n) not in qualified
+        and (n or q) not in SPEC_ORACLES
+    )
     assert not dead, f"public defs nothing references: {dead}"
-    stale = sorted(SPEC_ORACLES.keys() - defined.keys())
+    stale = sorted(SPEC_ORACLES.keys() - {n for _p, _q, n in defs})
     assert not stale, f"SPEC_ORACLES names no package def: {stale}"

@@ -116,9 +116,9 @@ def test_pmi_df_broadcast_is_census_gated(spark, monkeypatch):
         assert "BroadcastHashJoin" in below, below
         monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 3)  # 4 entities
         above = _plan(entity_pmi_edges(cm))
-        assert "BroadcastHashJoin" not in above.split("Exchange", 1)[0] or True
-        # the df-marginal joins specifically must not be broadcast: only the
-        # 1-row n_corpus cross join may remain a broadcast nested loop
+        # both df-marginal joins plan as shuffle joins above the ceiling;
+        # only the 1-row n_corpus cross join may remain a broadcast nested loop
+        assert above.count("SortMergeJoin") == below.count("SortMergeJoin") + 2, above
         assert above.count("BroadcastHashJoin") == 0, above
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -384,6 +384,16 @@ def test_stamped_store_write_once_and_prune_safety(tmp_path, monkeypatch):
     p2 = E._stamped_store_path(str(d2), "documents", "kg_mentions")
     assert p1 == p1_again
     assert p1 != p2 and os.path.basename(p1) != os.path.basename(p2)
+
+    # a single-file source table regenerated at the same path gets a new
+    # stamp, so its stores are rebuilt rather than served stale
+    d3 = tmp_path / "single" / "sf0.001"
+    d3.mkdir(parents=True)
+    (d3 / "documents.parquet").write_bytes(b"x" * 10)
+    p3 = E._stamped_store_path(str(d3), "documents", "kg_mentions")
+    assert p3 == E._stamped_store_path(str(d3), "documents", "kg_mentions")
+    (d3 / "documents.parquet").write_bytes(b"x" * 20)
+    assert E._stamped_store_path(str(d3), "documents", "kg_mentions") != p3
 
     # _write_once: builds once, then short-circuits on _SUCCESS
     calls = []
