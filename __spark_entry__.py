@@ -238,18 +238,19 @@ def _canon_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triples_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized KG triple table, written via ``write_triples`` —
+    """Materialized KG triple table in the ``bucket_by_subject`` layout —
     partitioned by subject hash (the north rule's Iceberg ``bucket(N,
     subj)`` stand-in) — and read by every graph-family query. Values are
     bit-identical to the inline pipeline (deterministic strings/longs;
     parquet round-trip is exact), so all oracle rows stay hash-green."""
-    from entity_extractor_by_pointer_spark.operators.triples import write_triples
+    from entity_extractor_by_pointer_spark.operators.triples import bucket_by_subject
 
     path = _stamped_store_path(sf_dir, "documents", "kg_triples")
 
     def build(p: str) -> None:
         canon = _canon_store(spark, sf_dir)
-        write_triples(build_triples(canon, id_col="doc_id"), p, buckets=8)
+        triples = bucket_by_subject(build_triples(canon, id_col="doc_id"), 8)
+        triples.write.mode("overwrite").partitionBy("subj_bucket").parquet(p)
 
     _write_once(path, build)
     return spark.read.parquet(path).select("subj", "pred", "obj", "url")

@@ -187,7 +187,7 @@ def main(argv: list[str] | None = None) -> int:
     for r in top:
         print(f"  ({r['subj']}, {r['pred']}, {r['obj']}) x{r['n_docs']}")
     metrics = pipe.writer.read_metrics()
-    for r in metrics.where("stage = 'pipeline'").collect():
+    for r in metrics.where((metrics.stage == "pipeline") & (metrics.run_id == run_id)).collect():
         print(f"  {r['key']}={r['value']:.2f}")
     return 0
 

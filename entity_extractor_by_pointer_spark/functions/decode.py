@@ -61,16 +61,19 @@ def decode_gp(
     return spans
 
 
+# BP start/end sigmoid cut (reference config.py:39)
+BP_DECISION_THRESHOLD = 0.5
+
+
 def decode_bp(
     text: str,
     logits: np.ndarray,  # (L, C, 2) raw logits
     offset_mapping: list[tuple[int, int]],
-    decision_threshold: float = 0.5,
 ) -> list[Span]:
     start_mapping, end_mapping = build_offset_maps(offset_mapping)
     probs = 1.0 / (1.0 + np.exp(-logits))
-    starts = np.where(probs[:, :, 0] > decision_threshold)
-    ends = np.where(probs[:, :, 1] > decision_threshold)
+    starts = np.where(probs[:, :, 0] > BP_DECISION_THRESHOLD)
+    ends = np.where(probs[:, :, 1] > BP_DECISION_THRESHOLD)
     spans: list[Span] = []
     for _start, class1 in zip(*starts):
         for _end, class2 in zip(*ends):

@@ -23,15 +23,20 @@ from __future__ import annotations
 import numpy as np
 
 EMB_BUCKETS = 4096
+SEEDED_HIDDEN_SIZE = 64
+SEEDED_ENCODER_SEED = 3
+# sequences per BERT forward: bounds GPU memory alongside the Arrow batch size
+BERT_MICRO_BATCH = 64
 
 
 class SeededTinyEncoder:
-    """token ids (B, L) int32 + attention mask → hidden states (B, L, H)."""
+    """token ids (B, L) int32 + attention mask → hidden states (B, L, H),
+    H = ``SEEDED_HIDDEN_SIZE``, weights seeded by ``SEEDED_ENCODER_SEED``."""
 
-    def __init__(self, hidden_size: int = 64, seed: int = 3):
-        rng = np.random.default_rng(seed)
-        self.hidden_size = hidden_size
-        self.emb = rng.normal(0, 1.0, (EMB_BUCKETS, hidden_size)).astype(np.float32)
+    def __init__(self):
+        rng = np.random.default_rng(SEEDED_ENCODER_SEED)
+        self.hidden_size = SEEDED_HIDDEN_SIZE
+        self.emb = rng.normal(0, 1.0, (EMB_BUCKETS, SEEDED_HIDDEN_SIZE)).astype(np.float32)
 
     def __call__(self, input_ids: np.ndarray, attention_mask: np.ndarray) -> np.ndarray:
         ids = np.asarray(input_ids) % EMB_BUCKETS
@@ -50,26 +55,25 @@ class TorchBertEncoder:  # pragma: no cover - torch absent in this sandbox
     mapInPandas shell (reference ``BinaryPointer.py:17`` /
     ``GlobalPointer.py:12`` load 'bert-base-chinese'; the north rule runs
     this as batched GPU kernels with no per-row Python). One instance per
-    executor python worker via MODEL_CACHE; micro-batch size bounds GPU
-    memory alongside the Arrow batch size."""
+    executor python worker via MODEL_CACHE; ``BERT_MICRO_BATCH`` bounds GPU
+    memory alongside the Arrow batch size. Runs on CUDA where available."""
 
-    def __init__(self, model_name: str = "bert-base-chinese", device: str | None = None, micro_batch: int = 64):
+    def __init__(self, model_name: str = "bert-base-chinese"):
         import torch
         from transformers import BertModel
 
         self._torch = torch
-        self.device = device or ("cuda" if torch.cuda.is_available() else "cpu")
+        self.device = "cuda" if torch.cuda.is_available() else "cpu"
         self.model = BertModel.from_pretrained(model_name).to(self.device).eval()
         self.hidden_size = self.model.config.hidden_size
-        self.micro_batch = micro_batch
 
     def __call__(self, input_ids: np.ndarray, attention_mask: np.ndarray) -> np.ndarray:
         torch = self._torch
         outs = []
         with torch.no_grad():
-            for i in range(0, len(input_ids), self.micro_batch):
-                ids = torch.as_tensor(input_ids[i : i + self.micro_batch], dtype=torch.long, device=self.device)
-                mask = torch.as_tensor(attention_mask[i : i + self.micro_batch], dtype=torch.long, device=self.device)
+            for i in range(0, len(input_ids), BERT_MICRO_BATCH):
+                ids = torch.as_tensor(input_ids[i : i + BERT_MICRO_BATCH], dtype=torch.long, device=self.device)
+                mask = torch.as_tensor(attention_mask[i : i + BERT_MICRO_BATCH], dtype=torch.long, device=self.device)
                 hidden = self.model(ids, attention_mask=mask).last_hidden_state
                 outs.append(hidden.float().cpu().numpy())
         return np.concatenate(outs, axis=0)

@@ -34,10 +34,6 @@ class NerConfig:
     classes: list[str]
     model_type: str = "gp"  # 'gp' | 'bp'  (reference config.py:28-30)
     max_sequence_length: int = 200  # reference config.py:57
-    decision_threshold: float = 0.5  # reference config.py:39 (bp only)
-    hidden_size: int = 64
-    encoder_seed: int = 3
-    head_seed: int = 7
     # head logit bias: shifts scores so a small, nonzero fraction of valid
     # cells clear the decode threshold (random weights alone are ~50/50)
     logit_bias: float = -4.0
@@ -45,14 +41,18 @@ class NerConfig:
     # sandbox); 'bert' = BertTokenizerFast + TorchBertEncoder, the reference's
     # real tokenizer/encoder pair (engines/data.py:17, predict.py:36-44) —
     # exercised by the skip-gated test in tests/test_production_encoder.py
-    # wherever torch/transformers are installed. hidden_size must then match
-    # the checkpoint (768 for bert-base-chinese).
+    # wherever torch/transformers are installed. The head width follows the
+    # encoder's hidden size (768 for bert-base-chinese).
     encoder: str = "seeded"  # 'seeded' | 'bert'
     hf_model_name: str = "bert-base-chinese"
 
     @property
     def num_labels(self) -> int:
         return len(self.classes)
+
+
+# seed of the GP or BP head's weights
+HEAD_SEED = 7
 
 
 class PointerNerModel:
@@ -72,12 +72,12 @@ class PointerNerModel:
             self.encoder = load_torch_bert_encoder(config.hf_model_name)
         else:
             self.tokenizer = CjkCharTokenizer()
-            self.encoder = SeededTinyEncoder(config.hidden_size, config.encoder_seed)
+            self.encoder = SeededTinyEncoder()
         hidden = self.encoder.hidden_size  # head width follows the encoder
         if config.model_type == "gp":
-            self.head = GlobalPointerHead(hidden, config.num_labels, config.head_seed)
+            self.head = GlobalPointerHead(hidden, config.num_labels, HEAD_SEED)
         else:
-            self.head = BinaryPointerHead(hidden, config.num_labels, config.head_seed)
+            self.head = BinaryPointerHead(hidden, config.num_labels, HEAD_SEED)
 
     def _encode_batch(
         self, texts: list[str]
@@ -169,14 +169,7 @@ class PointerNerModel:
         else:
             logits = self.head(hidden, attention_mask) + bias
             for i, text in enumerate(texts):
-                out.append(
-                    decode_bp(
-                        text,
-                        logits[i],
-                        np.asarray(offsets[i]).tolist(),
-                        self.config.decision_threshold,
-                    )
-                )
+                out.append(decode_bp(text, logits[i], np.asarray(offsets[i]).tolist()))
         return out
 
 
@@ -200,9 +193,6 @@ class _ModelCache:
             tuple(config.classes),
             config.model_type,
             config.max_sequence_length,
-            config.hidden_size,
-            config.encoder_seed,
-            config.head_seed,
             config.logit_bias,
             config.encoder,
             config.hf_model_name,

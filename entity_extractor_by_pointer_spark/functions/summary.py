@@ -43,7 +43,7 @@ def summarize_model(model) -> list[dict]:
     return rows
 
 
-def format_summary(model, max_level: int = 3) -> str:
+def format_summary(model) -> str:
     """Human-readable block like the reference's ``summary(model)`` print."""
     rows = summarize_model(model)
     width = max(len(r["name"]) for r in rows) + 2

@@ -85,7 +85,12 @@ def fingerprint64(col: Column) -> Column:
     return md5_int64(norm_text(col))
 
 
-def hash_split(id_col: Column, train_pct: int = 80, dev_pct: int = 10) -> Column:
+# hash_split shares: buckets 0-79 train, 80-89 dev, the rest test
+SPLIT_TRAIN_PCT = 80
+SPLIT_DEV_PCT = 10
+
+
+def hash_split(id_col: Column) -> Column:
     """Deterministic dataset split ('train'|'dev'|'test') by content hash.
 
     The standard crawl-scale alternative to random splits: stable across
@@ -95,14 +100,15 @@ def hash_split(id_col: Column, train_pct: int = 80, dev_pct: int = 10) -> Column
     positional splits don't distribute, hash splits do."""
     bucket = F.pmod(md5_int64(id_col), F.lit(100))
     return (
-        F.when(bucket < train_pct, F.lit("train"))
-        .when(bucket < train_pct + dev_pct, F.lit("dev"))
+        F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train"))
+        .when(bucket < SPLIT_TRAIN_PCT + SPLIT_DEV_PCT, F.lit("dev"))
         .otherwise(F.lit("test"))
     )
 
 
-def tfidf_terms(docs, text_col: str = "text", id_col: str = "doc_id"):
-    """(term, tf, df, tfidf) over whitespace words of normalized text.
+def tfidf_terms(docs):
+    """(term, tf, df, tfidf) over whitespace words of the normalized
+    ``text`` of (doc_id, text) rows.
 
     tf = total occurrences, df = #docs containing the term,
     tfidf = tf · ln(N/df). All built-in expressions: explode → two
@@ -110,32 +116,38 @@ def tfidf_terms(docs, text_col: str = "text", id_col: str = "doc_id"):
     shuffles more than once."""
     from ..partitioning import spread_small_scan
 
-    words = spread_small_scan(docs.select(id_col, text_col)).select(
-        F.col(id_col), F.explode(F.split(norm_text(F.col(text_col)), " ")).alias("term")
+    words = spread_small_scan(docs.select("doc_id", "text")).select(
+        F.col("doc_id"), F.explode(F.split(norm_text(F.col("text")), " ")).alias("term")
     ).where(F.col("term") != "")
     n_docs = docs.count()
     stats = words.groupBy("term").agg(
         F.count(F.lit(1)).alias("tf"),
-        F.countDistinct(id_col).alias("df"),
+        F.countDistinct("doc_id").alias("df"),
     )
     return stats.withColumn(
         "tfidf", F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6)
     )
 
 
-def winnow_fingerprint(col: Column, gram: int = 8, stride: int = 4) -> Column:
+WINNOW_GRAM = 8
+WINNOW_STRIDE = 4
+
+
+def winnow_fingerprint(col: Column) -> Column:
     """Rolling-window document fingerprint: min hash over character
-    ``gram``-grams sampled every ``stride`` positions of the normalized text
-    (winnowing-style min-sampling — the rolling-hash fingerprint family, vs
-    ``fingerprint64``'s whole-document hash). Content-defined: equal texts
+    ``WINNOW_GRAM``-grams sampled every ``WINNOW_STRIDE`` positions of the
+    normalized text (winnowing-style min-sampling — the rolling-hash
+    fingerprint family, vs ``fingerprint64``'s whole-document hash). Content-defined: equal texts
     always collide; long shared runs collide with high probability. Pure
     built-in expressions, mirrored verbatim in the DuckDB oracle."""
     t = norm_text(col)
     positions = F.sequence(
-        F.lit(1), F.greatest(F.length(t) - F.lit(gram - 1), F.lit(1)), F.lit(stride)
+        F.lit(1),
+        F.greatest(F.length(t) - F.lit(WINNOW_GRAM - 1), F.lit(1)),
+        F.lit(WINNOW_STRIDE),
     )
     return F.array_min(
-        F.transform(positions, lambda i: md5_int64(F.substring(t, i, gram)))
+        F.transform(positions, lambda i: md5_int64(F.substring(t, i, WINNOW_GRAM)))
     )
 
 
@@ -143,8 +155,6 @@ def chunk_documents(
     docs,
     chunk_tokens: int = 64,
     overlap: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ):
     """Split each document into fixed-size overlapping whitespace-token
     windows — the chunking step an LLM training pipeline runs before
@@ -163,21 +173,21 @@ def chunk_documents(
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("need 0 <= overlap < chunk_tokens")
     stride = chunk_tokens - overlap
-    w = F.split(norm_text(F.col(text_col)), " ")
+    w = F.split(norm_text(F.col("text")), " ")
     n = F.size(w)
     # number of windows: 1 + ceil(max(n - chunk, 0) / stride)
     n_chunks = F.lit(1) + F.ceil(
         F.greatest(n - F.lit(chunk_tokens), F.lit(0)) / F.lit(stride)
     ).cast("int")
     exploded = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         w.alias("_w"),
         F.posexplode(F.sequence(F.lit(0), n_chunks - F.lit(1))).alias(
             "chunk_id", "_start_idx"
         ),
     )
     return exploded.select(
-        id_col,
+        "doc_id",
         F.col("chunk_id").cast("int").alias("chunk_id"),
         F.least(
             F.lit(chunk_tokens),
@@ -217,17 +227,15 @@ def nfc_normalize(col: Column) -> Column:
     return F.pandas_udf(_nfc_fn, StringType())(col)
 
 
-def repetition_stats(
-    docs,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-):
+REPETITION_N = 3
+
+
+def repetition_stats(docs):
     """(doc_id, n_grams, dup_gram_ratio, top_word_share) — Gopher-style
     WITHIN-document repetition signals (Rae et al. 2021 §A1.1: docs whose
     text is dominated by repeated fragments or a single token are
-    low-quality): the fraction of word-``n``-gram occurrences that are
-    duplicates of an earlier occurrence, and the share of the document
+    low-quality): the fraction of word-n-gram occurrences (n =
+    ``REPETITION_N``) that are duplicates of an earlier occurrence, and the share of the document
     taken by its single most frequent word. Docs too short for an n-gram
     have dup_gram_ratio 0; empty/whitespace-only docs score 0 on both (an
     empty doc is not "maximally repetitive").
@@ -238,10 +246,11 @@ def repetition_stats(
     to the scan that reads the text."""
     from pyspark.sql import functions as F
 
+    n = REPETITION_N
     base = docs.select(
-        F.col(id_col), F.split(norm_text(F.col(text_col)), " ").alias("_w")
+        F.col("doc_id"), F.split(norm_text(F.col("text")), " ").alias("_w")
     ).select(
-        id_col,
+        "doc_id",
         "_w",
         F.expr(
             f"CASE WHEN size(_w) >= {n} THEN "
@@ -270,24 +279,24 @@ def repetition_stats(
         )
     )
     return base.select(
-        id_col,
+        "doc_id",
         n_grams.cast("int").alias("n_grams"),
         dup_ratio.alias("dup_gram_ratio"),
         top_share.alias("top_word_share"),
     )
 
 
-def vocab_edit_pairs(
-    docs,
-    max_dist: int = 2,
-    text_col: str = "text",
-):
+# vocab_edit_pairs reach: 1 or 2 edits
+VOCAB_EDIT_MAX_DIST = 2
+
+
+def vocab_edit_pairs(docs):
     """(term_a, term_b, dist, df_a, df_b) — corpus-vocabulary term pairs
-    within Levenshtein distance ``max_dist`` (1 or 2), with document-
-    frequency marginals: the typo/variant-mining primitive behind alias
-    discovery and OCR/typo normalization (a low-df term within distance 1-2
-    of a high-df term is a correction candidate; a pair of comparable df is
-    a spelling variant worth an alias edge).
+    within Levenshtein distance ``max_dist`` (``VOCAB_EDIT_MAX_DIST``, 1 or
+    2), with document-frequency marginals: the typo/variant-mining
+    primitive behind alias discovery and OCR/typo normalization (a low-df
+    term within distance 1-2 of a high-df term is a correction candidate; a
+    pair of comparable df is a spelling variant worth an alias edge).
 
     Scale shape — SymSpell deletion-signature blocking, pure Catalyst: each
     term emits its deletion neighborhood (the term, every 1-deletion, and —
@@ -304,9 +313,10 @@ def vocab_edit_pairs(
 
     from ..partitioning import spread_small_scan
 
+    max_dist = VOCAB_EDIT_MAX_DIST
     vocab = (
-        spread_small_scan(docs.select(text_col))
-        .select(F.explode(F.split(norm_text(F.col(text_col)), " ")).alias("term"))
+        spread_small_scan(docs.select("text"))
+        .select(F.explode(F.split(norm_text(F.col("text")), " ")).alias("term"))
         .where(F.col("term") != "")
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))

@@ -32,9 +32,6 @@ def curate_corpus(
     docs: DataFrame,
     keep_langs: tuple[str, ...] = DEFAULT_KEEP_LANGS,
     quality_floor: float = DEFAULT_QUALITY_FLOOR,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
 ) -> DataFrame:
     """(doc_id, verdict) — one row per input document."""
     from ..partitioning import spread_small_scan
@@ -43,26 +40,26 @@ def curate_corpus(
     # quality branches (single-row-group inputs otherwise run the regex
     # scoring on one core); the fingerprint frame is cached because the
     # keep-id aggregate AND the join-back both read it
-    base = spread_small_scan(docs.select(id_col, text_col, lang_col))
+    base = spread_small_scan(docs.select("doc_id", "text", "lang"))
     fp = cached(
-        base.select(F.col(id_col), fingerprint64(F.col(text_col)).alias("_fp"))
+        base.select(F.col("doc_id"), fingerprint64(F.col("text")).alias("_fp"))
     )
-    keep_ids = fp.groupBy("_fp").agg(F.min(id_col).alias("_keep_id"))
-    with_keep = fp.join(keep_ids, "_fp").select(id_col, "_keep_id")
+    keep_ids = fp.groupBy("_fp").agg(F.min("doc_id").alias("_keep_id"))
+    with_keep = fp.join(keep_ids, "_fp").select("doc_id", "_keep_id")
     scored = base.select(
-        F.col(id_col),
-        F.col(lang_col),
-        quality_score(F.col(text_col)).alias("_q"),
+        F.col("doc_id"),
+        F.col("lang"),
+        quality_score(F.col("text")).alias("_q"),
     )
     verdict = (
-        F.when(F.col(id_col) != F.col("_keep_id"), F.lit("exact_dup"))
-        .when(~F.col(lang_col).isin(*keep_langs), F.lit("lang"))
+        F.when(F.col("doc_id") != F.col("_keep_id"), F.lit("exact_dup"))
+        .when(~F.col("lang").isin(*keep_langs), F.lit("lang"))
         .when(F.col("_q") < F.lit(quality_floor), F.lit("quality"))
         .otherwise(F.lit("kept"))
     )
     return (
-        scored.join(with_keep, id_col)
-        .select(F.col(id_col), verdict.alias("verdict"))
+        scored.join(with_keep, "doc_id")
+        .select(F.col("doc_id"), verdict.alias("verdict"))
     )
 
 
@@ -80,12 +77,7 @@ BOILERPLATE_MIN_DF = 4
 BOILERPLATE_CENSUS_DOCS = 20_000
 
 
-def boilerplate_stats(
-    docs: DataFrame,
-    min_df: int = BOILERPLATE_MIN_DF,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def boilerplate_stats(docs: DataFrame, min_df: int = BOILERPLATE_MIN_DF) -> DataFrame:
     """Per-document boilerplate census: how much of each doc is made of
     passages repeated across the corpus (the repeated-passage signal behind
     C4/RefinedWeb-style boilerplate removal — nav bars, cookie banners,
@@ -118,8 +110,8 @@ def boilerplate_stats(
     rows."""
     from .dedup import _hashed_shingle_arrays
 
-    arr = _hashed_shingle_arrays(docs, id_col, text_col)
-    sh = arr.select(id_col, F.explode("sharr").alias("shingle"))
+    arr = _hashed_shingle_arrays(docs)
+    sh = arr.select("doc_id", F.explode("sharr").alias("shingle"))
     hot = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -141,20 +133,20 @@ def boilerplate_stats(
     # distinct here is over the tiny one-row-per-doc frame and keeps the
     # old duplicate-id tolerance — without it a doc_id appearing twice in
     # the input would fan out the docs left join below
-    per_doc = arr.select(id_col, F.size("sharr").alias("n_shingles")).distinct()
+    per_doc = arr.select("doc_id", F.size("sharr").alias("n_shingles")).distinct()
     boiler = (
-        sh.select(id_col, "shingle")
+        sh.select("doc_id", "shingle")
         .join(hot_side, "shingle", "left_semi")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_boiler"))
     )
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
-        .join(boiler, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
+        .join(boiler, "doc_id", "left")
         .fillna(0, subset=["n_shingles", "n_boiler"])
         .select(
-            id_col,
+            "doc_id",
             F.col("n_shingles").cast("int").alias("n_shingles"),
             F.col("n_boiler").cast("int").alias("n_boiler"),
             F.when(F.col("n_shingles") == 0, F.lit(0.0))
@@ -164,19 +156,16 @@ def boilerplate_stats(
     )
 
 
-def contamination_flags(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-    min_hits: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
-) -> DataFrame:
+# a document sharing at least this many distinct shingles with the
+# benchmark is contaminated
+CONTAM_MIN_HITS = 1
+
+
+def contamination_flags(docs: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
     """(doc_id, n_contam, contaminated) — benchmark DECONTAMINATION, the
     train/test-leak check every serious LLM data pipeline runs (GPT-3
     appendix C / PaLM-style n-gram collision): a document is contaminated
-    when it shares at least ``min_hits`` distinct word-``n``-gram shingles
+    when it shares at least ``CONTAM_MIN_HITS`` distinct word-``n``-gram shingles
     with ANY benchmark item. Docs too short to emit a shingle are clean by
     definition (n_contam = 0).
 
@@ -195,36 +184,31 @@ def contamination_flags(
     # the census below honest (cross-item duplication would inflate it
     # toward the gate)
     bench_sh = shingle_df(
-        benchmark.select(F.lit(0).alias("_bid"), F.col(bench_text_col)),
+        benchmark.select(F.lit(0).alias("_bid"), F.col("text")),
         "_bid",
-        bench_text_col,
+        "text",
         n=n,
     ).select("shingle").distinct()
     dim = broadcast_small(bench_sh)
-    doc_sh = shingle_df(docs, id_col, text_col, n=n)
+    doc_sh = shingle_df(docs, n=n)
     hits = (
         doc_sh.join(dim, "shingle", "left_semi")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_contam"))
     )
     return (
-        docs.select(id_col)
-        .join(hits, id_col, "left")
+        docs.select("doc_id")
+        .join(hits, "doc_id", "left")
         .fillna(0, subset=["n_contam"])
         .select(
-            id_col,
+            "doc_id",
             F.col("n_contam").cast("int").alias("n_contam"),
-            (F.col("n_contam") >= min_hits).alias("contaminated"),
+            (F.col("n_contam") >= CONTAM_MIN_HITS).alias("contaminated"),
         )
     )
 
 
-def source_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def source_stats(docs: DataFrame) -> DataFrame:
     """(source, n_docs, mean_quality, dup_ratio, mean_tokens) — the
     per-SOURCE curation census (RefinedWeb/C4 filter decisions are made
     per-domain, not per-document): document count, mean heuristic quality,
@@ -243,12 +227,12 @@ def source_stats(
     # frame — uncached, the quality/fingerprint regex work runs twice (and
     # on a single core for single-row-group inputs without the spread)
     fp = cached(
-        spread_small_scan(docs.select(id_col, source_col, text_col)).select(
-            F.col(id_col),
-            F.col(source_col).alias("source"),
-            quality_score(F.col(text_col)).alias("_q"),
-            ws_token_count(F.col(text_col)).alias("_tok"),
-            fingerprint64(F.col(text_col)).alias("_fp"),
+        spread_small_scan(docs.select("doc_id", "source", "text")).select(
+            F.col("doc_id"),
+            F.col("source").alias("source"),
+            quality_score(F.col("text")).alias("_q"),
+            ws_token_count(F.col("text")).alias("_tok"),
+            fingerprint64(F.col("text")).alias("_fp"),
         )
     )
     dup_counts = fp.groupBy("_fp").agg(F.count(F.lit(1)).alias("_n_fp"))
@@ -271,15 +255,10 @@ def source_stats(
 BALANCE_MAX_SHARE_PCT = 20
 
 
-def balance_sources(
-    docs: DataFrame,
-    max_share_pct: int = BALANCE_MAX_SHARE_PCT,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
+def balance_sources(docs: DataFrame) -> DataFrame:
     """(doc_id, source, keep) — DOMAIN BALANCING, the C4/RefinedWeb-style
     downsampling of over-represented sources: any source holding more than
-    ``max_share_pct`` % of the corpus is thinned to (approximately) that
+    ``BALANCE_MAX_SHARE_PCT`` % of the corpus is thinned to (approximately) that
     cap by a DETERMINISTIC content-hash draw, so the decision is stable
     across runs, partitionings and engines — no RNG, no resample drift
     between pipeline stages.
@@ -295,10 +274,10 @@ def balance_sources(
     per-row expression."""
     from ..functions.textstats import md5_int64
 
-    base = docs.select(F.col(id_col), F.col(source_col).alias("source"))
+    base = docs.select(F.col("doc_id"), F.col("source").alias("source"))
     totals = base.groupBy("source").agg(F.count(F.lit(1)).alias("_c"))
     n_total = base.count()
-    cap = (n_total * max_share_pct) // 100
+    cap = (n_total * BALANCE_MAX_SHARE_PCT) // 100
     # DIV (integer division on longs), not `/`: double division loses
     # precision once cap·10^6 passes 2^53 (a 10^10-doc corpus) and the
     # truncated cast would disagree with the oracle's exact integer result
@@ -310,31 +289,26 @@ def balance_sources(
         ).alias("_thr"),
     )
     dim = broadcast_small(thr)
-    bucket = F.pmod(md5_int64(F.col(id_col).cast("string")), F.lit(1_000_000))
+    bucket = F.pmod(md5_int64(F.col("doc_id").cast("string")), F.lit(1_000_000))
     return base.join(dim, "source").select(
-        id_col, "source", (bucket < F.col("_thr")).alias("keep")
+        "doc_id", "source", (bucket < F.col("_thr")).alias("keep")
     )
 
 
 ADAPTIVE_QUALITY_PCT = 0.25
 
 
-def adaptive_quality_flags(
-    docs: DataFrame,
-    pct: float = ADAPTIVE_QUALITY_PCT,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def adaptive_quality_flags(docs: DataFrame) -> DataFrame:
     """(doc_id, lang, quality, q_floor, keep) — per-LANGUAGE adaptive
     quality filtering: a single global floor (``curate_corpus``) is biased
     against languages the heuristic scores systematically lower (the
     stopword term is English-centric), so each language gets its own floor:
     the quality value at deterministic rank ``max(ceil(pct·n), 1)`` in
-    ascending (quality, doc_id) order — i.e. the exact lower ``pct``
-    quantile with integer-rank tie-breaks that hash identically across
-    engines. ``keep = quality ≥ q_floor`` drops just under ``pct`` of each
-    language's docs (ties at the floor survive).
+    ascending (quality, doc_id) order — i.e. the exact lower
+    ``pct = ADAPTIVE_QUALITY_PCT`` quantile with integer-rank tie-breaks
+    that hash identically across engines. ``keep = quality ≥ q_floor``
+    drops just under ``pct`` of each language's docs (ties at the floor
+    survive).
 
     Scale shape: NO per-language sort. ``quality_score`` rounds to 4 dp, so
     a (lang, quality) HISTOGRAM has ≤ ~10⁴ rows per language no matter the
@@ -352,10 +326,10 @@ def adaptive_quality_flags(
     # uncached, the quality regexes run twice (single-core on one-row-group
     # scans without the spread)
     scored = cached(
-        spread_small_scan(docs.select(id_col, text_col, lang_col)).select(
-            F.col(id_col),
-            F.col(lang_col).alias("lang"),
-            quality_score(F.col(text_col)).alias("quality"),
+        spread_small_scan(docs.select("doc_id", "text", "lang")).select(
+            F.col("doc_id"),
+            F.col("lang").alias("lang"),
+            quality_score(F.col("text")).alias("quality"),
         )
     )
     hist = scored.groupBy("lang", "quality").agg(F.count(F.lit(1)).alias("_c"))
@@ -363,7 +337,7 @@ def adaptive_quality_flags(
     cum = hist.withColumn("_cume", F.sum("_c").over(w)).withColumn(
         "_n", F.sum("_c").over(Window.partitionBy("lang"))
     )
-    target = F.greatest(F.ceil(F.lit(pct) * F.col("_n")), F.lit(1))
+    target = F.greatest(F.ceil(F.lit(ADAPTIVE_QUALITY_PCT) * F.col("_n")), F.lit(1))
     floors = (
         cum.where(F.col("_cume") >= target)
         .groupBy("lang")
@@ -372,7 +346,7 @@ def adaptive_quality_flags(
     return (
         scored.join(F.broadcast(floors), "lang")
         .select(
-            id_col,
+            "doc_id",
             "lang",
             "quality",
             "q_floor",

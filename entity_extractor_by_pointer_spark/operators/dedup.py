@@ -60,18 +60,23 @@ ROUND4_EPS = 1e-4
 # overhead (measured both ways; see _pair_intersections)
 PAIR_AGG_WIDE_DOCS = 20_000
 PAIR_AGG_WIDE_FACTOR = 4
+# embedding near-dup blocking: EMBED_LSH_BANDS bands of
+# EMBED_LSH_PLANES_PER_BAND seeded hyperplanes (b=10, r=16; the recall and
+# candidate-volume argument is in embedding_cosine_pairs_blocked)
+EMBED_LSH_BANDS = 10
+EMBED_LSH_PLANES_PER_BAND = 16
 
 
-def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Exact dedup groups: (fingerprint, keep_id = min id, n_dups).
 
     (No spread_small_scan here: one regex+md5 per doc is light enough that
     the repartition exchange measured SLOWER than the single-task scan —
     same result as doc_splits and the image-dims decode.)"""
-    fp = docs.select(F.col(id_col), fingerprint64(F.col(text_col)).alias("fingerprint"))
+    fp = docs.select(F.col("doc_id"), fingerprint64(F.col("text")).alias("fingerprint"))
     return (
         fp.groupBy("fingerprint")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
     )
 
 
@@ -128,10 +133,8 @@ def shingle_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", 
     )
 
 
-def _hashed_shingle_arrays(
-    docs: DataFrame, id_col: str, text_col: str, n: int = NGRAM_N
-) -> DataFrame:
-    """CACHED (id, sharr) — each doc's distinct word-n-gram shingles as an
+def _hashed_shingle_arrays(docs: DataFrame, n: int = NGRAM_N) -> DataFrame:
+    """CACHED (doc_id, sharr) — each doc's distinct word-n-gram shingles as an
     array of 8-byte xxhash64 values. The pair/verify machinery only ever
     compares shingles for equality, so the hash replaces the ~25-byte
     string everywhere (guide §2.3 narrow types); distinct-hash counts are
@@ -149,8 +152,8 @@ def _hashed_shingle_arrays(
     instead, where size() is an O(1) header read."""
     from ..partitioning import spread_small_scan
 
-    words = spread_small_scan(docs.select(id_col, text_col)).select(
-        F.col(id_col), F.split(norm_text(F.col(text_col)), " ").alias("w")
+    words = spread_small_scan(docs.select("doc_id", "text")).select(
+        F.col("doc_id"), F.split(norm_text(F.col("text")), " ").alias("w")
     )
     # hash each WORD once, then combine n word-hashes per shingle
     # (multi-arg xxhash64 chains the values) instead of building and
@@ -160,26 +163,21 @@ def _hashed_shingle_arrays(
     # space-joined concat is injective on word n-tuples, and the
     # (occurrence, distinct) counts of both hashings match exactly at
     # every test SF (verified: 2,620,593 / 27,865 at sf1.0).
-    wh = words.select(id_col, F.expr("transform(w, x -> xxhash64(x))").alias("wh"))
-    return cached(wh.select(id_col, F.expr(_shingle_arr_sql(n, hashed=True)).alias("sharr")))
+    wh = words.select("doc_id", F.expr("transform(w, x -> xxhash64(x))").alias("wh"))
+    return cached(wh.select("doc_id", F.expr(_shingle_arr_sql(n, hashed=True)).alias("sharr")))
 
 
-def _attach_pair_arrays(cand: DataFrame, arr_df: DataFrame, id_col: str) -> DataFrame:
+def _attach_pair_arrays(cand: DataFrame, arr_df: DataFrame) -> DataFrame:
     """Join an (id_a, id_b, ...) candidate frame with the cached per-doc
     hash-array table on both sides, adding ``_sa``/``_sb`` — the shared
     exact-verify shape (the candidate list is the small side of both
     joins, so the array table never shuffles)."""
-    va = arr_df.select(F.col(id_col).alias("id_a"), F.col("sharr").alias("_sa"))
-    vb = arr_df.select(F.col(id_col).alias("id_b"), F.col("sharr").alias("_sb"))
+    va = arr_df.select(F.col("doc_id").alias("id_a"), F.col("sharr").alias("_sa"))
+    vb = arr_df.select(F.col("doc_id").alias("id_b"), F.col("sharr").alias("_sb"))
     return cand.join(va, "id_a").join(vb, "id_b")
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """(id_a, id_b, jaccard) for pairs with Jaccard ≥ threshold.
 
     Blocking join on shingle; Jaccard on distinct-shingle sets. Skew from
@@ -209,8 +207,6 @@ def ngram_jaccard_pairs(
     bound = F.lit(t_eps / (1.0 + t_eps)) * (F.col("n_a") + F.col("n_b"))
     inter = _pair_intersections(
         docs,
-        id_col,
-        text_col,
         bound,
         # same inequality with both sizes at their corpus-wide minimum — a
         # constant, so it prunes right at the aggregate (no false prune)
@@ -232,8 +228,6 @@ def ngram_jaccard_pairs(
 
 def _pair_intersections(
     docs: DataFrame,
-    id_col: str,
-    text_col: str,
     qualify_bound,
     const_bound,
     size_ratio: float | None = None,
@@ -259,7 +253,7 @@ def _pair_intersections(
     # sizes become extra grouping keys (functionally dependent on the ids,
     # so the groups are unchanged). The helper caches the per-doc ARRAY
     # table; every consumer below re-explodes from that cache (cheap).
-    arr_df = _hashed_shingle_arrays(docs, id_col, text_col)
+    arr_df = _hashed_shingle_arrays(docs)
     # ONE aggregate over the ARRAY table (one row per doc) triples as (a)
     # the cache fill both paths need anyway, (b) the strategy/widening
     # census (count == docs.count()), and (c) the corpus-wide minimum
@@ -273,14 +267,14 @@ def _pair_intersections(
     ).first()
     cap = _cap_for(n_docs)
     sh = arr_df.select(
-        id_col,
+        "doc_id",
         F.size("sharr").alias("n_sh"),
         F.explode("sharr").alias("shingle"),
     )
 
     if cap is None:
         a, b = sh.alias("a"), sh.alias("b")
-        joined = a.join(b, "shingle").where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        joined = a.join(b, "shingle").where(F.col("a.doc_id") < F.col("b.doc_id"))
         if size_ratio is not None:
             # J ≥ τ ⟹ inter ≥ τ·max(n_a,n_b) and inter ≤ min(n_a,n_b),
             # hence min ≥ τ·max: size-incompatible pairs can never qualify.
@@ -308,12 +302,12 @@ def _pair_intersections(
             joined = joined.repartition(
                 joined.sparkSession.sparkContext.defaultParallelism
                 * PAIR_AGG_WIDE_FACTOR,
-                F.col(f"a.{id_col}"),
-                F.col(f"b.{id_col}"),
+                F.col("a.doc_id"),
+                F.col("b.doc_id"),
             )
         inter = joined.groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
             F.col("a.n_sh").alias("n_a"),
             F.col("b.n_sh").alias("n_b"),
         ).agg(F.count(F.lit(1)).alias("n_inter"))
@@ -345,7 +339,7 @@ def _pair_intersections(
     hot_dim = broadcast_small(hot)
     block = sh.join(hot_dim, "shingle", "left_anti")
     a, b = block.alias("a"), block.alias("b")
-    joined = a.join(b, "shingle").where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    joined = a.join(b, "shingle").where(F.col("a.doc_id") < F.col("b.doc_id"))
     if size_ratio is not None:
         # same no-false-prune size-compatibility cut as the exact path
         joined = joined.where(
@@ -353,8 +347,8 @@ def _pair_intersections(
             & (F.col("a.n_sh") >= F.lit(size_ratio) * F.col("b.n_sh"))
         )
     rare_inter = joined.groupBy(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
+        F.col("a.doc_id").alias("id_a"),
+        F.col("b.doc_id").alias("id_b"),
         F.col("a.n_sh").alias("n_a"),
         F.col("b.n_sh").alias("n_b"),
     ).agg(F.count(F.lit(1)).alias("rare_inter"))
@@ -364,9 +358,9 @@ def _pair_intersections(
     # over nearly the whole corpus when most shingles clear the cap. No
     # broadcast hint: AQE sizes the join from runtime stats (the rare
     # count can approach one row per doc on a crawl-shaped corpus).
-    rare_cnt = block.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_rare"))
-    ra = rare_cnt.select(F.col(id_col).alias("id_a"), F.col("n_rare").alias("r_a"))
-    rb = rare_cnt.select(F.col(id_col).alias("id_b"), F.col("n_rare").alias("r_b"))
+    rare_cnt = block.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_rare"))
+    ra = rare_cnt.select(F.col("doc_id").alias("id_a"), F.col("n_rare").alias("r_a"))
+    rb = rare_cnt.select(F.col("doc_id").alias("id_b"), F.col("n_rare").alias("r_b"))
     bounded = (
         rare_inter.join(ra, "id_a", "left")
         .join(rb, "id_b", "left")
@@ -385,18 +379,13 @@ def _pair_intersections(
     # would OOM instead of degrading to a shuffle join.
     cand = broadcast_small(bounded.select("id_a", "id_b", "n_a", "n_b"))
     return (
-        _attach_pair_arrays(cand, arr_df, id_col)
+        _attach_pair_arrays(cand, arr_df)
         .withColumn("n_inter", F.size(F.array_intersect("_sa", "_sb")))
         .select("id_a", "id_b", "n_inter", "n_a", "n_b")
     )
 
 
-def containment_pairs(
-    docs: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def containment_pairs(docs: DataFrame, threshold: float = 0.9) -> DataFrame:
     """DIRECTIONAL near-dup pairs (id_a, id_b, containment) with
     ``containment = |shingles(a) ∩ shingles(b)| / |shingles(a)| ≥ threshold``
     — the asymmetric complement of Jaccard. A short page wholly quoted
@@ -417,8 +406,6 @@ def containment_pairs(
     bound = F.lit(t_eps) * F.least("n_a", "n_b")
     inter = _pair_intersections(
         docs,
-        id_col,
-        text_col,
         bound,
         # τ·min(n_a, n_b) ≥ τ·n_min — constant, prunes before the size joins
         const_bound=lambda n_min: t_eps * n_min,
@@ -445,14 +432,9 @@ def containment_pairs(
     return both.where(F.col("containment") >= threshold)
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    hashed_arrays: DataFrame | None = None,
-) -> DataFrame:
-    """(id, mh_0 … mh_{k-1}): min over shingles of seeded md5-derived hashes.
+def minhash_signatures(docs: DataFrame, hashed_arrays: DataFrame | None = None) -> DataFrame:
+    """(doc_id, mh_0 … mh_{k-1}), k = ``MINHASH_K``: min over shingles of
+    seeded md5-derived hashes.
 
     One md5 digest yields TWO independent 60-bit hash functions (hex chars
     1-15 and 17-31), so k functions cost k/2 digests — the md5 is the
@@ -469,6 +451,7 @@ def minhash_signatures(
     broadcast gate (a crawl-scale vocabulary, where the dedup factor is ~1
     and a dim join would add a shuffle for nothing) the digests are
     computed inline per row exactly as before."""
+    k = MINHASH_K
 
     def _digest_cols(src):
         proj = src
@@ -501,23 +484,23 @@ def minhash_signatures(
 
     # _th (an xxhash64 of the text) tells apart rows that share a doc id, so
     # the representative join below picks exactly one text
-    words = spread_small_scan(docs.select(id_col, text_col)).select(
-        F.col(id_col),
-        F.xxhash64(text_col).alias("_th"),
-        F.split(norm_text(F.col(text_col)), " ").alias("w"),
+    words = spread_small_scan(docs.select("doc_id", "text")).select(
+        F.col("doc_id"),
+        F.xxhash64("text").alias("_th"),
+        F.split(norm_text(F.col("text")), " ").alias("w"),
     )
     wh_words = words.select(
-        id_col, "_th", "w", F.expr("transform(w, x -> xxhash64(x))").alias("wh")
+        "doc_id", "_th", "w", F.expr("transform(w, x -> xxhash64(x))").alias("wh")
     )
     occ = wh_words.select(
-        id_col,
+        "doc_id",
         "_th",
         F.posexplode_outer(
             F.expr(_shingle_arr_sql(NGRAM_N, hashed=True, positional=True))
         ).alias("pos", "_hsh"),
     ).where(F.col("_hsh").isNotNull())
     reps = cached(
-        occ.groupBy("_hsh").agg(F.min(F.struct(id_col, "_th", "pos")).alias("r"))
+        occ.groupBy("_hsh").agg(F.min(F.struct("doc_id", "_th", "pos")).alias("r"))
     )
     if fits_broadcast(reps.count()):
         # rebuild one string per DISTINCT shingle: broadcast the (hash,
@@ -526,12 +509,12 @@ def minhash_signatures(
         # same string — and therefore the same digests)
         rep_rows = reps.select(
             "_hsh",
-            F.col(f"r.{id_col}").alias(id_col),
+            F.col("r.doc_id").alias("doc_id"),
             F.col("r._th").alias("_th"),
             F.col("r.pos").alias("pos"),
         )
         vocab = F.broadcast(rep_rows).join(
-            words, [id_col, "_th"]
+            words, ["doc_id", "_th"]
         ).select(
             "_hsh",
             F.concat_ws(
@@ -543,43 +526,44 @@ def minhash_signatures(
         if hashed_arrays is not None:
             # a caller with more consumers shares its cached array table
             rows_src = hashed_arrays.select(
-                id_col, F.explode("sharr").alias("_hsh")
+                "doc_id", F.explode("sharr").alias("_hsh")
             )
         else:
             # signatures are this caller's only array consumer — explode
             # inline off the scan (explode_outer dodges the inferred
             # filter, see above) instead of paying a cache fill
             rows_src = wh_words.select(
-                id_col,
+                "doc_id",
                 F.explode_outer(
                     F.expr(_shingle_arr_sql(NGRAM_N, hashed=True))
                 ).alias("_hsh"),
             ).where(F.col("_hsh").isNotNull())
         rows = rows_src.join(F.broadcast(dim), "_hsh")
-        hashed = rows.select(id_col, *[F.col(f"h_{i}") for i in range(k)])
+        hashed = rows.select("doc_id", *[F.col(f"h_{i}") for i in range(k)])
     else:
         # crawl-scale vocabulary (dedup factor ~1): inline digests per
         # occurrence row, straight off the scan — a dim join would add a
         # shuffle for nothing
         sh_inline = words.select(
-            id_col,
+            "doc_id",
             F.explode_outer(
                 F.expr(_shingle_arr_sql(NGRAM_N, hashed=False))
             ).alias("shingle"),
         ).where(F.col("shingle").isNotNull())
         proj, cols = _digest_cols(sh_inline)
-        hashed = proj.select(id_col, *cols)
-    return hashed.groupBy(id_col).agg(
+        hashed = proj.select("doc_id", *cols)
+    return hashed.groupBy("doc_id").agg(
         *[F.min(f"h_{i}").alias(f"mh_{i}") for i in range(k)]
     )
 
 
-def _minhash_bands(sig: DataFrame, id_col: str, k: int, bands: int) -> DataFrame:
-    """(id, band, bh) — one row per (doc, band), ``bh`` the md5 of the
-    band's ``k // bands`` MinHash components (one explode over ``sig``)."""
-    rows_per_band = k // bands
+def _minhash_bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, bh) — one row per (doc, band), ``bh`` the md5 of the
+    band's ``MINHASH_K // MINHASH_BANDS`` MinHash components (one explode
+    over ``sig``)."""
+    rows_per_band = MINHASH_K // MINHASH_BANDS
     band_cols = []
-    for bidx in range(bands):
+    for bidx in range(MINHASH_BANDS):
         cols = [F.col(f"mh_{bidx * rows_per_band + j}") for j in range(rows_per_band)]
         band_cols.append(
             F.struct(
@@ -587,8 +571,8 @@ def _minhash_bands(sig: DataFrame, id_col: str, k: int, bands: int) -> DataFrame
                 F.md5(F.concat_ws("|", *cols).cast("binary")).alias("bh"),
             )
         )
-    return sig.select(id_col, F.explode(F.array(*band_cols)).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
+    return sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bb")).select(
+        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
     )
 
 
@@ -605,14 +589,7 @@ def _band_candidates(buckets: DataFrame, id_col: str, key: str) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """LSH candidate generation + exact Jaccard verification.
 
     Only the DISTINCT vocabulary is ever materialized as strings (inside
@@ -623,21 +600,19 @@ def minhash_lsh_pairs(
     verify scores each candidate pair with ``array_intersect`` — the r5
     verify shuffled the full 2.6M-row (id, shingle-string) table twice to
     count overlaps for a few thousand candidate pairs."""
-    arr_h = _hashed_shingle_arrays(docs, id_col, text_col)
+    arr_h = _hashed_shingle_arrays(docs)
     # one row per doc, k minhash columns — persisting it keeps the k-hash
     # aggregation (the dominant per-shingle md5 cost) out of BOTH sides of
     # the banded self-join
-    sig = cached(
-        minhash_signatures(docs, id_col, text_col, k, hashed_arrays=arr_h)
-    )
-    cand = _band_candidates(_minhash_bands(sig, id_col, k, bands), id_col, "bh")
+    sig = cached(minhash_signatures(docs, hashed_arrays=arr_h))
+    cand = _band_candidates(_minhash_bands(sig), "doc_id", "bh")
     # verify candidates with exact Jaccard via the per-doc hash arrays
     # (the same cached table the signature rows exploded from) — the
     # shared _attach_pair_arrays shape with array_intersect per pair
     n_inter = F.size(F.array_intersect("_sa", "_sb"))
     n_a, n_b = F.size("_sa"), F.size("_sb")
     return (
-        _attach_pair_arrays(cand, arr_h, id_col)
+        _attach_pair_arrays(cand, arr_h)
         .withColumn(
             "jaccard",
             F.round(n_inter / (n_a + n_b - n_inter), 4),
@@ -647,27 +622,20 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_est_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-) -> DataFrame:
+def minhash_est_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """(id_a, id_b, est) — banded LSH candidates verified by the SIGNATURE
     Jaccard estimate (fraction of equal MinHash components), not the exact
     shingle Jaccard: it flags exactly the pairs that collide in ≥1 band
     with est ≥ threshold. Cheaper than `minhash_lsh_pairs` (no second pass
     over shingles) at the cost of estimate noise — the production pick when
     downstream tolerates ~1/k resolution."""
-    sig = cached(minhash_signatures(docs, id_col, text_col, k))
-    cand = _band_candidates(_minhash_bands(sig, id_col, k, bands), id_col, "bh")
+    sig = cached(minhash_signatures(docs))
+    cand = _band_candidates(_minhash_bands(sig), "doc_id", "bh")
     arr = sig.select(
-        id_col, F.array(*[F.col(f"mh_{i}") for i in range(k)]).alias("sig")
+        "doc_id", F.array(*[F.col(f"mh_{i}") for i in range(MINHASH_K)]).alias("sig")
     )
-    sa = arr.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = arr.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
+    sa = arr.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
+    sb = arr.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
     eq = F.aggregate(
         F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
         F.lit(0),
@@ -676,16 +644,15 @@ def minhash_est_pairs(
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .withColumn("est", F.round(eq / F.lit(k), 4))
+        .withColumn("est", F.round(eq / F.lit(MINHASH_K), 4))
         .where(F.col("est") >= threshold)
         .select("id_a", "id_b", "est")
     )
 
 
-def simhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = SIMHASH_BITS
-) -> DataFrame:
-    """W-bit SimHash over whitespace words (term-frequency weighted).
+def simhash_signatures(docs: DataFrame) -> DataFrame:
+    """``SIMHASH_BITS``-bit SimHash over whitespace words (term-frequency
+    weighted).
 
     (A distinct-word md5 dim — the ``minhash_signatures`` pattern — was
     tried in r6 and measured 2x SLOWER here: one md5 per occurrence is
@@ -693,31 +660,25 @@ def simhash_signatures(
     inline hash stays.)"""
     from ..partitioning import spread_small_scan
 
-    words = spread_small_scan(docs.select(id_col, text_col)).select(
-        F.col(id_col),
-        F.explode(F.split(norm_text(F.col(text_col)), " ")).alias("word"),
+    words = spread_small_scan(docs.select("doc_id", "text")).select(
+        F.col("doc_id"),
+        F.explode(F.split(norm_text(F.col("text")), " ")).alias("word"),
     ).where(F.col("word") != "")
     hashed = words.withColumn("h", md5_int64(F.col("word")))
-    bit_sums = hashed.groupBy(id_col).agg(
+    bit_sums = hashed.groupBy("doc_id").agg(
         *[
             F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"s_{j}")
-            for j in range(bits)
+            for j in range(SIMHASH_BITS)
         ]
     )
     sig = None
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         term = F.when(F.col(f"s_{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
         sig = term if sig is None else sig + term
-    return bit_sums.select(F.col(id_col), sig.cast("bigint").alias("simhash"))
+    return bit_sums.select(F.col("doc_id"), sig.cast("bigint").alias("simhash"))
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = SIMHASH_BITS,
-) -> DataFrame:
+def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """(id_a, id_b, hamming ≤ max_hamming). Candidate blocking by the
     pigeonhole principle: split the signature into ``max_hamming + 1`` bit
     blocks — any pair within distance d must agree exactly on ≥1 block, so
@@ -726,13 +687,13 @@ def simhash_pairs(
     # 60-aggregate groupBy); it feeds BOTH sides of the candidate self-join,
     # so persist it — uncached, Spark recomputes it once per block per side
     # (8x at max_hamming=3)
-    sig = cached(simhash_signatures(docs, id_col, text_col, bits))
+    sig = cached(simhash_signatures(docs))
     n_blocks = max_hamming + 1
-    width = bits // n_blocks
+    width = SIMHASH_BITS // n_blocks
     # one row per (doc, block) via explode — a single pass over sig, not an
     # n_blocks-way union
     blocks = sig.select(
-        id_col,
+        "doc_id",
         "simhash",
         F.explode(
             F.array(
@@ -751,10 +712,10 @@ def simhash_pairs(
     a, b = blocks.alias("a"), blocks.alias("b")
     cand = (
         a.join(b, "blk")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
             F.col("a.simhash").alias("sh_a"),
             F.col("b.simhash").alias("sh_b"),
         )
@@ -767,19 +728,13 @@ def simhash_pairs(
     )
 
 
-def embedding_cosine_pairs_blocked(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bands: int = 10,
-    planes_per_band: int = 16,
-    seed: int | None = None,
-) -> DataFrame:
-    """Near-duplicate pairs by cosine ≥ threshold — the crawl-scale path.
+def embedding_cosine_pairs_blocked(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
+    """Near-duplicate (vec_id) pairs by cosine ≥ threshold over the
+    ``embedding`` column — the crawl-scale path.
 
-    Banded random-hyperplane LSH: each band hashes a vector to a sign-pattern
-    bucket over its own ``planes_per_band`` seeded hyperplanes; candidates
+    Banded random-hyperplane LSH: each of ``EMBED_LSH_BANDS`` bands hashes a
+    vector to a sign-pattern bucket over its own
+    ``EMBED_LSH_PLANES_PER_BAND`` seeded hyperplanes; candidates
     are the equi-self-join on (band, bucket) — NO cross join anywhere — and
     every candidate is verified with the exact cosine, so precision is 1.0
     by construction. Recall per pair at angle θ is 1-(1-(1-θ/π)^r)^b, which
@@ -793,7 +748,7 @@ def embedding_cosine_pairs_blocked(
     candidates. The seeded planes are deterministic numpy constants, so the
     blocking is reproducible across runs and engines.
 
-    All ``bands × planes_per_band`` projections are computed in ONE
+    All b·r projections are computed in ONE
     vectorized Arrow pass (a single (n,d)@(d,160) matmul per batch) instead
     of b·r interpreted higher-order folds per row — the guide §4.2 shape:
     Spark does distribution and the join; numpy does the bulk math. The
@@ -801,15 +756,16 @@ def embedding_cosine_pairs_blocked(
     is ≥ 3e-7 (measured), eleven orders above float64 summation-order noise,
     so bucket signs are stable regardless of fold order.
     """
-    from .similarity import LSH_SEED, lsh_planes
+    from .similarity import lsh_planes
 
-    planes = lsh_planes(bands * planes_per_band, seed=LSH_SEED if seed is None else seed)
+    n_bands, n_ppb = EMBED_LSH_BANDS, EMBED_LSH_PLANES_PER_BAND
+    planes = lsh_planes(n_bands * n_ppb)
     n = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id"),
+        F.col("embedding").cast("array<double>").alias("v"),
         F.sqrt(
             F.aggregate(
-                F.col(vec_col).cast("array<double>"), F.lit(0.0), lambda acc, x: acc + x * x
+                F.col("embedding").cast("array<double>"), F.lit(0.0), lambda acc, x: acc + x * x
             )
         ).alias("norm"),
     )
@@ -817,8 +773,7 @@ def embedding_cosine_pairs_blocked(
 
     import numpy as np
 
-    plane_t = planes.T.copy()  # (dim, bands*planes_per_band)
-    n_bands, n_ppb = bands, planes_per_band
+    plane_t = planes.T.copy()  # (dim, bands*ppb)
 
     def _bucket_batches(it):
         import pandas as pd
@@ -837,7 +792,7 @@ def embedding_cosine_pairs_blocked(
             bucket = signs @ weights  # (rows, bands)
             yield pd.DataFrame(
                 {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), n_bands),
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), n_bands),
                     "band": np.tile(np.arange(n_bands, dtype=np.int32), len(pdf)),
                     "bucket": bucket.reshape(-1),
                 }
@@ -846,15 +801,15 @@ def embedding_cosine_pairs_blocked(
     # cached: the banded self-join reads the bucket table on BOTH sides —
     # uncached, the Arrow projection pass would run twice. The id column
     # keeps its INPUT type (string canon ids etc.), not a hardcoded long.
-    id_type = n.schema[id_col].dataType.simpleString()
+    id_type = n.schema["vec_id"].dataType.simpleString()
     buckets = cached(
-        n.select(id_col, "v").mapInPandas(
-            _bucket_batches, schema=f"{id_col} {id_type}, band int, bucket long"
+        n.select("vec_id", "v").mapInPandas(
+            _bucket_batches, schema=f"vec_id {id_type}, band int, bucket long"
         )
     )
-    cand = _band_candidates(buckets, id_col, "bucket")
-    va = n.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
-    vb = n.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
+    cand = _band_candidates(buckets, "vec_id", "bucket")
+    va = n.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
+    vb = n.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
     dot = F.aggregate(
         F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )

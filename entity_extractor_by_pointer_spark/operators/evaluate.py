@@ -44,25 +44,23 @@ GOLD_SCHEMA = T.StructType(
 def gold_mention_sets(
     pages_with_gold: DataFrame,
     max_sequence_length: int = 200,
-    id_col: str = "url",
-    text_col: str = "text",
-    gold_col: str = "gold_entities",
 ) -> DataFrame:
-    """Explode gold spans with the reference's alignment filter + set
-    semantics. Narrow mapInPandas stage + a distinct. A document's token
-    starts and inclusive token ends come from one ``tokenize_batch`` pass per
-    Arrow batch, truncated like the ``truncation=True`` encoding the
-    reference filters against (``[CLS]`` + L−2 tokens + ``[SEP]``)."""
+    """Explode the ``gold_entities`` spans of (url, text, gold_entities)
+    pages with the reference's alignment filter + set semantics. Narrow
+    mapInPandas stage + a distinct. A document's token starts and inclusive
+    token ends come from one ``tokenize_batch`` pass per Arrow batch,
+    truncated like the ``truncation=True`` encoding the reference filters
+    against (``[CLS]`` + L−2 tokens + ``[SEP]``)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             doc, start, end, _ids = tokenize_batch(
-                pdf[text_col].fillna("").tolist(), max_sequence_length - 2
+                pdf["text"].fillna("").tolist(), max_sequence_length - 2
             )
             bounds = np.searchsorted(doc, np.arange(len(pdf) + 1)).tolist()
             start, last = start.tolist(), (end - 1).tolist()
-            for d, (rid, entities) in enumerate(zip(pdf[id_col], pdf[gold_col])):
+            for d, (rid, entities) in enumerate(zip(pdf["url"], pdf["gold_entities"])):
                 if entities is None or len(entities) == 0:
                     continue
                 starts = set(start[bounds[d] : bounds[d + 1]])
@@ -72,7 +70,7 @@ def gold_mention_sets(
                         rows.append((rid, ent["type"], ent["entity"]))
             yield pd.DataFrame(rows, columns=["url", "type", "entity"])
 
-    exploded = pages_with_gold.select(id_col, text_col, gold_col).mapInPandas(run, GOLD_SCHEMA)
+    exploded = pages_with_gold.select("url", "text", "gold_entities").mapInPandas(run, GOLD_SCHEMA)
     return exploded.dropDuplicates(["url", "type", "entity"])
 
 

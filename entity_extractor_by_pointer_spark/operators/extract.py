@@ -35,11 +35,11 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(_extract_one)
 
 
-def with_extracted_text(df, html_col: str = "html", out_col: str = "extracted_text"):
-    """pages(html, ...) → pages + extracted text column.
+def with_extracted_text(df):
+    """pages(html, ...) → pages + ``extracted_text`` column.
 
     Column-pruning note (SURVEY.md §4): callers that don't need ``html``
     should select it away immediately after this stage so the binary column
     never flows through a shuffle.
     """
-    return df.withColumn(out_col, extract_text_udf(F.col(html_col)))
+    return df.withColumn("extracted_text", extract_text_udf(F.col("html")))

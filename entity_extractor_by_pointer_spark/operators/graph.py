@@ -163,12 +163,9 @@ def pagerank(
 PMI_MAX_ENTITIES_PER_DOC = 256
 
 
-def entity_pmi_edges(
-    canon_mentions: DataFrame,
-    id_col: str = "doc_id",
-    entity_col: str = "canon_id",
-) -> DataFrame:
-    """Pointwise-mutual-information edge weights for the co-occurrence KG:
+def entity_pmi_edges(canon_mentions: DataFrame) -> DataFrame:
+    """Pointwise-mutual-information edge weights for the co-occurrence KG
+    over (doc_id, canon_id) mentions:
     (entity_a, entity_b, co_docs, pmi) for every unordered canonical-entity
     pair that co-occurs in at least one document, with
 
@@ -186,9 +183,9 @@ def entity_pmi_edges(
     cardinality — above ``cache.BROADCAST_ROWS_MAX`` the hint is withheld
     and the join shuffles (AQE may still broadcast if runtime stats
     allow). N rides a 1-row broadcast either way."""
-    cm = cached(canon_mentions.select(id_col, entity_col).distinct())
-    per_doc = cm.groupBy(id_col).agg(F.count(F.lit(1)).alias("_k"))
-    dfe = cached(cm.groupBy(entity_col).agg(F.count(F.lit(1)).alias("df")))
+    cm = cached(canon_mentions.select("doc_id", "canon_id").distinct())
+    per_doc = cm.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_k"))
+    dfe = cached(cm.groupBy("canon_id").agg(F.count(F.lit(1)).alias("df")))
     # BOTH censuses (max per-doc fan-out, df-table cardinality) ride ONE
     # job — a union of two 1-row aggregates over the cached relations; the
     # dfe branch doubles as dfe's cache fill, so on a clean corpus the gate
@@ -208,22 +205,22 @@ def entity_pmi_edges(
     if (census["max_k"] or 0) > PMI_MAX_ENTITIES_PER_DOC:
         # pathological corpus: rebuild the marginals from the filtered
         # mention set (df/N must exclude the dropped docs)
-        ok = per_doc.where(F.col("_k") <= PMI_MAX_ENTITIES_PER_DOC).select(id_col)
-        cm = cached(cm.join(ok, id_col, "left_semi"))
-        dfe = cached(cm.groupBy(entity_col).agg(F.count(F.lit(1)).alias("df")))
+        ok = per_doc.where(F.col("_k") <= PMI_MAX_ENTITIES_PER_DOC).select("doc_id")
+        cm = cached(cm.join(ok, "doc_id", "left_semi"))
+        dfe = cached(cm.groupBy("canon_id").agg(F.count(F.lit(1)).alias("df")))
         n_entities = dfe.count()
-    n_corpus = cm.select(F.countDistinct(id_col).alias("n_corpus"))
+    n_corpus = cm.select(F.countDistinct("doc_id").alias("n_corpus"))
     hint = F.broadcast if fits_broadcast(n_entities) else (lambda d: d)
-    a = cm.select(F.col(id_col).alias("_d"), F.col(entity_col).alias("entity_a"))
-    b = cm.select(F.col(id_col).alias("_d"), F.col(entity_col).alias("entity_b"))
+    a = cm.select(F.col("doc_id").alias("_d"), F.col("canon_id").alias("entity_a"))
+    b = cm.select(F.col("doc_id").alias("_d"), F.col("canon_id").alias("entity_b"))
     pairs = (
         a.join(b, "_d")
         .where(F.col("entity_a") < F.col("entity_b"))
         .groupBy("entity_a", "entity_b")
         .agg(F.count(F.lit(1)).alias("co_docs"))
     )
-    df_a = dfe.select(F.col(entity_col).alias("entity_a"), F.col("df").alias("df_a"))
-    df_b = dfe.select(F.col(entity_col).alias("entity_b"), F.col("df").alias("df_b"))
+    df_a = dfe.select(F.col("canon_id").alias("entity_a"), F.col("df").alias("df_a"))
+    df_b = dfe.select(F.col("canon_id").alias("entity_b"), F.col("df").alias("df_b"))
     return (
         pairs.join(hint(df_a), "entity_a")
         .join(hint(df_b), "entity_b")

@@ -112,14 +112,7 @@ def corrupt_triples(triples: DataFrame, k: int = 2) -> DataFrame:
     )
 
 
-def entity_context_embeddings(
-    canon_mentions: DataFrame,
-    embeddings: DataFrame,
-    id_col: str = "doc_id",
-    entity_col: str = "canon_id",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def entity_context_embeddings(canon_mentions: DataFrame, embeddings: DataFrame) -> DataFrame:
     """(canon_id, dim, val) — each canonical entity's context embedding:
     the per-dimension mean of the document embeddings of every doc that
     mentions it (rounded to 6 dp). The standard cheap entity representation
@@ -134,14 +127,14 @@ def entity_context_embeddings(
     combined aggregation on (entity, dim). Rows out = entities × dims —
     emitted long-form because the driver canonicalizer (and most SQL
     engines) hash scalars, not arrays."""
-    cm = canon_mentions.select(id_col, entity_col).distinct()
+    cm = canon_mentions.select("doc_id", "canon_id").distinct()
     vecs = embeddings.select(
-        F.col(vec_id_col).alias(id_col), F.col(vec_col).alias("_v")
+        F.col("vec_id").alias("doc_id"), F.col("embedding").alias("_v")
     )
     return (
-        cm.join(vecs, id_col)
-        .select(entity_col, F.posexplode("_v").alias("dim", "_val"))
-        .groupBy(entity_col, "dim")
+        cm.join(vecs, "doc_id")
+        .select("canon_id", F.posexplode("_v").alias("dim", "_val"))
+        .groupBy("canon_id", "dim")
         .agg(F.round(F.avg("_val"), 6).alias("val"))
     )
 
@@ -155,11 +148,7 @@ ENTITY_ANN_BRUTE_MAX = 20_000
 
 
 def entity_related_by_embedding(
-    canon_mentions: DataFrame,
-    embeddings: DataFrame,
-    k: int = 3,
-    id_col: str = "doc_id",
-    entity_col: str = "canon_id",
+    canon_mentions: DataFrame, embeddings: DataFrame, k: int = 3
 ) -> DataFrame:
     """(query_id, neighbor_id, rank) — nearest entities by context-embedding
     cosine: the "related entities" ranking driven by the documents entities
@@ -182,18 +171,16 @@ def entity_related_by_embedding(
     from ..cache import cached
     from .similarity import ann_topk_bruteforce, ann_topk_lsh
 
-    vecs = entity_context_embeddings(
-        canon_mentions, embeddings, id_col=id_col, entity_col=entity_col
-    )
+    vecs = entity_context_embeddings(canon_mentions, embeddings)
     arr = (
-        vecs.groupBy(entity_col)
+        vecs.groupBy("canon_id")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("dim", "val"))),
                 lambda s: s["val"],
             ).alias("embedding")
         )
-        .withColumnRenamed(entity_col, "vec_id")
+        .withColumnRenamed("canon_id", "vec_id")
     )
     arr = cached(arr)
     if arr.count() <= ENTITY_ANN_BRUTE_MAX:

@@ -51,12 +51,10 @@ def disambiguate_mentions(
     candidates: DataFrame,
     profiles: DataFrame,
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Context-based disambiguation for AMBIGUOUS surfaces: when one surface
-    maps to several candidate entities, pick per (doc, surface) the entity
-    whose term profile overlaps the document's token set most.
+    maps to several candidate entities, pick per (doc_id, surface) the
+    entity whose term profile overlaps the document's token set most.
 
     - ``candidates``: (surface, entity_id) — one row per candidate sense
       (the ambiguous complement of the 1:1 ``alias_df`` dictionary).
@@ -88,12 +86,12 @@ def disambiguate_mentions(
     map-side-combinable struct-max aggregate, not a window sort."""
     from ..partitioning import spread_small_scan
 
-    toks = spread_small_scan(docs.select(id_col, text_col)).select(
-        F.col(id_col),
+    toks = spread_small_scan(docs.select("doc_id", "text")).select(
+        F.col("doc_id"),
         F.explode(
             F.split(
                 F.regexp_replace(
-                    F.lower(F.col(text_col)),
+                    F.lower(F.col("text")),
                     "([^A-Za-z0-9 \t\n\r\f])",
                     " $1 ",
                 ),
@@ -107,8 +105,8 @@ def disambiguate_mentions(
     # is ~doc length — deduping it first would shuffle the whole corpus)
     affinity = (
         toks.join(F.broadcast(profiles), "term")
-        .dropDuplicates([id_col, "term", "entity_id"])
-        .groupBy(id_col, "entity_id")
+        .dropDuplicates(["doc_id", "term", "entity_id"])
+        .groupBy("doc_id", "entity_id")
         .agg(F.count(F.lit(1)).alias("overlap"))
     )
     cand_dim = candidates.select(
@@ -116,12 +114,12 @@ def disambiguate_mentions(
     )
     fact = (
         mentions.withColumn("_norm_surface", F.lower(F.trim(F.col("entity"))))
-        .select(id_col, "entity", "_norm_surface")
+        .select("doc_id", "entity", "_norm_surface")
         .dropDuplicates()
     )
     scored = (
         fact.join(F.broadcast(cand_dim), "_norm_surface")
-        .join(affinity, [id_col, "entity_id"], "left")
+        .join(affinity, ["doc_id", "entity_id"], "left")
         .fillna(0, subset=["overlap"])
     )
     # lexicographic max over (overlap, reversed entity_id): ties on overlap
@@ -129,7 +127,7 @@ def disambiguate_mentions(
     # key via unicode complement is not SQL-portable, so carry -overlap and
     # use min over (neg_overlap, entity_id) instead
     return (
-        scored.groupBy(id_col, "entity")
+        scored.groupBy("doc_id", "entity")
         .agg(
             F.min(
                 F.struct(
@@ -138,7 +136,7 @@ def disambiguate_mentions(
             ).alias("m")
         )
         .select(
-            id_col,
+            "doc_id",
             "entity",
             F.col("m.entity_id").alias("entity_id"),
             F.col("m.overlap").cast("int").alias("score"),

@@ -48,21 +48,17 @@ MENTIONS_SCHEMA = T.StructType(
 _COLS = [f.name for f in MENTIONS_SCHEMA.fields]
 
 
-def detect_mentions(
-    df: DataFrame,
-    config: NerConfig,
-    id_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
-    """Model-path mention detection. Narrow stage, no shuffle."""
+def detect_mentions(df: DataFrame, config: NerConfig) -> DataFrame:
+    """Model-path mention detection over (url, text) rows. Narrow stage, no
+    shuffle."""
     classes = list(config.classes)
     model_tag = config.model_type
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = MODEL_CACHE.get(config)  # one model per executor worker
         for pdf in batches:
-            texts = pdf[text_col].fillna("").tolist()
-            ids = pdf[id_col].tolist()
+            texts = pdf["text"].fillna("").tolist()
+            ids = pdf["url"].tolist()
             rows = []
             for rid, spans in zip(ids, model.predict_batch(texts)):
                 for sp in spans:
@@ -71,7 +67,7 @@ def detect_mentions(
                     )
             yield pd.DataFrame(rows, columns=_COLS)
 
-    return df.select(id_col, text_col).mapInPandas(run, MENTIONS_SCHEMA)
+    return df.select("url", "text").mapInPandas(run, MENTIONS_SCHEMA)
 
 
 def detect_mentions_gazetteer(

@@ -182,15 +182,16 @@ IMAGE_DIMS_SCHEMA = T.StructType(
 )
 
 
-def image_dims(media: DataFrame, id_col: str = "media_id", payload_col: str = "payload") -> DataFrame:
-    """(media_id, format, width, height, channels) per parseable image —
+def image_dims(media: DataFrame) -> DataFrame:
+    """(media_id, format, width, height, channels) per parseable
+    (media_id, payload) image —
     narrow Arrow-batched stage straight off the scan (payloads never
     shuffle); unparseable payloads are dropped (filter-side semantics)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 parsed = parse_image_header(bytes(payload))
                 if parsed is not None:
                     rows.append((int(mid), *parsed))
@@ -198,4 +199,4 @@ def image_dims(media: DataFrame, id_col: str = "media_id", payload_col: str = "p
                 rows, columns=["media_id", "format", "width", "height", "channels"]
             )
 
-    return media.select(id_col, payload_col).mapInPandas(run, IMAGE_DIMS_SCHEMA)
+    return media.select("media_id", "payload").mapInPandas(run, IMAGE_DIMS_SCHEMA)

@@ -39,26 +39,21 @@ def _norm(v):
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
 
 
-def ann_topk_bruteforce(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, neighbor_id, rank): exact cosine top-k per query.
+def ann_topk_bruteforce(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """(query_id, neighbor_id, rank): exact cosine top-k per query, over
+    (vec_id, embedding) rows.
 
     Ties broken by neighbor id ascending for determinism.
     """
     corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("vc"),
-        _norm(F.col(vec_col).cast("array<double>")).alias("nc"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("vc"),
+        _norm(F.col("embedding").cast("array<double>")).alias("nc"),
     )
     qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("vq"),
-        _norm(F.col(vec_col).cast("array<double>")).alias("nq"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("vq"),
+        _norm(F.col("embedding").cast("array<double>")).alias("nq"),
     )
     joined = corpus.join(F.broadcast(qs), F.col("query_id") != F.col("neighbor_id"))
     scored = joined.withColumn("cosine", _dot(F.col("vq"), F.col("vc")) / (F.col("nq") * F.col("nc")))
@@ -70,8 +65,8 @@ def ann_topk_bruteforce(
     )
 
 
-def lsh_planes(n_planes: int = LSH_PLANES, dim: int = ANN_DIM, seed: int = LSH_SEED) -> np.ndarray:
-    return np.random.default_rng(seed).normal(0, 1.0, (n_planes, dim))
+def lsh_planes(n_planes: int = LSH_PLANES) -> np.ndarray:
+    return np.random.default_rng(LSH_SEED).normal(0, 1.0, (n_planes, ANN_DIM))
 
 
 def bucket_expr(vec_col, planes: np.ndarray):
@@ -88,26 +83,24 @@ def ann_topk_lsh(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes: np.ndarray | None = None,
     broadcast_queries: bool = True,
 ) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's LSH bucket.
+    """Approximate top-k: candidates restricted to the query's bucket under
+    the seeded :func:`lsh_planes`.
 
     ``broadcast_queries=False`` drops the forced broadcast hint on the
     query side — required when the caller ranks a corpus against ITSELF
     (census-gated entity relatedness above its brute ceiling), where the
     query side is as big as the corpus and a forced hint would OOM instead
     of degrading to a shuffle join on the bucket key."""
-    planes = lsh_planes() if planes is None else planes
+    planes = lsh_planes()
     corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("vc"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("vc"),
     ).withColumn("bucket", bucket_expr(F.col("vc"), planes)).withColumn("nc", _norm(F.col("vc")))
     qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("vq"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("vq"),
     ).withColumn("bucket", bucket_expr(F.col("vq"), planes)).withColumn("nq", _norm(F.col("vq")))
     q_side = F.broadcast(qs) if broadcast_queries else qs
     joined = corpus.join(q_side, "bucket").where(F.col("query_id") != F.col("neighbor_id"))
@@ -120,8 +113,8 @@ def ann_topk_lsh(
     )
 
 
-def ivf_centroids(n_cells: int = IVF_CELLS, dim: int = ANN_DIM, seed: int = LSH_SEED + 1) -> np.ndarray:
-    c = np.random.default_rng(seed).normal(0, 1.0, (n_cells, dim))
+def ivf_centroids() -> np.ndarray:
+    c = np.random.default_rng(LSH_SEED + 1).normal(0, 1.0, (IVF_CELLS, ANN_DIM))
     return c / np.linalg.norm(c, axis=1, keepdims=True)
 
 
@@ -138,23 +131,18 @@ def best_cell_expr(v, centroids: np.ndarray):
     return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: np.ndarray | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, cell): nearest seeded centroid by cosine (IVF coarse step).
+def ivf_assign(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, cell): nearest seeded centroid (:func:`ivf_centroids`) by
+    cosine (IVF coarse step).
 
     At scale the output is written bucketed by ``cell`` so probes prune
     whole files via partition pruning.
     """
-    centroids = ivf_centroids() if centroids is None else centroids
     from ..partitioning import spread_small_scan
 
-    v = F.col(vec_col).cast("array<double>")
-    return spread_small_scan(embeddings.select(id_col, vec_col)).select(
-        F.col(id_col), best_cell_expr(v, centroids).alias("cell")
+    v = F.col("embedding").cast("array<double>")
+    return spread_small_scan(embeddings.select("vec_id", "embedding")).select(
+        F.col("vec_id"), best_cell_expr(v, ivf_centroids()).alias("cell")
     )
 
 
@@ -178,14 +166,8 @@ def top_cells_expr(v, centroids: np.ndarray, nprobe: int):
     return F.transform(top, lambda s: (-s["negcell"]).cast("int"))
 
 
-def materialize_ivf_corpus(
-    embeddings: DataFrame,
-    path: str,
-    centroids: np.ndarray | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Write the IVF-indexed corpus ``(id, vector, cell)`` PARTITIONED BY
+def materialize_ivf_corpus(embeddings: DataFrame, path: str) -> DataFrame:
+    """Write the IVF-indexed corpus ``(vec_id, embedding, cell)`` PARTITIONED BY
     cell (the parquet stand-in for an Iceberg ``bucket``/identity transform)
     and return a reader over it. This is the ``ivf_assign`` output the probe
     path reads: probing then PRUNES whole cell partitions instead of
@@ -197,11 +179,12 @@ def materialize_ivf_corpus(
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         from ..partitioning import spread_small_scan
 
-        centroids = ivf_centroids() if centroids is None else centroids
-        v = F.col(vec_col).cast("array<double>")
+        v = F.col("embedding").cast("array<double>")
         (
-            spread_small_scan(embeddings.select(id_col, vec_col)).select(
-                F.col(id_col), v.alias(vec_col), best_cell_expr(v, centroids).alias("cell")
+            spread_small_scan(embeddings.select("vec_id", "embedding")).select(
+                F.col("vec_id"),
+                v.alias("embedding"),
+                best_cell_expr(v, ivf_centroids()).alias("cell"),
             )
             .repartition("cell")
             .write.mode("overwrite")
@@ -215,9 +198,6 @@ def ann_topk_ivf(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    centroids: np.ndarray | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     nprobe: int = 1,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
@@ -231,22 +211,22 @@ def ann_topk_ivf(
     the cell is computed inline (fine for ad-hoc runs; materialize at
     scale). Exact within the probed cells; recall across cells is the
     standard IVF trade-off that ``nprobe`` trades back."""
-    centroids = ivf_centroids() if centroids is None else centroids
+    centroids = ivf_centroids()
     if assigned is not None:
         corpus = assigned.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("vc"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").cast("array<double>").alias("vc"),
             F.col("cell").cast("int").alias("cell"),
         )
     else:
         corpus = embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("vc"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").cast("array<double>").alias("vc"),
         ).withColumn("cell", best_cell_expr(F.col("vc"), centroids))
     corpus = corpus.withColumn("nc", _norm(F.col("vc")))
     qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("vq"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("vq"),
     )
     qs = qs.withColumn(
         "cell", F.explode(top_cells_expr(F.col("vq"), centroids, nprobe))
@@ -265,14 +245,9 @@ def ann_topk_ivf(
     )
 
 
-def kmeans_centroids(
-    embeddings: DataFrame,
-    iterations: int = 3,
-    centroids: np.ndarray | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Distributed Lloyd k-means refinement of the IVF coarse centroids.
+def kmeans_centroids(embeddings: DataFrame, iterations: int = 3) -> DataFrame:
+    """Distributed Lloyd k-means refinement of the IVF coarse centroids
+    (:func:`ivf_centroids`).
 
     Per iteration: assign every vector to its max-cosine centroid, then
     new centroid = per-dimension mean of members, ROUNDED to 6 decimals.
@@ -302,13 +277,13 @@ def kmeans_centroids(
     """
     import math
 
-    init = ivf_centroids() if centroids is None else centroids
+    init = ivf_centroids()
     k, dim = init.shape
     spark = embeddings.sparkSession
     from ..partitioning import spread_small_scan
 
-    vecs = spread_small_scan(embeddings.select(id_col, vec_col)).select(
-        F.col(vec_col).cast("array<double>").alias("v"),
+    vecs = spread_small_scan(embeddings.select("vec_id", "embedding")).select(
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     vecs = cached(vecs)
     cents_vals = [[round(float(x), 6) for x in init[ci]] for ci in range(k)]

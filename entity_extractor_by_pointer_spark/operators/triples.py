@@ -30,14 +30,13 @@ from pyspark.sql import functions as F
 from ..cache import cached
 from ..functions.gazetteer import PREDICATE_RULE
 
-TRIPLE_BUCKETS = 64
 
-
-def predicate_expr(subj_type: str = "subj_type", obj_type: str = "obj_type"):
+def predicate_expr():
+    """The predicate ``PREDICATE_RULE`` gives a (subj_type, obj_type) row."""
     mapping = F.create_map(
         *[F.lit(x) for pair in PREDICATE_RULE.items() for x in (f"{pair[0][0]}|{pair[0][1]}", pair[1])]
     )
-    return mapping[F.concat_ws("|", F.col(subj_type), F.col(obj_type))]
+    return mapping[F.concat_ws("|", F.col("subj_type"), F.col("obj_type"))]
 
 
 def first_mentions(canon_mentions: DataFrame, id_col: str = "url") -> DataFrame:
@@ -87,9 +86,9 @@ def triple_counts(triples: DataFrame) -> DataFrame:
 NT_BASE = "http://kg.example/"
 
 
-def ntriples_lines(triples: DataFrame, base: str = NT_BASE) -> DataFrame:
+def ntriples_lines(triples: DataFrame) -> DataFrame:
     """(line) — the DISTINCT KG edge set rendered as W3C N-Triples
-    statements ``<base/e/SUBJ> <base/p/PRED> <base/e/OBJ> .`` — the
+    statements ``<NT_BASE/e/SUBJ> <NT_BASE/p/PRED> <NT_BASE/e/OBJ> .`` — the
     standard interchange line format every triple store / RDF toolchain
     ingests. Terms are percent-encoded to the IRI-safe set (everything
     outside ``[A-Za-z0-9_-]`` → ``%XX`` of each UTF-8 byte), so arbitrary
@@ -121,9 +120,9 @@ def ntriples_lines(triples: DataFrame, base: str = NT_BASE) -> DataFrame:
     t = triples.select("subj", "pred", "obj").distinct()
     return t.select(
         F.concat(
-            F.lit(f"<{base}e/"), enc("subj"),
-            F.lit(f"> <{base}p/"), enc("pred"),
-            F.lit(f"> <{base}e/"), enc("obj"),
+            F.lit(f"<{NT_BASE}e/"), enc("subj"),
+            F.lit(f"> <{NT_BASE}p/"), enc("pred"),
+            F.lit(f"> <{NT_BASE}e/"), enc("obj"),
             F.lit("> ."),
         ).alias("line")
     )
@@ -135,13 +134,12 @@ def subj_bucket(buckets: int) -> Column:
     return F.pmod(F.hash("subj"), F.lit(buckets))
 
 
-def write_triples(triples: DataFrame, path: str, buckets: int = TRIPLE_BUCKETS) -> None:
-    """Materialize the graph table partitioned by subject hash."""
-    (
+def bucket_by_subject(triples: DataFrame, buckets: int) -> DataFrame:
+    """The graph table's layout: triples plus their ``subj_bucket``,
+    repartitioned on it and sorted by (subj, pred, obj) within each
+    partition. Writers partition the output by ``subj_bucket``."""
+    return (
         triples.withColumn("subj_bucket", subj_bucket(buckets))
         .repartition("subj_bucket")
         .sortWithinPartitions("subj", "pred", "obj")
-        .write.mode("overwrite")
-        .partitionBy("subj_bucket")
-        .parquet(path)
     )

@@ -25,7 +25,7 @@ from ..operators.canonicalize import canonicalize_entities
 from ..operators.extract import with_extracted_text
 from ..operators.linking import alias_df, link_mentions
 from ..operators.mentions import detect_mentions, detect_mentions_gazetteer
-from ..operators.triples import build_triples, subj_bucket, triple_counts
+from ..operators.triples import bucket_by_subject, build_triples, triple_counts
 from .lineage import StageWriter
 
 MAX_SEQUENCE_LENGTH = 200
@@ -138,11 +138,7 @@ class KgPipeline:
         # subject hash (parquet stand-in for Iceberg bucket(N, subj)).
         def triples_stage() -> DataFrame:
             t = build_triples(canonical_mentions(mentions, PAGES_GAZETTEER, CANON_EDGES))
-            return (
-                t.withColumn("subj_bucket", subj_bucket(SUBJ_BUCKETS))
-                .repartition("subj_bucket")
-                .sortWithinPartitions("subj", "pred", "obj")
-            )
+            return bucket_by_subject(t, SUBJ_BUCKETS)
 
         triples = self._stage("triples", resume, triples_stage, partition_by=["subj_bucket"])
         counts = self._stage(

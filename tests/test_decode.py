@@ -56,7 +56,7 @@ def test_bp_greedy_first_end_break():
     logits[1, 0, 0] = _bp_logit(0.9)  # start at token1
     logits[2, 0, 1] = _bp_logit(0.9)  # end candidate token2 (first)
     logits[4, 0, 1] = _bp_logit(0.9)  # end candidate token4 (ignored)
-    spans = decode_bp(text, logits, offs, 0.5)
+    spans = decode_bp(text, logits, offs)
     assert [(s.entity, s.start_idx, s.end_idx) for s in spans] == [("广州", 0, 1)]
 
 
@@ -71,7 +71,7 @@ def test_bp_break_fires_even_when_mapping_check_fails():
     logits[1, 0, 0] = _bp_logit(0.9)  # start at token 1
     logits[3, 0, 1] = _bp_logit(0.9)  # end at SEP → mapping fails, but breaks
     # no other class/end combination: SEP end kills the start entirely
-    assert decode_bp(text, logits, offs, 0.5) == []
+    assert decode_bp(text, logits, offs) == []
 
 
 def test_bp_class_must_match():
@@ -81,7 +81,7 @@ def test_bp_class_must_match():
     logits = np.full((L, C, 2), _bp_logit(0.01))
     logits[1, 0, 0] = _bp_logit(0.9)  # start class 0
     logits[2, 1, 1] = _bp_logit(0.9)  # end class 1 → never pairs
-    assert decode_bp(text, logits, offs, 0.5) == []
+    assert decode_bp(text, logits, offs) == []
 
 
 def test_set_semantics():

@@ -159,20 +159,30 @@ def test_star_cc_handles_long_chain(spark, monkeypatch):
     assert len(cc) == n + 1
 
 
+# star-loop rounds the 61-node chain takes on the distributed path, the last
+# one being the round that finds the edge set stable (min-label propagation
+# would need 60)
+CHAIN61_ROUNDS = 7
+
+
 def test_distributed_cc_collapses_61_node_chain(spark, monkeypatch):
-    """A 61-node chain is one component on the distributed path within the
-    default round budget (min-label propagation needs 60 rounds here)."""
+    """A 61-node chain is one component on the distributed path in exactly
+    ``CHAIN61_ROUNDS`` rounds, within the default round budget."""
+    assert canonicalize.CC_MAX_ITER >= CHAIN61_ROUNDS
     monkeypatch.setattr(canonicalize, "CC_DRIVER_THRESHOLD", 0)
+    monkeypatch.setattr(canonicalize, "CC_MAX_ITER", CHAIN61_ROUNDS)
     cc = {r["id"]: r["canon_id"] for r in connected_components(_chain_edges(spark, 60)).collect()}
     assert set(cc.values()) == {"n00"}
     assert len(cc) == 61
 
 
 def test_distributed_cc_raises_when_not_converged(spark, monkeypatch):
+    """One round short of ``CHAIN61_ROUNDS`` (and a single round) raises."""
     monkeypatch.setattr(canonicalize, "CC_DRIVER_THRESHOLD", 0)
-    monkeypatch.setattr(canonicalize, "CC_MAX_ITER", 1)
-    with pytest.raises(RuntimeError, match="did not converge within CC_MAX_ITER=1"):
-        connected_components(_chain_edges(spark, 60))
+    for rounds in (1, CHAIN61_ROUNDS - 1):
+        monkeypatch.setattr(canonicalize, "CC_MAX_ITER", rounds)
+        with pytest.raises(RuntimeError, match=f"did not converge within CC_MAX_ITER={rounds} "):
+            connected_components(_chain_edges(spark, 60))
 
 
 def test_ann_bruteforce_matches_numpy(spark):
@@ -444,7 +454,7 @@ def test_kmeans_centroids_match_numpy_lloyd(spark):
             assert abs(got[(c, d)] - cents[c, d]) < 2e-6, (c, d, got[(c, d)], cents[c, d])
 
 
-def test_kmeans_dead_cell_and_length_mismatch_excluded(spark):
+def test_kmeans_dead_cell_and_length_mismatch_excluded(spark, monkeypatch):
     """A zero-norm centroid (SQL cosine NULL via division by zero) and a
     length-mismatched centroid (SQL cosine NULL via zip_with padding)
     must never win an assignment — the numpy argmax path excludes both
@@ -460,9 +470,10 @@ def test_kmeans_dead_cell_and_length_mismatch_excluded(spark):
             [1.0, 0.0],        # live and closest
         ]
     )
+    monkeypatch.setattr(sim, "ivf_centroids", lambda: cents)
     got = {
         (r["cell"], r["dim"]): r["val"]
-        for r in sim.kmeans_centroids(emb, iterations=1, centroids=cents).collect()
+        for r in sim.kmeans_centroids(emb, iterations=1).collect()
     }
     # both nonzero vectors must land in cell 2 (max cosine among LIVE
     # cells), so cell 2's centroid becomes their mean; the zero vector has
@@ -475,9 +486,10 @@ def test_kmeans_dead_cell_and_length_mismatch_excluded(spark):
     emb2 = spark.createDataFrame(
         [(0, [1.0, 0.0])], "vec_id long, embedding array<double>"
     )
+    monkeypatch.setattr(sim, "ivf_centroids", lambda: cents3)
     got2 = {
         (r["cell"], r["dim"]): r["val"]
-        for r in sim.kmeans_centroids(emb2, iterations=1, centroids=cents3).collect()
+        for r in sim.kmeans_centroids(emb2, iterations=1).collect()
     }
     # no live equal-length cell exists -> argmax over all -inf = cell 0;
     # cell 0's centroid becomes the sole member's mean (2 dims)
@@ -548,7 +560,7 @@ def test_positional_hash_builder_matches_distinct_array_builder(spark):
     )
     from_arrays = {
         (r["doc_id"], h)
-        for r in dd._hashed_shingle_arrays(docs, "doc_id", "text").collect()
+        for r in dd._hashed_shingle_arrays(docs).collect()
         for h in r["sharr"]
     }
     wh = docs.select(
@@ -810,14 +822,16 @@ def test_capped_containment_matches_exact(spark, monkeypatch):
     assert capped == exact
 
 
-def test_adaptive_quality_flags_per_language_floor(spark):
+def test_adaptive_quality_flags_per_language_floor(spark, monkeypatch):
     """Each language's floor is the quality at rank ceil(0.25*n) in
     (quality, doc_id) order; keep = quality >= own-language floor — a doc
     that fails the global floor can survive under its language's floor."""
+    from entity_extractor_by_pointer_spark.operators import curation
     from entity_extractor_by_pointer_spark.operators.curation import (
         adaptive_quality_flags,
     )
 
+    monkeypatch.setattr(curation, "ADAPTIVE_QUALITY_PCT", 0.25)
     good_en = "the cat and the dog was in the house of the king " * 8
     rows = (
         [(i, good_en, "en") for i in range(6)]
@@ -825,7 +839,7 @@ def test_adaptive_quality_flags_per_language_floor(spark):
         + [(20 + i, "word " * (4 + i), "de") for i in range(4)]  # de: low abs scores
     )
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    out = {r["doc_id"]: r for r in adaptive_quality_flags(docs, pct=0.25).collect()}
+    out = {r["doc_id"]: r for r in adaptive_quality_flags(docs).collect()}
     # en: n=7 → floor at rank 2 ascending → the single outlier (rank 1) drops
     assert out[10]["keep"] is False
     assert all(out[i]["keep"] for i in range(6))
@@ -838,13 +852,14 @@ def test_adaptive_quality_flags_per_language_floor(spark):
     assert len({r["q_floor"] for r in de}) == 1
 
 
-def test_vocab_edit_pairs_blocking_is_exhaustive(spark):
+def test_vocab_edit_pairs_blocking_is_exhaustive(spark, monkeypatch):
     """SymSpell deletion-signature blocking + levenshtein verify must equal
     brute-force O(V^2) enumeration on a randomized vocabulary, at both
     max_dist=1 and 2 (deletion-neighborhood completeness)."""
     import itertools
     import random
 
+    from entity_extractor_by_pointer_spark.functions import textstats
     from entity_extractor_by_pointer_spark.functions.textstats import (
         vocab_edit_pairs,
     )
@@ -867,9 +882,10 @@ def test_vocab_edit_pairs_blocking_is_exhaustive(spark):
     )
     vocab = sorted({w for r in docs.collect() for w in r["text"].split()})
     for md in (1, 2):
+        monkeypatch.setattr(textstats, "VOCAB_EDIT_MAX_DIST", md)
         got = {
             (r["term_a"], r["term_b"]): r["dist"]
-            for r in vocab_edit_pairs(docs, max_dist=md).collect()
+            for r in vocab_edit_pairs(docs).collect()
         }
         expect = {
             (a, b): lev(a, b)
@@ -992,7 +1008,7 @@ def test_balance_sources_caps_dominant_source(spark):
         (1000 + i, "t", f"s{i % 4}") for i in range(100)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = balance_sources(docs, max_share_pct=20).collect()
+    out = balance_sources(docs).collect()
     kept = {}
     for r in out:
         kept.setdefault(r["source"], [0, 0])
@@ -1005,7 +1021,7 @@ def test_balance_sources_caps_dominant_source(spark):
     for s in ("s0", "s1", "s2", "s3"):
         assert kept[s][1] == kept[s][0]  # all kept
     # determinism across partitionings
-    again = balance_sources(docs.repartition(13), max_share_pct=20).collect()
+    again = balance_sources(docs.repartition(13)).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 

@@ -8,7 +8,9 @@ A public top-level def or class, or a public method of a top-level class,
 whose name no root and no package module mentions fails too, unless it is
 a listed spec oracle. ``mod.name`` where ``mod`` is an imported module
 alias refers to that module only: ``json.load`` keeps no package ``load``
-alive.
+alive. A defaulted parameter of such a def, method or constructor that no
+production or package call passes fails as well: a value nothing varies is
+a constant.
 """
 
 import ast
@@ -155,3 +157,103 @@ def test_every_public_package_def_is_referenced():
     assert not dead, f"public defs nothing references: {dead}"
     stale = sorted(SPEC_ORACLES.keys() - {n for _p, _q, n in defs})
     assert not stale, f"SPEC_ORACLES names no package def: {stale}"
+
+
+
+# defaulted parameters no production root sets that stay on purpose: the
+# production encoder pair, which only an environment with torch selects
+UNSET_PARAMETERS = {
+    "NerConfig.encoder": "selects the torch BERT encoder (test_production_encoder.py)",
+    "NerConfig.hf_model_name": "the checkpoint that encoder loads (test_production_encoder.py)",
+}
+
+
+def _decorators(node: ast.FunctionDef | ast.ClassDef) -> set[str]:
+    out = set()
+    for d in node.decorator_list:
+        d = d.func if isinstance(d, ast.Call) else d
+        out.add(d.id if isinstance(d, ast.Name) else getattr(d, "attr", ""))
+    return out
+
+
+def _defaulted(fn: ast.FunctionDef, skip_first: bool) -> list[tuple[str, int | None]]:
+    """(name, position, or None if keyword-only) of each defaulted parameter."""
+    positional = [*fn.args.posonlyargs, *fn.args.args][int(skip_first):]
+    first = len(positional) - len(fn.args.defaults)
+    return [(a.arg, i) for i, a in enumerate(positional) if i >= first] + [
+        (a.arg, None) for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d is not None]
+
+
+def _parameters(path: Path) -> list[tuple[str, str, str, int | None]]:
+    """(label, called name, parameter, position) of every defaulted parameter
+    of a public top-level def, a public method or ``__init__`` of a top-level
+    class, and every defaulted ``@dataclass`` field (a constructor parameter
+    in declaration order). A def's label is its name, a method's
+    ``Class.method``, a constructor's the class name."""
+    out = []
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+            out += [(node.name, node.name, p, i) for p, i in _defaulted(node, False)]
+        if not isinstance(node, ast.ClassDef) or node.name.startswith("_"):
+            continue
+        for m in node.body:
+            if isinstance(m, ast.FunctionDef) and (m.name == "__init__" or not m.name.startswith("_")):
+                init = m.name == "__init__"
+                label, called = (node.name, node.name) if init else (f"{node.name}.{m.name}", m.name)
+                skip = "staticmethod" not in _decorators(m)
+                out += [(label, called, p, i) for p, i in _defaulted(m, skip)]
+        if "dataclass" in _decorators(node):
+            fields = [f for f in node.body if isinstance(f, ast.AnnAssign)
+                      and isinstance(f.target, ast.Name) and "ClassVar" not in ast.unparse(f.annotation)]
+            out += [(node.name, node.name, f.target.id, i) for i, f in enumerate(fields) if f.value]
+    return out
+
+
+def test_every_public_parameter_is_set():
+    """Every defaulted parameter of a public package def, method or
+    constructor is passed, by keyword or by position, by some call in a
+    production root or the package; a value only tests vary is a module
+    constant (ROADMAP aim 2). Calls resolve by name as in the def check: a
+    call on a module alias binds that module's def only. A call with
+    ``*args`` or ``**kwargs`` sets every parameter. Spec oracles and
+    ``UNSET_PARAMETERS`` are exempt."""
+    pkg_files = list((ROOT / PKG).rglob("*.py"))
+    params = [(path, *p) for path in pkg_files for p in _parameters(path)]
+    defined = {(path, node.name) for path in pkg_files for node in ast.parse(path.read_text()).body
+               if isinstance(node, (ast.FunctionDef, ast.ClassDef))}
+    calls: dict[str, list] = {}  # called name -> [(module file or None, keywords, positions)]
+    for path in [*ROOTS, *pkg_files]:
+        tree = ast.parse(path.read_text())
+        aliases = {}
+        for node in ast.walk(tree):
+            for bound, target in _import_names(node, path):
+                if (mod := _module_file(target)) is not None:
+                    aliases[bound] = mod
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            func, module = node.func, None
+            if isinstance(func, ast.Name):
+                name = func.id
+            elif isinstance(func, ast.Attribute):
+                name = func.attr
+                if isinstance(func.value, ast.Name) and (aliases.get(func.value.id), name) in defined:
+                    module = aliases[func.value.id]
+            else:
+                continue
+            spread = any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords)
+            keywords = {k.arg for k in node.keywords}
+            calls.setdefault(name, []).append((module, keywords, None if spread else len(node.args)))
+    unset = sorted(
+        f"{path.relative_to(ROOT / PKG)}: {label}({param})"
+        for path, label, called, param, pos in params
+        if label.partition(".")[0] not in SPEC_ORACLES
+        and f"{label}.{param}" not in UNSET_PARAMETERS
+        and not any(
+            module in (None, path) and (npos is None or param in keywords or (pos is not None and pos < npos))
+            for module, keywords, npos in calls.get(called, []))
+    )
+    assert not unset, f"{len(unset)} parameters no production root or package call sets: {unset}"
+    stale = sorted(UNSET_PARAMETERS.keys() - {f"{label}.{param}" for _p, label, _c, param, _i in params})
+    assert not stale, f"UNSET_PARAMETERS names no package parameter: {stale}"

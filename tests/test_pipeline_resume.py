@@ -329,3 +329,16 @@ def test_cli_pipeline_run_honours_classes(spark, tmp_path):
     types = {r["type"] for r in mentions.select("type").distinct().collect()}
     assert mentions.count() > 0
     assert types == {"person"}
+
+
+def test_cli_pipeline_run_prints_only_its_own_metrics(spark, tmp_path, capsys):
+    """A pipeline run prints its own ``pipeline`` metrics once, even when the
+    workdir's metrics log already holds an earlier run's."""
+    from entity_extractor_by_pointer_spark.__main__ import main
+
+    wd = str(tmp_path / "cli_metrics")
+    keys = ("pages", "triples", "wall_seconds", "triples_per_sec", "pages_per_sec")
+    for run in (["--run-id", "first"], ["--run-id", "second", "--resume"]):
+        assert main(["--synth-pages", "40", "--workdir", wd, *run]) == 0
+        out = capsys.readouterr().out
+        assert {k: out.count(f"  {k}=") for k in keys} == dict.fromkeys(keys, 1), out

@@ -56,7 +56,6 @@ def test_bert_encoder_spark_matches_single_process(spark):
         classes=["person", "location", "organization"],
         model_type="gp",
         encoder="bert",
-        hidden_size=768,
         logit_bias=-6.0,
     )
     single = PointerNerModel(cfg)
@@ -80,9 +79,7 @@ def test_bert_tokenizer_contract_matches_reference_shape():
     """The HF encode path reproduces the reference's id/offset contract:
     ids padded/hard-truncated to L with NO [SEP] re-append, offsets from the
     truncation=True call with (0,0) specials (data.py:24-29,41-44,88-90)."""
-    cfg = NerConfig(
-        classes=["person"], encoder="bert", hidden_size=768, max_sequence_length=16
-    )
+    cfg = NerConfig(classes=["person"], encoder="bert", max_sequence_length=16)
     model = PointerNerModel(cfg)
     long_text = "北京" * 40
     ids, mask, offs = model._encode_batch([long_text, "李明"])

@@ -1,8 +1,16 @@
 #!/usr/bin/env python3
-"""Dump the formatted physical plan of named queries() entries to files.
+"""Dump the masked formatted physical plan of named queries() entries.
 
 Usage: python tools/dump_one_plan.py <out_dir> <suffix> <query> [query ...]
 Writes <out_dir>/<query>_<suffix>.txt for each query.
+
+The dump is masked so that two dumps of one tree are byte-identical and a
+``diff -r`` between two trees shows only real plan changes: expression ids
+(``#N``), ``plan_id``s, RDD ids and the temp-dir prefix of the KG stores are
+replaced by placeholders, lambda-variable, codegen-stage and adaptive
+query-stage ids are renumbered in order of appearance, and the projections of a distinct-aggregate
+``Expand`` (whose order varies between runs) are sorted, with their ``gid``
+literals and every ``gid = k`` filter renumbered to match.
 """
 
 from __future__ import annotations
@@ -10,7 +18,9 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -19,6 +29,100 @@ import __spark_entry__ as entry_mod  # noqa: E402
 from entity_extractor_by_pointer_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
+
+_EXPAND_ARGS = re.compile(r"^\(\d+\) Expand.*?\nInput \[\d+\]: .*?\nArguments: (.*)$", re.M)
+_IDS = re.compile(r"#\d+")
+
+
+def _split_top(s: str) -> list[str]:
+    """The comma-separated items of ``s`` at bracket/paren depth 0."""
+    items, depth, start = [], 0, 0
+    for i, c in enumerate(s):
+        if c in "[(":
+            depth += 1
+        elif c in "])":
+            depth -= 1
+        elif c == "," and depth == 0:
+            items.append(s[start:i].strip())
+            start = i + 1
+    return items + [s[start:].strip()]
+
+
+def _reorder_lists(s: str, rank: dict[str, int]) -> str:
+    """``s`` with the bare items of every bracket/paren list that holds more
+    than one ``rank`` key put in ``rank`` order (in the slots they hold)."""
+    out, i = [], 0
+    while i < len(s):
+        if s[i] not in "[(":
+            out.append(s[i])
+            i += 1
+            continue
+        depth, j = 0, i
+        while True:
+            depth += (s[j] in "[(") - (s[j] in "])")
+            if depth == 0 or j == len(s) - 1:
+                break
+            j += 1
+        inner = _reorder_lists(s[i + 1 : j], rank)
+        items = _split_top(inner)
+        at = [k for k, item in enumerate(items) if item in rank]
+        if len(at) > 1:
+            for k, item in zip(at, sorted((items[k] for k in at), key=rank.get)):
+                items[k] = item
+            inner = ", ".join(items)
+        out.append(s[i] + inner + s[j])
+        i = j + 1
+    return "".join(out)
+
+
+def _canonical_expands(plan: str) -> str:
+    """Put each ``gid`` Expand in a canonical form: its output columns in
+    name order (every bare-attribute list downstream follows), its
+    projections sorted by their id-masked text, and the gid literals (and
+    the ``gid = k`` filters) renumbered to the sorted positions."""
+    for m in list(_EXPAND_ARGS.finditer(plan)):
+        projections, outputs = _split_top(m.group(1))
+        outs = _split_top(outputs[1:-1])
+        gid = outs[-1]
+        if not gid.startswith("gid#"):
+            continue
+        cols = sorted(range(len(outs)), key=lambda i: _IDS.sub("#N", outs[i]))
+        rows = [_split_top(p[1:-1]) for p in _split_top(projections[1:-1])]
+        rows.sort(key=lambda r: [_IDS.sub("#N", r[i]) for i in cols if i != len(outs) - 1])
+        renumber = {r[-1]: str(i) for i, r in enumerate(rows)}
+        rows = [[*r[:-1], str(i)] for i, r in enumerate(rows)]
+        args = ", ".join("[" + ", ".join(r[i] for i in cols) + "]" for r in rows)
+        plan = plan.replace(m.group(1), f"[{args}], [{', '.join(outs[i] for i in cols)}]")
+        plan = re.sub(rf"\b{re.escape(gid)} = (\d+)\b", lambda g: f"{gid} = {renumber[g.group(1)]}", plan)
+        rank = {outs[i]: k for k, i in enumerate(cols)}
+        plan = _reorder_lists(plan, rank)
+    return plan
+
+
+def _first_seen(plan: str, pattern: str) -> str:
+    """Renumber the ids ``pattern``'s group 1 captures in their order of
+    first appearance."""
+    seen: dict[str, str] = {}
+
+    def sub(m: re.Match) -> str:
+        new = seen.setdefault(m.group(1), str(len(seen)))
+        return m.string[m.start() : m.start(1)] + new + m.string[m.end(1) : m.end()]
+
+    return re.sub(pattern, sub, plan)
+
+
+def mask_plan(plan: str) -> str:
+    plan = _canonical_expands(plan)
+    plan = _IDS.sub("#N", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+    # lambda variables are named from a session-wide counter; codegen and
+    # adaptive query-stage ids follow the order concurrent stages happen to
+    # be planned in
+    plan = _first_seen(plan, r"lambda [A-Za-z]\w*?_(\d+)\b")
+    plan = _first_seen(plan, r"codegen id : (\d+)")
+    plan = _first_seen(plan, r"QueryStage\nOutput \[\d+\]: [^\n]*\nArguments: (\d+)")
+    return plan.replace(tempfile.gettempdir(), "TMP")
 
 
 def main() -> None:
@@ -34,7 +138,7 @@ def main() -> None:
             df.explain("formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(buf.getvalue().strip() + "\n")
+            f.write(mask_plan(buf.getvalue().strip()) + "\n")
         print(f"wrote {path}")
 
 
