@@ -61,10 +61,6 @@ def decode_gp(
     return spans
 
 
-# BP start/end sigmoid cut (reference config.py:39)
-BP_DECISION_THRESHOLD = 0.5
-
-
 def decode_bp(
     text: str,
     logits: np.ndarray,  # (L, C, 2) raw logits
@@ -72,8 +68,9 @@ def decode_bp(
 ) -> list[Span]:
     start_mapping, end_mapping = build_offset_maps(offset_mapping)
     probs = 1.0 / (1.0 + np.exp(-logits))
-    starts = np.where(probs[:, :, 0] > BP_DECISION_THRESHOLD)
-    ends = np.where(probs[:, :, 1] > BP_DECISION_THRESHOLD)
+    # start/end sigmoid cut 0.5 (reference config.py:39)
+    starts = np.where(probs[:, :, 0] > 0.5)
+    ends = np.where(probs[:, :, 1] > 0.5)
     spans: list[Span] = []
     for _start, class1 in zip(*starts):
         for _end, class2 in zip(*ends):

@@ -23,20 +23,18 @@ from __future__ import annotations
 import numpy as np
 
 EMB_BUCKETS = 4096
-SEEDED_HIDDEN_SIZE = 64
-SEEDED_ENCODER_SEED = 3
-# sequences per BERT forward: bounds GPU memory alongside the Arrow batch size
-BERT_MICRO_BATCH = 64
+# the HF checkpoint of the production tokenizer/encoder pair
+BERT_CHECKPOINT = "bert-base-chinese"
 
 
 class SeededTinyEncoder:
-    """token ids (B, L) int32 + attention mask → hidden states (B, L, H),
-    H = ``SEEDED_HIDDEN_SIZE``, weights seeded by ``SEEDED_ENCODER_SEED``."""
+    """token ids (B, L) int32 + attention mask → hidden states (B, L, 64),
+    weights seeded by 3."""
 
     def __init__(self):
-        rng = np.random.default_rng(SEEDED_ENCODER_SEED)
-        self.hidden_size = SEEDED_HIDDEN_SIZE
-        self.emb = rng.normal(0, 1.0, (EMB_BUCKETS, SEEDED_HIDDEN_SIZE)).astype(np.float32)
+        rng = np.random.default_rng(3)
+        self.hidden_size = 64
+        self.emb = rng.normal(0, 1.0, (EMB_BUCKETS, self.hidden_size)).astype(np.float32)
 
     def __call__(self, input_ids: np.ndarray, attention_mask: np.ndarray) -> np.ndarray:
         ids = np.asarray(input_ids) % EMB_BUCKETS
@@ -53,33 +51,33 @@ class SeededTinyEncoder:
 class TorchBertEncoder:  # pragma: no cover - torch absent in this sandbox
     """Production encoder: batched BERT forward on GPU inside the same
     mapInPandas shell (reference ``BinaryPointer.py:17`` /
-    ``GlobalPointer.py:12`` load 'bert-base-chinese'; the north rule runs
+    ``GlobalPointer.py:12`` load ``BERT_CHECKPOINT``; the north rule runs
     this as batched GPU kernels with no per-row Python). One instance per
-    executor python worker via MODEL_CACHE; ``BERT_MICRO_BATCH`` bounds GPU
-    memory alongside the Arrow batch size. Runs on CUDA where available."""
+    executor python worker via MODEL_CACHE; forwards of 64 sequences bound
+    GPU memory alongside the Arrow batch size. Runs on CUDA where available."""
 
-    def __init__(self, model_name: str = "bert-base-chinese"):
+    def __init__(self):
         import torch
         from transformers import BertModel
 
         self._torch = torch
         self.device = "cuda" if torch.cuda.is_available() else "cpu"
-        self.model = BertModel.from_pretrained(model_name).to(self.device).eval()
+        self.model = BertModel.from_pretrained(BERT_CHECKPOINT).to(self.device).eval()
         self.hidden_size = self.model.config.hidden_size
 
     def __call__(self, input_ids: np.ndarray, attention_mask: np.ndarray) -> np.ndarray:
         torch = self._torch
         outs = []
         with torch.no_grad():
-            for i in range(0, len(input_ids), BERT_MICRO_BATCH):
-                ids = torch.as_tensor(input_ids[i : i + BERT_MICRO_BATCH], dtype=torch.long, device=self.device)
-                mask = torch.as_tensor(attention_mask[i : i + BERT_MICRO_BATCH], dtype=torch.long, device=self.device)
+            for i in range(0, len(input_ids), 64):
+                ids = torch.as_tensor(input_ids[i : i + 64], dtype=torch.long, device=self.device)
+                mask = torch.as_tensor(attention_mask[i : i + 64], dtype=torch.long, device=self.device)
                 hidden = self.model(ids, attention_mask=mask).last_hidden_state
                 outs.append(hidden.float().cpu().numpy())
         return np.concatenate(outs, axis=0)
 
 
-def load_torch_bert_encoder(model_name: str = "bert-base-chinese") -> "TorchBertEncoder":
+def load_torch_bert_encoder() -> "TorchBertEncoder":
     """Production encoder factory (GPU path); raises a clear error where
     torch/transformers are not installed (this sandbox)."""
     try:
@@ -90,4 +88,4 @@ def load_torch_bert_encoder(model_name: str = "bert-base-chinese") -> "TorchBert
             "torch/transformers not installed in this environment; "
             "use SeededTinyEncoder for deterministic tests"
         ) from exc
-    return TorchBertEncoder(model_name)
+    return TorchBertEncoder()

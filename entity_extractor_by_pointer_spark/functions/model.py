@@ -44,15 +44,10 @@ class NerConfig:
     # wherever torch/transformers are installed. The head width follows the
     # encoder's hidden size (768 for bert-base-chinese).
     encoder: str = "seeded"  # 'seeded' | 'bert'
-    hf_model_name: str = "bert-base-chinese"
 
     @property
     def num_labels(self) -> int:
         return len(self.classes)
-
-
-# seed of the GP or BP head's weights
-HEAD_SEED = 7
 
 
 class PointerNerModel:
@@ -66,18 +61,19 @@ class PointerNerModel:
             # load_torch_bert_encoder raises NotImplementedError without torch
             from transformers import BertTokenizerFast
 
-            from .encoder import load_torch_bert_encoder
+            from .encoder import BERT_CHECKPOINT, load_torch_bert_encoder
 
-            self.tokenizer = BertTokenizerFast.from_pretrained(config.hf_model_name)
-            self.encoder = load_torch_bert_encoder(config.hf_model_name)
+            self.tokenizer = BertTokenizerFast.from_pretrained(BERT_CHECKPOINT)
+            self.encoder = load_torch_bert_encoder()
         else:
             self.tokenizer = CjkCharTokenizer()
             self.encoder = SeededTinyEncoder()
-        hidden = self.encoder.hidden_size  # head width follows the encoder
+        # the head width follows the encoder; either head is seeded by 7
+        hidden = self.encoder.hidden_size
         if config.model_type == "gp":
-            self.head = GlobalPointerHead(hidden, config.num_labels, HEAD_SEED)
+            self.head = GlobalPointerHead(hidden, config.num_labels, 7)
         else:
-            self.head = BinaryPointerHead(hidden, config.num_labels, HEAD_SEED)
+            self.head = BinaryPointerHead(hidden, config.num_labels, 7)
 
     def _encode_batch(
         self, texts: list[str]
@@ -195,7 +191,6 @@ class _ModelCache:
             config.max_sequence_length,
             config.logit_bias,
             config.encoder,
-            config.hf_model_name,
         )
         if key not in self.cache:
             self.cache[key] = PointerNerModel(config)

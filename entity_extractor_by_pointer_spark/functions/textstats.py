@@ -85,11 +85,6 @@ def fingerprint64(col: Column) -> Column:
     return md5_int64(norm_text(col))
 
 
-# hash_split shares: buckets 0-79 train, 80-89 dev, the rest test
-SPLIT_TRAIN_PCT = 80
-SPLIT_DEV_PCT = 10
-
-
 def hash_split(id_col: Column) -> Column:
     """Deterministic dataset split ('train'|'dev'|'test') by content hash.
 
@@ -99,9 +94,10 @@ def hash_split(id_col: Column) -> Column:
     reference splits positionally (``train.py:102-106``, operator P1);
     positional splits don't distribute, hash splits do."""
     bucket = F.pmod(md5_int64(id_col), F.lit(100))
+    # 80/10/10; the doc_splits oracle SQL repeats the 80 and 90 cuts
     return (
-        F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train"))
-        .when(bucket < SPLIT_TRAIN_PCT + SPLIT_DEV_PCT, F.lit("dev"))
+        F.when(bucket < 80, F.lit("train"))
+        .when(bucket < 90, F.lit("dev"))
         .otherwise(F.lit("test"))
     )
 
@@ -129,26 +125,17 @@ def tfidf_terms(docs):
     )
 
 
-WINNOW_GRAM = 8
-WINNOW_STRIDE = 4
-
-
 def winnow_fingerprint(col: Column) -> Column:
     """Rolling-window document fingerprint: min hash over character
-    ``WINNOW_GRAM``-grams sampled every ``WINNOW_STRIDE`` positions of the
+    8-grams sampled every 4 positions of the
     normalized text (winnowing-style min-sampling — the rolling-hash
     fingerprint family, vs ``fingerprint64``'s whole-document hash). Content-defined: equal texts
     always collide; long shared runs collide with high probability. Pure
-    built-in expressions, mirrored verbatim in the DuckDB oracle."""
+    built-in expressions, mirrored verbatim (8, 7, 4) in the
+    doc_winnow_fingerprint oracle SQL."""
     t = norm_text(col)
-    positions = F.sequence(
-        F.lit(1),
-        F.greatest(F.length(t) - F.lit(WINNOW_GRAM - 1), F.lit(1)),
-        F.lit(WINNOW_STRIDE),
-    )
-    return F.array_min(
-        F.transform(positions, lambda i: md5_int64(F.substring(t, i, WINNOW_GRAM)))
-    )
+    positions = F.sequence(F.lit(1), F.greatest(F.length(t) - F.lit(7), F.lit(1)), F.lit(4))
+    return F.array_min(F.transform(positions, lambda i: md5_int64(F.substring(t, i, 8))))
 
 
 def chunk_documents(
@@ -227,15 +214,12 @@ def nfc_normalize(col: Column) -> Column:
     return F.pandas_udf(_nfc_fn, StringType())(col)
 
 
-REPETITION_N = 3
-
-
 def repetition_stats(docs):
     """(doc_id, n_grams, dup_gram_ratio, top_word_share) — Gopher-style
     WITHIN-document repetition signals (Rae et al. 2021 §A1.1: docs whose
     text is dominated by repeated fragments or a single token are
-    low-quality): the fraction of word-n-gram occurrences (n =
-    ``REPETITION_N``) that are duplicates of an earlier occurrence, and the share of the document
+    low-quality): the fraction of word-trigram occurrences that are
+    duplicates of an earlier occurrence, and the share of the document
     taken by its single most frequent word. Docs too short for an n-gram
     have dup_gram_ratio 0; empty/whitespace-only docs score 0 on both (an
     empty doc is not "maximally repetitive").
@@ -246,7 +230,7 @@ def repetition_stats(docs):
     to the scan that reads the text."""
     from pyspark.sql import functions as F
 
-    n = REPETITION_N
+    n = 3  # the doc_repetition oracle SQL spells the same trigrams
     base = docs.select(
         F.col("doc_id"), F.split(norm_text(F.col("text")), " ").alias("_w")
     ).select(

@@ -156,17 +156,11 @@ def boilerplate_stats(docs: DataFrame, min_df: int = BOILERPLATE_MIN_DF) -> Data
     )
 
 
-# a document sharing at least this many distinct shingles with the
-# benchmark is contaminated
-CONTAM_MIN_HITS = 1
-
-
 def contamination_flags(docs: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
     """(doc_id, n_contam, contaminated) — benchmark DECONTAMINATION, the
     train/test-leak check every serious LLM data pipeline runs (GPT-3
     appendix C / PaLM-style n-gram collision): a document is contaminated
-    when it shares at least ``CONTAM_MIN_HITS`` distinct word-``n``-gram shingles
-    with ANY benchmark item. Docs too short to emit a shingle are clean by
+    when it shares a word-``n``-gram shingle with ANY benchmark item. Docs too short to emit a shingle are clean by
     definition (n_contam = 0).
 
     Scale shape: the corpus side is ONE shingle explode (same normalized
@@ -203,7 +197,8 @@ def contamination_flags(docs: DataFrame, benchmark: DataFrame, n: int = 8) -> Da
         .select(
             "doc_id",
             F.col("n_contam").cast("int").alias("n_contam"),
-            (F.col("n_contam") >= CONTAM_MIN_HITS).alias("contaminated"),
+            # the benchmark_contamination oracle SQL repeats the >= 1
+            (F.col("n_contam") >= 1).alias("contaminated"),
         )
     )
 

@@ -60,11 +60,6 @@ ROUND4_EPS = 1e-4
 # overhead (measured both ways; see _pair_intersections)
 PAIR_AGG_WIDE_DOCS = 20_000
 PAIR_AGG_WIDE_FACTOR = 4
-# embedding near-dup blocking: EMBED_LSH_BANDS bands of
-# EMBED_LSH_PLANES_PER_BAND seeded hyperplanes (b=10, r=16; the recall and
-# candidate-volume argument is in embedding_cosine_pairs_blocked)
-EMBED_LSH_BANDS = 10
-EMBED_LSH_PLANES_PER_BAND = 16
 
 
 def dedup_exact(docs: DataFrame) -> DataFrame:
@@ -732,9 +727,8 @@ def embedding_cosine_pairs_blocked(embeddings: DataFrame, threshold: float = 0.9
     """Near-duplicate (vec_id) pairs by cosine ≥ threshold over the
     ``embedding`` column — the crawl-scale path.
 
-    Banded random-hyperplane LSH: each of ``EMBED_LSH_BANDS`` bands hashes a
-    vector to a sign-pattern bucket over its own
-    ``EMBED_LSH_PLANES_PER_BAND`` seeded hyperplanes; candidates
+    Banded random-hyperplane LSH: each of b=10 bands hashes a vector to a
+    sign-pattern bucket over its own r=16 seeded hyperplanes; candidates
     are the equi-self-join on (band, bucket) — NO cross join anywhere — and
     every candidate is verified with the exact cosine, so precision is 1.0
     by construction. Recall per pair at angle θ is 1-(1-(1-θ/π)^r)^b, which
@@ -758,7 +752,7 @@ def embedding_cosine_pairs_blocked(embeddings: DataFrame, threshold: float = 0.9
     """
     from .similarity import lsh_planes
 
-    n_bands, n_ppb = EMBED_LSH_BANDS, EMBED_LSH_PLANES_PER_BAND
+    n_bands, n_ppb = 10, 16
     planes = lsh_planes(n_bands * n_ppb)
     n = embeddings.select(
         F.col("vec_id"),

@@ -161,10 +161,10 @@ def test_every_public_package_def_is_referenced():
 
 
 # defaulted parameters no production root sets that stay on purpose: the
-# production encoder pair, which only an environment with torch selects
+# switch to the production tokenizer/encoder pair, which only an environment
+# with torch selects
 UNSET_PARAMETERS = {
-    "NerConfig.encoder": "selects the torch BERT encoder (test_production_encoder.py)",
-    "NerConfig.hf_model_name": "the checkpoint that encoder loads (test_production_encoder.py)",
+    "NerConfig.encoder": "selects the torch BERT pair (test_production_encoder.py passes 'bert')",
 }
 
 

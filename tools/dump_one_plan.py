@@ -48,38 +48,14 @@ def _split_top(s: str) -> list[str]:
     return items + [s[start:].strip()]
 
 
-def _reorder_lists(s: str, rank: dict[str, int]) -> str:
-    """``s`` with the bare items of every bracket/paren list that holds more
-    than one ``rank`` key put in ``rank`` order (in the slots they hold)."""
-    out, i = [], 0
-    while i < len(s):
-        if s[i] not in "[(":
-            out.append(s[i])
-            i += 1
-            continue
-        depth, j = 0, i
-        while True:
-            depth += (s[j] in "[(") - (s[j] in "])")
-            if depth == 0 or j == len(s) - 1:
-                break
-            j += 1
-        inner = _reorder_lists(s[i + 1 : j], rank)
-        items = _split_top(inner)
-        at = [k for k, item in enumerate(items) if item in rank]
-        if len(at) > 1:
-            for k, item in zip(at, sorted((items[k] for k in at), key=rank.get)):
-                items[k] = item
-            inner = ", ".join(items)
-        out.append(s[i] + inner + s[j])
-        i = j + 1
-    return "".join(out)
-
-
 def _canonical_expands(plan: str) -> str:
     """Put each ``gid`` Expand in a canonical form: its output columns in
-    name order (every bare-attribute list downstream follows), its
-    projections sorted by their id-masked text, and the gid literals (and
-    the ``gid = k`` filters) renumbered to the sorted positions."""
+    name order, its projections sorted by their id-masked text, and the gid
+    literals (and the ``gid = k`` filters) renumbered to the sorted
+    positions. Downstream, only the lines that carry the ``gid`` column
+    (the Expand's output and the aggregates and exchange above it, up to
+    the aggregate that drops it) have their runs of bare output columns put
+    in the same order; column order elsewhere is compared as dumped."""
     for m in list(_EXPAND_ARGS.finditer(plan)):
         projections, outputs = _split_top(m.group(1))
         outs = _split_top(outputs[1:-1])
@@ -95,7 +71,13 @@ def _canonical_expands(plan: str) -> str:
         plan = plan.replace(m.group(1), f"[{args}], [{', '.join(outs[i] for i in cols)}]")
         plan = re.sub(rf"\b{re.escape(gid)} = (\d+)\b", lambda g: f"{gid} = {renumber[g.group(1)]}", plan)
         rank = {outs[i]: k for k, i in enumerate(cols)}
-        plan = _reorder_lists(plan, rank)
+        keys = "|".join(map(re.escape, rank))
+        run = re.compile(rf"(?<=[\[( ])(?:{keys})(?:, (?:{keys}))+(?=[,\])])")
+        carries_gid = re.compile(rf"{re.escape(gid)}\b")
+        plan = "\n".join(
+            run.sub(lambda r: ", ".join(sorted(r.group().split(", "), key=rank.get)), line)
+            if carries_gid.search(line) else line
+            for line in plan.split("\n"))
     return plan
 
 
