@@ -28,6 +28,8 @@ from entity_extractor_by_pointer_spark.functions.gazetteer import (
 )
 from entity_extractor_by_pointer_spark.functions.model import NerConfig
 from entity_extractor_by_pointer_spark.functions.textstats import (
+    CHUNK_OVERLAP,
+    CHUNK_TOKENS,
     bpe_ish_token_count,
     fingerprint64,
     hash_split,
@@ -39,6 +41,21 @@ from entity_extractor_by_pointer_spark.functions.textstats import (
 )
 from entity_extractor_by_pointer_spark.operators import dedup as dd
 from entity_extractor_by_pointer_spark.operators import similarity as sim
+from entity_extractor_by_pointer_spark.operators.curation import (
+    CONTAM_N,
+    CURATE_LANGS,
+    CURATE_QUALITY_FLOOR,
+)
+from entity_extractor_by_pointer_spark.operators.dedup import (
+    CONTAINMENT_THRESHOLD,
+    JACCARD_THRESHOLD,
+    MINHASH_EST_THRESHOLD,
+    NEARDUP_COS_THRESHOLD,
+    SIMHASH_MAX_HAMMING,
+)
+from entity_extractor_by_pointer_spark.operators.graph import PAGERANK_DAMPING, PAGERANK_ITERS
+from entity_extractor_by_pointer_spark.operators.kgprep import ENTITY_ANN_K, KG_NEG_K
+from entity_extractor_by_pointer_spark.operators.similarity import ANN_K, KMEANS_ITERS
 from entity_extractor_by_pointer_spark.operators.canonicalize import connected_components
 from entity_extractor_by_pointer_spark.operators.linking import (
     alias_df,
@@ -53,6 +70,7 @@ from entity_extractor_by_pointer_spark.operators.mentions import (
 from entity_extractor_by_pointer_spark.operators import train_distributed as td
 from entity_extractor_by_pointer_spark.operators.multimodal import extract_media_features
 from entity_extractor_by_pointer_spark.operators.triples import build_triples, triple_counts
+from entity_extractor_by_pointer_spark.plans.lineage import fingerprint
 from entity_extractor_by_pointer_spark.session import _ship_package
 
 # ---------------------------------------------------------------------------
@@ -97,16 +115,12 @@ ENTITY_PROFILES = [
     ("UI_WINDOW", "column"),
 ]
 
-JACCARD_THRESHOLD = 0.8
-# near-dup cosine: production threshold. The testdata embeddings contain no
-# true near-dups (max pairwise cosine ~0.6), so the near-dup query runs over
-# a DERIVED corpus: embeddings ∪ deterministically perturbed copies, whose
+# The testdata embeddings contain no true near-dups (max pairwise cosine
+# ~0.6), so the near-dup query runs at its production threshold over a
+# DERIVED corpus: embeddings ∪ deterministically perturbed copies, whose
 # (orig, copy) pairs have cosine ≥ 0.9995 by construction. Both the Spark
 # query and the oracle build the same corpus.
-NEARDUP_COS_THRESHOLD = 0.95
 NEARDUP_ID_OFFSET = 1_000_000
-SIMHASH_MAX_HAMMING = 3
-ANN_K = 5
 ANN_QUERIES = 10  # vec_id < 10 are the query set
 
 
@@ -121,9 +135,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # fingerprint of its source table, written once and read by every consumer.
 
 
-def _stamped_store_path(sf_dir: str, src_table: str, kind: str) -> str:
-    """Tempdir path for a materialized store keyed on (dataset path, source
-    fingerprint). The tag hashes the FULL sf_dir path — not its basename —
+def _stamped_store_path(spark: SparkSession, sf_dir: str, src_table: str, kind: str) -> str:
+    """Tempdir path for a materialized store keyed on (dataset path,
+    ``fingerprint`` of the source table). The tag hashes the FULL sf_dir path — not its basename —
     so two datasets sharing a basename (or a concurrent run over another
     copy) can never resolve to, or prune, each other's store (round-4
     ADVICE). Stale stamps of the SAME dataset are pruned only when cold
@@ -133,16 +147,10 @@ def _stamped_store_path(sf_dir: str, src_table: str, kind: str) -> str:
     import tempfile
     import time
 
-    src = os.path.join(sf_dir, f"{src_table}.parquet")
-    # a directory table folds its files' stats; a single-file table its own
-    files = [os.path.join(src, f) for f in sorted(os.listdir(src))] if os.path.isdir(src) else [src]
-    stamp = 0
-    for f in filter(os.path.exists, files):
-        st = os.stat(f)
-        stamp = (stamp * 1_000_003 + st.st_size + st.st_mtime_ns) % (1 << 60)
+    stamp = fingerprint(_t(spark, sf_dir, src_table))
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
     tmp = tempfile.gettempdir()
-    path = os.path.join(tmp, f"eeps_{kind}_{tag}_{stamp:x}")
+    path = os.path.join(tmp, f"eeps_{kind}_{tag}_{stamp}")
     for d in os.listdir(tmp):
         p = os.path.join(tmp, d)
         if d.startswith(f"eeps_{kind}_{tag}_") and p != path and os.path.isdir(p):
@@ -199,15 +207,11 @@ def _mention_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples, embeddings, the ~11 graph consumers) reads the store. This is
     the honest production shape: mentions are extracted once per crawl
     snapshot, then queried many times (round-4 verdict item 1)."""
-    from pyspark.sql import types as T
-
-    path = _stamped_store_path(sf_dir, "documents", "kg_mentions")
+    path = _stamped_store_path(spark, sf_dir, "documents", "kg_mentions")
 
     def build(p: str) -> None:
         docs = _t(spark, sf_dir, "documents")
-        detect_mentions_gazetteer(
-            docs, DOCS_GAZETTEER, id_col="doc_id", text_col="text", id_type=T.LongType()
-        ).write.mode("overwrite").parquet(p)
+        detect_mentions_gazetteer(docs, DOCS_GAZETTEER, id_col="doc_id").write.mode("overwrite").parquet(p)
 
     _write_once(path, build)
     return spark.read.parquet(path).select(
@@ -227,7 +231,7 @@ def _canon_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact), so every oracle row stays hash-green."""
     from entity_extractor_by_pointer_spark.plans.pipeline import canonical_mentions
 
-    path = _stamped_store_path(sf_dir, "documents", "kg_canon")
+    path = _stamped_store_path(spark, sf_dir, "documents", "kg_canon")
 
     def build(p: str) -> None:
         canon = canonical_mentions(_mention_store(spark, sf_dir), DOCS_GAZETTEER, CANON_EDGES)
@@ -245,7 +249,7 @@ def _triples_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet round-trip is exact), so all oracle rows stay hash-green."""
     from entity_extractor_by_pointer_spark.operators.triples import bucket_by_subject
 
-    path = _stamped_store_path(sf_dir, "documents", "kg_triples")
+    path = _stamped_store_path(spark, sf_dir, "documents", "kg_triples")
 
     def build(p: str) -> None:
         canon = _canon_store(spark, sf_dir)
@@ -358,10 +362,6 @@ def q_triples_flagship(spark, sf_dir):
     return triple_counts(_triples_store(spark, sf_dir))
 
 
-PAGERANK_ITERS = 5
-PAGERANK_DAMPING = 0.85
-
-
 def q_graph_degrees(spark, sf_dir):
     """Graph-consumer query over the materialized KG: in/out/total degree
     per canonical entity."""
@@ -375,9 +375,7 @@ def q_graph_pagerank(spark, sf_dir):
     join+agg per step; oracle unrolls the same iterations as chained CTEs)."""
     from entity_extractor_by_pointer_spark.operators.graph import pagerank
 
-    return pagerank(
-        _triples_store(spark, sf_dir), iterations=PAGERANK_ITERS, damping=PAGERANK_DAMPING
-    )
+    return pagerank(_triples_store(spark, sf_dir))
 
 
 def q_entity_embeddings(spark, sf_dir):
@@ -393,9 +391,6 @@ def q_entity_embeddings(spark, sf_dir):
     return entity_context_embeddings(canon, _t(spark, sf_dir, "embeddings"))
 
 
-ENTITY_ANN_K = 3
-
-
 def q_entity_related_embedding(spark, sf_dir):
     """Related entities by context-embedding cosine — the distributional
     complement of graph_related (works for never-co-mentioned entities);
@@ -406,9 +401,7 @@ def q_entity_related_embedding(spark, sf_dir):
     )
 
     canon = _canon_store(spark, sf_dir)
-    return entity_related_by_embedding(
-        canon, _t(spark, sf_dir, "embeddings"), k=ENTITY_ANN_K
-    )
+    return entity_related_by_embedding(canon, _t(spark, sf_dir, "embeddings"))
 
 
 PROFILE_COLS = ("l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus", "l_shipdate")
@@ -451,9 +444,6 @@ def q_graph_metapaths(spark, sf_dir):
     return metapath_counts(_triples_store(spark, sf_dir))
 
 
-KG_NEG_K = 2
-
-
 def q_kg_negatives(spark, sf_dir):
     """Deterministic corruption-based negative sampling for KG-embedding
     training: k hash-drawn object replacements per triple, with
@@ -461,7 +451,7 @@ def q_kg_negatives(spark, sf_dir):
     distribution-friendly)."""
     from entity_extractor_by_pointer_spark.operators.kgprep import corrupt_triples
 
-    return corrupt_triples(_triples_store(spark, sf_dir), k=KG_NEG_K)
+    return corrupt_triples(_triples_store(spark, sf_dir))
 
 
 def q_graph_pagerank_weighted(spark, sf_dir):
@@ -472,12 +462,7 @@ def q_graph_pagerank_weighted(spark, sf_dir):
     from entity_extractor_by_pointer_spark.operators.graph import pagerank
     from entity_extractor_by_pointer_spark.operators.triples import triple_counts
 
-    return pagerank(
-        triple_counts(_triples_store(spark, sf_dir)),
-        iterations=PAGERANK_ITERS,
-        damping=PAGERANK_DAMPING,
-        weight_col="n_docs",
-    )
+    return pagerank(triple_counts(_triples_store(spark, sf_dir)), weight_col="n_docs")
 
 
 PPR_SEEDS = ("ORG_SPARK",)
@@ -489,12 +474,7 @@ def q_graph_ppr(spark, sf_dir):
     PageRank, only the teleport literals differ."""
     from entity_extractor_by_pointer_spark.operators.graph import pagerank
 
-    return pagerank(
-        _triples_store(spark, sf_dir),
-        iterations=PAGERANK_ITERS,
-        damping=PAGERANK_DAMPING,
-        seeds=PPR_SEEDS,
-    )
+    return pagerank(_triples_store(spark, sf_dir), seeds=PPR_SEEDS)
 
 
 def q_graph_triangles(spark, sf_dir):
@@ -543,16 +523,14 @@ def q_span_eval_f1(spark, sf_dir):
     from entity_extractor_by_pointer_spark.operators.evaluate import span_f1
 
     docs = _t(spark, sf_dir, "documents")
-    from pyspark.sql import types as T
-
     pred_gaz = [(n, t, e) for n, t, e in GAZ if n in {s for s, _e in LINK_ALIASES}]
     pred = (
-        detect_mentions_gazetteer(docs, pred_gaz, id_col="doc_id", text_col="text", id_type=T.LongType())
+        detect_mentions_gazetteer(docs, pred_gaz, id_col="doc_id")
         .select(F.col("doc_id").cast("string").alias("url"), "type", "entity")
         .dropDuplicates()
     )
     gold = (
-        detect_mentions_gazetteer(docs, GAZ, id_col="doc_id", text_col="text", id_type=T.LongType())
+        detect_mentions_gazetteer(docs, GAZ, id_col="doc_id")
         .select(F.col("doc_id").cast("string").alias("url"), "type", "entity")
         .dropDuplicates()
     )
@@ -662,10 +640,6 @@ def q_top_terms_tfidf(spark, sf_dir):
     return t.orderBy(F.desc("tfidf"), F.asc("term")).limit(20)
 
 
-CURATE_LANGS = ("en", "de", "fr")
-CURATE_QUALITY_FLOOR = 0.5
-
-
 def q_vocab_edit_pairs(spark, sf_dir):
     """Typo/variant mining over the corpus vocabulary: term pairs within
     Levenshtein distance 2, candidates via SymSpell deletion-signature
@@ -695,14 +669,9 @@ def q_corpus_curation(spark, sf_dir):
     pass + the dedup fingerprint aggregation."""
     from entity_extractor_by_pointer_spark.operators.curation import curate_corpus
 
-    return curate_corpus(
-        _t(spark, sf_dir, "documents"),
-        keep_langs=CURATE_LANGS,
-        quality_floor=CURATE_QUALITY_FLOOR,
-    )
+    return curate_corpus(_t(spark, sf_dir, "documents"))
 
 
-CONTAM_N = 8
 CONTAM_BENCH_PERIOD = 97
 CONTAM_PREFIX_WORDS = 30
 
@@ -726,7 +695,7 @@ def q_benchmark_contamination(spark, sf_dir):
             " ",
         ).alias("text")
     )
-    return contamination_flags(d, bench, n=CONTAM_N)
+    return contamination_flags(d, bench)
 
 
 def q_source_stats(spark, sf_dir):
@@ -784,11 +753,7 @@ def q_doc_boilerplate(spark, sf_dir):
     counts; the hot set is broadcast."""
     from entity_extractor_by_pointer_spark.operators.curation import boilerplate_stats
 
-    return boilerplate_stats(_t(spark, sf_dir, "documents"), min_df=4)
-
-
-CHUNK_TOKENS = 32
-CHUNK_OVERLAP = 8
+    return boilerplate_stats(_t(spark, sf_dir, "documents"))
 
 
 def q_doc_chunks(spark, sf_dir):
@@ -796,9 +761,7 @@ def q_doc_chunks(spark, sf_dir):
     chunking step, pure Catalyst (split → sequence → posexplode → slice)."""
     from entity_extractor_by_pointer_spark.functions.textstats import chunk_documents
 
-    return chunk_documents(
-        _t(spark, sf_dir, "documents"), CHUNK_TOKENS, CHUNK_OVERLAP
-    )
+    return chunk_documents(_t(spark, sf_dir, "documents"))
 
 
 def q_dedup_exact(spark, sf_dir):
@@ -813,10 +776,9 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     otherwise explode the candidate join O(df²). The oracle computes EXACT
     blocking; capped ≡ exact on this corpus family is pytest-pinned
     (tests/test_dedup_similarity.py) and was oracle-proven in round 2."""
-    return dd.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), JACCARD_THRESHOLD)
+    return dd.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
-CONTAINMENT_THRESHOLD = 0.9
 CONTAINMENT_FRAG_WORDS = 30
 
 
@@ -841,30 +803,25 @@ def q_doc_containment(spark, sf_dir):
     signal for quotes/syndication/page-supersets that symmetric Jaccard
     misses. Shares the blocked-intersection engine (adaptive stop-shingle
     cap) with the Jaccard query."""
-    return dd.containment_pairs(_containment_corpus(spark, sf_dir), CONTAINMENT_THRESHOLD)
+    return dd.containment_pairs(_containment_corpus(spark, sf_dir))
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
-    return dd.minhash_lsh_pairs(_t(spark, sf_dir, "documents"), JACCARD_THRESHOLD)
-
-
-MINHASH_EST_THRESHOLD = 0.5
+    return dd.minhash_lsh_pairs(_t(spark, sf_dir, "documents"))
 
 
 def q_dedup_minhash_est(spark, sf_dir):
     """Signature-level near-dup pairs (no second shingle pass): banded-LSH
     candidates kept by their MinHash estimate."""
-    return dd.minhash_est_pairs(
-        _t(spark, sf_dir, "documents"), MINHASH_EST_THRESHOLD
-    )
+    return dd.minhash_est_pairs(_t(spark, sf_dir, "documents"))
 
 
 def q_dedup_simhash(spark, sf_dir):
-    return dd.simhash_pairs(_t(spark, sf_dir, "documents"), SIMHASH_MAX_HAMMING)
+    return dd.simhash_pairs(_t(spark, sf_dir, "documents"))
 
 
 def q_dedup_clusters_cc(spark, sf_dir):
-    pairs = dd.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), JACCARD_THRESHOLD)
+    pairs = dd.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
     return connected_components(pairs, src="id_a", dst="id_b").withColumnRenamed(
         "id", "doc_id"
     )
@@ -892,9 +849,7 @@ def q_neardup_embedding_cosine(spark, sf_dir):
     """LSH-banded blocking + exact-cosine verify (no cross join anywhere).
     The oracle is the EXACT brute-force SQL over the same corpus, so the
     green row proves the blocked plan loses no pair at this threshold."""
-    return dd.embedding_cosine_pairs_blocked(
-        _augmented_embeddings(spark, sf_dir), NEARDUP_COS_THRESHOLD
-    )
+    return dd.embedding_cosine_pairs_blocked(_augmented_embeddings(spark, sf_dir))
 
 
 def q_ann_topk(spark, sf_dir):
@@ -919,15 +874,12 @@ def q_ann_topk_lsh(spark, sf_dir):
     )
 
 
-KMEANS_ITERS = 3
-
-
 def q_ivf_kmeans_train(spark, sf_dir):
     """Distributed Lloyd refinement of the IVF centroids (fixed iterations;
     per-iteration 6-dp rounding makes the recursion cross-engine exact).
     Returns the final centroids as (cell, dim, val) rows."""
     e = _t(spark, sf_dir, "embeddings")
-    return sim.kmeans_centroids(e, iterations=KMEANS_ITERS)
+    return sim.kmeans_centroids(e)
 
 
 def _ivf_corpus(spark, sf_dir):
@@ -937,7 +889,7 @@ def _ivf_corpus(spark, sf_dir):
     round-4 ADVICE), read thereafter, so the probe plan is a
     partition-prunable scan instead of recomputing centroid scores over the
     corpus at query time."""
-    path = _stamped_store_path(sf_dir, "embeddings", "ivf_corpus")
+    path = _stamped_store_path(spark, sf_dir, "embeddings", "ivf_corpus")
     return sim.materialize_ivf_corpus(_t(spark, sf_dir, "embeddings"), path)
 
 
@@ -946,22 +898,14 @@ def q_ann_topk_ivf(spark, sf_dir):
     corpus: the query's cell selects whole partitions; no centroid math
     touches the corpus at query time."""
     e = _t(spark, sf_dir, "embeddings")
-    return sim.ann_topk_ivf(
-        e, e.where(F.col("vec_id") < ANN_QUERIES), ANN_K, assigned=_ivf_corpus(spark, sf_dir)
-    )
+    return sim.ann_topk_ivf(_ivf_corpus(spark, sf_dir), e.where(F.col("vec_id") < ANN_QUERIES))
 
 
 def q_ann_topk_ivf_nprobe2(spark, sf_dir):
     """IVF probe with nprobe=2: each query unions its two nearest cells
     (recall back at the cost of one more pruned partition per query)."""
     e = _t(spark, sf_dir, "embeddings")
-    return sim.ann_topk_ivf(
-        e,
-        e.where(F.col("vec_id") < ANN_QUERIES),
-        ANN_K,
-        nprobe=2,
-        assigned=_ivf_corpus(spark, sf_dir),
-    )
+    return sim.ann_topk_ivf(_ivf_corpus(spark, sf_dir), e.where(F.col("vec_id") < ANN_QUERIES), nprobe=2)
 
 
 def q_ivf_assign(spark, sf_dir):

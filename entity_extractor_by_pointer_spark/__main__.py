@@ -161,7 +161,7 @@ def main(argv: list[str] | None = None) -> int:
         cfg = NerConfig(classes=classes, model_type=args.scorer if args.scorer in ("gp", "bp") else "gp")
         pages = reference_dataset_as_pages(spark, args.eval_json)
         pred = mention_sets(detect_mentions(pages, cfg))
-        gold = gold_mention_sets(pages, cfg.max_sequence_length)
+        gold = gold_mention_sets(pages)
         metrics, macro = span_f1(spark, pred, gold, classes)
         for r in metrics.orderBy("type").collect():
             print(

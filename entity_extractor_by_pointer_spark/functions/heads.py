@@ -27,6 +27,7 @@ import numpy as np
 
 INNER_DIM = 64  # reference GlobalPointer.py:14
 NEG_INF = 1e12  # reference GlobalPointer.py:39
+HEAD_SEED = 7  # seeds the random weights of either head
 
 
 def sinusoidal_position_embedding(seq_len: int, output_dim: int) -> np.ndarray:
@@ -112,8 +113,8 @@ class GlobalPointerHead:
     equivalence is pinned by ``tests/test_heads.py``.
     """
 
-    def __init__(self, hidden_size: int, num_labels: int, seed: int = 7):
-        rng = np.random.default_rng(seed)
+    def __init__(self, hidden_size: int, num_labels: int):
+        rng = np.random.default_rng(HEAD_SEED)
         scale = 1.0 / np.sqrt(hidden_size)
         self.w1 = rng.normal(0, scale, (hidden_size, INNER_DIM * 2)).astype(np.float32)
         self.b1 = rng.normal(0, 0.02, (INNER_DIM * 2,)).astype(np.float32)
@@ -182,8 +183,8 @@ class GlobalPointerHead:
 class BinaryPointerHead:
     """SpanBERT-style head: hidden states → (B, L, C, 2) start/end logits."""
 
-    def __init__(self, hidden_size: int, num_labels: int, seed: int = 11):
-        rng = np.random.default_rng(seed)
+    def __init__(self, hidden_size: int, num_labels: int):
+        rng = np.random.default_rng(HEAD_SEED)
         scale = 1.0 / np.sqrt(hidden_size)
         self.gamma = rng.normal(1.0, 0.02, (hidden_size,)).astype(np.float32)
         self.beta = rng.normal(0.0, 0.02, (hidden_size,)).astype(np.float32)

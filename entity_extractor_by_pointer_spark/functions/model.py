@@ -7,7 +7,7 @@ shuffle) preserves the reference semantics end-to-end.
 
 Pipeline order mirrors reference ``engines/predict.py:31-48`` (predict path)
 and ``engines/data.py:31-81`` (batch collate path): ids come from an
-UNtruncated encode then ``pad_or_truncate`` to ``max_sequence_length``
+UNtruncated encode then ``pad_or_truncate`` to ``MAX_SEQUENCE_LENGTH``
 (``data.py:41-44,24-29``) while the decode-side offset mapping comes from a
 ``truncation=True`` encode (``data.py:88-90``). On the seeded path both come
 from one vectorized tokenize pass per batch
@@ -17,7 +17,7 @@ per-document spec ``tokenizer.encode_for_inference``.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import astuple, dataclass, field
 
 import numpy as np
 
@@ -29,11 +29,15 @@ from .heads import BinaryPointerHead, GlobalPointerHead
 from .tokenizer import CjkCharTokenizer, encode_batch_for_inference, encode_for_inference  # noqa: F401
 
 
+# tokens per document the model sees, [CLS] and [SEP] included (reference
+# config.py:57); read at call time
+MAX_SEQUENCE_LENGTH = 200
+
+
 @dataclass
 class NerConfig:
     classes: list[str]
-    model_type: str = "gp"  # 'gp' | 'bp'  (reference config.py:28-30)
-    max_sequence_length: int = 200  # reference config.py:57
+    model_type: str  # 'gp' | 'bp'  (reference config.py:28-30)
     # head logit bias: shifts scores so a small, nonzero fraction of valid
     # cells clear the decode threshold (random weights alone are ~50/50)
     logit_bias: float = -4.0
@@ -68,19 +72,19 @@ class PointerNerModel:
         else:
             self.tokenizer = CjkCharTokenizer()
             self.encoder = SeededTinyEncoder()
-        # the head width follows the encoder; either head is seeded by 7
+        # the head width follows the encoder
         hidden = self.encoder.hidden_size
         if config.model_type == "gp":
-            self.head = GlobalPointerHead(hidden, config.num_labels, 7)
+            self.head = GlobalPointerHead(hidden, config.num_labels)
         else:
-            self.head = BinaryPointerHead(hidden, config.num_labels, 7)
+            self.head = BinaryPointerHead(hidden, config.num_labels)
 
     def _encode_batch(
         self, texts: list[str]
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray | list]:
         """ids and attention mask (B, L) int32, plus the per-document offset
         mappings: a (B, L, 2) array on the seeded path, lists on ``bert``."""
-        L = self.config.max_sequence_length
+        L = MAX_SEQUENCE_LENGTH
         if self.config.encoder == "bert":
             ids, masks, offsets = [], [], []
             # the reference's two tokenizer calls verbatim: UNtruncated ids
@@ -185,13 +189,8 @@ class _ModelCache:
     cache: dict = field(default_factory=dict)
 
     def get(self, config: NerConfig) -> PointerNerModel:
-        key = (
-            tuple(config.classes),
-            config.model_type,
-            config.max_sequence_length,
-            config.logit_bias,
-            config.encoder,
-        )
+        # every field, so two configs that differ anywhere never share a model
+        key = tuple(tuple(v) if isinstance(v, list) else v for v in astuple(config))
         if key not in self.cache:
             self.cache[key] = PointerNerModel(config)
         return self.cache[key]

@@ -138,17 +138,18 @@ def winnow_fingerprint(col: Column) -> Column:
     return F.array_min(F.transform(positions, lambda i: md5_int64(F.substring(t, i, 8))))
 
 
-def chunk_documents(
-    docs,
-    chunk_tokens: int = 64,
-    overlap: int = 16,
-):
-    """Split each document into fixed-size overlapping whitespace-token
-    windows — the chunking step an LLM training pipeline runs before
+# the window and overlap the chunking query runs at (the oracle reads them)
+CHUNK_TOKENS = 32
+CHUNK_OVERLAP = 8
+
+
+def chunk_documents(docs):
+    """Split each document into ``CHUNK_TOKENS``-token overlapping
+    whitespace-token windows — the chunking step an LLM training pipeline runs before
     packing/tokenizing, kept entirely inside Catalyst (split → sequence →
     posexplode → slice → concat_ws; no UDF).
 
-    Windows start every ``chunk_tokens - overlap`` tokens; the last window
+    Windows start every ``CHUNK_TOKENS - CHUNK_OVERLAP`` tokens; the last window
     may be short but is never empty; documents shorter than one window
     yield exactly one chunk. Returns (doc_id, chunk_id, n_tokens,
     chunk_text) with chunk_id 0-based in document order — deterministic,
@@ -157,9 +158,8 @@ def chunk_documents(
     Scale shape: one narrow pass; output rows ≈ corpus_tokens / stride per
     doc, produced by generator-style posexplode (no driver or whole-doc
     array shuffle — the split array lives only inside the projection)."""
-    if not 0 <= overlap < chunk_tokens:
-        raise ValueError("need 0 <= overlap < chunk_tokens")
-    stride = chunk_tokens - overlap
+    chunk_tokens = CHUNK_TOKENS
+    stride = chunk_tokens - CHUNK_OVERLAP
     w = F.split(norm_text(F.col("text")), " ")
     n = F.size(w)
     # number of windows: 1 + ceil(max(n - chunk, 0) / stride)

@@ -6,8 +6,8 @@ Verdict precedence (first matching reason wins, so every doc gets exactly
 one row and the policy is order-deterministic):
   1. ``exact_dup``  — another doc with the same normalized-text fingerprint
      has a smaller doc_id (keep-first-by-id, same rule as ``dedup_exact``)
-  2. ``lang``       — document language not in the keep set
-  3. ``quality``    — quality_score below the floor
+  2. ``lang``       — document language not in ``CURATE_LANGS``
+  3. ``quality``    — quality_score below ``CURATE_QUALITY_FLOOR``
   4. ``kept``
 
 Scale shape: fingerprint keep-ids come from ONE map-side-combined groupBy
@@ -24,15 +24,13 @@ from pyspark.sql import functions as F
 from ..cache import broadcast_small, cached
 from ..functions.textstats import fingerprint64, quality_score
 
-DEFAULT_KEEP_LANGS = ("en", "de", "fr", "es", "zh")
-DEFAULT_QUALITY_FLOOR = 0.5
+# the keep set and the floor the curation query runs at; the DuckDB oracle
+# in __spark_entry__ reads the same names
+CURATE_LANGS = ("en", "de", "fr")
+CURATE_QUALITY_FLOOR = 0.5
 
 
-def curate_corpus(
-    docs: DataFrame,
-    keep_langs: tuple[str, ...] = DEFAULT_KEEP_LANGS,
-    quality_floor: float = DEFAULT_QUALITY_FLOOR,
-) -> DataFrame:
+def curate_corpus(docs: DataFrame) -> DataFrame:
     """(doc_id, verdict) — one row per input document."""
     from ..partitioning import spread_small_scan
 
@@ -53,8 +51,8 @@ def curate_corpus(
     )
     verdict = (
         F.when(F.col("doc_id") != F.col("_keep_id"), F.lit("exact_dup"))
-        .when(~F.col("lang").isin(*keep_langs), F.lit("lang"))
-        .when(F.col("_q") < F.lit(quality_floor), F.lit("quality"))
+        .when(~F.col("lang").isin(*CURATE_LANGS), F.lit("lang"))
+        .when(F.col("_q") < F.lit(CURATE_QUALITY_FLOOR), F.lit("quality"))
         .otherwise(F.lit("kept"))
     )
     return (
@@ -65,7 +63,7 @@ def curate_corpus(
 
 BOILERPLATE_MIN_DF = 4
 # census short-circuit (the ``_cap_for`` pattern, dedup.py): at
-# or below this many docs the df>=min_df hot set is bounded by
+# or below this many docs the df>=BOILERPLATE_MIN_DF hot set is bounded by
 # total_shingle_occurrences / min_df ≤ docs · shingles_per_doc / min_df,
 # so with ≲200 distinct shingles per doc (a ~200-word page) the worst case
 # is 20k · 200 / 4 = 1M rows = exactly ``cache.BROADCAST_ROWS_MAX`` — the
@@ -77,7 +75,7 @@ BOILERPLATE_MIN_DF = 4
 BOILERPLATE_CENSUS_DOCS = 20_000
 
 
-def boilerplate_stats(docs: DataFrame, min_df: int = BOILERPLATE_MIN_DF) -> DataFrame:
+def boilerplate_stats(docs: DataFrame) -> DataFrame:
     """Per-document boilerplate census: how much of each doc is made of
     passages repeated across the corpus (the repeated-passage signal behind
     C4/RefinedWeb-style boilerplate removal — nav bars, cookie banners,
@@ -85,7 +83,7 @@ def boilerplate_stats(docs: DataFrame, min_df: int = BOILERPLATE_MIN_DF) -> Data
 
     Returns (doc_id, n_shingles, n_boiler, boiler_ratio) where ``n_boiler``
     counts the doc's distinct word-3-gram shingles whose corpus document
-    frequency is ≥ ``min_df`` and ``boiler_ratio = n_boiler/n_shingles``
+    frequency is ≥ ``BOILERPLATE_MIN_DF`` and ``boiler_ratio = n_boiler/n_shingles``
     (0.0 for shingle-less short docs).
 
     Scale shape: ONE shingle scan feeds both the corpus df census (map-side
@@ -96,8 +94,8 @@ def boilerplate_stats(docs: DataFrame, min_df: int = BOILERPLATE_MIN_DF) -> Data
     counting it anyway was the round-4 bench regression; larger corpora
     take ``cache.broadcast_small`` (persist and COUNT the hot set first,
     hinting only under ``cache.BROADCAST_ROWS_MAX``) — the bound
-    ``corpus_shingles/min_df`` is *not* small at crawl scale with a low
-    min_df, and a forced hint overrides
+    ``corpus_shingles/BOILERPLATE_MIN_DF`` is *not* small at crawl scale,
+    and a forced hint overrides
     ``autoBroadcastJoinThreshold`` (it would OOM rather than degrade —
     round-3 judge). Above the gate the semi join is left plain and the
     shuffle carries only (shingle) keys.
@@ -115,16 +113,13 @@ def boilerplate_stats(docs: DataFrame, min_df: int = BOILERPLATE_MIN_DF) -> Data
     hot = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") >= min_df)
+        .where(F.col("df") >= BOILERPLATE_MIN_DF)
         .select("shingle")
     )
-    if min_df >= BOILERPLATE_MIN_DF and docs.count() <= BOILERPLATE_CENSUS_DOCS:
+    if docs.count() <= BOILERPLATE_CENSUS_DOCS:
         # small corpus: the hot set cannot threaten the broadcast ceiling
         # (see BOILERPLATE_CENSUS_DOCS bound) — skip the census action
-        # entirely (round-4 bench regression). The min_df >= default guard
-        # keeps that bound honest: its derivation assumes min_df ≥ 4, so a
-        # caller passing min_df=1 (hot set ≈ every distinct shingle) takes
-        # the censused branch below instead of a forced hint
+        # entirely (round-4 bench regression)
         hot_side = F.broadcast(hot)
     else:
         hot_side = broadcast_small(hot)  # census + join read one materialization
@@ -156,11 +151,14 @@ def boilerplate_stats(docs: DataFrame, min_df: int = BOILERPLATE_MIN_DF) -> Data
     )
 
 
-def contamination_flags(docs: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
+CONTAM_N = 8  # shingle width of the contamination check (the oracle reads it)
+
+
+def contamination_flags(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     """(doc_id, n_contam, contaminated) — benchmark DECONTAMINATION, the
     train/test-leak check every serious LLM data pipeline runs (GPT-3
     appendix C / PaLM-style n-gram collision): a document is contaminated
-    when it shares a word-``n``-gram shingle with ANY benchmark item. Docs too short to emit a shingle are clean by
+    when it shares a word-``CONTAM_N``-gram shingle with ANY benchmark item. Docs too short to emit a shingle are clean by
     definition (n_contam = 0).
 
     Scale shape: the corpus side is ONE shingle explode (same normalized
@@ -178,13 +176,10 @@ def contamination_flags(docs: DataFrame, benchmark: DataFrame, n: int = 8) -> Da
     # the census below honest (cross-item duplication would inflate it
     # toward the gate)
     bench_sh = shingle_df(
-        benchmark.select(F.lit(0).alias("_bid"), F.col("text")),
-        "_bid",
-        "text",
-        n=n,
+        benchmark.select(F.lit(0).alias("_bid"), F.col("text")), CONTAM_N, id_col="_bid"
     ).select("shingle").distinct()
     dim = broadcast_small(bench_sh)
-    doc_sh = shingle_df(docs, n=n)
+    doc_sh = shingle_df(docs, CONTAM_N)
     hits = (
         doc_sh.join(dim, "shingle", "left_semi")
         .groupBy("doc_id")

@@ -60,6 +60,13 @@ ROUND4_EPS = 1e-4
 # overhead (measured both ways; see _pair_intersections)
 PAIR_AGG_WIDE_DOCS = 20_000
 PAIR_AGG_WIDE_FACTOR = 4
+# the thresholds the near-dup queries run at; each operator reads its own at
+# call time, and the DuckDB oracles in __spark_entry__ read the same names
+JACCARD_THRESHOLD = 0.8  # ngram_jaccard_pairs and minhash_lsh_pairs
+CONTAINMENT_THRESHOLD = 0.9
+MINHASH_EST_THRESHOLD = 0.5
+SIMHASH_MAX_HAMMING = 3
+NEARDUP_COS_THRESHOLD = 0.95  # embedding_cosine_pairs_blocked
 
 
 def dedup_exact(docs: DataFrame) -> DataFrame:
@@ -110,8 +117,8 @@ def _shingle_arr_sql(n: int, hashed: bool, positional: bool = False) -> str:
     )
 
 
-def shingle_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = NGRAM_N) -> DataFrame:
-    """Distinct word n-gram shingles per doc: (id, shingle).
+def shingle_df(docs: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:
+    """Distinct word n-gram shingles of the ``text`` column per doc: (id, shingle).
 
     Per-doc dedup happens INSIDE the row (``array_distinct`` over the
     shingle array before the explode), not via ``dropDuplicates`` — the
@@ -119,8 +126,8 @@ def shingle_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", 
     exploded (id, shingle) table just to dedup within each doc."""
     from ..partitioning import spread_small_scan
 
-    words = spread_small_scan(docs.select(id_col, text_col)).select(
-        F.col(id_col), F.split(norm_text(F.col(text_col)), " ").alias("w")
+    words = spread_small_scan(docs.select(id_col, "text")).select(
+        F.col(id_col), F.split(norm_text(F.col("text")), " ").alias("w")
     )
     return words.select(
         id_col,
@@ -172,8 +179,8 @@ def _attach_pair_arrays(cand: DataFrame, arr_df: DataFrame) -> DataFrame:
     return cand.join(va, "id_a").join(vb, "id_b")
 
 
-def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
-    """(id_a, id_b, jaccard) for pairs with Jaccard ≥ threshold.
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """(id_a, id_b, jaccard) for pairs with Jaccard ≥ ``JACCARD_THRESHOLD``.
 
     Blocking join on shingle; Jaccard on distinct-shingle sets. Skew from
     common shingles is handled two ways: AQE skew-join always, and —
@@ -198,6 +205,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     # J ≥ τ - 5e-5, so the prunes use the slackened τε, not τ. Without the
     # slack, a pair sitting in the 1e-4 rounding window (e.g. J = 0.79998
     # at τ = 0.8) could be dropped that the oracle keeps.
+    threshold = JACCARD_THRESHOLD
     t_eps = threshold - ROUND4_EPS
     bound = F.lit(t_eps / (1.0 + t_eps)) * (F.col("n_a") + F.col("n_b"))
     inter = _pair_intersections(
@@ -380,9 +388,9 @@ def _pair_intersections(
     )
 
 
-def containment_pairs(docs: DataFrame, threshold: float = 0.9) -> DataFrame:
+def containment_pairs(docs: DataFrame) -> DataFrame:
     """DIRECTIONAL near-dup pairs (id_a, id_b, containment) with
-    ``containment = |shingles(a) ∩ shingles(b)| / |shingles(a)| ≥ threshold``
+    ``containment = |shingles(a) ∩ shingles(b)| / |shingles(a)| ≥ CONTAINMENT_THRESHOLD``
     — the asymmetric complement of Jaccard. A short page wholly quoted
     inside a long aggregator page has containment ≈ 1 in one direction but
     a LOW Jaccard (the union is dominated by the long page), so symmetric
@@ -397,6 +405,7 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.9) -> DataFrame:
     needs ``n_inter ≥ τ·min(n_a, n_b)``."""
     # slackened for the final ROUNDED filter (see ngram_jaccard_pairs):
     # round(containment, 4) ≥ τ admits containment ≥ τ - 5e-5
+    threshold = CONTAINMENT_THRESHOLD
     t_eps = threshold - ROUND4_EPS
     bound = F.lit(t_eps) * F.least("n_a", "n_b")
     inter = _pair_intersections(
@@ -584,8 +593,9 @@ def _band_candidates(buckets: DataFrame, id_col: str, key: str) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """LSH candidate generation + exact Jaccard verification.
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
+    """LSH candidate generation + exact Jaccard verification at
+    ``JACCARD_THRESHOLD``.
 
     Only the DISTINCT vocabulary is ever materialized as strings (inside
     the signature pass, where md5 needs them); both the signature rows and
@@ -612,16 +622,16 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
             "jaccard",
             F.round(n_inter / (n_a + n_b - n_inter), 4),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
 
 
-def minhash_est_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+def minhash_est_pairs(docs: DataFrame) -> DataFrame:
     """(id_a, id_b, est) — banded LSH candidates verified by the SIGNATURE
     Jaccard estimate (fraction of equal MinHash components), not the exact
     shingle Jaccard: it flags exactly the pairs that collide in ≥1 band
-    with est ≥ threshold. Cheaper than `minhash_lsh_pairs` (no second pass
+    with est ≥ ``MINHASH_EST_THRESHOLD``. Cheaper than `minhash_lsh_pairs` (no second pass
     over shingles) at the cost of estimate noise — the production pick when
     downstream tolerates ~1/k resolution."""
     sig = cached(minhash_signatures(docs))
@@ -640,7 +650,7 @@ def minhash_est_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
         cand.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn("est", F.round(eq / F.lit(MINHASH_K), 4))
-        .where(F.col("est") >= threshold)
+        .where(F.col("est") >= MINHASH_EST_THRESHOLD)
         .select("id_a", "id_b", "est")
     )
 
@@ -673,15 +683,16 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return bit_sums.select(F.col("doc_id"), sig.cast("bigint").alias("simhash"))
 
 
-def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """(id_a, id_b, hamming ≤ max_hamming). Candidate blocking by the
-    pigeonhole principle: split the signature into ``max_hamming + 1`` bit
+def simhash_pairs(docs: DataFrame) -> DataFrame:
+    """(id_a, id_b, hamming ≤ SIMHASH_MAX_HAMMING). Candidate blocking by the
+    pigeonhole principle: split the signature into ``SIMHASH_MAX_HAMMING + 1`` bit
     blocks — any pair within distance d must agree exactly on ≥1 block, so
     an equi-join per block finds every true pair without a cross join."""
     # the signature table is the expensive subtree (word explode + a
     # 60-aggregate groupBy); it feeds BOTH sides of the candidate self-join,
     # so persist it — uncached, Spark recomputes it once per block per side
     # (8x at max_hamming=3)
+    max_hamming = SIMHASH_MAX_HAMMING
     sig = cached(simhash_signatures(docs))
     n_blocks = max_hamming + 1
     width = SIMHASH_BITS // n_blocks
@@ -723,8 +734,8 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
 
 
-def embedding_cosine_pairs_blocked(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
-    """Near-duplicate (vec_id) pairs by cosine ≥ threshold over the
+def embedding_cosine_pairs_blocked(embeddings: DataFrame) -> DataFrame:
+    """Near-duplicate (vec_id) pairs by cosine ≥ ``NEARDUP_COS_THRESHOLD`` over the
     ``embedding`` column — the crawl-scale path.
 
     Banded random-hyperplane LSH: each of b=10 bands hashes a vector to a
@@ -811,7 +822,7 @@ def embedding_cosine_pairs_blocked(embeddings: DataFrame, threshold: float = 0.9
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 4))
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= NEARDUP_COS_THRESHOLD)
         .select("id_a", "id_b", "cosine")
     )
 

@@ -41,22 +41,21 @@ GOLD_SCHEMA = T.StructType(
 )
 
 
-def gold_mention_sets(
-    pages_with_gold: DataFrame,
-    max_sequence_length: int = 200,
-) -> DataFrame:
+def gold_mention_sets(pages_with_gold: DataFrame) -> DataFrame:
     """Explode the ``gold_entities`` spans of (url, text, gold_entities)
     pages with the reference's alignment filter + set semantics. Narrow
     mapInPandas stage + a distinct. A document's token starts and inclusive
     token ends come from one ``tokenize_batch`` pass per Arrow batch,
     truncated like the ``truncation=True`` encoding the reference filters
-    against (``[CLS]`` + L−2 tokens + ``[SEP]``)."""
+    against (``[CLS]`` + L−2 tokens + ``[SEP]``, L = the model's
+    ``MAX_SEQUENCE_LENGTH``)."""
+    from ..functions.model import MAX_SEQUENCE_LENGTH
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             doc, start, end, _ids = tokenize_batch(
-                pdf["text"].fillna("").tolist(), max_sequence_length - 2
+                pdf["text"].fillna("").tolist(), MAX_SEQUENCE_LENGTH - 2
             )
             bounds = np.searchsorted(doc, np.arange(len(pdf) + 1)).tolist()
             start, last = start.tolist(), (end - 1).tolist()

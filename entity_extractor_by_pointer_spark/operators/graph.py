@@ -44,16 +44,18 @@ def entity_degrees(triples: DataFrame) -> DataFrame:
 
 # lineage truncation period of the PageRank loop, in iterations
 PAGERANK_CHECKPOINT_EVERY = 3
+# the step count and damping every PageRank runs at (the oracles read them)
+PAGERANK_ITERS = 5
+PAGERANK_DAMPING = 0.85
 
 
 def pagerank(
     triples: DataFrame,
-    iterations: int = 5,
-    damping: float = 0.85,
     seeds: tuple[str, ...] | None = None,
     weight_col: str | None = None,
 ) -> DataFrame:
-    """(entity, rank) after ``iterations`` damped PageRank steps.
+    """(entity, rank) after ``PAGERANK_ITERS`` damped PageRank steps
+    (d = ``PAGERANK_DAMPING``).
 
     rank₀ = 1/N; rank_{t+1}(v) = (1−d)/N + d·Σ_{u→v} rank_t(u)/outdeg(u).
 
@@ -96,6 +98,7 @@ def pagerank(
     # subj for every iteration's join
     from pyspark.sql import Window
 
+    damping = PAGERANK_DAMPING
     if weight_col is None:
         e = triples.select("subj", "obj").distinct().withColumn("_w", F.lit(1).cast("long"))
         edges_w = cached(
@@ -129,7 +132,7 @@ def pagerank(
         if weight_col is None
         else F.col("rank") * F.col("_w") / F.col("out_w")
     )
-    for it in range(iterations):
+    for it in range(PAGERANK_ITERS):
         contribs = (
             edges_w.join(ranks, edges_w["subj"] == ranks["entity"])
             .select(

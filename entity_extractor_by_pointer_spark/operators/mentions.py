@@ -74,25 +74,24 @@ def detect_mentions_gazetteer(
     df: DataFrame,
     gazetteer: list[tuple[str, str, str]],
     id_col: str = "url",
-    text_col: str = "text",
     max_tokens: int | None = None,
-    id_type: T.DataType = T.StringType(),
 ) -> DataFrame:
-    """Gazetteer-path mention detection (deterministic, oracle-checkable).
+    """Gazetteer-path mention detection over the ``text`` column
+    (deterministic, oracle-checkable).
 
-    The id column keeps its input name (``id_col``)."""
+    The id column keeps its input name (``id_col``) and type."""
     schema = T.StructType(
-        [T.StructField(id_col, id_type, False)] + list(MENTIONS_SCHEMA.fields[1:])
+        [T.StructField(id_col, df.schema[id_col].dataType, False)] + list(MENTIONS_SCHEMA.fields[1:])
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         match = GazetteerMatcher(gazetteer)  # built once per task, not per batch
         for pdf in batches:
-            doc, etype, surface, start, end = match(pdf[text_col].fillna("").tolist(), max_tokens)
+            doc, etype, surface, start, end = match(pdf["text"].fillna("").tolist(), max_tokens)
             cols = (pdf[id_col].to_numpy()[doc], etype, surface, start, end, 1.0, "gazetteer")
             yield pd.DataFrame(dict(zip(schema.fieldNames(), cols)))
 
-    return df.select(id_col, text_col).mapInPandas(run, schema)
+    return df.select(id_col, "text").mapInPandas(run, schema)
 
 
 def mention_sets(mentions: DataFrame, id_col: str = "url") -> DataFrame:

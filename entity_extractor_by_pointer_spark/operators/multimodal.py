@@ -138,7 +138,7 @@ def parse_image_header(payload: bytes) -> tuple[str, int, int, int] | None:
     return None
 
 
-def synth_png(width: int, height: int, color_type: int = 2) -> bytes:
+def synth_png(width: int, height: int, color_type: int) -> bytes:
     """A structurally valid PNG header (signature + CRC-correct IHDR) —
     deterministic synthetic payload for tests/demos where real images
     aren't available; parseable by any spec-compliant reader."""
@@ -155,7 +155,7 @@ def synth_png(width: int, height: int, color_type: int = 2) -> bytes:
     )
 
 
-def synth_jpeg(width: int, height: int, components: int = 3) -> bytes:
+def synth_jpeg(width: int, height: int, components: int) -> bytes:
     """A minimal JPEG prefix (SOI + APP0/JFIF + SOF0 frame header) with the
     given dimensions — enough for any header parser, deterministic."""
     import struct

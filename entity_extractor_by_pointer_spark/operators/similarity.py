@@ -29,6 +29,10 @@ ANN_DIM = 64
 LSH_PLANES = 6
 LSH_SEED = 20240816
 IVF_CELLS = 8
+# neighbours per query of the ANN queries, and the Lloyd rounds of the
+# centroid refinement (the oracles read both)
+ANN_K = 5
+KMEANS_ITERS = 3
 
 
 def _dot(va, vb):
@@ -39,7 +43,7 @@ def _norm(v):
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
 
 
-def ann_topk_bruteforce(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+def ann_topk_bruteforce(embeddings: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """(query_id, neighbor_id, rank): exact cosine top-k per query, over
     (vec_id, embedding) rows.
 
@@ -82,7 +86,7 @@ def bucket_expr(vec_col, planes: np.ndarray):
 def ann_topk_lsh(
     embeddings: DataFrame,
     queries: DataFrame,
-    k: int = 5,
+    k: int,
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's bucket under
@@ -194,36 +198,23 @@ def materialize_ivf_corpus(embeddings: DataFrame, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def ann_topk_ivf(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 1,
-    assigned: DataFrame | None = None,
-) -> DataFrame:
-    """IVF probe: each query scans only its ``nprobe`` nearest coarse cells.
+def ann_topk_ivf(assigned: DataFrame, queries: DataFrame, nprobe: int = 1) -> DataFrame:
+    """IVF probe: the ``ANN_K`` nearest neighbours of each query, scanning
+    only its ``nprobe`` nearest coarse cells.
 
     Completes the IVF pair with ``ivf_assign``/``materialize_ivf_corpus``:
-    pass ``assigned`` (a corpus frame that already carries a ``cell`` column
-    — typically the cell-partitioned materialized table) and the probe is a
+    ``assigned`` is a corpus frame that already carries a ``cell`` column
+    — typically the cell-partitioned materialized table — so the probe is a
     partition-prunable scan joined with the broadcast query batch — no
-    centroid math over the corpus, no corpus shuffle. Without ``assigned``
-    the cell is computed inline (fine for ad-hoc runs; materialize at
-    scale). Exact within the probed cells; recall across cells is the
-    standard IVF trade-off that ``nprobe`` trades back."""
+    centroid math over the corpus, no corpus shuffle. Exact within the
+    probed cells; recall across cells is the standard IVF trade-off that
+    ``nprobe`` trades back."""
     centroids = ivf_centroids()
-    if assigned is not None:
-        corpus = assigned.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").cast("array<double>").alias("vc"),
-            F.col("cell").cast("int").alias("cell"),
-        )
-    else:
-        corpus = embeddings.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").cast("array<double>").alias("vc"),
-        ).withColumn("cell", best_cell_expr(F.col("vc"), centroids))
-    corpus = corpus.withColumn("nc", _norm(F.col("vc")))
+    corpus = assigned.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("vc"),
+        F.col("cell").cast("int").alias("cell"),
+    ).withColumn("nc", _norm(F.col("vc")))
     qs = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").cast("array<double>").alias("vq"),
@@ -240,16 +231,16 @@ def ann_topk_ivf(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= ANN_K)
         .select("query_id", "neighbor_id", "rank")
     )
 
 
-def kmeans_centroids(embeddings: DataFrame, iterations: int = 3) -> DataFrame:
+def kmeans_centroids(embeddings: DataFrame) -> DataFrame:
     """Distributed Lloyd k-means refinement of the IVF coarse centroids
     (:func:`ivf_centroids`).
 
-    Per iteration: assign every vector to its max-cosine centroid, then
+    ``KMEANS_ITERS`` iterations; per iteration: assign every vector to its max-cosine centroid, then
     new centroid = per-dimension mean of members, ROUNDED to 6 decimals.
     The rounding is what makes the whole recursion cross-engine exact:
     both engines compute dots as ordered folds over identical rounded
@@ -287,7 +278,7 @@ def kmeans_centroids(embeddings: DataFrame, iterations: int = 3) -> DataFrame:
     )
     vecs = cached(vecs)
     cents_vals = [[round(float(x), 6) for x in init[ci]] for ci in range(k)]
-    for _ in range(iterations):
+    for _ in range(KMEANS_ITERS):
         # centroid lengths can drift apart once a cell absorbs shorter or
         # longer member vectors (the SQL collect_list rebuild had the same
         # property) — pad the matrix for vectorization, keep true lengths

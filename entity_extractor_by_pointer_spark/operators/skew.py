@@ -14,25 +14,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def detect_hot_keys(
-    df: DataFrame,
-    key: str,
-    min_share: float = 0.01,
-    top_k: int = 20,
-) -> list[tuple[str, int]]:
-    """First-pass hot-key detection (SURVEY.md §4 item 1): keys holding more
-    than ``min_share`` of all rows, by exact count-by-key (map-side combined
-    — one row per key per partition crosses the shuffle). The pipeline logs
-    these to ``_metrics`` so skew is observable per run."""
+# a hot key holds at least this share of all rows; at most this many are reported
+HOT_KEY_MIN_SHARE = 0.02
+HOT_KEY_TOP_K = 10
+
+
+def detect_hot_keys(df: DataFrame, key: str) -> list[tuple[str, int]]:
+    """First-pass hot-key detection (SURVEY.md §4 item 1): the
+    ``HOT_KEY_TOP_K`` keys holding at least ``HOT_KEY_MIN_SHARE`` of all
+    rows, by exact count-by-key (map-side combined — one row per key per
+    partition crosses the shuffle). The pipeline logs these to
+    ``_metrics`` so skew is observable per run."""
     total = df.count()
     if total == 0:
         return []
     rows = (
         df.groupBy(key)
         .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") >= total * min_share)
+        .where(F.col("n") >= total * HOT_KEY_MIN_SHARE)
         .orderBy(F.desc("n"), F.asc(key))
-        .limit(top_k)
+        .limit(HOT_KEY_TOP_K)
         .collect()
     )
     return [(r[key], int(r["n"])) for r in rows]

@@ -39,7 +39,7 @@ def predicate_expr():
     return mapping[F.concat_ws("|", F.col("subj_type"), F.col("obj_type"))]
 
 
-def first_mentions(canon_mentions: DataFrame, id_col: str = "url") -> DataFrame:
+def first_mentions(canon_mentions: DataFrame, id_col: str) -> DataFrame:
     """Per (doc, canonical entity): first-mention position and its type."""
     return canon_mentions.groupBy(id_col, "canon_id").agg(
         F.min("start_idx").alias("first_pos"),

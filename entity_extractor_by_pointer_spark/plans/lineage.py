@@ -28,6 +28,36 @@ LINEAGE_SCHEMA = (
 METRICS_SCHEMA = "run_id string, stage string, key string, value double"
 
 
+def fingerprint(df: DataFrame) -> str:
+    """The identity of the input ``df`` reads, for reuse decisions: a
+    materialized store or a resumed stage is valid only while its input's
+    fingerprint is unchanged.
+
+    A frame that reads local files folds each file's size and mtime_ns in
+    path order (``DataFrame.inputFiles``, no Spark job), so a file rewritten
+    in place gets a new fingerprint. Any other frame folds its content in
+    one aggregate job: the row count, the xor of one row hash and the sum
+    of a second (order-insensitive; xor alone cancels across multisets)."""
+    from urllib.parse import urlparse
+    from urllib.request import url2pathname
+
+    files = df.inputFiles()
+    if files and all(urlparse(f).scheme == "file" for f in files):
+        stamp = 0
+        for f in sorted(files):
+            st = os.stat(url2pathname(urlparse(f).path))
+            stamp = (stamp * 1_000_003 + st.st_size + st.st_mtime_ns) % (1 << 60)
+        return f"{stamp:x}"
+    cols = [F.col(c) for c in df.columns]
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(*cols)).alias("x"),
+        # decimal accumulator: a bigint sum of 64-bit hashes overflows under ANSI mode
+        F.sum(F.xxhash64(F.lit("fold"), *cols).cast("decimal(38,0)")).alias("s"),
+    ).first()
+    return f"rows{row['n']}_{(row['x'] or 0) & ((1 << 64) - 1):x}_{int(row['s'] or 0) % (1 << 64):x}"
+
+
 def _data_files(path: str) -> list[str]:
     """Parquet data files under ``path``, through partition subdirs;
     hidden/_ files skipped."""
@@ -62,9 +92,7 @@ class StageWriter:
             > 0
         )
 
-    def compact_stage(
-        self, stage: str, target_file_bytes: int = 128 << 20
-    ) -> dict:
+    def compact_stage(self, stage: str, target_file_bytes: int) -> dict:
         """Small-file compaction of a stage table — the Iceberg
         ``rewriteDataFiles`` maintenance analog: many small part files
         (the residue of low-volume stages and wide partitioned writes) are
@@ -170,7 +198,7 @@ class StageWriter:
         self,
         stage: str,
         df: DataFrame,
-        partition_by: list[str] | None = None,
+        partition_by: list[str] | None,
     ) -> DataFrame:
         """Materialize a stage, then append per-partition lineage rows."""
         started = time.time()

@@ -8,27 +8,28 @@ triple_counts stages with per-partition lineage (``plans.lineage``); the
 canonical-mention store of ``__spark_entry__`` calls ``canonical_mentions``
 with its own gazetteer. ``resume=True`` skips stages whose output + lineage exist — the
 distributed analog of the reference's best-checkpoint resume
-(``engines/train.py:126-130``), at stage granularity (SURVEY.md §2 S4/T4).
+(``engines/train.py:126-130``), at stage granularity (SURVEY.md §2 S4/T4) —
+and raises when the pages differ from the input the stages were built from.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.gazetteer import CANON_EDGES, PAGES_GAZETTEER
-from ..functions.model import NerConfig
+from ..functions.model import MAX_SEQUENCE_LENGTH, NerConfig
 from ..operators.canonicalize import canonicalize_entities
 from ..operators.extract import with_extracted_text
 from ..operators.linking import alias_df, link_mentions
 from ..operators.mentions import detect_mentions, detect_mentions_gazetteer
 from ..operators.triples import bucket_by_subject, build_triples, triple_counts
-from .lineage import StageWriter
+from .lineage import StageWriter, fingerprint
 
-MAX_SEQUENCE_LENGTH = 200
 # parquet partition count of the triples table (Iceberg bucket(N, subj))
 SUBJ_BUCKETS = 16
 
@@ -59,11 +60,7 @@ def mentions_for_pages(pages_t: DataFrame, cfg: PipelineConfig) -> DataFrame:
         return detect_mentions_gazetteer(pages_t, PAGES_GAZETTEER, max_tokens=MAX_SEQUENCE_LENGTH)
     return detect_mentions(
         pages_t,
-        NerConfig(
-            classes=list(cfg.classes),
-            model_type=cfg.scorer,
-            max_sequence_length=MAX_SEQUENCE_LENGTH,
-        ),
+        NerConfig(classes=list(cfg.classes), model_type=cfg.scorer),
     )
 
 
@@ -117,6 +114,21 @@ class KgPipeline:
 
     def _run(self, pages: DataFrame, resume: bool = False) -> DataFrame:
         t0 = time.time()
+        # the input's fingerprint is recorded before the pages stage is
+        # written, so a done pages stage always has the fingerprint of the
+        # input it was built from (a torn record is rewritten: its pages
+        # stage is not done)
+        fp, fp_file = fingerprint(pages), Path(self.writer.workdir, "_pages_fingerprint")
+        if resume and self.writer.is_done("pages"):
+            recorded = fp_file.read_text() if fp_file.exists() else "none"
+            if recorded != fp:
+                raise ValueError(
+                    f"resume: stage 'pages' was built from input fingerprint {recorded}, "
+                    f"the pages given have fingerprint {fp}"
+                )
+        else:
+            fp_file.parent.mkdir(parents=True, exist_ok=True)
+            fp_file.write_text(fp)
         # the invariant check rides the pages write; a violation aborts it
         # BEFORE the lineage commit, so the stage is never marked done
         pages_t = self._stage("pages", resume, lambda: extract_checked(pages))
@@ -126,7 +138,7 @@ class KgPipeline:
         # (share ≥ 2%) into _metrics (SURVEY.md §4 hot-key detection)
         from ..operators.skew import detect_hot_keys
 
-        hot = detect_hot_keys(mentions, "entity", min_share=0.02, top_k=10)
+        hot = detect_hot_keys(mentions, "entity")
         if hot:
             self.writer.log_metrics(
                 "hot_keys", {f"mentions.entity:{k}": float(n) for k, n in hot}

@@ -91,14 +91,12 @@ def render_html(text: str, title: str) -> bytes:
 def generate_pages(
     spark: SparkSession,
     n: int,
-    partitions: int | None = None,
+    partitions: int,
     start: int = 0,
     min_sents: int = 2,
     extra_sents: int = 3,
 ) -> DataFrame:
-    base = (
-        spark.range(start, n, numPartitions=partitions) if partitions else spark.range(start, n)
-    )
+    base = spark.range(start, n, numPartitions=partitions)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

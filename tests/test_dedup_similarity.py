@@ -36,8 +36,9 @@ def test_dedup_exact_groups_normalized_duplicates(spark):
     assert by_keep[3] == 1 and by_keep[4] == 1
 
 
-def test_ngram_jaccard_finds_near_dup(spark):
-    pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in dd.ngram_jaccard_pairs(_docs(spark), 0.5).collect()}
+def test_ngram_jaccard_finds_near_dup(spark, monkeypatch):
+    monkeypatch.setattr(dd, "JACCARD_THRESHOLD", 0.5)
+    pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in dd.ngram_jaccard_pairs(_docs(spark)).collect()}
     assert pairs[(1, 2)] == 1.0 and pairs[(1, 5)] == 1.0 and pairs[(2, 5)] == 1.0
     assert 0.5 <= pairs[(1, 3)] < 1.0
     assert (1, 4) not in pairs
@@ -51,18 +52,19 @@ def test_ngram_jaccard_df_pruned_blocking_matches_exact(spark, monkeypatch):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     exact = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dd.ngram_jaccard_pairs(docs, 0.8).collect()
+        for r in dd.ngram_jaccard_pairs(docs).collect()
     }
     with _capped_blocking(monkeypatch, 20):
         pruned = {
             (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in dd.ngram_jaccard_pairs(docs, 0.8).collect()
+            for r in dd.ngram_jaccard_pairs(docs).collect()
         }
     assert pruned == exact
 
 
-def test_minhash_lsh_finds_exact_and_near_dups(spark):
-    pairs = {(r["id_a"], r["id_b"]) for r in dd.minhash_lsh_pairs(_docs(spark), 0.5).collect()}
+def test_minhash_lsh_finds_exact_and_near_dups(spark, monkeypatch):
+    monkeypatch.setattr(dd, "JACCARD_THRESHOLD", 0.5)
+    pairs = {(r["id_a"], r["id_b"]) for r in dd.minhash_lsh_pairs(_docs(spark)).collect()}
     assert {(1, 2), (1, 5), (2, 5)} <= pairs
     assert (1, 4) not in pairs
 
@@ -100,7 +102,7 @@ def test_simhash_blocking_is_lossless(spark):
         for b in ids[i + 1 :]:
             if bin(sigs[a] ^ sigs[b]).count("1") <= 3:
                 exact.add((a, b))
-    blocked = {(r["id_a"], r["id_b"]) for r in dd.simhash_pairs(docs, 3).collect()}
+    blocked = {(r["id_a"], r["id_b"]) for r in dd.simhash_pairs(docs).collect()}
     assert blocked == exact
     assert (1, 2) in blocked  # identical text → identical signature
 
@@ -218,7 +220,7 @@ def test_ivf_assign_covers_all_vectors(spark):
     assert all(0 <= r["cell"] < sim.IVF_CELLS for r in cells)
 
 
-def test_blocked_cosine_arrow_pass_finds_identical_pairs(spark):
+def test_blocked_cosine_arrow_pass_finds_identical_pairs(spark, monkeypatch):
     """The r6 vectorized Arrow bucket pass (one matmul per batch over all
     bands' hyperplanes) must still collide every identical-vector pair in
     every band: recall for exact duplicates is 1.0 by construction
@@ -231,8 +233,9 @@ def test_blocked_cosine_arrow_pass_finds_identical_pairs(spark):
         [(i, [float(x) for x in vecs[i]]) for i in range(50)],
         "vec_id long, embedding array<float>",
     )
+    monkeypatch.setattr(dd, "NEARDUP_COS_THRESHOLD", 0.999)
     pairs = dd.embedding_cosine_pairs_blocked(
-        df.unionAll(df.withColumn("vec_id", F.col("vec_id") + 1000)), 0.999
+        df.unionAll(df.withColumn("vec_id", F.col("vec_id") + 1000))
     ).collect()
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(i, i + 1000) for i in range(50)}
     assert all(abs(r["cosine"] - 1.0) < 1e-9 for r in pairs)
@@ -245,7 +248,7 @@ def test_blocked_cosine_equals_bruteforce_on_neardup_corpus(spark):
 
     aug = E._augmented_embeddings(spark, "/root/testdata/sf0.001")
     blocked = {
-        tuple(r) for r in dd.embedding_cosine_pairs_blocked(aug, 0.95).collect()
+        tuple(r) for r in dd.embedding_cosine_pairs_blocked(aug).collect()
     }
     brute = {tuple(r) for r in dd.embedding_cosine_pairs(aug, 0.95).collect()}
     assert blocked == brute
@@ -265,7 +268,7 @@ def test_jaccard_prunes_respect_rounding_window(spark):
         [(1, words_a), (2, words_b)], "doc_id long, text string"
     )
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
-           dd.ngram_jaccard_pairs(docs, 0.8).collect()}
+           dd.ngram_jaccard_pairs(docs).collect()}
     assert got == {(1, 2): 0.8}, got
 
 
@@ -278,15 +281,16 @@ def test_jaccard_df_cap_prunes_hot_shingles_from_blocking(spark, monkeypatch):
     # two docs sharing ONLY the hot shingle with high enough jaccard
     rows += [(10, "the quick brown"), (11, "the quick brown")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    exact = {(r["id_a"], r["id_b"]) for r in dd.ngram_jaccard_pairs(docs, 0.9).collect()}
+    monkeypatch.setattr(dd, "JACCARD_THRESHOLD", 0.9)
+    exact = {(r["id_a"], r["id_b"]) for r in dd.ngram_jaccard_pairs(docs).collect()}
     with _capped_blocking(monkeypatch, 4):
-        capped = {(r["id_a"], r["id_b"]) for r in dd.ngram_jaccard_pairs(docs, 0.9).collect()}
+        capped = {(r["id_a"], r["id_b"]) for r in dd.ngram_jaccard_pairs(docs).collect()}
     assert (10, 11) in exact
     assert (10, 11) not in capped  # its only shingle has df=8 > cap
     assert capped <= exact
 
 
-def test_ann_topk_ivf_exact_within_cell(spark):
+def test_ann_topk_ivf_exact_within_cell(spark, monkeypatch):
     """IVF probe (nprobe=1) must return exactly the numpy top-k computed
     over the query's own coarse cell."""
     rng = np.random.default_rng(7)
@@ -295,8 +299,9 @@ def test_ann_topk_ivf_exact_within_cell(spark):
         [(i, [float(x) for x in vecs[i]]) for i in range(60)],
         "vec_id long, embedding array<float>",
     )
+    monkeypatch.setattr(sim, "ANN_K", 3)
     got = {}
-    for r in sim.ann_topk_ivf(df, df.where("vec_id < 4"), k=3).collect():
+    for r in sim.ann_topk_ivf(df.join(sim.ivf_assign(df), "vec_id"), df.where("vec_id < 4")).collect():
         got.setdefault(r["query_id"], []).append((r["rank"], r["neighbor_id"]))
     cents = sim.ivf_centroids()
     v = vecs.astype(np.float64)
@@ -374,14 +379,15 @@ def test_capped_jaccard_semantics_on_randomized_corpora(spark, monkeypatch):
         docs = spark.createDataFrame(docs_py, "doc_id long, text string")
         cap = rnd.choice([1, 2, 3, 5])
         thr = rnd.choice([0.5, 0.8])
+        monkeypatch.setattr(dd, "JACCARD_THRESHOLD", thr)
         exact = {
             (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in dd.ngram_jaccard_pairs(docs, thr).collect()
+            for r in dd.ngram_jaccard_pairs(docs).collect()
         }
         with _capped_blocking(monkeypatch, cap):
             capped = {
                 (r["id_a"], r["id_b"]): r["jaccard"]
-                for r in dd.ngram_jaccard_pairs(docs, thr).collect()
+                for r in dd.ngram_jaccard_pairs(docs).collect()
             }
         assert set(capped) <= set(exact), (trial, cap, thr)
         for k, v in capped.items():
@@ -408,10 +414,12 @@ def test_capped_jaccard_semantics_on_randomized_corpora(spark, monkeypatch):
             assert shared and all(df_count[s] > cap for s in shared), (trial, pair, cap)
 
 
-def test_corpus_curation_precedence(spark):
+def test_corpus_curation_precedence(spark, monkeypatch):
     """Verdict precedence: exact_dup beats lang beats quality beats kept."""
+    from entity_extractor_by_pointer_spark.operators import curation
     from entity_extractor_by_pointer_spark.operators.curation import curate_corpus
 
+    monkeypatch.setattr(curation, "CURATE_LANGS", ("en",))
     good = "the cat and the dog walked to the park and sat in the sun " * 6
     rows = [
         (1, good, "en"),            # kept
@@ -420,8 +428,7 @@ def test_corpus_curation_precedence(spark):
         (4, good + " unique", "xx"),  # lang
     ]
     out = {r["doc_id"]: r["verdict"] for r in curate_corpus(
-        spark.createDataFrame(rows, "doc_id long, text string, lang string"),
-        keep_langs=("en",), quality_floor=0.5,
+        spark.createDataFrame(rows, "doc_id long, text string, lang string")
     ).collect()}
     assert out[1] == "kept"
     assert out[2] == "exact_dup"  # dup of doc 1 wins over its bad lang
@@ -433,7 +440,7 @@ def test_kmeans_centroids_match_numpy_lloyd(spark):
     """Distributed Lloyd ≡ single-process numpy Lloyd with the same
     per-iteration 6-dp rounding and empty-cell keep rule."""
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    got = {(r["cell"], r["dim"]): r["val"] for r in sim.kmeans_centroids(e, iterations=3).collect()}
+    got = {(r["cell"], r["dim"]): r["val"] for r in sim.kmeans_centroids(e).collect()}
 
     emb = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in e.collect()}
     V = np.array([emb[k] for k in sorted(emb)])
@@ -471,9 +478,10 @@ def test_kmeans_dead_cell_and_length_mismatch_excluded(spark, monkeypatch):
         ]
     )
     monkeypatch.setattr(sim, "ivf_centroids", lambda: cents)
+    monkeypatch.setattr(sim, "KMEANS_ITERS", 1)
     got = {
         (r["cell"], r["dim"]): r["val"]
-        for r in sim.kmeans_centroids(emb, iterations=1).collect()
+        for r in sim.kmeans_centroids(emb).collect()
     }
     # both nonzero vectors must land in cell 2 (max cosine among LIVE
     # cells), so cell 2's centroid becomes their mean; the zero vector has
@@ -489,7 +497,7 @@ def test_kmeans_dead_cell_and_length_mismatch_excluded(spark, monkeypatch):
     monkeypatch.setattr(sim, "ivf_centroids", lambda: cents3)
     got2 = {
         (r["cell"], r["dim"]): r["val"]
-        for r in sim.kmeans_centroids(emb2, iterations=1).collect()
+        for r in sim.kmeans_centroids(emb2).collect()
     }
     # no live equal-length cell exists -> argmax over all -inf = cell 0;
     # cell 0's centroid becomes the sole member's mean (2 dims)
@@ -528,16 +536,16 @@ def test_jaccard_auto_cap_plan_selection(spark, monkeypatch):
         "doc_id long, text string",
     )
     # exact blocking at the default threshold is the reference
-    ref = sorted(tuple(r) for r in dd.ngram_jaccard_pairs(docs, 0.8).collect())
+    ref = sorted(tuple(r) for r in dd.ngram_jaccard_pairs(docs).collect())
     # census (8 docs) at the threshold → exact (cap resolves to None)
     monkeypatch.setattr(dd, "JACCARD_AUTO_DOCS", 8)
     assert dd._cap_for(docs.count()) is None
-    exact_plan = dd.ngram_jaccard_pairs(docs, 0.8)
+    exact_plan = dd.ngram_jaccard_pairs(docs)
     assert "LeftAnti" not in exact_plan._jdf.queryExecution().executedPlan().toString()
     # census above threshold → capped
     monkeypatch.setattr(dd, "JACCARD_AUTO_DOCS", 7)
     assert dd._cap_for(docs.count()) == dd.JACCARD_AUTO_CAP
-    capped_plan = dd.ngram_jaccard_pairs(docs, 0.8)
+    capped_plan = dd.ngram_jaccard_pairs(docs)
     assert "LeftAnti" in capped_plan._jdf.queryExecution().executedPlan().toString()
     # both ends agree with exact blocking
     assert sorted(tuple(r) for r in exact_plan.collect()) == ref
@@ -599,26 +607,26 @@ def test_jaccard_wide_agg_gate_plan_and_equivalence(spark, monkeypatch):
         + [(10, "one two three four five"), (11, "one two three four five")],
         "doc_id long, text string",
     )
-    ref = sorted(tuple(r) for r in dd.ngram_jaccard_pairs(docs, 0.8).collect())
+    ref = sorted(tuple(r) for r in dd.ngram_jaccard_pairs(docs).collect())
 
     def _n_reparts(df):
         plan = df._jdf.queryExecution().executedPlan().toString()
         return plan.count("REPARTITION_BY_NUM")
 
     # census (8 docs) below the wide gate → no extra repartition exchange
-    below = dd.ngram_jaccard_pairs(docs, 0.8)
+    below = dd.ngram_jaccard_pairs(docs)
     n_below = _n_reparts(below)
     # lower the gate under the corpus size → exactly one more
     monkeypatch.setattr(dd, "PAIR_AGG_WIDE_DOCS", 4)
-    above = dd.ngram_jaccard_pairs(docs, 0.8)
+    above = dd.ngram_jaccard_pairs(docs)
     assert _n_reparts(above) == n_below + 1
     assert sorted(tuple(r) for r in above.collect()) == ref
     assert sorted(tuple(r) for r in below.collect()) == ref
 
 
-def test_ann_topk_ivf_materialized_probe_and_nprobe(spark, tmp_path):
+def test_ann_topk_ivf_materialized_probe_and_nprobe(spark, tmp_path, monkeypatch):
     """The probe over a materialized cell-partitioned corpus (a) returns the
-    same rows as inline cell computation, (b) partition-prunes the corpus
+    same rows as a corpus whose cells ``ivf_assign`` computes, (b) partition-prunes the corpus
     scan (DPP on cell), and (c) nprobe=2's result set contains nprobe=1's
     neighbors per query (recall is monotone in nprobe)."""
     import numpy as np
@@ -630,12 +638,13 @@ def test_ann_topk_ivf_materialized_probe_and_nprobe(spark, tmp_path):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     qs = df.where("vec_id < 4")
 
+    monkeypatch.setattr(sim, "ANN_K", 3)
     mat = sim.materialize_ivf_corpus(df, str(tmp_path / "ivf"))
-    inline = sorted(tuple(r) for r in sim.ann_topk_ivf(df, qs, k=3).collect())
-    assigned = sorted(tuple(r) for r in sim.ann_topk_ivf(df, qs, k=3, assigned=mat).collect())
-    assert inline == assigned
+    computed = sorted(tuple(r) for r in sim.ann_topk_ivf(df.join(sim.ivf_assign(df), "vec_id"), qs).collect())
+    assigned = sorted(tuple(r) for r in sim.ann_topk_ivf(mat, qs).collect())
+    assert computed == assigned
 
-    probe2 = sim.ann_topk_ivf(df, qs, k=3, nprobe=2, assigned=mat)
+    probe2 = sim.ann_topk_ivf(mat, qs, nprobe=2)
     plan = probe2._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan  # corpus scan pruned by cell
     got2 = {(r.query_id, r.neighbor_id) for r in probe2.collect()}
@@ -659,12 +668,14 @@ def test_ann_topk_ivf_materialized_probe_and_nprobe(spark, tmp_path):
     assert both.where("best != top1").count() == 0
 
 
-def test_boilerplate_stats_hand_computed(spark):
+def test_boilerplate_stats_hand_computed(spark, monkeypatch):
     """3-word shingles; 'the same footer' appears in docs 1-3 (df=3 ≥
     min_df=2 with the unique middles below it), doc 4 shares nothing,
     doc 5 is too short for any shingle."""
+    from entity_extractor_by_pointer_spark.operators import curation
     from entity_extractor_by_pointer_spark.operators.curation import boilerplate_stats
 
+    monkeypatch.setattr(curation, "BOILERPLATE_MIN_DF", 2)
     rows = [
         (1, "alpha beta the same footer"),
         (2, "gamma delta the same footer"),
@@ -675,7 +686,7 @@ def test_boilerplate_stats_hand_computed(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["n_shingles"], r["n_boiler"], r["boiler_ratio"])
-        for r in boilerplate_stats(docs, min_df=2).collect()
+        for r in boilerplate_stats(docs).collect()
     }
     # doc 1: shingles {alpha beta the, beta the same, the same footer} → 1 hot
     assert got[1] == (3, 1, round(1 / 3, 6))
@@ -685,11 +696,12 @@ def test_boilerplate_stats_hand_computed(spark):
     assert got[5] == (0, 0, 0.0)  # shingle-less doc still gets a row
 
 
-def test_boilerplate_stats_matches_python_reference_randomized(spark):
+def test_boilerplate_stats_matches_python_reference_randomized(spark, monkeypatch):
     """Randomized corpora vs an independent pure-python shingle-df census."""
     import random
     import re
 
+    from entity_extractor_by_pointer_spark.operators import curation
     from entity_extractor_by_pointer_spark.operators.curation import boilerplate_stats
 
     rng = random.Random(11)
@@ -701,9 +713,10 @@ def test_boilerplate_stats_matches_python_reference_randomized(spark):
         }
         docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
         min_df = rng.randint(2, 4)
+        monkeypatch.setattr(curation, "BOILERPLATE_MIN_DF", min_df)
         got = {
             r["doc_id"]: (r["n_shingles"], r["n_boiler"], r["boiler_ratio"])
-            for r in boilerplate_stats(docs, min_df=min_df).collect()
+            for r in boilerplate_stats(docs).collect()
         }
         sh = {
             i: (
@@ -727,20 +740,21 @@ def test_boilerplate_stats_matches_python_reference_randomized(spark):
         assert got == want, (trial, min_df, got, want)
 
 
-def test_chunk_documents_hand_computed_and_reconstruction(spark):
+def test_chunk_documents_hand_computed_and_reconstruction(spark, monkeypatch):
     """Window boundaries, short-doc and empty-doc cases; and removing the
     overlap from every chunk after the first reconstructs the document."""
-    import pytest
-
+    from entity_extractor_by_pointer_spark.functions import textstats
     from entity_extractor_by_pointer_spark.functions.textstats import chunk_documents
 
+    monkeypatch.setattr(textstats, "CHUNK_TOKENS", 4)
+    monkeypatch.setattr(textstats, "CHUNK_OVERLAP", 1)
     docs = spark.createDataFrame(
         [(1, " ".join(f"w{i}" for i in range(10))), (2, "short doc"), (3, "")],
         "doc_id long, text string",
     )
     rows = sorted(
         (r["doc_id"], r["chunk_id"], r["n_tokens"], r["chunk_text"])
-        for r in chunk_documents(docs, chunk_tokens=4, overlap=1).collect()
+        for r in chunk_documents(docs).collect()
     )
     assert rows == [
         (1, 0, 4, "w0 w1 w2 w3"),
@@ -756,11 +770,8 @@ def test_chunk_documents_hand_computed_and_reconstruction(spark):
         toks += ws if cid == 0 else ws[1:]
     assert toks == [f"w{i}" for i in range(10)]
 
-    with pytest.raises(ValueError):
-        chunk_documents(docs, chunk_tokens=4, overlap=4)
 
-
-def test_containment_is_directional(spark):
+def test_containment_is_directional(spark, monkeypatch):
     """A fragment wholly inside a longer doc has containment 1.0 in the
     fragment→source direction and a LOW score the other way — the
     sub-document duplication case symmetric Jaccard cannot flag."""
@@ -772,11 +783,12 @@ def test_containment_is_directional(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): r["containment"]
-        for r in dd.containment_pairs(docs, 0.9).collect()
+        for r in dd.containment_pairs(docs).collect()
     }
     assert got == {(2, 1): 1.0}  # fragment→source only; source→fragment ~0.2
     # and Jaccard at the same threshold sees nothing
-    assert dd.ngram_jaccard_pairs(docs, 0.9).count() == 0
+    monkeypatch.setattr(dd, "JACCARD_THRESHOLD", dd.CONTAINMENT_THRESHOLD)
+    assert dd.ngram_jaccard_pairs(docs).count() == 0
 
 
 def test_capped_containment_matches_exact(spark, monkeypatch):
@@ -797,27 +809,29 @@ def test_capped_containment_matches_exact(spark, monkeypatch):
         docs = spark.createDataFrame(docs_py, "doc_id long, text string")
         cap = rnd.choice([1, 2, 3, 5])
         thr = rnd.choice([0.5, 0.9])
+        monkeypatch.setattr(dd, "CONTAINMENT_THRESHOLD", thr)
         exact = {
             (r["id_a"], r["id_b"]): r["containment"]
-            for r in dd.containment_pairs(docs, thr).collect()
+            for r in dd.containment_pairs(docs).collect()
         }
         with _capped_blocking(monkeypatch, cap):
             capped = {
                 (r["id_a"], r["id_b"]): r["containment"]
-                for r in dd.containment_pairs(docs, thr).collect()
+                for r in dd.containment_pairs(docs).collect()
             }
         assert set(capped) <= set(exact), (trial, cap, thr)
         assert all(capped[k] == exact[k] for k in capped), (trial, cap, thr)
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    monkeypatch.setattr(dd, "CONTAINMENT_THRESHOLD", 0.9)
     exact = {
         (r["id_a"], r["id_b"]): r["containment"]
-        for r in dd.containment_pairs(docs, 0.9).collect()
+        for r in dd.containment_pairs(docs).collect()
     }
     with _capped_blocking(monkeypatch, 20):
         capped = {
             (r["id_a"], r["id_b"]): r["containment"]
-            for r in dd.containment_pairs(docs, 0.9).collect()
+            for r in dd.containment_pairs(docs).collect()
         }
     assert capped == exact
 
@@ -938,7 +952,7 @@ def test_contamination_flags_hand_computed(spark):
     bench = spark.createDataFrame([(base,)], "text string")
     got = {
         r["doc_id"]: (r["n_contam"], r["contaminated"])
-        for r in contamination_flags(docs, bench, n=8).collect()
+        for r in contamination_flags(docs, bench).collect()
     }
     # bench (10 words) has 3 distinct 8-grams, all present in doc 1
     assert got[1] == (3, True)

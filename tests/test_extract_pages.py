@@ -31,7 +31,7 @@ def test_generator_is_deterministic_across_parallelism(spark):
 
 
 def test_pages_schema_matches_input_hint(spark):
-    df = generate_pages(spark, 5)
+    df = generate_pages(spark, 5, partitions=1)
     assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
         ("url", "string"),
         ("warc_ts", "timestamp"),

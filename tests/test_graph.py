@@ -3,6 +3,7 @@ PageRank vs an independent numpy implementation."""
 
 import numpy as np
 
+from entity_extractor_by_pointer_spark.operators import graph
 from entity_extractor_by_pointer_spark.operators.graph import entity_degrees, pagerank
 
 
@@ -23,7 +24,7 @@ def test_entity_degrees(spark):
 
 
 def test_pagerank_matches_numpy_power_iteration(spark):
-    got = {r["entity"]: r["rank"] for r in pagerank(_triples(spark), iterations=5, damping=0.85).collect()}
+    got = {r["entity"]: r["rank"] for r in pagerank(_triples(spark)).collect()}
     nodes = ["a", "b", "c"]
     edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a")]
     out_deg = {n: sum(1 for s, _ in edges if s == n) for n in nodes}
@@ -40,9 +41,10 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     assert 0.99 < sum(rank.values()) <= 1.000001
 
 
-def test_pagerank_dangling_node_keeps_base_mass(spark):
+def test_pagerank_dangling_node_keeps_base_mass(spark, monkeypatch):
     t = spark.createDataFrame([("a", "p", "b", "u")], "subj string, pred string, obj string, url string")
-    got = {r["entity"]: r["rank"] for r in pagerank(t, iterations=3).collect()}
+    monkeypatch.setattr(graph, "PAGERANK_ITERS", 3)
+    got = {r["entity"]: r["rank"] for r in pagerank(t).collect()}
     # b has no out-edges (dangling, absorbing variant): contributes nothing
     assert got["a"] == round((1 - 0.85) / 2, 6)
     assert got["b"] > got["a"]
@@ -118,7 +120,7 @@ def test_entity_pmi_edges_matches_python_reference_randomized(spark):
         assert got == want, (trial, got, want)
 
 
-def test_pagerank_random_graph_matches_numpy(spark):
+def test_pagerank_random_graph_matches_numpy(spark, monkeypatch):
     """500-node random graph (not the 4-node KG toy): 6 iterations of the
     distributed join+agg loop equal numpy power iteration to the rounding
     grid, including dangling nodes and the localCheckpoint truncation at
@@ -134,7 +136,8 @@ def test_pagerank_random_graph_matches_numpy(spark):
             edges.add((f"n{a}", f"n{b}"))
     rows = [(a, "p", b, "u") for a, b in edges]
     t = spark.createDataFrame(rows, "subj string, pred string, obj string, url string")
-    got = {r["entity"]: r["rank"] for r in pagerank(t, iterations=6, damping=0.85).collect()}
+    monkeypatch.setattr(graph, "PAGERANK_ITERS", 6)
+    got = {r["entity"]: r["rank"] for r in pagerank(t).collect()}
 
     nodes = sorted({x for e in edges for x in e})
     out_deg = {}
@@ -288,7 +291,7 @@ def test_personalized_pagerank_vs_numpy(spark):
     try:
         got = {
             r["entity"]: r["rank"]
-            for r in pagerank(tr, iterations=5, seeds=seeds).collect()
+            for r in pagerank(tr, seeds=seeds).collect()
         }
     finally:
         release_all()
@@ -331,15 +334,15 @@ def test_weighted_pagerank_vs_numpy(spark):
     try:
         got = {
             r["entity"]: r["rank"]
-            for r in pagerank(tr, iterations=5, weight_col="n_docs").collect()
+            for r in pagerank(tr, weight_col="n_docs").collect()
         }
         uni_w = {
             r["entity"]: r["rank"]
             for r in pagerank(
-                tr.withColumn("n_docs", tr.n_docs * 0 + 1), iterations=5, weight_col="n_docs"
+                tr.withColumn("n_docs", tr.n_docs * 0 + 1), weight_col="n_docs"
             ).collect()
         }
-        uni = {r["entity"]: r["rank"] for r in pagerank(tr, iterations=5).collect()}
+        uni = {r["entity"]: r["rank"] for r in pagerank(tr).collect()}
     finally:
         release_all()
     assert uni_w == uni  # weight-1 degenerates to the unweighted operator
@@ -396,17 +399,19 @@ def test_predicate_stats_and_metapaths_hand_computed(spark, monkeypatch):
         release_all()
 
 
-def test_corrupt_triples_deterministic_flags_and_fanout(spark):
+def test_corrupt_triples_deterministic_flags_and_fanout(spark, monkeypatch):
     from entity_extractor_by_pointer_spark.cache import release_all
+    from entity_extractor_by_pointer_spark.operators import kgprep
     from entity_extractor_by_pointer_spark.operators.kgprep import corrupt_triples
 
+    monkeypatch.setattr(kgprep, "KG_NEG_K", 3)
     tr = spark.createDataFrame(
         [("a", "p", "b"), ("b", "p", "c"), ("c", "q", "a"), ("a", "q", "c")],
         "subj string, pred string, obj string",
     )
     try:
-        out1 = sorted(map(tuple, corrupt_triples(tr, k=3).collect()))
-        out2 = sorted(map(tuple, corrupt_triples(tr, k=3).collect()))
+        out1 = sorted(map(tuple, corrupt_triples(tr).collect()))
+        out2 = sorted(map(tuple, corrupt_triples(tr).collect()))
     finally:
         release_all()
     assert out1 == out2  # hash-derived: reproducible across runs
@@ -443,14 +448,16 @@ def test_entity_context_embeddings_hand_computed(spark):
     }
 
 
-def test_entity_related_by_embedding_ranks_by_cosine(spark):
+def test_entity_related_by_embedding_ranks_by_cosine(spark, monkeypatch):
     """Hand-checkable: E1/E2 share identical context docs (cosine 1), E3
     is orthogonal — each of E1/E2 ranks the other first."""
     from entity_extractor_by_pointer_spark.cache import release_all
+    from entity_extractor_by_pointer_spark.operators import kgprep
     from entity_extractor_by_pointer_spark.operators.kgprep import (
         entity_related_by_embedding,
     )
 
+    monkeypatch.setattr(kgprep, "ENTITY_ANN_K", 2)
     cm = spark.createDataFrame(
         [(1, "E1"), (1, "E2"), (2, "E3")], "doc_id long, canon_id string"
     )
@@ -460,7 +467,7 @@ def test_entity_related_by_embedding_ranks_by_cosine(spark):
     try:
         got = {
             (r["query_id"], r["rank"]): r["neighbor_id"]
-            for r in entity_related_by_embedding(cm, emb, k=2).collect()
+            for r in entity_related_by_embedding(cm, emb).collect()
         }
     finally:
         release_all()
@@ -492,11 +499,12 @@ def test_entity_related_census_gate_selects_ranker(spark, monkeypatch):
     def _plan(df) -> str:
         return df._jdf.queryExecution().executedPlan().toString()
 
+    monkeypatch.setattr(kgprep, "ENTITY_ANN_K", 1)
     try:
-        brute = entity_related_by_embedding(cm, emb, k=1)
+        brute = entity_related_by_embedding(cm, emb)
         assert "BroadcastNestedLoopJoin" in _plan(brute)
         monkeypatch.setattr(kgprep, "ENTITY_ANN_BRUTE_MAX", 3)  # 4 entities
-        lsh = entity_related_by_embedding(cm, emb, k=1)
+        lsh = entity_related_by_embedding(cm, emb)
         assert "BroadcastNestedLoopJoin" not in _plan(lsh)
         got = {
             (r["query_id"], r["rank"]): r["neighbor_id"] for r in lsh.collect()
@@ -547,7 +555,7 @@ def test_pagerank_empty_graph_returns_empty_frame(spark):
     and weighted used to divide by the node count of 0)."""
     t = spark.createDataFrame([], "subj string, pred string, obj string, n_docs long")
     for kwargs in ({}, {"weight_col": "n_docs"}, {"seeds": ("a",)}):
-        ranks = pagerank(t, iterations=3, **kwargs)
+        ranks = pagerank(t, **kwargs)
         assert ranks.columns == ["entity", "rank"], kwargs
         assert dict(ranks.dtypes) == {"entity": "string", "rank": "double"}, kwargs
         assert ranks.collect() == [], kwargs

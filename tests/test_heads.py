@@ -1,5 +1,6 @@
 import numpy as np
 
+from entity_extractor_by_pointer_spark.functions import heads
 from entity_extractor_by_pointer_spark.functions.heads import (
     BinaryPointerHead,
     GlobalPointerHead,
@@ -68,22 +69,23 @@ def test_sequence_masking_matches_reference_arithmetic():
     assert out_rows[0, 2, 0] == -1e12 and out_rows[0, 0, 2] == 1.0
 
 
-def test_gp_head_shapes_and_determinism():
-    head = GlobalPointerHead(hidden_size=16, num_labels=3, seed=7)
+def test_gp_head_shapes_and_determinism(monkeypatch):
+    head = GlobalPointerHead(hidden_size=16, num_labels=3)
     h = np.random.default_rng(1).normal(size=(2, 5, 16))
     m = np.ones((2, 5))
     out1, out2 = head(h, m), head(h, m)
     assert out1.shape == (2, 3, 5, 5)
     assert np.array_equal(out1, out2)
     # different seeds → different weights
-    assert not np.allclose(GlobalPointerHead(16, 3, seed=8)(h, m), out1)
+    monkeypatch.setattr(heads, "HEAD_SEED", 8)
+    assert not np.allclose(GlobalPointerHead(16, 3)(h, m), out1)
 
 
 def test_gp_fast_mask_equals_reference_spec():
     """The head's single-pass additive penalty must match the reference's
     multiplicative add_mask_tril (GlobalPointer.py:49-61) on every VALID
     cell bit-for-bit, and keep every invalid cell ≤ −1e11."""
-    head = GlobalPointerHead(hidden_size=16, num_labels=2, seed=7)
+    head = GlobalPointerHead(hidden_size=16, num_labels=2)
     rng = np.random.default_rng(3)
     h = rng.normal(size=(2, 7, 16)).astype(np.float32)
     mask = np.array([[1, 1, 1, 1, 1, 0, 0], [1, 1, 1, 0, 0, 0, 0]])
@@ -109,7 +111,7 @@ def test_gp_fast_mask_equals_reference_spec():
 
 
 def test_bp_head_shape_and_interleave():
-    head = BinaryPointerHead(hidden_size=16, num_labels=3, seed=11)
+    head = BinaryPointerHead(hidden_size=16, num_labels=3)
     h = np.random.default_rng(2).normal(size=(2, 5, 16))
     out = head(h, np.ones((2, 5)))
     assert out.shape == (2, 5, 3, 2)

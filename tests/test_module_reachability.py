@@ -14,6 +14,7 @@ a constant.
 """
 
 import ast
+import functools
 import importlib.util
 from pathlib import Path
 
@@ -176,16 +177,17 @@ def _decorators(node: ast.FunctionDef | ast.ClassDef) -> set[str]:
     return out
 
 
-def _defaulted(fn: ast.FunctionDef, skip_first: bool) -> list[tuple[str, int | None]]:
-    """(name, position, or None if keyword-only) of each defaulted parameter."""
+def _defaulted(fn: ast.FunctionDef, skip_first: bool) -> list[tuple[str, int | None, ast.expr]]:
+    """(name, position or None if keyword-only, default) of each defaulted
+    parameter."""
     positional = [*fn.args.posonlyargs, *fn.args.args][int(skip_first):]
     first = len(positional) - len(fn.args.defaults)
-    return [(a.arg, i) for i, a in enumerate(positional) if i >= first] + [
-        (a.arg, None) for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d is not None]
+    return [(a.arg, i, fn.args.defaults[i - first]) for i, a in enumerate(positional) if i >= first] + [
+        (a.arg, None, d) for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d is not None]
 
 
-def _parameters(path: Path) -> list[tuple[str, str, str, int | None]]:
-    """(label, called name, parameter, position) of every defaulted parameter
+def _parameters(path: Path) -> list[tuple[str, str, str, int | None, ast.expr]]:
+    """(label, called name, parameter, position, default) of every defaulted parameter
     of a public top-level def, a public method or ``__init__`` of a top-level
     class, and every defaulted ``@dataclass`` field (a constructor parameter
     in declaration order). A def's label is its name, a method's
@@ -193,7 +195,7 @@ def _parameters(path: Path) -> list[tuple[str, str, str, int | None]]:
     out = []
     for node in ast.parse(path.read_text()).body:
         if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
-            out += [(node.name, node.name, p, i) for p, i in _defaulted(node, False)]
+            out += [(node.name, node.name, *d) for d in _defaulted(node, False)]
         if not isinstance(node, ast.ClassDef) or node.name.startswith("_"):
             continue
         for m in node.body:
@@ -201,34 +203,35 @@ def _parameters(path: Path) -> list[tuple[str, str, str, int | None]]:
                 init = m.name == "__init__"
                 label, called = (node.name, node.name) if init else (f"{node.name}.{m.name}", m.name)
                 skip = "staticmethod" not in _decorators(m)
-                out += [(label, called, p, i) for p, i in _defaulted(m, skip)]
+                out += [(label, called, *d) for d in _defaulted(m, skip)]
         if "dataclass" in _decorators(node):
             fields = [f for f in node.body if isinstance(f, ast.AnnAssign)
                       and isinstance(f.target, ast.Name) and "ClassVar" not in ast.unparse(f.annotation)]
-            out += [(node.name, node.name, f.target.id, i) for i, f in enumerate(fields) if f.value]
+            out += [(node.name, node.name, f.target.id, i, f.value) for i, f in enumerate(fields) if f.value]
     return out
 
 
-def test_every_public_parameter_is_set():
-    """Every defaulted parameter of a public package def, method or
-    constructor is passed, by keyword or by position, by some call in a
-    production root or the package; a value only tests vary is a module
-    constant (ROADMAP aim 2). Calls resolve by name as in the def check: a
-    call on a module alias binds that module's def only. A call with
-    ``*args`` or ``**kwargs`` sets every parameter. Spec oracles and
-    ``UNSET_PARAMETERS`` are exempt."""
+def _aliases(tree: ast.AST, path: Path) -> dict[str, Path]:
+    """Bound name -> module file of every import in ``tree`` that binds a module."""
+    out = {}
+    for node in ast.walk(tree):
+        for bound, target in _import_names(node, path):
+            if (mod := _module_file(target)) is not None:
+                out[bound] = mod
+    return out
+
+
+def _production_calls() -> dict[str, list[tuple[Path | None, ast.Call, Path]]]:
+    """Called name -> (module file the call binds, or None if it binds by
+    name; the call; the calling file) of every call in a production root or
+    a package module. A call on a module alias binds that module's def only."""
     pkg_files = list((ROOT / PKG).rglob("*.py"))
-    params = [(path, *p) for path in pkg_files for p in _parameters(path)]
     defined = {(path, node.name) for path in pkg_files for node in ast.parse(path.read_text()).body
                if isinstance(node, (ast.FunctionDef, ast.ClassDef))}
-    calls: dict[str, list] = {}  # called name -> [(module file or None, keywords, positions)]
+    calls: dict[str, list] = {}
     for path in [*ROOTS, *pkg_files]:
         tree = ast.parse(path.read_text())
-        aliases = {}
-        for node in ast.walk(tree):
-            for bound, target in _import_names(node, path):
-                if (mod := _module_file(target)) is not None:
-                    aliases[bound] = mod
+        aliases = _aliases(tree, path)
         for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
                 continue
@@ -241,19 +244,125 @@ def test_every_public_parameter_is_set():
                     module = aliases[func.value.id]
             else:
                 continue
-            spread = any(isinstance(a, ast.Starred) for a in node.args) or any(
-                k.arg is None for k in node.keywords)
-            keywords = {k.arg for k in node.keywords}
-            calls.setdefault(name, []).append((module, keywords, None if spread else len(node.args)))
+            calls.setdefault(name, []).append((module, node, path))
+    return calls
+
+
+def _checked_parameters():
+    """(module file, label, called name, parameter, position, default) of
+    every defaulted public parameter the guards check: spec oracles and
+    ``UNSET_PARAMETERS`` are left out."""
+    return [(path, *p) for path in (ROOT / PKG).rglob("*.py") for p in _parameters(path)
+            if p[0].partition(".")[0] not in SPEC_ORACLES and f"{p[0]}.{p[2]}" not in UNSET_PARAMETERS]
+
+
+def _argument(call: ast.Call, param: str, pos: int | None) -> ast.expr | None:
+    """The expression ``call`` passes for ``param``; None if it omits it.
+    A call with ``*args`` or ``**kwargs`` passes it as ``call`` itself."""
+    if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
+        return call
+    for k in call.keywords:
+        if k.arg == param:
+            return k.value
+    return call.args[pos] if pos is not None and pos < len(call.args) else None
+
+
+def test_every_public_parameter_is_set():
+    """Every defaulted parameter of a public package def, method or
+    constructor is passed, by keyword or by position, by some call in a
+    production root or the package; a value only tests vary is a module
+    constant (ROADMAP aim 2). Calls resolve by name as in the def check: a
+    call on a module alias binds that module's def only. A call with
+    ``*args`` or ``**kwargs`` sets every parameter. Spec oracles and
+    ``UNSET_PARAMETERS`` are exempt."""
+    calls = _production_calls()
     unset = sorted(
         f"{path.relative_to(ROOT / PKG)}: {label}({param})"
-        for path, label, called, param, pos in params
-        if label.partition(".")[0] not in SPEC_ORACLES
-        and f"{label}.{param}" not in UNSET_PARAMETERS
-        and not any(
-            module in (None, path) and (npos is None or param in keywords or (pos is not None and pos < npos))
-            for module, keywords, npos in calls.get(called, []))
+        for path, label, called, param, pos, _d in _checked_parameters()
+        if not any(module in (None, path) and _argument(call, param, pos) is not None
+                   for module, call, _f in calls.get(called, []))
     )
     assert not unset, f"{len(unset)} parameters no production root or package call sets: {unset}"
-    stale = sorted(UNSET_PARAMETERS.keys() - {f"{label}.{param}" for _p, label, _c, param, _i in params})
+    stale = sorted(UNSET_PARAMETERS.keys() - {
+        f"{label}.{param}" for path in (ROOT / PKG).rglob("*.py") for label, _c, param, _i, _d in _parameters(path)})
     assert not stale, f"UNSET_PARAMETERS names no package parameter: {stale}"
+
+
+def _constants(path: Path, seen: frozenset = frozenset()) -> dict[str, tuple]:
+    """Name -> value of each module constant of ``path`` (an upper-case name
+    bound once at module level) and each constant it imports from a package
+    module or a root. A value is ``("literal", repr)`` when the right-hand
+    side is a literal, else ``("constant", file, name)``."""
+    tree, out, bound = ast.parse(path.read_text()), {}, {}
+    for node in tree.body:
+        targets = node.targets if isinstance(node, ast.Assign) else [node.target] if isinstance(
+            node, ast.AnnAssign) and node.value else []
+        for t in targets:
+            if isinstance(t, ast.Name):
+                bound[t.id] = node.value if t.id not in bound else None
+    for name, value in bound.items():
+        if value is not None and name.isupper():
+            out[name] = _literal(value) or ("constant", path, name)
+    for node in tree.body:
+        if isinstance(node, ast.ImportFrom) and path not in seen:
+            src = _module_file(_from_module(node, path))
+            if src is not None and src.is_relative_to(ROOT) and src.suffix == ".py":
+                consts = _constants(src, seen | {path})
+                out.update({a.asname or a.name: consts[a.name] for a in node.names if a.name in consts})
+    return out
+
+
+def _literal(node: ast.expr) -> tuple | None:
+    try:
+        return ("literal", repr(ast.literal_eval(node)))
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return None
+
+
+@functools.cache
+def _module_names(path: Path) -> tuple[dict[str, tuple], dict[str, Path]]:
+    """(constants, module aliases) of ``path``."""
+    return _constants(path), _aliases(ast.parse(path.read_text()), path)
+
+
+def _value(node: ast.expr, path: Path) -> tuple:
+    """The value ``node`` in ``path`` resolves to: a literal, a module
+    constant of ``path``, a constant it imports, or ``alias.CONST``.
+    Anything else is a value of its own."""
+    if (lit := _literal(node)) is not None:
+        return lit
+    consts, aliases = _module_names(path)
+    if isinstance(node, ast.Name) and node.id in consts:
+        return consts[node.id]
+    if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+        mod = aliases.get(node.value.id)
+        if mod is not None and mod.is_relative_to(ROOT) and mod.suffix == ".py":
+            if node.attr in (mod_consts := _module_names(mod)[0]):
+                return mod_consts[node.attr]
+    return ("expression", id(node))
+
+
+def test_every_public_parameter_carries_a_choice():
+    """Every defaulted parameter the set check covers has a default some
+    production call uses and takes two or more values across the production
+    calls (ROADMAP aim 2). A parameter whose calls give one value fails as
+    one-valued: it is the constant it always holds. Otherwise a parameter
+    every call passes fails as an unused default: it is required. A call
+    that omits the parameter gives the default. A value is resolved when it
+    is a literal, a module constant of the calling module, an imported
+    constant or ``alias.CONST``; anything else, a ``*args``/``**kwargs``
+    call included, is a value of its own, which no other value equals and
+    which is never the one value. Calls resolve as in the set check."""
+    calls, flagged = _production_calls(), []
+    for path, label, called, param, pos, default in _checked_parameters():
+        args = [(_argument(call, param, pos), caller) for module, call, caller in calls.get(called, [])
+                if module in (None, path)]
+        if not any(a is not None for a, _c in args):
+            continue  # unset: the set check names it
+        where = f"{path.relative_to(ROOT / PKG)}: {label}({param})"
+        values = {_value(default, path) if a is None else _value(a, caller) for a, caller in args}
+        if len(values) == 1 and values.pop()[0] != "expression":
+            flagged.append(f"{where}: one value")
+        elif all(a is not None for a, _c in args):
+            flagged.append(f"{where}: default unused")
+    assert not flagged, f"{len(flagged)} parameters carry no choice: {sorted(flagged)}"

@@ -57,12 +57,12 @@ def test_jpeg_fill_bytes_and_tem_marker():
 def test_parse_rejects_garbage_and_truncation():
     assert parse_image_header(b"") is None
     assert parse_image_header(b"not an image at all") is None
-    assert parse_image_header(synth_png(10, 10)[:20]) is None  # truncated IHDR
+    assert parse_image_header(synth_png(10, 10, color_type=2)[:20]) is None  # truncated IHDR
     assert parse_image_header(b"\xff\xd8\x00\x00") is None  # corrupt marker
     # valid SOI but stream ends before any SOF
     assert parse_image_header(b"\xff\xd8\xff\xe0\x00\x04\x00\x00") is None
     # PNG signature with zero dims is invalid
-    assert parse_image_header(synth_png(0, 5)) is None
+    assert parse_image_header(synth_png(0, 5, color_type=2)) is None
 
 
 def test_image_dims_stage_drops_unparseable(spark):
@@ -78,7 +78,7 @@ def test_image_dims_stage_drops_unparseable(spark):
 
 
 def test_image_dims_plan_is_narrow(spark):
-    media = spark.createDataFrame([(1, synth_png(2, 2))], "media_id long, payload binary")
+    media = spark.createDataFrame([(1, synth_png(2, 2, color_type=2))], "media_id long, payload binary")
     plan = image_dims(media)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 

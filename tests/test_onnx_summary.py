@@ -5,7 +5,7 @@ from entity_extractor_by_pointer_spark.functions.model import NerConfig, Pointer
 
 
 def test_summary_census_totals(tmp_path):
-    model = PointerNerModel(NerConfig(classes=["person", "location", "organization"]))
+    model = PointerNerModel(NerConfig(classes=["person", "location", "organization"], model_type="gp"))
     rows = ms.summarize_model(model)
     total_row = rows[-1]
     assert total_row["name"] == "TOTAL"

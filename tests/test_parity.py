@@ -176,7 +176,7 @@ def test_distributed_eval_matches_reference_validate(spark, parity_corpus, path)
     pages = reference_dataset_as_pages(spark, path).limit(300)
     mentions = detect_mentions(pages, cfg)
     pred_df = mention_sets(mentions)
-    gold_df = gold_mention_sets(pages, cfg.max_sequence_length)
+    gold_df = gold_mention_sets(pages)
     metrics, macro = span_f1(spark, pred_df, gold_df, classes)
     got = {r["type"]: r for r in metrics.collect()}
     for cls, cid in categories.items():

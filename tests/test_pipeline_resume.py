@@ -31,6 +31,49 @@ def test_pipeline_deterministic_and_resumable(spark, tmp_path):
     assert out3 == out1
 
 
+def _parquet_pages(spark, path, start):
+    generate_pages(spark, start + 60, partitions=2, start=start).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_resume_with_same_pages_skips_stages(spark, tmp_path):
+    """A resume over the same pages parquet rebuilds nothing: every stage is
+    read back and the resuming run writes no lineage row."""
+    path, wd = str(tmp_path / "pages"), str(tmp_path / "wd")
+    out1 = _triples(KgPipeline(spark, wd, "r1").run(_parquet_pages(spark, path, 0)))
+    pipe = KgPipeline(spark, wd, "r1-resume")
+    assert _triples(pipe.run(spark.read.parquet(path), resume=True)) == out1
+    assert pipe.writer.read_lineage().where("run_id = 'r1-resume'").count() == 0
+
+
+def test_resume_with_rewritten_pages_raises(spark, tmp_path):
+    """Resuming over a pages parquet rewritten in place with other pages
+    raises, naming the stage and both fingerprints, instead of serving the
+    triples of the old pages."""
+    import pytest
+
+    from entity_extractor_by_pointer_spark.plans.lineage import fingerprint
+
+    path, wd = str(tmp_path / "pages"), str(tmp_path / "wd")
+    old = fingerprint(_parquet_pages(spark, path, 0))
+    KgPipeline(spark, wd, "r1").run(spark.read.parquet(path))
+    new_pages = _parquet_pages(spark, path, 60)
+    new = fingerprint(new_pages)
+    assert new != old
+    with pytest.raises(ValueError, match=f"'pages'.*{old}.*{new}"):
+        KgPipeline(spark, wd, "r2").run(new_pages, resume=True)
+
+
+def test_fingerprint_of_generated_pages_folds_content(spark):
+    """A frame that reads no files is fingerprinted by its content: the
+    partitioning does not change it, other pages do."""
+    from entity_extractor_by_pointer_spark.plans.lineage import fingerprint
+
+    a = fingerprint(generate_pages(spark, 40, partitions=2))
+    assert a == fingerprint(generate_pages(spark, 40, partitions=4))
+    assert a != fingerprint(generate_pages(spark, 41, partitions=2))
+
+
 def test_triples_for_pages_is_per_document_independent(spark):
     """The fused chain on a two-way split of a corpus, unioned, equals one
     run over the whole corpus: every stage through triples is per-document
@@ -151,7 +194,7 @@ def test_compaction_crash_recovery(spark, tmp_path):
 
     # window C: stale leftovers while base exists are swept on next compaction
     shutil.copytree(base, base + ".compact_tmp")
-    pipe.writer.compact_stage("pages")
+    pipe.writer.compact_stage("pages", target_file_bytes=128 << 20)
     assert not os.path.isdir(base + ".compact_tmp")
     assert got == sorted(
         tuple(r) for r in pipe.writer.read_stage("pages").select("url").collect()

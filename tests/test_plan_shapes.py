@@ -32,8 +32,8 @@ def test_mention_stage_has_no_shuffle(spark):
     from entity_extractor_by_pointer_spark.operators.mentions import detect_mentions
     from entity_extractor_by_pointer_spark.sources.pages import generate_pages
 
-    pages = generate_pages(spark, 10)
-    cfg = NerConfig(classes=["person", "location", "organization"])
+    pages = generate_pages(spark, 10, partitions=2)
+    cfg = NerConfig(classes=["person", "location", "organization"], model_type="gp")
     plan = _plan(detect_mentions(pages, cfg))
     assert "Exchange" not in plan, plan
 
@@ -46,8 +46,8 @@ def test_mention_stage_prunes_html_binary(spark, tmp_path):
     from entity_extractor_by_pointer_spark.sources.pages import generate_pages
 
     path = str(tmp_path / "pages")
-    generate_pages(spark, 10).write.parquet(path)
-    cfg = NerConfig(classes=["person", "location", "organization"])
+    generate_pages(spark, 10, partitions=2).write.parquet(path)
+    cfg = NerConfig(classes=["person", "location", "organization"], model_type="gp")
     plan = _plan(detect_mentions(spark.read.parquet(path), cfg))
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "html" not in read_schema, read_schema
@@ -197,7 +197,7 @@ def _contamination(spark):
         [(1, base + " extra words"), (2, "short doc")], "doc_id long, text string"
     )
     bench = spark.createDataFrame([(base,)], "text string")
-    return contamination_flags(docs, bench, n=8)
+    return contamination_flags(docs, bench)
 
 
 def _balance(spark):
@@ -273,7 +273,6 @@ def test_triples_build_runs_ner_once(spark):
     import re
 
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     from entity_extractor_by_pointer_spark.cache import release_all
     from entity_extractor_by_pointer_spark.functions.gazetteer import DOCS_GAZETTEER
@@ -291,9 +290,7 @@ def test_triples_build_runs_ner_once(spark):
 
     try:
         docs = spark.read.parquet(f"{SF}/documents.parquet")
-        m = detect_mentions_gazetteer(
-            docs, DOCS_GAZETTEER, id_col="doc_id", text_col="text", id_type=T.LongType()
-        )
+        m = detect_mentions_gazetteer(docs, DOCS_GAZETTEER, id_col="doc_id")
         aliases = alias_df(spark, [(n, e) for n, _t, e in DOCS_GAZETTEER])
         linked = link_mentions(m, aliases).where(F.col("entity_id").isNotNull())
         edges = spark.createDataFrame(
@@ -346,9 +343,11 @@ def test_pagerank_pays_one_exchange_per_iteration(spark, monkeypatch):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        c1 = distinct_exchanges(pagerank(tr, iterations=1))
+        monkeypatch.setattr(graph, "PAGERANK_ITERS", 1)
+        c1 = distinct_exchanges(pagerank(tr))
         release_all()
-        c3 = distinct_exchanges(pagerank(tr, iterations=3))
+        monkeypatch.setattr(graph, "PAGERANK_ITERS", 3)
+        c3 = distinct_exchanges(pagerank(tr))
         release_all()
         per_iter = (c3 - c1) / 2
         assert per_iter <= 1, f"{per_iter} exchanges per iteration (want 1)"
@@ -357,7 +356,7 @@ def test_pagerank_pays_one_exchange_per_iteration(spark, monkeypatch):
         release_all()
 
 
-def test_stamped_store_write_once_and_prune_safety(tmp_path, monkeypatch):
+def test_stamped_store_write_once_and_prune_safety(spark, tmp_path, monkeypatch):
     """Store-layer contract: same dataset+content → same path (idempotent);
     different dataset path sharing a basename → different tag (a concurrent
     run can never resolve to another dataset's store); a loser's tmp dir is
@@ -365,7 +364,13 @@ def test_stamped_store_write_once_and_prune_safety(tmp_path, monkeypatch):
     NOT pruned while warm."""
     import os
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     import __spark_entry__ as E
+
+    def write_docs(path, n):
+        pq.write_table(pa.table({"doc_id": list(range(n))}), str(path))
 
     monkeypatch.setenv("TMPDIR", str(tmp_path))
     import tempfile
@@ -376,12 +381,11 @@ def test_stamped_store_write_once_and_prune_safety(tmp_path, monkeypatch):
     d2 = tmp_path / "other" / "sf0.001"  # same basename, different dataset
     for d in (d1, d2):
         (d / "documents.parquet").mkdir(parents=True)
-        with open(d / "documents.parquet" / "part-0.parquet", "wb") as f:
-            f.write(b"x" * (10 if d is d1 else 99))
+        write_docs(d / "documents.parquet" / "part-0.parquet", 10 if d is d1 else 99)
 
-    p1 = E._stamped_store_path(str(d1), "documents", "kg_mentions")
-    p1_again = E._stamped_store_path(str(d1), "documents", "kg_mentions")
-    p2 = E._stamped_store_path(str(d2), "documents", "kg_mentions")
+    p1 = E._stamped_store_path(spark, str(d1), "documents", "kg_mentions")
+    p1_again = E._stamped_store_path(spark, str(d1), "documents", "kg_mentions")
+    p2 = E._stamped_store_path(spark, str(d2), "documents", "kg_mentions")
     assert p1 == p1_again
     assert p1 != p2 and os.path.basename(p1) != os.path.basename(p2)
 
@@ -389,11 +393,11 @@ def test_stamped_store_write_once_and_prune_safety(tmp_path, monkeypatch):
     # stamp, so its stores are rebuilt rather than served stale
     d3 = tmp_path / "single" / "sf0.001"
     d3.mkdir(parents=True)
-    (d3 / "documents.parquet").write_bytes(b"x" * 10)
-    p3 = E._stamped_store_path(str(d3), "documents", "kg_mentions")
-    assert p3 == E._stamped_store_path(str(d3), "documents", "kg_mentions")
-    (d3 / "documents.parquet").write_bytes(b"x" * 20)
-    assert E._stamped_store_path(str(d3), "documents", "kg_mentions") != p3
+    write_docs(d3 / "documents.parquet", 10)
+    p3 = E._stamped_store_path(spark, str(d3), "documents", "kg_mentions")
+    assert p3 == E._stamped_store_path(spark, str(d3), "documents", "kg_mentions")
+    write_docs(d3 / "documents.parquet", 20)
+    assert E._stamped_store_path(spark, str(d3), "documents", "kg_mentions") != p3
 
     # _write_once: builds once, then short-circuits on _SUCCESS
     calls = []
@@ -446,5 +450,5 @@ def test_stamped_store_write_once_and_prune_safety(tmp_path, monkeypatch):
     # a WARM sibling stamp of the same dataset survives path resolution
     warm = os.path.join(str(tmp_path), os.path.basename(p1)[:-1] + "f")
     os.makedirs(warm, exist_ok=True)
-    E._stamped_store_path(str(d1), "documents", "kg_mentions")
+    E._stamped_store_path(spark, str(d1), "documents", "kg_mentions")
     assert os.path.isdir(warm)  # mtime < 1h old -> not pruned

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import pytest
 
+from entity_extractor_by_pointer_spark.functions import model as model_mod
 from entity_extractor_by_pointer_spark.functions.model import NerConfig, PointerNerModel
 
 
@@ -75,11 +76,12 @@ def test_bert_encoder_spark_matches_single_process(spark):
 
 
 @pytest.mark.skipif(not _hf_available(), reason="torch/transformers not installed")
-def test_bert_tokenizer_contract_matches_reference_shape():
+def test_bert_tokenizer_contract_matches_reference_shape(monkeypatch):
     """The HF encode path reproduces the reference's id/offset contract:
     ids padded/hard-truncated to L with NO [SEP] re-append, offsets from the
     truncation=True call with (0,0) specials (data.py:24-29,41-44,88-90)."""
-    cfg = NerConfig(classes=["person"], encoder="bert", max_sequence_length=16)
+    monkeypatch.setattr(model_mod, "MAX_SEQUENCE_LENGTH", 16)
+    cfg = NerConfig(classes=["person"], model_type="gp", encoder="bert")
     model = PointerNerModel(cfg)
     long_text = "北京" * 40
     ids, mask, offs = model._encode_batch([long_text, "李明"])

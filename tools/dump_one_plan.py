@@ -1,8 +1,11 @@
 #!/usr/bin/env python3
-"""Dump the masked formatted physical plan of named queries() entries.
+"""Dump the masked formatted physical plan of queries() entries.
 
 Usage: python tools/dump_one_plan.py <out_dir> <suffix> <query> [query ...]
 Writes <out_dir>/<query>_<suffix>.txt for each query.
+
+Usage: python tools/dump_one_plan.py
+Writes the checkout's PLANS.md: the masked plan of every queries() entry.
 
 The dump is masked so that two dumps of one tree are byte-identical and a
 ``diff -r`` between two trees shows only real plan changes: expression ids
@@ -107,9 +110,8 @@ def mask_plan(plan: str) -> str:
     return plan.replace(tempfile.gettempdir(), "TMP")
 
 
-def main() -> None:
-    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
-    os.makedirs(out_dir, exist_ok=True)
+def masked_plans(names: list[str]):
+    """(name, masked formatted plan) of each named queries() entry."""
     spark = get_spark(master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry_mod.queries()
@@ -118,9 +120,37 @@ def main() -> None:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
+        yield name, mask_plan(buf.getvalue().strip())
+
+
+def write_plans_md() -> None:
+    out = [
+        "# PLANS — masked formatted physical plans (generated by tools/dump_one_plan.py)",
+        "",
+        f"Source: `{SF_DIR}`. Things to look for: `PushedFilters` and pruned",
+        "`ReadSchema` on every scan, `BroadcastHashJoin` on dimension joins,",
+        "`WholeStageCodegen` spans around relational operators, and the",
+        "absence of `Exchange` in the narrow (mapInPandas) stages. Expression,",
+        "plan and RDD ids and the temp dir are masked as in a plan diff.",
+        "",
+    ]
+    names = list(entry_mod.queries())
+    out += [f"## {name}\n\n```\n{plan}\n```\n" for name, plan in masked_plans(names)]
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
+        f.write("\n".join(out))
+    print(f"wrote PLANS.md with {len(names)} plans")
+
+
+def main() -> None:
+    if len(sys.argv) == 1:
+        write_plans_md()
+        return
+    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    os.makedirs(out_dir, exist_ok=True)
+    for name, plan in masked_plans(names):
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(mask_plan(buf.getvalue().strip()) + "\n")
+            f.write(plan + "\n")
         print(f"wrote {path}")
 
 

@@ -96,7 +96,7 @@ def run_ab(spark, n_docs: int, hot_period: int) -> dict:
             release_all()
             spark.catalog.clearCache()
             t0 = time.time()
-            rows = sorted(tuple(r) for r in dedup.ngram_jaccard_pairs(docs, 0.8).collect())
+            rows = sorted(tuple(r) for r in dedup.ngram_jaccard_pairs(docs).collect())
             timings[label] = round(time.time() - t0, 2)
             results[label] = rows
     finally:

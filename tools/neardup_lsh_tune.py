@@ -32,8 +32,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 # threshold cannot silently make this tool validate a different blocking
 # than the one in production (this file is the recall-1.0 evidence gate
 # for banding changes)
-from __spark_entry__ import NEARDUP_COS_THRESHOLD as THRESHOLD  # noqa: E402
 from __spark_entry__ import NEARDUP_ID_OFFSET  # noqa: E402
+from entity_extractor_by_pointer_spark.operators.dedup import NEARDUP_COS_THRESHOLD as THRESHOLD  # noqa: E402
 from entity_extractor_by_pointer_spark.operators.similarity import (  # noqa: E402
     LSH_SEED,
 )
