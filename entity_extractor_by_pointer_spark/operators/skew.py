@@ -14,26 +14,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-# a hot key holds at least this share of all rows; at most this many are reported
-HOT_KEY_MIN_SHARE = 0.02
-HOT_KEY_TOP_K = 10
-
-
 def detect_hot_keys(df: DataFrame, key: str) -> list[tuple[str, int]]:
-    """First-pass hot-key detection (SURVEY.md §4 item 1): the
-    ``HOT_KEY_TOP_K`` keys holding at least ``HOT_KEY_MIN_SHARE`` of all
-    rows, by exact count-by-key (map-side combined — one row per key per
-    partition crosses the shuffle). The pipeline logs these to
-    ``_metrics`` so skew is observable per run."""
+    """First-pass hot-key detection (SURVEY.md §4 item 1): the top 10 keys
+    holding at least 2% of all rows, by exact count-by-key (map-side
+    combined — one row per key per partition crosses the shuffle). The
+    pipeline logs these to ``_metrics`` so skew is observable per run."""
     total = df.count()
     if total == 0:
         return []
     rows = (
         df.groupBy(key)
         .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") >= total * HOT_KEY_MIN_SHARE)
+        .where(F.col("n") >= total * 0.02)
         .orderBy(F.desc("n"), F.asc(key))
-        .limit(HOT_KEY_TOP_K)
+        .limit(10)
         .collect()
     )
     return [(r[key], int(r["n"])) for r in rows]

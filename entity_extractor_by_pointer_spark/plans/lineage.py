@@ -8,8 +8,13 @@ entry per output partition (Spark partition id → row count), appended
 atomically AFTER the stage's data write succeeds, so a killed run re-executes
 any stage whose lineage is missing — stage-level idempotent resume.
 
+Each write of a stage first appends a ``started`` row, and every lineage
+row carries ``input_fp``, the ``fingerprint`` of the pipeline input the
+stage was built from: a stage is reusable only when its latest write
+committed, from the same input (``done_fingerprint``).
+
 Schemas (SURVEY.md §1.2):
-  _lineage: run_id, stage, part_id, rows_out, started_at, finished_at, status
+  _lineage: run_id, stage, part_id, rows_out, started_at, finished_at, status, input_fp
   _metrics: run_id, stage, key, value
 """
 
@@ -17,45 +22,73 @@ from __future__ import annotations
 
 import os
 import time
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
     "run_id string, stage string, part_id int, rows_out long, "
-    "started_at double, finished_at double, status string"
+    "started_at double, finished_at double, status string, input_fp string"
 )
 METRICS_SCHEMA = "run_id string, stage string, key string, value double"
+
+
+def _file_stamp(df: DataFrame) -> str | None:
+    """Each file's size and mtime_ns folded in path order, when ``df`` is a
+    bare scan of local files (``DataFrame.inputFiles``, no Spark job); None
+    for any other plan, since a filter, limit or union over the same files
+    reads other rows."""
+    from urllib.parse import urlparse
+    from urllib.request import url2pathname
+
+    if df._jdf.queryExecution().analyzed().getClass().getSimpleName() != "LogicalRelation":
+        return None
+    files = df.inputFiles()
+    if not files or any(urlparse(f).scheme != "file" for f in files):
+        return None
+    stamp = 0
+    for f in sorted(files):
+        st = os.stat(url2pathname(urlparse(f).path))
+        stamp = (stamp * 1_000_003 + st.st_size + st.st_mtime_ns) % (1 << 60)
+    return f"{stamp:x}"
+
+
+def _content_fold(df: DataFrame) -> list:
+    """The row count, the xor of one row hash and the sum of a second
+    (order-insensitive; xor alone cancels across multisets)."""
+    cols = [F.col(c) for c in df.columns]
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(*cols)).alias("x"),
+        # decimal accumulator: a bigint sum of 64-bit hashes overflows under ANSI mode
+        F.sum(F.xxhash64(F.lit("fold"), *cols).cast("decimal(38,0)")).alias("s"),
+    ]
+
+
+def _fold_hex(fold) -> str:
+    return f"rows{fold['n']}_{(fold['x'] or 0) & ((1 << 64) - 1):x}_{int(fold['s'] or 0) % (1 << 64):x}"
 
 
 def fingerprint(df: DataFrame) -> str:
     """The identity of the input ``df`` reads, for reuse decisions: a
     materialized store or a resumed stage is valid only while its input's
-    fingerprint is unchanged.
+    fingerprint is unchanged. A bare scan of local files is stamped by its
+    files, so a file rewritten in place gets a new fingerprint; any other
+    frame folds its content in one aggregate job."""
+    return _file_stamp(df) or _fold_hex(df.agg(*_content_fold(df)).first())
 
-    A frame that reads local files folds each file's size and mtime_ns in
-    path order (``DataFrame.inputFiles``, no Spark job), so a file rewritten
-    in place gets a new fingerprint. Any other frame folds its content in
-    one aggregate job: the row count, the xor of one row hash and the sum
-    of a second (order-insensitive; xor alone cancels across multisets)."""
-    from urllib.parse import urlparse
-    from urllib.request import url2pathname
 
-    files = df.inputFiles()
-    if files and all(urlparse(f).scheme == "file" for f in files):
-        stamp = 0
-        for f in sorted(files):
-            st = os.stat(url2pathname(urlparse(f).path))
-            stamp = (stamp * 1_000_003 + st.st_size + st.st_mtime_ns) % (1 << 60)
-        return f"{stamp:x}"
-    cols = [F.col(c) for c in df.columns]
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(*cols)).alias("x"),
-        # decimal accumulator: a bigint sum of 64-bit hashes overflows under ANSI mode
-        F.sum(F.xxhash64(F.lit("fold"), *cols).cast("decimal(38,0)")).alias("s"),
-    ).first()
-    return f"rows{row['n']}_{(row['x'] or 0) & ((1 << 64) - 1):x}_{int(row['s'] or 0) % (1 << 64):x}"
+def observed_fingerprint(df: DataFrame) -> tuple[DataFrame, Callable[[], str]]:
+    """``df`` and a getter of its ``fingerprint`` that costs no job of its
+    own: a file stamp is taken now, a content fold rides the first action
+    on the returned frame (``DataFrame.observe``), and the getter waits for
+    that action."""
+    stamp = _file_stamp(df)
+    if stamp is not None:
+        return df, lambda: stamp
+    obs = Observation()
+    return df.observe(obs, *_content_fold(df)), lambda: _fold_hex(obs.get)
 
 
 def _data_files(path: str) -> list[str]:
@@ -78,19 +111,25 @@ class StageWriter:
     def _stage_path(self, stage: str) -> str:
         return os.path.join(self.workdir, stage)
 
-    def is_done(self, stage: str) -> bool:
-        path = self._stage_path(stage)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return False
-        lineage = self.read_lineage()
-        if lineage is None:
-            return False
-        return (
-            lineage.where(
-                (F.col("stage") == stage) & (F.col("status") == "done")
-            ).limit(1).count()
-            > 0
-        )
+    def done_fingerprint(self, stage: str) -> str | None:
+        """The ``input_fp`` of the stage's latest write if that write
+        committed, else None. The latest write is the one with the latest
+        ``started_at``; a kill between its data write and its ``done`` rows
+        leaves only its ``started`` row, so data of an uncommitted write is
+        never vouched for by an older commit. Read with pyarrow: no Spark
+        job."""
+        import pyarrow.parquet as pq
+
+        lineage = os.path.join(self.workdir, "_lineage")
+        success = os.path.join(self._stage_path(stage), "_SUCCESS")
+        if not (os.path.exists(success) and os.path.isdir(lineage)):
+            return None
+        rows = [r for r in pq.read_table(lineage).to_pylist() if r["stage"] == stage]
+        if not rows:
+            return None
+        latest = max(r["started_at"] for r in rows)
+        done = [r for r in rows if r["started_at"] == latest and r["status"] == "done"]
+        return done[0].get("input_fp") if done else None
 
     def compact_stage(self, stage: str, target_file_bytes: int) -> dict:
         """Small-file compaction of a stage table — the Iceberg
@@ -199,9 +238,14 @@ class StageWriter:
         stage: str,
         df: DataFrame,
         partition_by: list[str] | None,
+        input_fp: Callable[[], str],
     ) -> DataFrame:
-        """Materialize a stage, then append per-partition lineage rows."""
+        """Materialize a stage between a ``started`` lineage row and its
+        per-partition ``done`` rows. ``input_fp`` is called after the data
+        write, so it may return a fingerprint that write observed."""
         started = time.time()
+        started_row = (self.run_id, stage, -1, 0, started, started, "started", None)
+        self._append_rows("_lineage", [started_row], LINEAGE_SCHEMA)
         path = self._stage_path(stage)
         writer = df.write.mode("overwrite")
         if partition_by:
@@ -221,23 +265,13 @@ class StageWriter:
         # file. part_id = file ordinal in sorted path order (one file per
         # write task, stable).
         per_part = self._per_file_counts(path)
+        fp = input_fp()
         finished = time.time()
-        rows = [
-            (self.run_id, stage, pid, int(n), started, finished, "done")
-            for pid, n in per_part
-        ] or [(self.run_id, stage, 0, 0, started, finished, "done")]
         self._append_rows(
             "_lineage",
-            rows,
-            [
-                ("run_id", "string"),
-                ("stage", "string"),
-                ("part_id", "int32"),
-                ("rows_out", "int64"),
-                ("started_at", "double"),
-                ("finished_at", "double"),
-                ("status", "string"),
-            ],
+            [(self.run_id, stage, pid, int(n), started, finished, "done", fp) for pid, n in per_part]
+            or [(self.run_id, stage, 0, 0, started, finished, "done", fp)],
+            LINEAGE_SCHEMA,
         )
         total = sum(n for _pid, n in per_part)
         self.log_metrics(
@@ -256,7 +290,7 @@ class StageWriter:
             for i, f in enumerate(sorted(_data_files(path)))
         ]
 
-    def _append_rows(self, table: str, rows: list[tuple], fields) -> None:
+    def _append_rows(self, table: str, rows: list[tuple], schema: str) -> None:
         """Append a handful of driver-side bookkeeping rows as ONE parquet
         file written with pyarrow — no Spark job at all. The previous
         ``createDataFrame(...).write.mode("append")`` launched a
@@ -265,19 +299,15 @@ class StageWriter:
         executors the same rows would still ride a full job). The file is
         written to a hidden temp name and os.rename'd in (atomic), so a
         concurrent Spark read of the table dir never sees a partial file;
-        Spark reads the pyarrow files transparently (schema matches
-        LINEAGE_SCHEMA/METRICS_SCHEMA exactly, pytest-pinned)."""
+        Spark reads the pyarrow files transparently: their columns are the
+        ``schema`` DDL (``LINEAGE_SCHEMA``/``METRICS_SCHEMA``)."""
         import uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        type_map = {
-            "string": pa.string(),
-            "int32": pa.int32(),
-            "int64": pa.int64(),
-            "double": pa.float64(),
-        }
+        type_map = {"string": pa.string(), "int": pa.int32(), "long": pa.int64(), "double": pa.float64()}
+        fields = [f.split() for f in schema.split(", ")]
         cols = list(zip(*rows)) if rows else [[] for _ in fields]
         table_pa = pa.table(
             {
@@ -294,22 +324,7 @@ class StageWriter:
 
     def log_metrics(self, stage: str, kv: dict[str, float]) -> None:
         rows = [(self.run_id, stage, k, float(v)) for k, v in kv.items()]
-        self._append_rows(
-            "_metrics",
-            rows,
-            [
-                ("run_id", "string"),
-                ("stage", "string"),
-                ("key", "string"),
-                ("value", "double"),
-            ],
-        )
-
-    def read_lineage(self) -> DataFrame | None:
-        path = os.path.join(self.workdir, "_lineage")
-        if not os.path.exists(path):
-            return None
-        return self.spark.read.parquet(path)
+        self._append_rows("_metrics", rows, METRICS_SCHEMA)
 
     def read_metrics(self) -> DataFrame | None:
         path = os.path.join(self.workdir, "_metrics")

@@ -6,17 +6,17 @@ check) → mentions (``mentions_for_pages``) → link → canonicalize
 ``KgPipeline.run`` materializes the pages, mentions, triples and
 triple_counts stages with per-partition lineage (``plans.lineage``); the
 canonical-mention store of ``__spark_entry__`` calls ``canonical_mentions``
-with its own gazetteer. ``resume=True`` skips stages whose output + lineage exist — the
-distributed analog of the reference's best-checkpoint resume
-(``engines/train.py:126-130``), at stage granularity (SURVEY.md §2 S4/T4) —
-and raises when the pages differ from the input the stages were built from.
+with its own gazetteer. ``resume=True`` skips each stage whose latest write
+committed from an input of the same fingerprint — the distributed analog of
+the reference's best-checkpoint resume (``engines/train.py:126-130``), at
+stage granularity (SURVEY.md §2 S4/T4) — rebuilds the others, and raises
+when the pages stage was built from other pages.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,7 +28,7 @@ from ..operators.extract import with_extracted_text
 from ..operators.linking import alias_df, link_mentions
 from ..operators.mentions import detect_mentions, detect_mentions_gazetteer
 from ..operators.triples import bucket_by_subject, build_triples, triple_counts
-from .lineage import StageWriter, fingerprint
+from .lineage import StageWriter, fingerprint, observed_fingerprint
 
 # parquet partition count of the triples table (Iceberg bucket(N, subj))
 SUBJ_BUCKETS = 16
@@ -93,10 +93,10 @@ class KgPipeline:
         self.config = config or PipelineConfig()
         self.writer = StageWriter(spark, workdir, run_id)
 
-    def _stage(self, name: str, resume: bool, compute, partition_by=None) -> DataFrame:
-        if resume and self.writer.is_done(name):
+    def _stage(self, name: str, resume: bool, compute, input_fp, partition_by=None) -> DataFrame:
+        if resume and self.writer.done_fingerprint(name) == input_fp():
             return self.writer.read_stage(name)
-        return self.writer.write_stage(name, compute(), partition_by=partition_by)
+        return self.writer.write_stage(name, compute(), partition_by, input_fp)
 
     def run(self, pages: DataFrame, resume: bool = False) -> DataFrame:
         """Full batch run. Operator-level persists (``cache.cached``, e.g.
@@ -114,25 +114,24 @@ class KgPipeline:
 
     def _run(self, pages: DataFrame, resume: bool = False) -> DataFrame:
         t0 = time.time()
-        # the input's fingerprint is recorded before the pages stage is
-        # written, so a done pages stage always has the fingerprint of the
-        # input it was built from (a torn record is rewritten: its pages
-        # stage is not done)
-        fp, fp_file = fingerprint(pages), Path(self.writer.workdir, "_pages_fingerprint")
-        if resume and self.writer.is_done("pages"):
-            recorded = fp_file.read_text() if fp_file.exists() else "none"
-            if recorded != fp:
+        # every stage records the input's fingerprint and is reused only for
+        # an input with the same one. A run that resumes needs it first; any
+        # other run takes it from the pages-stage write (no job of its own).
+        if resume:
+            fp = fingerprint(pages)
+            found = self.writer.done_fingerprint("pages")
+            if found not in (None, fp):
                 raise ValueError(
-                    f"resume: stage 'pages' was built from input fingerprint {recorded}, "
+                    f"resume: stage 'pages' was built from input fingerprint {found}, "
                     f"the pages given have fingerprint {fp}"
                 )
+            input_fp = lambda: fp  # noqa: E731
         else:
-            fp_file.parent.mkdir(parents=True, exist_ok=True)
-            fp_file.write_text(fp)
+            pages, input_fp = observed_fingerprint(pages)
         # the invariant check rides the pages write; a violation aborts it
         # BEFORE the lineage commit, so the stage is never marked done
-        pages_t = self._stage("pages", resume, lambda: extract_checked(pages))
-        mentions = self._stage("mentions", resume, lambda: mentions_for_pages(pages_t, self.config))
+        pages_t = self._stage("pages", resume, lambda: extract_checked(pages), input_fp)
+        mentions = self._stage("mentions", resume, lambda: mentions_for_pages(pages_t, self.config), input_fp)
 
         # observability for skew decisions: persist hot mention surfaces
         # (share ≥ 2%) into _metrics (SURVEY.md §4 hot-key detection)
@@ -152,9 +151,9 @@ class KgPipeline:
             t = build_triples(canonical_mentions(mentions, PAGES_GAZETTEER, CANON_EDGES))
             return bucket_by_subject(t, SUBJ_BUCKETS)
 
-        triples = self._stage("triples", resume, triples_stage, partition_by=["subj_bucket"])
+        triples = self._stage("triples", resume, triples_stage, input_fp, partition_by=["subj_bucket"])
         counts = self._stage(
-            "triple_counts", resume, lambda: triple_counts(triples.drop("subj_bucket"))
+            "triple_counts", resume, lambda: triple_counts(triples.drop("subj_bucket")), input_fp
         )
 
         n_pages = pages_t.count()

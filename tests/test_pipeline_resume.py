@@ -1,7 +1,12 @@
 import shutil
 
+from entity_extractor_by_pointer_spark.plans.lineage import fingerprint
 from entity_extractor_by_pointer_spark.plans.pipeline import KgPipeline
 from entity_extractor_by_pointer_spark.sources.pages import generate_pages
+
+
+def _lineage(pipe):
+    return pipe.spark.read.parquet(f"{pipe.writer.workdir}/_lineage")
 
 
 def _triples(counts_df):
@@ -25,8 +30,8 @@ def test_pipeline_deterministic_and_resumable(spark, tmp_path):
     for stage in ("triples", "triple_counts"):
         shutil.rmtree(f"{wd1}/{stage}", ignore_errors=True)
     pipe = KgPipeline(spark, wd1, "r1-resume")
-    assert pipe.writer.is_done("mentions")
-    assert not pipe.writer.is_done("triples")
+    assert pipe.writer.done_fingerprint("mentions") == fingerprint(pages)
+    assert pipe.writer.done_fingerprint("triples") is None
     out3 = _triples(pipe.run(pages, resume=True))
     assert out3 == out1
 
@@ -43,7 +48,7 @@ def test_resume_with_same_pages_skips_stages(spark, tmp_path):
     out1 = _triples(KgPipeline(spark, wd, "r1").run(_parquet_pages(spark, path, 0)))
     pipe = KgPipeline(spark, wd, "r1-resume")
     assert _triples(pipe.run(spark.read.parquet(path), resume=True)) == out1
-    assert pipe.writer.read_lineage().where("run_id = 'r1-resume'").count() == 0
+    assert _lineage(pipe).where("run_id = 'r1-resume'").count() == 0
 
 
 def test_resume_with_rewritten_pages_raises(spark, tmp_path):
@@ -51,8 +56,6 @@ def test_resume_with_rewritten_pages_raises(spark, tmp_path):
     raises, naming the stage and both fingerprints, instead of serving the
     triples of the old pages."""
     import pytest
-
-    from entity_extractor_by_pointer_spark.plans.lineage import fingerprint
 
     path, wd = str(tmp_path / "pages"), str(tmp_path / "wd")
     old = fingerprint(_parquet_pages(spark, path, 0))
@@ -64,11 +67,52 @@ def test_resume_with_rewritten_pages_raises(spark, tmp_path):
         KgPipeline(spark, wd, "r2").run(new_pages, resume=True)
 
 
+def test_resume_after_failed_run_over_other_pages_rebuilds_stale_stages(spark, tmp_path, monkeypatch):
+    """A run over other pages that dies before its triples write leaves the
+    first run's triples on disk. A resume over the new pages reuses only the
+    stages built from them and rebuilds the triples and counts."""
+    import pytest
+
+    from entity_extractor_by_pointer_spark.plans import pipeline
+
+    wd = str(tmp_path / "wd")
+    p1 = generate_pages(spark, 60, partitions=2)
+    p2 = generate_pages(spark, 120, partitions=2, start=60)
+    out1 = _triples(KgPipeline(spark, wd, "r1").run(p1))
+    want = _triples(KgPipeline(spark, str(tmp_path / "fresh"), "f").run(p2))
+    assert want != out1
+
+    def dies(mentions):
+        raise RuntimeError("killed before the triples write")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "build_triples", dies)
+        with pytest.raises(RuntimeError, match="killed"):
+            KgPipeline(spark, wd, "r2").run(p2)
+    pipe = KgPipeline(spark, wd, "r2-resume")
+    assert pipe.writer.done_fingerprint("mentions") == fingerprint(p2)
+    assert pipe.writer.done_fingerprint("triples") == fingerprint(p1)
+    assert _triples(pipe.run(p2, resume=True)) == want
+    rebuilt = _lineage(pipe).where("run_id = 'r2-resume' AND status = 'done'")
+    assert {r["stage"] for r in rebuilt.select("stage").distinct().collect()} == {"triples", "triple_counts"}
+
+
+def test_resume_over_filtered_view_of_same_parquet_raises(spark, tmp_path):
+    """A filter over the same files reads other pages, so its fingerprint
+    folds content instead of stamping the files, and the resume raises."""
+    import pytest
+
+    path, wd = str(tmp_path / "pages"), str(tmp_path / "wd")
+    KgPipeline(spark, wd, "r1").run(_parquet_pages(spark, path, 0))
+    view = spark.read.parquet(path).where("url <> 'https://example.org/page/0'")
+    assert fingerprint(view) != fingerprint(spark.read.parquet(path))
+    with pytest.raises(ValueError, match="'pages'"):
+        KgPipeline(spark, wd, "r2").run(view, resume=True)
+
+
 def test_fingerprint_of_generated_pages_folds_content(spark):
     """A frame that reads no files is fingerprinted by its content: the
     partitioning does not change it, other pages do."""
-    from entity_extractor_by_pointer_spark.plans.lineage import fingerprint
-
     a = fingerprint(generate_pages(spark, 40, partitions=2))
     assert a == fingerprint(generate_pages(spark, 40, partitions=4))
     assert a != fingerprint(generate_pages(spark, 41, partitions=2))
@@ -96,7 +140,7 @@ def test_lineage_and_metrics_written(spark, tmp_path):
     wd = str(tmp_path / "runL")
     pipe = KgPipeline(spark, wd, "rL")
     pipe.run(pages)
-    lineage = pipe.writer.read_lineage()
+    lineage = _lineage(pipe)
     stages = {r["stage"] for r in lineage.select("stage").distinct().collect()}
     assert {"pages", "mentions", "triples", "triple_counts"} <= stages
     # per-partition rows recorded
@@ -116,11 +160,11 @@ def test_resume_after_kill_between_data_write_and_lineage_commit(spark, tmp_path
     pipe = KgPipeline(spark, wd, "k1")
     out1 = _triples(pipe.run(pages))
 
-    # simulate the crash window on the triples stage: recreate its data dir
-    # (with _SUCCESS) but strip every lineage row by re-initializing lineage
-    # from the OTHER stages only
-    lineage = pipe.writer.read_lineage()
-    kept = lineage.where("stage <> 'triples'").collect()
+    # simulate the crash window on the triples stage: its data dir (with
+    # _SUCCESS) and its 'started' row stay, its 'done' rows are stripped by
+    # re-initializing lineage without them
+    lineage = _lineage(pipe)
+    kept = lineage.where("stage <> 'triples' OR status = 'started'").collect()
     import shutil
 
     shutil.rmtree(f"{wd}/_lineage")
@@ -131,8 +175,8 @@ def test_resume_after_kill_between_data_write_and_lineage_commit(spark, tmp_path
     )
     pipe2 = KgPipeline(spark, wd, "k1-resume")
     assert (tmp_path / "killwin" / "triples" / "_SUCCESS").exists()
-    assert not pipe2.writer.is_done("triples")  # data there, commit missing
-    assert pipe2.writer.is_done("mentions")
+    assert pipe2.writer.done_fingerprint("triples") is None  # data there, commit missing
+    assert pipe2.writer.done_fingerprint("mentions") == fingerprint(pages)
     out2 = _triples(pipe2.run(pages, resume=True))
     assert out2 == out1
 
@@ -148,7 +192,7 @@ def test_pipeline_model_scorer_and_empty_triples_are_safe(spark, tmp_path):
     counts = pipe.run(generate_pages(spark, 120, partitions=4))
     n = counts.count()  # zero is acceptable — must not raise
     assert pipe.writer.read_stage("triples").count() >= n
-    assert pipe.writer.is_done("triples")
+    assert pipe.writer.done_fingerprint("triples") is not None
     # resume path reads the (possibly empty) stages back without inference
     pipe2 = KgPipeline(spark, wd, "gp2", PipelineConfig(scorer="gp"))
     out2 = pipe2.run(generate_pages(spark, 120, partitions=4), resume=True)
@@ -299,6 +343,7 @@ def test_compact_stage_small_files(spark, tmp_path):
         "triples",
         triples.withColumn("subj_bucket", subj_bucket(SUBJ_BUCKETS)).repartition(8),
         partition_by=["subj_bucket"],
+        input_fp=lambda: "split",
     )
     tri_rows = sorted(
         tuple(r)
@@ -354,7 +399,7 @@ def test_extraction_invariant_violation_fails_before_commit(spark, tmp_path):
     pipe = KgPipeline(spark, str(tmp_path / "bad"), "bad")
     with pytest.raises(Exception, match=match):
         pipe.run(tampered(40))
-    assert not pipe.writer.is_done("pages")
+    assert pipe.writer.done_fingerprint("pages") is None
 
     with pytest.raises(Exception, match=match):
         triples_for_pages(tampered(40), PipelineConfig()).collect()
