@@ -70,8 +70,8 @@ from entity_extractor_by_pointer_spark.operators.mentions import (
 from entity_extractor_by_pointer_spark.operators import train_distributed as td
 from entity_extractor_by_pointer_spark.operators.multimodal import extract_media_features
 from entity_extractor_by_pointer_spark.operators.triples import build_triples, triple_counts
-from entity_extractor_by_pointer_spark.plans.lineage import fingerprint
-from entity_extractor_by_pointer_spark.session import _ship_package
+from entity_extractor_by_pointer_spark.plans.lineage import StageWriter, fingerprint
+from entity_extractor_by_pointer_spark.session import _ship_package, scratch_dir
 
 # ---------------------------------------------------------------------------
 # shared constants (mirrored verbatim into the oracle SQL)
@@ -130,74 +130,25 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# session-scoped materialized stores (the "build the KG once, query it many
-# times" shape): a store is a parquet dir in tempdir stamped with a
-# fingerprint of its source table, written once and read by every consumer.
+# materialized stores (the "build the KG once, query it many times" shape):
+# each store is a stage of one StageWriter per dataset, in this process's
+# scratch dir, written once and reused while its source table's fingerprint
+# is unchanged.
 
 
-def _stamped_store_path(spark: SparkSession, sf_dir: str, src_table: str, kind: str) -> str:
-    """Tempdir path for a materialized store keyed on (dataset path,
-    ``fingerprint`` of the source table). The tag hashes the FULL sf_dir path — not its basename —
-    so two datasets sharing a basename (or a concurrent run over another
-    copy) can never resolve to, or prune, each other's store (round-4
-    ADVICE). Stale stamps of the SAME dataset are pruned only when cold
-    (mtime > 1 h) so a concurrent builder's live dir survives."""
+def _store(spark: SparkSession, sf_dir: str, stage: str, table: str,
+           build: Callable[[DataFrame], DataFrame], partition_by: list[str] | None = None) -> DataFrame:
+    """The ``stage`` store of dataset ``sf_dir``: ``build`` of its ``table``
+    table, reused while that table's ``fingerprint`` is unchanged. The
+    workdir is keyed on the FULL dataset path, so two datasets sharing a
+    basename never share a store."""
     import hashlib
-    import shutil
-    import tempfile
-    import time
 
-    stamp = fingerprint(_t(spark, sf_dir, src_table))
+    src = _t(spark, sf_dir, table)
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    tmp = tempfile.gettempdir()
-    path = os.path.join(tmp, f"eeps_{kind}_{tag}_{stamp}")
-    for d in os.listdir(tmp):
-        p = os.path.join(tmp, d)
-        if d.startswith(f"eeps_{kind}_{tag}_") and p != path and os.path.isdir(p):
-            try:
-                if time.time() - os.path.getmtime(p) > 3600:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass
-    return path
-
-
-def _write_once(path: str, write_fn) -> None:
-    """Build-and-atomic-rename: write to a pid-unique sibling then rename
-    into place. Concurrent builders race harmlessly — the loser's rename
-    fails (dest exists) and its temp dir is discarded; readers only ever see
-    a complete store (_SUCCESS inside the renamed dir)."""
-    import shutil
-
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return
-    tmp_path = f"{path}.tmp{os.getpid()}"
-    write_fn(tmp_path)
-    try:
-        os.rename(tmp_path, path)
-        return
-    except OSError:
-        pass
-    # rename failed: only treat it as a lost race if the destination is a
-    # COMPLETE store; otherwise (externally created dir, crashed builder,
-    # EXDEV) replace the broken destination instead of silently discarding
-    # every future build (round-5 ADVICE). The _SUCCESS re-check directly
-    # before the removal narrows but cannot close the TOCTOU window: two
-    # builders that BOTH see a broken destination can still replace each
-    # other's store (each replacement is itself complete, but a reader
-    # holding the earlier file listing would miss). Acceptable here —
-    # builds are deterministic and the driver is single-process; a
-    # multi-writer deployment should wrap this in an advisory lock.
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        shutil.rmtree(tmp_path, ignore_errors=True)
-        return
-    shutil.rmtree(path, ignore_errors=True)
-    try:
-        os.rename(tmp_path, path)
-    except OSError:
-        shutil.rmtree(tmp_path, ignore_errors=True)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            raise
+    writer = StageWriter(spark, os.path.join(scratch_dir(), tag), "entry")
+    fp = fingerprint(src)
+    return writer.materialize(stage, True, lambda: build(src), lambda: fp, partition_by)
 
 
 def _mention_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -207,38 +158,27 @@ def _mention_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples, embeddings, the ~11 graph consumers) reads the store. This is
     the honest production shape: mentions are extracted once per crawl
     snapshot, then queried many times (round-4 verdict item 1)."""
-    path = _stamped_store_path(spark, sf_dir, "documents", "kg_mentions")
-
-    def build(p: str) -> None:
-        docs = _t(spark, sf_dir, "documents")
-        detect_mentions_gazetteer(docs, DOCS_GAZETTEER, id_col="doc_id").write.mode("overwrite").parquet(p)
-
-    _write_once(path, build)
-    return spark.read.parquet(path).select(
-        "doc_id", "type", "entity", "start_idx", "end_idx", "score", "model"
+    m = _store(
+        spark, sf_dir, "kg_mentions", "documents",
+        lambda docs: detect_mentions_gazetteer(docs, DOCS_GAZETTEER, id_col="doc_id"),
     )
+    return m.select("doc_id", "type", "entity", "start_idx", "end_idx", "score", "model")
 
 
 def _canon_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized CANONICAL mention table (link + connected-component
     canonicalization applied to the mention store) — the middle store of
-    the KG chain. Round 5 materialized mentions and triples but left four
-    queries (canonical mentions, PMI, entity embeddings, entity
-    relatedness) and the triples build re-running the alias join and the
-    iterative connected-components job per query; like its siblings it is
-    written once per (dataset, fingerprint) and read thereafter. Values are
-    bit-identical to the inline chain (strings/longs; parquet round-trip is
-    exact), so every oracle row stays hash-green."""
+    the KG chain, read by the canonical-mention, PMI, entity-embedding and
+    entity-relatedness queries and by the triples store, so none of them
+    re-runs the alias join and the iterative connected-components job.
+    Values are bit-identical to the inline chain (strings/longs; parquet
+    round-trip is exact), so every oracle row stays hash-green."""
     from entity_extractor_by_pointer_spark.plans.pipeline import canonical_mentions
 
-    path = _stamped_store_path(spark, sf_dir, "documents", "kg_canon")
-
-    def build(p: str) -> None:
-        canon = canonical_mentions(_mention_store(spark, sf_dir), DOCS_GAZETTEER, CANON_EDGES)
-        canon.write.mode("overwrite").parquet(p)
-
-    _write_once(path, build)
-    return spark.read.parquet(path)
+    return _store(
+        spark, sf_dir, "kg_canon", "documents",
+        lambda _docs: canonical_mentions(_mention_store(spark, sf_dir), DOCS_GAZETTEER, CANON_EDGES),
+    )
 
 
 def _triples_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,15 +189,12 @@ def _triples_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet round-trip is exact), so all oracle rows stay hash-green."""
     from entity_extractor_by_pointer_spark.operators.triples import bucket_by_subject
 
-    path = _stamped_store_path(spark, sf_dir, "documents", "kg_triples")
-
-    def build(p: str) -> None:
-        canon = _canon_store(spark, sf_dir)
-        triples = bucket_by_subject(build_triples(canon, id_col="doc_id"), 8)
-        triples.write.mode("overwrite").partitionBy("subj_bucket").parquet(p)
-
-    _write_once(path, build)
-    return spark.read.parquet(path).select("subj", "pred", "obj", "url")
+    t = _store(
+        spark, sf_dir, "kg_triples", "documents",
+        lambda _docs: bucket_by_subject(build_triples(_canon_store(spark, sf_dir), id_col="doc_id"), 8),
+        ["subj_bucket"],
+    )
+    return t.select("subj", "pred", "obj", "url")
 
 
 def _gaz_values_sql() -> str:
@@ -552,17 +489,13 @@ def q_span_eval_f1(spark, sf_dir):
     return per_class.unionByName(macro)
 
 
-def _model_mentions(spark, sf_dir, model_type: str, logit_bias: float):
+def _model_mentions(spark, sf_dir, model_type: str):
     """Model-path mentions (SeededTinyEncoder + pointer head) over the
     deterministic ``doc_id < 50`` subset — per-span rows so the driver's
     DuckDB comparison (vs baked single-process oracle spans, see
     ``tools/gen_model_oracle.py``) checks every decoded span exactly."""
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
-    cfg = NerConfig(
-        classes=["person", "location", "organization"],
-        model_type=model_type,
-        logit_bias=logit_bias,
-    )
+    cfg = NerConfig(classes=["person", "location", "organization"], model_type=model_type)
     m = detect_mentions(docs.withColumn("url", F.col("doc_id").cast("string")), cfg)
     # score is deliberately NOT in the compared frame: BLAS gemm rounding is
     # batch-composition-dependent at the last ulp, so the float differs
@@ -579,11 +512,11 @@ def _model_mentions(spark, sf_dir, model_type: str, logit_bias: float):
 
 
 def q_ner_model_gp(spark, sf_dir):
-    return _model_mentions(spark, sf_dir, "gp", -4.0)
+    return _model_mentions(spark, sf_dir, "gp")
 
 
 def q_ner_model_bp(spark, sf_dir):
-    return _model_mentions(spark, sf_dir, "bp", -2.0)
+    return _model_mentions(spark, sf_dir, "bp")
 
 
 # ---------------------------------------------------------------------------
@@ -883,14 +816,16 @@ def q_ivf_kmeans_train(spark, sf_dir):
 
 
 def _ivf_corpus(spark, sf_dir):
-    """Cell-partitioned materialized IVF corpus for the probe queries —
-    written once per (dataset, source fingerprint) via the shared stamped-
-    store helper (idempotent; full-path tag + cold-only pruning per the
-    round-4 ADVICE), read thereafter, so the probe plan is a
+    """Cell-partitioned materialized IVF corpus ``(vec_id, embedding,
+    cell)`` for the probe queries: ``ivf_assign`` written once per
+    (dataset, fingerprint), partitioned by cell (the parquet stand-in for
+    an Iceberg ``bucket``/identity transform), so the probe plan is a
     partition-prunable scan instead of recomputing centroid scores over the
     corpus at query time."""
-    path = _stamped_store_path(spark, sf_dir, "embeddings", "ivf_corpus")
-    return sim.materialize_ivf_corpus(_t(spark, sf_dir, "embeddings"), path)
+    return _store(
+        spark, sf_dir, "ivf_corpus", "embeddings",
+        lambda e: sim.ivf_assign(e).repartition("cell"), ["cell"],
+    )
 
 
 def q_ann_topk_ivf(spark, sf_dir):
@@ -909,7 +844,7 @@ def q_ann_topk_ivf_nprobe2(spark, sf_dir):
 
 
 def q_ivf_assign(spark, sf_dir):
-    return sim.ivf_assign(_t(spark, sf_dir, "embeddings"))
+    return sim.ivf_assign(_t(spark, sf_dir, "embeddings")).select("vec_id", "cell")
 
 
 def q_multimodal_features(spark, sf_dir):

@@ -33,14 +33,17 @@ from .tokenizer import CjkCharTokenizer, encode_batch_for_inference, encode_for_
 # config.py:57); read at call time
 MAX_SEQUENCE_LENGTH = 200
 
+# head logit bias per model type when the config sets none: a small, nonzero
+# fraction of valid cells clears the decode threshold (random weights alone
+# are ~50/50); BP's sigmoid heads fire nothing at GP's −4.0
+LOGIT_BIAS = {"gp": -4.0, "bp": -2.0}
+
 
 @dataclass
 class NerConfig:
     classes: list[str]
     model_type: str  # 'gp' | 'bp'  (reference config.py:28-30)
-    # head logit bias: shifts scores so a small, nonzero fraction of valid
-    # cells clear the decode threshold (random weights alone are ~50/50)
-    logit_bias: float = -4.0
+    logit_bias: float | None = None  # None: LOGIT_BIAS[model_type]
     # production plug point: 'seeded' = deterministic numpy stand-in (this
     # sandbox); 'bert' = BertTokenizerFast + TorchBertEncoder, the reference's
     # real tokenizer/encoder pair (engines/data.py:17, predict.py:36-44) —
@@ -48,6 +51,10 @@ class NerConfig:
     # wherever torch/transformers are installed. The head width follows the
     # encoder's hidden size (768 for bert-base-chinese).
     encoder: str = "seeded"  # 'seeded' | 'bert'
+
+    def __post_init__(self):
+        if self.logit_bias is None:
+            self.logit_bias = LOGIT_BIAS[self.model_type]
 
     @property
     def num_labels(self) -> int:

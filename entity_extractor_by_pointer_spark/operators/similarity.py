@@ -136,17 +136,16 @@ def best_cell_expr(v, centroids: np.ndarray):
 
 
 def ivf_assign(embeddings: DataFrame) -> DataFrame:
-    """(vec_id, cell): nearest seeded centroid (:func:`ivf_centroids`) by
-    cosine (IVF coarse step).
-
-    At scale the output is written bucketed by ``cell`` so probes prune
-    whole files via partition pruning.
-    """
+    """The IVF-assigned corpus ``(vec_id, embedding, cell)``: each vector
+    (cast to double) with its nearest seeded centroid (:func:`ivf_centroids`)
+    by cosine (IVF coarse step). The one place a vector's cell is computed:
+    materialized partitioned by ``cell``, it is the corpus
+    :func:`ann_topk_ivf` probes, pruning whole cell partitions."""
     from ..partitioning import spread_small_scan
 
     v = F.col("embedding").cast("array<double>")
     return spread_small_scan(embeddings.select("vec_id", "embedding")).select(
-        F.col("vec_id"), best_cell_expr(v, ivf_centroids()).alias("cell")
+        F.col("vec_id"), v.alias("embedding"), best_cell_expr(v, ivf_centroids()).alias("cell")
     )
 
 
@@ -170,41 +169,13 @@ def top_cells_expr(v, centroids: np.ndarray, nprobe: int):
     return F.transform(top, lambda s: (-s["negcell"]).cast("int"))
 
 
-def materialize_ivf_corpus(embeddings: DataFrame, path: str) -> DataFrame:
-    """Write the IVF-indexed corpus ``(vec_id, embedding, cell)`` PARTITIONED BY
-    cell (the parquet stand-in for an Iceberg ``bucket``/identity transform)
-    and return a reader over it. This is the ``ivf_assign`` output the probe
-    path reads: probing then PRUNES whole cell partitions instead of
-    recomputing centroid scores over the corpus at query time. Idempotent:
-    an existing _SUCCESS marker short-circuits the write."""
-    import os
-
-    spark = embeddings.sparkSession
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from ..partitioning import spread_small_scan
-
-        v = F.col("embedding").cast("array<double>")
-        (
-            spread_small_scan(embeddings.select("vec_id", "embedding")).select(
-                F.col("vec_id"),
-                v.alias("embedding"),
-                best_cell_expr(v, ivf_centroids()).alias("cell"),
-            )
-            .repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(path)
-        )
-    return spark.read.parquet(path)
-
-
 def ann_topk_ivf(assigned: DataFrame, queries: DataFrame, nprobe: int = 1) -> DataFrame:
     """IVF probe: the ``ANN_K`` nearest neighbours of each query, scanning
     only its ``nprobe`` nearest coarse cells.
 
-    Completes the IVF pair with ``ivf_assign``/``materialize_ivf_corpus``:
-    ``assigned`` is a corpus frame that already carries a ``cell`` column
-    — typically the cell-partitioned materialized table — so the probe is a
+    Completes the IVF pair with ``ivf_assign``: ``assigned`` is a corpus
+    frame that already carries a ``cell`` column — typically the
+    cell-partitioned materialized ``ivf_assign`` table — so the probe is a
     partition-prunable scan joined with the broadcast query batch — no
     centroid math over the corpus, no corpus shuffle. Exact within the
     probed cells; recall across cells is the standard IVF trade-off that

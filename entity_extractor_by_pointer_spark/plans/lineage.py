@@ -9,9 +9,10 @@ atomically AFTER the stage's data write succeeds, so a killed run re-executes
 any stage whose lineage is missing — stage-level idempotent resume.
 
 Each write of a stage first appends a ``started`` row, and every lineage
-row carries ``input_fp``, the ``fingerprint`` of the pipeline input the
-stage was built from: a stage is reusable only when its latest write
-committed, from the same input (``done_fingerprint``).
+row carries ``input_fp``, the ``fingerprint`` of the input the stage was
+built from: ``materialize``, the one write-once-and-reuse path of the
+pipeline's stages and the entry module's stores, reuses a stage only when
+its latest write committed, from the same input (``done_fingerprint``).
 
 Schemas (SURVEY.md §1.2):
   _lineage: run_id, stage, part_id, rows_out, started_at, finished_at, status, input_fp
@@ -130,6 +131,17 @@ class StageWriter:
         latest = max(r["started_at"] for r in rows)
         done = [r for r in rows if r["started_at"] == latest and r["status"] == "done"]
         return done[0].get("input_fp") if done else None
+
+    def materialize(
+        self, stage: str, reuse: bool, compute: Callable[[], DataFrame],
+        input_fp: Callable[[], str], partition_by: list[str] | None = None,
+    ) -> DataFrame:
+        """The stage table: read back when ``reuse`` is set and its latest
+        write committed from an input of fingerprint ``input_fp()``, else
+        ``compute()`` written by ``write_stage``."""
+        if reuse and self.done_fingerprint(stage) == input_fp():
+            return self.read_stage(stage)
+        return self.write_stage(stage, compute(), partition_by, input_fp)
 
     def compact_stage(self, stage: str, target_file_bytes: int) -> dict:
         """Small-file compaction of a stage table — the Iceberg

@@ -7,8 +7,9 @@ check) → mentions (``mentions_for_pages``) → link → canonicalize
 triple_counts stages with per-partition lineage (``plans.lineage``); the
 canonical-mention store of ``__spark_entry__`` calls ``canonical_mentions``
 with its own gazetteer. ``resume=True`` skips each stage whose latest write
-committed from an input of the same fingerprint — the distributed analog of
-the reference's best-checkpoint resume (``engines/train.py:126-130``), at
+committed from an input of the same fingerprint (the pages', plus the
+scorer and classes after the pages stage) — the distributed analog of the
+reference's best-checkpoint resume (``engines/train.py:126-130``), at
 stage granularity (SURVEY.md §2 S4/T4) — rebuilds the others, and raises
 when the pages stage was built from other pages.
 """
@@ -48,7 +49,7 @@ def extract_checked(pages: DataFrame) -> DataFrame:
     reads it. html is pruned here: downstream stages never shuffle it."""
     extracted = with_extracted_text(pages)
     text = F.when(
-        F.col("text") != F.col("extracted_text"),
+        ~F.col("text").eqNullSafe(F.col("extracted_text")),
         F.raise_error(F.concat(F.lit("extraction invariant violated: "), F.col("url"))),
     ).otherwise(F.col("extracted_text"))
     return extracted.select("url", "warc_ts", text.alias("text"), "lang")
@@ -93,11 +94,6 @@ class KgPipeline:
         self.config = config or PipelineConfig()
         self.writer = StageWriter(spark, workdir, run_id)
 
-    def _stage(self, name: str, resume: bool, compute, input_fp, partition_by=None) -> DataFrame:
-        if resume and self.writer.done_fingerprint(name) == input_fp():
-            return self.writer.read_stage(name)
-        return self.writer.write_stage(name, compute(), partition_by, input_fp)
-
     def run(self, pages: DataFrame, resume: bool = False) -> DataFrame:
         """Full batch run. Operator-level persists (``cache.cached``, e.g.
         the first-mention table inside ``build_triples``) are released in a
@@ -128,10 +124,17 @@ class KgPipeline:
             input_fp = lambda: fp  # noqa: E731
         else:
             pages, input_fp = observed_fingerprint(pages)
+        # the stages after pages also depend on the scorer and its classes:
+        # their fingerprint names both, so a resume under another config
+        # rebuilds them
+        cfg = self.config
+        cfg_fp = lambda: f"{input_fp()}/{cfg.scorer}/{','.join(cfg.classes)}"  # noqa: E731
         # the invariant check rides the pages write; a violation aborts it
         # BEFORE the lineage commit, so the stage is never marked done
-        pages_t = self._stage("pages", resume, lambda: extract_checked(pages), input_fp)
-        mentions = self._stage("mentions", resume, lambda: mentions_for_pages(pages_t, self.config), input_fp)
+        pages_t = self.writer.materialize("pages", resume, lambda: extract_checked(pages), input_fp)
+        mentions = self.writer.materialize(
+            "mentions", resume, lambda: mentions_for_pages(pages_t, cfg), cfg_fp
+        )
 
         # observability for skew decisions: persist hot mention surfaces
         # (share ≥ 2%) into _metrics (SURVEY.md §4 hot-key detection)
@@ -151,9 +154,11 @@ class KgPipeline:
             t = build_triples(canonical_mentions(mentions, PAGES_GAZETTEER, CANON_EDGES))
             return bucket_by_subject(t, SUBJ_BUCKETS)
 
-        triples = self._stage("triples", resume, triples_stage, input_fp, partition_by=["subj_bucket"])
-        counts = self._stage(
-            "triple_counts", resume, lambda: triple_counts(triples.drop("subj_bucket")), input_fp
+        triples = self.writer.materialize(
+            "triples", resume, triples_stage, cfg_fp, partition_by=["subj_bucket"]
+        )
+        counts = self.writer.materialize(
+            "triple_counts", resume, lambda: triple_counts(triples.drop("subj_bucket")), cfg_fp
         )
 
         n_pages = pages_t.count()

@@ -62,19 +62,28 @@ _SHIPPED: set[int] = set()
 
 
 @functools.cache
-def _package_zip() -> str:
-    """Zip this package once per process, into a private temp dir that is
-    removed when the process exits (Spark fetches the zip lazily, so it
-    must outlive every SparkContext it was added to)."""
+def scratch_dir() -> str:
+    """This process's private scratch dir, made on first use and removed
+    when the process exits. It holds the package zip and the entry module's
+    stores, so no other process reads or replaces them."""
     import atexit
     import shutil
     import tempfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    tmp = tempfile.mkdtemp(prefix="eeps_pkg_")
+    tmp = tempfile.mkdtemp(prefix="eeps_")
     atexit.register(shutil.rmtree, tmp, True)
+    return tmp
+
+
+@functools.cache
+def _package_zip() -> str:
+    """Zip this package once per process into ``scratch_dir`` (Spark fetches
+    the zip lazily, so it must outlive every SparkContext it was added to)."""
+    import shutil
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
     return shutil.make_archive(
-        os.path.join(tmp, "eeps_pkg"),
+        os.path.join(scratch_dir(), "eeps_pkg"),
         "zip",
         root_dir=os.path.dirname(pkg_dir),
         base_dir=os.path.basename(pkg_dir),

@@ -301,7 +301,7 @@ def test_ann_topk_ivf_exact_within_cell(spark, monkeypatch):
     )
     monkeypatch.setattr(sim, "ANN_K", 3)
     got = {}
-    for r in sim.ann_topk_ivf(df.join(sim.ivf_assign(df), "vec_id"), df.where("vec_id < 4")).collect():
+    for r in sim.ann_topk_ivf(sim.ivf_assign(df), df.where("vec_id < 4")).collect():
         got.setdefault(r["query_id"], []).append((r["rank"], r["neighbor_id"]))
     cents = sim.ivf_centroids()
     v = vecs.astype(np.float64)
@@ -625,10 +625,11 @@ def test_jaccard_wide_agg_gate_plan_and_equivalence(spark, monkeypatch):
 
 
 def test_ann_topk_ivf_materialized_probe_and_nprobe(spark, tmp_path, monkeypatch):
-    """The probe over a materialized cell-partitioned corpus (a) returns the
-    same rows as a corpus whose cells ``ivf_assign`` computes, (b) partition-prunes the corpus
-    scan (DPP on cell), and (c) nprobe=2's result set contains nprobe=1's
-    neighbors per query (recall is monotone in nprobe)."""
+    """The probe over the cell-partitioned ``ivf_assign`` corpus, written
+    and read back, (a) returns the same rows as the unwritten corpus, (b)
+    partition-prunes the corpus scan (DPP on cell), and (c) nprobe=2's
+    result set contains nprobe=1's neighbors per query (recall is monotone
+    in nprobe)."""
     import numpy as np
 
     import entity_extractor_by_pointer_spark.operators.similarity as sim
@@ -639,8 +640,9 @@ def test_ann_topk_ivf_materialized_probe_and_nprobe(spark, tmp_path, monkeypatch
     qs = df.where("vec_id < 4")
 
     monkeypatch.setattr(sim, "ANN_K", 3)
-    mat = sim.materialize_ivf_corpus(df, str(tmp_path / "ivf"))
-    computed = sorted(tuple(r) for r in sim.ann_topk_ivf(df.join(sim.ivf_assign(df), "vec_id"), qs).collect())
+    sim.ivf_assign(df).repartition("cell").write.partitionBy("cell").parquet(str(tmp_path / "ivf"))
+    mat = spark.read.parquet(str(tmp_path / "ivf"))
+    computed = sorted(tuple(r) for r in sim.ann_topk_ivf(sim.ivf_assign(df), qs).collect())
     assigned = sorted(tuple(r) for r in sim.ann_topk_ivf(mat, qs).collect())
     assert computed == assigned
 

@@ -1,5 +1,7 @@
 import shutil
 
+import pytest
+
 from entity_extractor_by_pointer_spark.plans.lineage import fingerprint
 from entity_extractor_by_pointer_spark.plans.pipeline import KgPipeline
 from entity_extractor_by_pointer_spark.sources.pages import generate_pages
@@ -11,6 +13,12 @@ def _lineage(pipe):
 
 def _triples(counts_df):
     return sorted(tuple(r) for r in counts_df.collect())
+
+
+def _default_config_fp(pages):
+    """The input fingerprint the stages after ``pages`` record under the
+    default config: the pages' fingerprint, the scorer and the classes."""
+    return f"{fingerprint(pages)}/gazetteer/person,location,organization"
 
 
 def test_pipeline_deterministic_and_resumable(spark, tmp_path):
@@ -30,7 +38,8 @@ def test_pipeline_deterministic_and_resumable(spark, tmp_path):
     for stage in ("triples", "triple_counts"):
         shutil.rmtree(f"{wd1}/{stage}", ignore_errors=True)
     pipe = KgPipeline(spark, wd1, "r1-resume")
-    assert pipe.writer.done_fingerprint("mentions") == fingerprint(pages)
+    assert pipe.writer.done_fingerprint("pages") == fingerprint(pages)
+    assert pipe.writer.done_fingerprint("mentions") == _default_config_fp(pages)
     assert pipe.writer.done_fingerprint("triples") is None
     out3 = _triples(pipe.run(pages, resume=True))
     assert out3 == out1
@@ -90,8 +99,8 @@ def test_resume_after_failed_run_over_other_pages_rebuilds_stale_stages(spark, t
         with pytest.raises(RuntimeError, match="killed"):
             KgPipeline(spark, wd, "r2").run(p2)
     pipe = KgPipeline(spark, wd, "r2-resume")
-    assert pipe.writer.done_fingerprint("mentions") == fingerprint(p2)
-    assert pipe.writer.done_fingerprint("triples") == fingerprint(p1)
+    assert pipe.writer.done_fingerprint("mentions") == _default_config_fp(p2)
+    assert pipe.writer.done_fingerprint("triples") == _default_config_fp(p1)
     assert _triples(pipe.run(p2, resume=True)) == want
     rebuilt = _lineage(pipe).where("run_id = 'r2-resume' AND status = 'done'")
     assert {r["stage"] for r in rebuilt.select("stage").distinct().collect()} == {"triples", "triple_counts"}
@@ -176,7 +185,7 @@ def test_resume_after_kill_between_data_write_and_lineage_commit(spark, tmp_path
     pipe2 = KgPipeline(spark, wd, "k1-resume")
     assert (tmp_path / "killwin" / "triples" / "_SUCCESS").exists()
     assert pipe2.writer.done_fingerprint("triples") is None  # data there, commit missing
-    assert pipe2.writer.done_fingerprint("mentions") == fingerprint(pages)
+    assert pipe2.writer.done_fingerprint("mentions") == _default_config_fp(pages)
     out2 = _triples(pipe2.run(pages, resume=True))
     assert out2 == out1
 
@@ -378,8 +387,9 @@ def test_cli_compact_stage(spark, tmp_path, capsys):
 
 
 def test_extraction_invariant_violation_fails_before_commit(spark, tmp_path):
-    """A page whose stored text differs from its html's extraction fails the
-    batch run and the fused chain, before any stage commits."""
+    """A page whose stored text differs from its html's extraction, or is
+    null, fails the batch run and the fused chain, before any stage
+    commits."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -388,35 +398,59 @@ def test_extraction_invariant_violation_fails_before_commit(spark, tmp_path):
         triples_for_pages,
     )
 
-    def tampered(n):
-        pages = generate_pages(spark, n, partitions=2)
-        last = F.col("url") == f"https://example.org/page/{n - 1}"
+    def appended(pages, last):
         return pages.withColumn(
             "text", F.when(last, F.concat("text", F.lit("!"))).otherwise(F.col("text"))
         )
 
+    def nulled(pages, last):
+        return pages.withColumn("text", F.when(~last, F.col("text")))
+
     match = "extraction invariant violated"
-    pipe = KgPipeline(spark, str(tmp_path / "bad"), "bad")
-    with pytest.raises(Exception, match=match):
-        pipe.run(tampered(40))
-    assert pipe.writer.done_fingerprint("pages") is None
+    for tamper in (appended, nulled):
+        pages = generate_pages(spark, 40, partitions=2)
+        bad = tamper(pages, F.col("url") == "https://example.org/page/39")
+        pipe = KgPipeline(spark, str(tmp_path / tamper.__name__), "bad")
+        with pytest.raises(Exception, match=match):
+            pipe.run(bad)
+        assert pipe.writer.done_fingerprint("pages") is None
 
-    with pytest.raises(Exception, match=match):
-        triples_for_pages(tampered(40), PipelineConfig()).collect()
+        with pytest.raises(Exception, match=match):
+            triples_for_pages(bad, PipelineConfig()).collect()
 
 
-def test_cli_pipeline_run_honours_classes(spark, tmp_path):
-    """--classes reaches the model scorer of a pipeline run: a one-class GP
-    model emits mentions of that class only."""
+@pytest.mark.parametrize("scorer", ["gp", "bp"])
+def test_cli_pipeline_run_honours_classes(spark, tmp_path, scorer):
+    """--classes reaches the model scorer of a pipeline run: a one-class
+    model of either head emits mentions of that class only."""
     from entity_extractor_by_pointer_spark.__main__ import main
 
     wd = str(tmp_path / "cli_cls")
-    argv = ["--synth-pages", "40", "--scorer", "gp", "--classes", "person", "--workdir", wd]
+    argv = ["--synth-pages", "40", "--scorer", scorer, "--classes", "person", "--workdir", wd]
     assert main(argv) == 0
     mentions = KgPipeline(spark, wd, "read").writer.read_stage("mentions")
     types = {r["type"] for r in mentions.select("type").distinct().collect()}
     assert mentions.count() > 0
     assert types == {"person"}
+
+
+def test_resume_under_another_scorer_rebuilds_the_mentions(spark, tmp_path):
+    """A resume with another scorer reuses the pages stage but rebuilds the
+    mentions and everything after them, instead of serving the first
+    scorer's mentions."""
+    from entity_extractor_by_pointer_spark.plans.pipeline import PipelineConfig
+
+    pages = generate_pages(spark, 40, partitions=2)
+    wd = str(tmp_path / "wd")
+    KgPipeline(spark, wd, "gaz").run(pages)
+    pipe = KgPipeline(spark, wd, "gp", PipelineConfig(scorer="gp"))
+    pipe.run(pages, resume=True)
+    rebuilt = _lineage(pipe).where("run_id = 'gp' AND status = 'done'")
+    assert {r["stage"] for r in rebuilt.select("stage").distinct().collect()} == {
+        "mentions", "triples", "triple_counts"
+    }
+    models = pipe.writer.read_stage("mentions").select("model").distinct().collect()
+    assert "gazetteer" not in {r["model"] for r in models}
 
 
 def test_cli_pipeline_run_prints_only_its_own_metrics(spark, tmp_path, capsys):

@@ -309,11 +309,18 @@ def test_graph_queries_read_materialized_store(spark):
     the mention/triple stores, subsequent graph-family queries must READ the
     store — their plans contain no MapInPandas (no NER recompute) and scan
     the subject-hash-partitioned triples parquet."""
+    import hashlib
+    import os
+
+    from entity_extractor_by_pointer_spark.session import scratch_dir
+
     E.q_triples_flagship(spark, SF).collect()  # materializes the stores
+    tag = hashlib.md5(os.path.abspath(SF).encode()).hexdigest()[:10]
+    store = os.path.join(scratch_dir(), tag, "kg_triples")
     for q in (E.q_graph_degrees, E.q_graph_pagerank, E.q_graph_pred_stats):
         plan = _plan(q(spark, SF))
         assert "MapInPandas" not in plan, plan
-        assert "eeps_kg_triples_" in plan, plan
+        assert store in plan, plan
 
 
 def test_pagerank_pays_one_exchange_per_iteration(spark, monkeypatch):
@@ -356,99 +363,62 @@ def test_pagerank_pays_one_exchange_per_iteration(spark, monkeypatch):
         release_all()
 
 
-def test_stamped_store_write_once_and_prune_safety(spark, tmp_path, monkeypatch):
-    """Store-layer contract: same dataset+content → same path (idempotent);
-    different dataset path sharing a basename → different tag (a concurrent
-    run can never resolve to another dataset's store); a loser's tmp dir is
-    discarded when the rename races; fresh stamps of the same dataset are
-    NOT pruned while warm."""
-    import os
-
+def _write_docs(path, texts):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    import __spark_entry__ as E
+    pq.write_table(pa.table({"doc_id": list(range(len(texts))), "text": texts}), str(path))
 
-    def write_docs(path, n):
-        pq.write_table(pa.table({"doc_id": list(range(n))}), str(path))
 
-    monkeypatch.setenv("TMPDIR", str(tmp_path))
-    import tempfile
+def _store_writes(spark, sf_dir, stage):
+    """The number of writes of the entry's ``stage`` store of ``sf_dir``
+    (its ``started`` lineage rows)."""
+    import hashlib
+    import os
 
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    from entity_extractor_by_pointer_spark.session import scratch_dir
+
+    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
+    lineage = spark.read.parquet(os.path.join(scratch_dir(), tag, "_lineage"))
+    return lineage.where(f"stage = '{stage}' AND status = 'started'").count()
+
+
+def test_entry_store_reused_per_dataset_and_rebuilt_on_rewrite(spark, tmp_path):
+    """An entry store is built once per dataset and reused; a dataset at
+    another path sharing the basename gets a store of its own; a
+    single-file table rewritten in place is rebuilt instead of served
+    stale."""
+
+    def mentions(d):
+        return sorted(r["entity"] for r in E._mention_store(spark, str(d)).collect())
 
     d1 = tmp_path / "data" / "sf0.001"
     d2 = tmp_path / "other" / "sf0.001"  # same basename, different dataset
-    for d in (d1, d2):
+    for d, texts in ((d1, ["spark and vector"]), (d2, ["customer window", "spark"])):
         (d / "documents.parquet").mkdir(parents=True)
-        write_docs(d / "documents.parquet" / "part-0.parquet", 10 if d is d1 else 99)
+        _write_docs(d / "documents.parquet" / "part-0.parquet", texts)
 
-    p1 = E._stamped_store_path(spark, str(d1), "documents", "kg_mentions")
-    p1_again = E._stamped_store_path(spark, str(d1), "documents", "kg_mentions")
-    p2 = E._stamped_store_path(spark, str(d2), "documents", "kg_mentions")
-    assert p1 == p1_again
-    assert p1 != p2 and os.path.basename(p1) != os.path.basename(p2)
+    assert mentions(d1) == ["spark", "vector"] == mentions(d1)
+    assert _store_writes(spark, d1, "kg_mentions") == 1
+    assert mentions(d2) == ["customer", "spark", "window"]
+    assert _store_writes(spark, d2, "kg_mentions") == 1
+    assert _store_writes(spark, d1, "kg_mentions") == 1
 
-    # a single-file source table regenerated at the same path gets a new
-    # stamp, so its stores are rebuilt rather than served stale
     d3 = tmp_path / "single" / "sf0.001"
     d3.mkdir(parents=True)
-    write_docs(d3 / "documents.parquet", 10)
-    p3 = E._stamped_store_path(spark, str(d3), "documents", "kg_mentions")
-    assert p3 == E._stamped_store_path(spark, str(d3), "documents", "kg_mentions")
-    write_docs(d3 / "documents.parquet", 20)
-    assert E._stamped_store_path(spark, str(d3), "documents", "kg_mentions") != p3
+    _write_docs(d3 / "documents.parquet", ["spark"])
+    assert mentions(d3) == ["spark"] == mentions(d3)
+    _write_docs(d3 / "documents.parquet", ["window and customer"])
+    assert mentions(d3) == ["customer", "window"]
+    assert _store_writes(spark, d3, "kg_mentions") == 2
 
-    # _write_once: builds once, then short-circuits on _SUCCESS
-    calls = []
 
-    def build(p):
-        calls.append(p)
-        os.makedirs(p)
-        open(os.path.join(p, "_SUCCESS"), "w").close()
-
-    E._write_once(p1, build)
-    E._write_once(p1, build)
-    assert len(calls) == 1 and os.path.exists(os.path.join(p1, "_SUCCESS"))
-
-    # racing loser: another builder lands a COMPLETE dest (_SUCCESS inside)
-    # mid-build -> the loser's rename fails, the winner's store is kept and
-    # the loser's tmp dir is discarded
-    race_target = p1 + "_race"
-
-    def losing_build(p):
-        os.makedirs(p)
-        open(os.path.join(p, "_SUCCESS"), "w").close()
-        # simulate the winner finishing first: a complete dest appears
-        # between the _SUCCESS check and our rename
-        os.makedirs(race_target)
-        open(os.path.join(race_target, "_SUCCESS"), "w").close()
-        open(os.path.join(race_target, "winner_marker"), "w").close()
-
-    E._write_once(race_target, losing_build)
-    assert os.path.exists(os.path.join(race_target, "winner_marker"))
-    assert not os.path.isdir(f"{race_target}.tmp{os.getpid()}")  # tmp cleaned
-
-    # BROKEN destination (no _SUCCESS — externally created dir, crashed
-    # builder, EXDEV leftovers): the round-5 ADVICE case. The old code
-    # discarded every subsequent build and left readers on the broken store
-    # forever; the fixed contract replaces the destination with our
-    # complete build instead.
-    broken_target = p1 + "_broken"
-
-    def broken_race_build(p):
-        os.makedirs(p)
-        open(os.path.join(p, "_SUCCESS"), "w").close()
-        os.makedirs(broken_target)  # incomplete dest appears mid-build
-        open(os.path.join(broken_target, "junk"), "w").close()
-
-    E._write_once(broken_target, broken_race_build)
-    assert os.path.exists(os.path.join(broken_target, "_SUCCESS"))
-    assert not os.path.exists(os.path.join(broken_target, "junk"))
-    assert not os.path.isdir(f"{broken_target}.tmp{os.getpid()}")
-
-    # a WARM sibling stamp of the same dataset survives path resolution
-    warm = os.path.join(str(tmp_path), os.path.basename(p1)[:-1] + "f")
-    os.makedirs(warm, exist_ok=True)
-    E._stamped_store_path(spark, str(d1), "documents", "kg_mentions")
-    assert os.path.isdir(warm)  # mtime < 1h old -> not pruned
+def test_kg_queries_over_documents_without_mentions_are_empty(spark, tmp_path):
+    """Documents that name no gazetteer entity give a zero-row triples
+    store: the triple and graph queries over it return no rows instead of
+    failing to infer the empty store's schema."""
+    d = tmp_path / "nomention"
+    d.mkdir()
+    _write_docs(d / "documents.parquet", ["alpha beta gamma", "delta epsilon"])
+    assert E.q_triples_flagship(spark, str(d)).collect() == []
+    assert E.q_graph_degrees(spark, str(d)).collect() == []

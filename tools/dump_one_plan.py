@@ -9,8 +9,8 @@ Writes the checkout's PLANS.md: the masked plan of every queries() entry.
 
 The dump is masked so that two dumps of one tree are byte-identical and a
 ``diff -r`` between two trees shows only real plan changes: expression ids
-(``#N``), ``plan_id``s, RDD ids and the temp-dir prefix of the KG stores are
-replaced by placeholders, lambda-variable, codegen-stage and adaptive
+(``#N``), ``plan_id``s, RDD ids and the per-process scratch dir of the
+stores are replaced by placeholders, lambda-variable, codegen-stage and adaptive
 query-stage ids are renumbered in order of appearance, and the projections of a distinct-aggregate
 ``Expand`` (whose order varies between runs) are sorted, with their ``gid``
 literals and every ``gid = k`` filter renumbered to match.
@@ -23,13 +23,12 @@ import io
 import os
 import re
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from entity_extractor_by_pointer_spark.session import get_spark  # noqa: E402
+from entity_extractor_by_pointer_spark.session import get_spark, scratch_dir  # noqa: E402
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 
@@ -107,7 +106,7 @@ def mask_plan(plan: str) -> str:
     plan = _first_seen(plan, r"lambda [A-Za-z]\w*?_(\d+)\b")
     plan = _first_seen(plan, r"codegen id : (\d+)")
     plan = _first_seen(plan, r"QueryStage\nOutput \[\d+\]: [^\n]*\nArguments: (\d+)")
-    return plan.replace(tempfile.gettempdir(), "TMP")
+    return plan.replace(scratch_dir(), "SCRATCH")
 
 
 def masked_plans(names: list[str]):
@@ -131,7 +130,7 @@ def write_plans_md() -> None:
         "`ReadSchema` on every scan, `BroadcastHashJoin` on dimension joins,",
         "`WholeStageCodegen` spans around relational operators, and the",
         "absence of `Exchange` in the narrow (mapInPandas) stages. Expression,",
-        "plan and RDD ids and the temp dir are masked as in a plan diff.",
+        "plan and RDD ids and the scratch dir are masked as in a plan diff.",
         "",
     ]
     names = list(entry_mod.queries())

@@ -66,9 +66,7 @@ def main() -> None:
         sf_dir = f"/root/testdata/{sf}"
         out[sf] = {
             "gp": spans_for(sf_dir, NerConfig(classes=CLASSES, model_type="gp")),
-            "bp": spans_for(
-                sf_dir, NerConfig(classes=CLASSES, model_type="bp", logit_bias=-2.0)
-            ),
+            "bp": spans_for(sf_dir, NerConfig(classes=CLASSES, model_type="bp")),
         }
         print(sf, "gp:", len(out[sf]["gp"]), "bp:", len(out[sf]["bp"]))
     dst = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "model_oracle_values.json")
