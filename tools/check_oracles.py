@@ -70,12 +70,8 @@ def main(only: list[str] | None = None) -> int:
             print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
             failures += 1
             continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"rows  {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
-            continue
         try:
-            res = con.execute(sql)
+            res = con.execute(oracles[name])
             ocols = [d[0] for d in res.description]
             orows = res.fetchall()
         except Exception as e:  # noqa: BLE001

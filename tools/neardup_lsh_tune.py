@@ -9,8 +9,8 @@ on the actual deterministic corpora before it ships. This script:
 1. loads embeddings for each SF, applies the same augmentation as
    `_augmented_embeddings` (even coords x1.03, odd x0.97);
 2. computes the exact qualifying pair set with blocked matmul;
-3. for candidate (planes_per_band, bands, seed) configs, simulates the
-   sign-pattern banding and reports:
+3. for candidate (planes_per_band, bands) configs, simulates the
+   sign-pattern banding over the shipped seeded hyperplanes and reports:
      - recall (must be 1.0 — every exact pair collides in >= 1 band),
      - candidate pair volume (sum over buckets of C(sz,2) per band),
      - the minimum |normalized projection| over all (vector, plane)
@@ -28,15 +28,13 @@ import numpy as np
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
-# the SHIPPED constants — imported, not re-declared, so a changed seed or
-# threshold cannot silently make this tool validate a different blocking
-# than the one in production (this file is the recall-1.0 evidence gate
-# for banding changes)
+# the SHIPPED constants and hyperplanes — imported, not re-declared, so a
+# changed seed or threshold cannot silently make this tool validate a
+# different blocking than the one in production (this file is the
+# recall-1.0 evidence gate for banding changes)
 from __spark_entry__ import NEARDUP_ID_OFFSET  # noqa: E402
 from entity_extractor_by_pointer_spark.operators.dedup import NEARDUP_COS_THRESHOLD as THRESHOLD  # noqa: E402
-from entity_extractor_by_pointer_spark.operators.similarity import (  # noqa: E402
-    LSH_SEED,
-)
+from entity_extractor_by_pointer_spark.operators.similarity import lsh_planes  # noqa: E402
 
 
 def load_augmented(sf_dir: str) -> tuple[np.ndarray, np.ndarray]:
@@ -84,11 +82,9 @@ def simulate(
     pairs: set[tuple[int, int]],
     planes_per_band: int,
     bands: int,
-    seed: int = LSH_SEED,
 ) -> dict:
-    total_planes = planes_per_band * bands
-    planes = np.random.default_rng(seed).normal(0, 1.0, (total_planes, 64))
-    proj = emb @ planes.T  # (n, total_planes)
+    planes = lsh_planes(planes_per_band * bands)
+    proj = emb @ planes.T  # (n, planes_per_band * bands)
     norms = np.linalg.norm(emb, axis=1)
     min_margin = float(np.abs(proj / norms[:, None]).min())
     signs = proj > 0
@@ -110,7 +106,6 @@ def simulate(
     return {
         "planes_per_band": planes_per_band,
         "bands": bands,
-        "seed": seed,
         "n_vectors": n,
         "n_exact_pairs": len(pairs),
         "missed": int((~covered).sum()),
