@@ -2025,7 +2025,7 @@ def q_graph_related(spark, sf_dir):
     """2-hop common-neighbor relatedness over the KG — the link-prediction /
     duplicate-entity-candidate signal (high neighbor-Jaccard, not directly
     linked). Wedge-center self-join: only pairs with real common evidence
-    materialize; ultra-hub centers are capped out (inert on testdata)."""
+    materialize; every center is evidence, as in the oracle."""
     from entity_extractor_by_pointer_spark.operators.graph import related_entities
 
     return related_entities(_triples_store(spark, sf_dir))
@@ -2083,7 +2083,8 @@ def q_graph_pred_stats(spark, sf_dir):
 def q_graph_metapaths(spark, sf_dir):
     """2-hop metapath census: counts of a-pred_a->m-pred_b->c path instances
     per ordered predicate pair (a != c) — the relation-composition signal
-    feeding rule mining; mid-hub capped at scale (inert here)."""
+    feeding rule mining; one self-join on the mid entity, as in the
+    oracle."""
     from entity_extractor_by_pointer_spark.operators.graph import metapath_counts
 
     return metapath_counts(_triples_store(spark, sf_dir))
@@ -2210,8 +2211,8 @@ def q_entity_embeddings(spark, sf_dir):
 def q_entity_related_embedding(spark, sf_dir):
     """Related entities by context-embedding cosine — the distributional
     complement of graph_related (works for never-co-mentioned entities);
-    brute-force exact baseline over the (tiny) entity vector set, LSH/IVF
-    paths take the same frame at scale."""
+    the exact brute-force ranking over the gazetteer-bounded entity vector
+    set, as in the oracle."""
     from entity_extractor_by_pointer_spark.operators.kgprep import (
         entity_related_by_embedding,
     )
@@ -2245,8 +2246,8 @@ def q_entity_related_embedding(spark, sf_dir):
 def q_entity_pmi_edges(spark, sf_dir):
     """PMI edge weights over the canonical co-occurrence graph — the scoring
     a triple count can't give (frequent entities co-occur by chance; PMI
-    normalizes by both marginals). Doc-keyed self-join (bounded per-doc
-    fan-out), broadcast df/N dims."""
+    normalizes by both marginals). Doc-keyed self-join over every doc, as
+    in the oracle; broadcast df/N dims."""
     from entity_extractor_by_pointer_spark.operators.graph import entity_pmi_edges
 
     canon = _canon_store(spark, sf_dir)

@@ -17,6 +17,17 @@ import sys
 import time
 
 
+def _ner_config(args: argparse.Namespace):
+    """The model config of --show-model-info, --predict-text and
+    --eval-json: the ``--scorer`` head when it names one, else GP."""
+    from .functions.model import NerConfig
+
+    return NerConfig(
+        classes=args.classes.split(","),
+        model_type=args.scorer if args.scorer in ("gp", "bp") else "gp",
+    )
+
+
 def main(argv: list[str] | None = None) -> int:
     parser = argparse.ArgumentParser(prog="entity_extractor_by_pointer_spark")
     parser.add_argument("--pages-parquet", help="input pages table (url, warc_ts, html, text, lang)")
@@ -70,23 +81,15 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = parser.parse_args(argv)
     if args.show_model_info:
-        from .functions.model import NerConfig, PointerNerModel
+        from .functions.model import PointerNerModel
         from .functions.summary import format_summary
 
-        cfg = NerConfig(
-            classes=args.classes.split(","),
-            model_type=args.scorer if args.scorer in ("gp", "bp") else "gp",
-        )
-        print(format_summary(PointerNerModel(cfg)))
+        print(format_summary(PointerNerModel(_ner_config(args))))
         return 0
     if args.predict_text is not None:
-        from .functions.model import NerConfig, PointerNerModel
+        from .functions.model import PointerNerModel
 
-        cfg = NerConfig(
-            classes=args.classes.split(","),
-            model_type=args.scorer if args.scorer in ("gp", "bp") else "gp",
-        )
-        for cls, surfaces in PointerNerModel(cfg).predict_one(args.predict_text).items():
+        for cls, surfaces in PointerNerModel(_ner_config(args)).predict_one(args.predict_text).items():
             print(f"{cls}: {surfaces}")
         return 0
     # one maintenance/read-only block: --profile-stage, --compact-stage and
@@ -152,17 +155,15 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="kg-pipeline", master=args.master)
 
     if args.eval_json:
-        from .functions.model import NerConfig
         from .operators.evaluate import gold_mention_sets, span_f1
         from .operators.mentions import detect_mentions, mention_sets
         from .sources.pages import reference_dataset_as_pages
 
-        classes = args.classes.split(",")
-        cfg = NerConfig(classes=classes, model_type=args.scorer if args.scorer in ("gp", "bp") else "gp")
+        cfg = _ner_config(args)
         pages = reference_dataset_as_pages(spark, args.eval_json)
         pred = mention_sets(detect_mentions(pages, cfg))
         gold = gold_mention_sets(pages)
-        metrics, macro = span_f1(spark, pred, gold, classes)
+        metrics, macro = span_f1(spark, pred, gold, cfg.classes)
         for r in metrics.orderBy("type").collect():
             print(
                 f"class_name: {r['type']}, precision: {r['precision']:.4f}, "

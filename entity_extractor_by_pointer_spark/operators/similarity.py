@@ -83,20 +83,9 @@ def bucket_expr(vec_col, planes: np.ndarray):
     return bucket
 
 
-def ann_topk_lsh(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    broadcast_queries: bool = True,
-) -> DataFrame:
+def ann_topk_lsh(embeddings: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's bucket under
-    the seeded :func:`lsh_planes`.
-
-    ``broadcast_queries=False`` drops the forced broadcast hint on the
-    query side — required when the caller ranks a corpus against ITSELF
-    (census-gated entity relatedness above its brute ceiling), where the
-    query side is as big as the corpus and a forced hint would OOM instead
-    of degrading to a shuffle join on the bucket key."""
+    the seeded :func:`lsh_planes`."""
     planes = lsh_planes()
     corpus = embeddings.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -106,8 +95,7 @@ def ann_topk_lsh(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").cast("array<double>").alias("vq"),
     ).withColumn("bucket", bucket_expr(F.col("vq"), planes)).withColumn("nq", _norm(F.col("vq")))
-    q_side = F.broadcast(qs) if broadcast_queries else qs
-    joined = corpus.join(q_side, "bucket").where(F.col("query_id") != F.col("neighbor_id"))
+    joined = corpus.join(F.broadcast(qs), "bucket").where(F.col("query_id") != F.col("neighbor_id"))
     scored = joined.withColumn("cosine", _dot(F.col("vq"), F.col("vc")) / (F.col("nq") * F.col("nc")))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (

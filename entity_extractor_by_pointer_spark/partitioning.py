@@ -36,7 +36,17 @@ exchange ships only those bytes.
 
 from __future__ import annotations
 
+from urllib.parse import urlparse
+from urllib.request import url2pathname
+
 from pyspark.sql import DataFrame
+
+
+def local_path(uri: str) -> str | None:
+    """The filesystem path of a ``file:`` URI as ``DataFrame.inputFiles``
+    returns it (percent-encoded); None for any other scheme."""
+    parsed = urlparse(uri)
+    return url2pathname(parsed.path) if parsed.scheme == "file" else None
 
 
 def _effective_row_groups(df: DataFrame, target: int) -> int | None:
@@ -52,9 +62,9 @@ def _effective_row_groups(df: DataFrame, target: int) -> int | None:
         return None
     total = 0
     for f in files:
-        if not f.startswith("file:"):
+        path = local_path(f)
+        if path is None:
             return None
-        path = f[len("file:"):]
         try:
             import pyarrow.parquet as pq
 

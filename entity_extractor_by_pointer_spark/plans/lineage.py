@@ -28,6 +28,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..partitioning import local_path
+
 LINEAGE_SCHEMA = (
     "run_id string, stage string, part_id int, rows_out long, "
     "started_at double, finished_at double, status string, input_fp string"
@@ -40,17 +42,14 @@ def _file_stamp(df: DataFrame) -> str | None:
     bare scan of local files (``DataFrame.inputFiles``, no Spark job); None
     for any other plan, since a filter, limit or union over the same files
     reads other rows."""
-    from urllib.parse import urlparse
-    from urllib.request import url2pathname
-
     if df._jdf.queryExecution().analyzed().getClass().getSimpleName() != "LogicalRelation":
         return None
-    files = df.inputFiles()
-    if not files or any(urlparse(f).scheme != "file" for f in files):
+    paths = [local_path(f) for f in sorted(df.inputFiles())]
+    if not paths or None in paths:
         return None
     stamp = 0
-    for f in sorted(files):
-        st = os.stat(url2pathname(urlparse(f).path))
+    for path in paths:
+        st = os.stat(path)
         stamp = (stamp * 1_000_003 + st.st_size + st.st_mtime_ns) % (1 << 60)
     return f"{stamp:x}"
 

@@ -2,6 +2,7 @@
 PageRank vs an independent numpy implementation."""
 
 import numpy as np
+import pytest
 
 from entity_extractor_by_pointer_spark.operators import graph
 from entity_extractor_by_pointer_spark.operators.graph import entity_degrees, pagerank
@@ -50,6 +51,30 @@ def test_pagerank_dangling_node_keeps_base_mass(spark, monkeypatch):
     assert got["b"] > got["a"]
 
 
+@pytest.mark.parametrize("gazetteer", ["DOCS_GAZETTEER", "PAGES_GAZETTEER"])
+def test_canonical_ids_are_bounded_by_the_gazetteer(spark, gazetteer):
+    """The bound the entity-keyed operators rest on: linking drops every
+    out-of-dictionary surface, so each canonical id is a gazetteer id or a
+    duplicate-edge id, and there are at most 9 of them."""
+    from entity_extractor_by_pointer_spark.functions import gazetteer as G
+    from entity_extractor_by_pointer_spark.plans.pipeline import canonical_mentions
+
+    gaz = getattr(G, gazetteer)
+    surfaces = [n for n, _t, _e in G.DOCS_GAZETTEER + G.PAGES_GAZETTEER]
+    surfaces += [" SPARK ", "Acme", "李", "nobody", "spark vector", ""]
+    mentions = spark.createDataFrame(
+        [(d, "person", s) for d in range(3) for s in surfaces],
+        "doc_id long, type string, entity string",
+    )
+    ids = {
+        r["canon_id"]
+        for r in canonical_mentions(mentions, gaz, G.CANON_EDGES).select("canon_id").distinct().collect()
+    }
+    allowed = {e for _n, _t, e in gaz} | {x for edge in G.CANON_EDGES for x in edge}
+    assert ids and ids <= allowed, ids - allowed
+    assert len(ids) <= 9
+
+
 def test_entity_pmi_edges_hand_computed(spark):
     """4 docs: (x,y) together twice, (x,z) once, z alone once.
     N=4, df(x)=3, df(y)=2, df(z)=2, co(x,y)=2, co(x,z)=1."""
@@ -78,15 +103,19 @@ def test_entity_pmi_edges_hand_computed(spark):
 
 
 def test_entity_pmi_edges_matches_python_reference_randomized(spark):
-    """Randomized corpora vs an independent pure-python PMI computation."""
+    """Randomized corpora, and a link-farm page with 300 canonical entities
+    beside ten ordinary pages, vs an independent pure-python PMI
+    computation: the farm's 44,850 pairs are kept, as in the oracle."""
     import math
     import random
 
+    from entity_extractor_by_pointer_spark.cache import release_all
     from entity_extractor_by_pointer_spark.operators.graph import entity_pmi_edges
 
     rng = random.Random(7)
     ents = ["e1", "e2", "e3", "e4", "e5"]
-    for trial in range(3):
+    corpora = []
+    for _trial in range(3):
         rows = []
         docs = {}
         for d in range(rng.randint(5, 30)):
@@ -96,28 +125,38 @@ def test_entity_pmi_edges_matches_python_reference_randomized(spark):
             rows += [(d, e) for e in s]
             # duplicates must not change anything
             rows += [(d, e) for e in list(s)[:1]]
-        if not rows:
-            continue
-        cm = spark.createDataFrame(rows, "doc_id long, canon_id string")
-        got = {
-            (r["entity_a"], r["entity_b"]): (r["co_docs"], r["pmi"])
-            for r in entity_pmi_edges(cm).collect()
-        }
-        n = len({d for d, s in docs.items() if s})
-        df = {}
-        co = {}
-        for d, s in docs.items():
-            for e in s:
-                df[e] = df.get(e, 0) + 1
-            for a in s:
-                for b in s:
-                    if a < b:
-                        co[(a, b)] = co.get((a, b), 0) + 1
-        want = {
-            p: (c, round(math.log(c * n / (df[p[0]] * df[p[1]])), 6))
-            for p, c in co.items()
-        }
-        assert got == want, (trial, got, want)
+        corpora.append((rows, docs))
+    farm = {d: {f"E{d % 3}", f"E{d % 3 + 1}"} for d in range(10)}
+    farm[99] = {f"H{e}" for e in range(300)}
+    corpora.append(([(d, e) for d, s in farm.items() for e in s], farm))
+    try:
+        for trial, (rows, docs) in enumerate(corpora):
+            if not rows:
+                continue
+            cm = spark.createDataFrame(rows, "doc_id long, canon_id string")
+            got = {
+                (r["entity_a"], r["entity_b"]): (r["co_docs"], r["pmi"])
+                for r in entity_pmi_edges(cm).collect()
+            }
+            n = len({d for d, s in docs.items() if s})
+            df = {}
+            co = {}
+            for d, s in docs.items():
+                for e in s:
+                    df[e] = df.get(e, 0) + 1
+                for a in s:
+                    for b in s:
+                        if a < b:
+                            co[(a, b)] = co.get((a, b), 0) + 1
+            want = {
+                p: (c, round(math.log(c * n / (df[p[0]] * df[p[1]])), 6))
+                for p, c in co.items()
+            }
+            assert got == want, (trial, len(got), len(want))
+    finally:
+        release_all()
+    # the farm ran last: every pair of its 300 entities is an edge
+    assert sum(a.startswith("H") for a, _b in want) == 300 * 299 // 2
 
 
 def test_pagerank_random_graph_matches_numpy(spark, monkeypatch):
@@ -153,35 +192,6 @@ def test_pagerank_random_graph_matches_numpy(spark, monkeypatch):
     assert len(got) == n
     for v in nodes:
         assert abs(got[v] - round(rank[v], 6)) <= 2e-6, (v, got[v], rank[v])
-
-
-def test_pmi_per_doc_fanout_cap_excludes_pathological_doc(spark, monkeypatch):
-    """A link-farm page with more canonical entities than the cap must be
-    excluded from the co-occurrence corpus (pairs AND marginals), bounding
-    the self-join fan-out; clean corpora take the exact zero-filter path,
-    and so does the link farm once the cap sits above it."""
-    from entity_extractor_by_pointer_spark.cache import release_all
-    from entity_extractor_by_pointer_spark.operators import graph
-    from entity_extractor_by_pointer_spark.operators.graph import entity_pmi_edges
-
-    normal = [(d, f"E{e}") for d in range(10) for e in (d % 3, d % 3 + 1)]
-    hot = [(99, f"H{e}") for e in range(300)]  # k=300 > cap 256
-    cm = spark.createDataFrame(normal + hot, "doc_id int, canon_id string")
-    try:
-        out = entity_pmi_edges(cm).collect()
-        ents = {r["entity_a"] for r in out} | {r["entity_b"] for r in out}
-        assert not any(e.startswith("H") for e in ents), "hot doc leaked into pairs"
-        assert len(out) <= 10 * 2  # bounded: no 300²/2 explosion
-        # exact path when under the cap: same input minus the hot doc
-        clean = spark.createDataFrame(normal, "doc_id int, canon_id string")
-        capped = sorted(map(tuple, entity_pmi_edges(clean).collect()))
-        monkeypatch.setattr(graph, "PMI_MAX_ENTITIES_PER_DOC", 300)  # = the farm's k
-        exact = sorted(map(tuple, entity_pmi_edges(clean).collect()))
-        assert exact == capped
-        kept = entity_pmi_edges(cm).collect()
-        assert sum(r["entity_a"].startswith("H") for r in kept) == 300 * 299 // 2
-    finally:
-        release_all()
 
 
 def test_triangle_counts_random_graph_vs_bruteforce(spark):
@@ -223,14 +233,11 @@ def test_triangle_counts_random_graph_vs_bruteforce(spark):
     assert sum(expect.values()) > 0  # the graph actually has triangles
 
 
-def test_related_entities_hand_computed_and_hub_cap(spark, monkeypatch):
-    """Path graph a-b-c-d plus hub h linked to everything: (a, c) share b;
-    with the hub capped out, hub-mediated evidence disappears AND the
-    jaccard denominator uses the same capped neighborhoods as the numerator
-    (round-4 ADVICE: a mixed denominator was inconsistent with common_nbrs
-    on hub graphs)."""
+def test_related_entities_hand_computed_and_hub_cap(spark):
+    """Path graph a-b-c-d plus hub h linked to everything: (a, c) share b
+    and h. There is no hub cap: the hub is evidence like any other center,
+    as in the oracle."""
     from entity_extractor_by_pointer_spark.cache import release_all
-    from entity_extractor_by_pointer_spark.operators import graph
     from entity_extractor_by_pointer_spark.operators.graph import related_entities
 
     edges = [("a", "b"), ("b", "c"), ("c", "d")]
@@ -247,22 +254,12 @@ def test_related_entities_hand_computed_and_hub_cap(spark, monkeypatch):
         assert full[("a", "c")] == (2, False)
         assert full[("a", "d")] == (1, False)
         assert full[("b", "c")][1] is True  # direct edge flagged
-        # uncapped jaccard for (a, c): |{b,h}∩{b,d,h}| / |{b,h}∪{b,d,h}|
+        # jaccard for (a, c): |{b,h}∩{b,d,h}| / |{b,h}∪{b,d,h}|
         jacc_full = {
             (r["entity_a"], r["entity_b"]): r["nbr_jaccard"]
             for r in related_entities(tr).collect()
         }
         assert jacc_full[("a", "c")] == round(2 / 3, 4)
-        # cap excludes the degree-4 hub as evidence: a-d vanish, a-c keep b
-        monkeypatch.setattr(graph, "RELATED_MAX_CENTER_DEGREE", 3)
-        capped = {
-            (r["entity_a"], r["entity_b"]): (r["common_nbrs"], r["linked"], r["nbr_jaccard"])
-            for r in related_entities(tr).collect()
-        }
-        # capped neighborhoods: N(a)={b}, N(c)={b,d} → jaccard 1/2, and the
-        # numerator can never exceed its own denominator's evidence
-        assert capped[("a", "c")] == (1, False, 0.5)
-        assert ("a", "d") not in capped
     finally:
         release_all()
 
@@ -364,7 +361,7 @@ def test_weighted_pagerank_vs_numpy(spark):
         assert abs(got[name] - round(r[i], 6)) <= 2e-6, name
 
 
-def test_predicate_stats_and_metapaths_hand_computed(spark, monkeypatch):
+def test_predicate_stats_and_metapaths_hand_computed(spark):
     from entity_extractor_by_pointer_spark.cache import release_all
     from entity_extractor_by_pointer_spark.operators.graph import (
         metapath_counts,
@@ -389,12 +386,6 @@ def test_predicate_stats_and_metapaths_hand_computed(spark, monkeypatch):
             for r in metapath_counts(tr).collect()
         }
         assert mp == {("p", "q"): 3}
-        # hub cap: excluding mid nodes of degree > 1 removes b (deg 3) and
-        # c (deg 2) → no paths survive
-        from entity_extractor_by_pointer_spark.operators import graph
-
-        monkeypatch.setattr(graph, "METAPATH_MAX_MID_DEGREE", 1)
-        assert metapath_counts(tr).count() == 0
     finally:
         release_all()
 
@@ -450,7 +441,8 @@ def test_entity_context_embeddings_hand_computed(spark):
 
 def test_entity_related_by_embedding_ranks_by_cosine(spark, monkeypatch):
     """Hand-checkable: E1/E2 share identical context docs (cosine 1), E3
-    is orthogonal — each of E1/E2 ranks the other first."""
+    is orthogonal — each of E1/E2 ranks the other first. The ranking is
+    the exact brute-force join (a broadcast nested loop)."""
     from entity_extractor_by_pointer_spark.cache import release_all
     from entity_extractor_by_pointer_spark.operators import kgprep
     from entity_extractor_by_pointer_spark.operators.kgprep import (
@@ -465,55 +457,14 @@ def test_entity_related_by_embedding_ranks_by_cosine(spark, monkeypatch):
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<float>"
     )
     try:
-        got = {
-            (r["query_id"], r["rank"]): r["neighbor_id"]
-            for r in entity_related_by_embedding(cm, emb).collect()
-        }
+        ranked = entity_related_by_embedding(cm, emb)
+        plan = ranked._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastNestedLoopJoin" in plan, plan
+        got = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in ranked.collect()}
     finally:
         release_all()
     assert got[("E1", 1)] == "E2" and got[("E2", 1)] == "E1"
     assert got[("E1", 2)] == "E3"  # orthogonal last
-
-
-def test_entity_related_census_gate_selects_ranker(spark, monkeypatch):
-    """Round-5 verdict item 1: the related-entities ranker must census the
-    entity count and pick brute force below the gate (exact, BNLJ plan) vs
-    the LSH-bucketed ranker above it (no BNLJ anywhere in the plan). On a
-    corpus whose related entities have IDENTICAL context vectors, the LSH
-    path finds exactly the same first-ranked neighbors (same bucket in
-    every band), so the gate trades only far-neighbor recall, never the
-    near-duplicate signal."""
-    from entity_extractor_by_pointer_spark.cache import release_all
-    from entity_extractor_by_pointer_spark.operators import kgprep
-    from entity_extractor_by_pointer_spark.operators.kgprep import (
-        entity_related_by_embedding,
-    )
-
-    cm = spark.createDataFrame(
-        [(1, "E1"), (1, "E2"), (2, "E3"), (2, "E4")],
-        "doc_id long, canon_id string",
-    )
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<float>"
-    )
-    def _plan(df) -> str:
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    monkeypatch.setattr(kgprep, "ENTITY_ANN_K", 1)
-    try:
-        brute = entity_related_by_embedding(cm, emb)
-        assert "BroadcastNestedLoopJoin" in _plan(brute)
-        monkeypatch.setattr(kgprep, "ENTITY_ANN_BRUTE_MAX", 3)  # 4 entities
-        lsh = entity_related_by_embedding(cm, emb)
-        assert "BroadcastNestedLoopJoin" not in _plan(lsh)
-        got = {
-            (r["query_id"], r["rank"]): r["neighbor_id"] for r in lsh.collect()
-        }
-    finally:
-        release_all()
-    # identical-context pairs collide in every band: rank-1 neighbors exact
-    assert got[("E1", 1)] == "E2" and got[("E2", 1)] == "E1"
-    assert got[("E3", 1)] == "E4" and got[("E4", 1)] == "E3"
 
 
 def test_ntriples_export_encoding_and_sink(spark):

@@ -37,7 +37,6 @@ def test_no_collect_in_operator_hot_paths():
         "evaluate.py",  # final metrics rows
         "__main__.py",  # CLI result display (top-10 limit)
         "skew.py",  # hot-key detection collects a ≤top_k aggregate
-        "graph.py",  # PMI broadcast/fan-out census: one 2-row aggregate
         "similarity.py",  # k-means iteration fetches the k*dim centroid
         # means (fixed-size model state from an aggregate — scale-free)
     }
@@ -49,3 +48,19 @@ def test_no_collect_in_operator_hot_paths():
         if re.search(r"\.collect\(\)", src):
             bad.append(path.name)
     assert not bad, f"unexpected .collect() in: {bad}"
+
+
+def test_row_group_count_reads_a_percent_encoded_path(spark, tmp_path):
+    """``inputFiles`` percent-encodes a space in the path; the row-group
+    gate of ``spread_small_scan`` must still open the file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from entity_extractor_by_pointer_spark.partitioning import _effective_row_groups
+
+    path = tmp_path / "a b" / "documents.parquet"
+    path.parent.mkdir()
+    pq.write_table(pa.table({"doc_id": [1, 2, 3, 4]}), path, row_group_size=2)
+    df = spark.read.parquet(str(path))
+    assert "%20" in df.inputFiles()[0]
+    assert _effective_row_groups(df, target=8) == 2

@@ -10,13 +10,7 @@ import os
 import sys
 import time
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-import __spark_entry__ as entry_mod  # noqa: E402
-from entity_extractor_by_pointer_spark.session import get_spark  # noqa: E402
-from entity_extractor_by_pointer_spark.sources.tables import TABLES  # noqa: E402
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 
@@ -49,6 +43,14 @@ def _render(v) -> str:
 
 
 def main(only: list[str] | None = None) -> int:
+    # imported here, so importers of value_hash load neither the entry
+    # module nor DuckDB
+    import duckdb
+
+    import __spark_entry__ as entry_mod
+    from entity_extractor_by_pointer_spark.session import get_spark
+    from entity_extractor_by_pointer_spark.sources.tables import TABLES
+
     spark = get_spark(master="local[16]")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
