@@ -457,23 +457,17 @@ def minhash_signatures(docs: DataFrame, hashed_arrays: DataFrame | None = None) 
     computed inline per row exactly as before."""
     k = MINHASH_K
 
-    def _digest_cols(src):
-        proj = src
-        cols = []
+    def _digests(src, key):
+        # one md5 digest per seed s, split into two 60-bit halves (the
+        # projection's subexpression elimination computes each digest once)
+        halves = []
         for s in range(k // 2):
-            d = F.md5(F.concat(F.col("shingle"), F.lit(f"#{s}")).cast("binary"))
-            proj = proj.withColumn(f"_d{s}", d)
-            cols.append(
-                F.conv(F.substring(F.col(f"_d{s}"), 1, 15), 16, 10)
-                .cast("bigint")
-                .alias(f"h_{2 * s}")
-            )
-            cols.append(
-                F.conv(F.substring(F.col(f"_d{s}"), 17, 15), 16, 10)
-                .cast("bigint")
-                .alias(f"h_{2 * s + 1}")
-            )
-        return proj, cols
+            d = f"md5(CAST(concat(shingle, '#{s}') AS BINARY))"
+            halves += [
+                f"CAST(conv(substring({d}, {start}, 15), 16, 10) AS BIGINT) AS h_{2 * s + i}"
+                for i, start in enumerate((1, 17))
+            ]
+        return src.selectExpr(key, *halves)
 
     # the per-doc rows only need an 8-byte join
     # key, so per-occurrence STRING shingles are never built (the 2.6M
@@ -525,8 +519,7 @@ def minhash_signatures(docs: DataFrame, hashed_arrays: DataFrame | None = None) 
                 " ", F.slice("w", F.col("pos") + 1, NGRAM_N)
             ).alias("shingle"),
         )
-        dproj, dcols = _digest_cols(vocab)
-        dim = dproj.select("_hsh", *dcols)
+        dim = _digests(vocab, "_hsh")
         if hashed_arrays is not None:
             # a caller with more consumers shares its cached array table
             rows_src = hashed_arrays.select(
@@ -554,30 +547,25 @@ def minhash_signatures(docs: DataFrame, hashed_arrays: DataFrame | None = None) 
                 F.expr(_shingle_arr_sql(NGRAM_N, hashed=False))
             ).alias("shingle"),
         ).where(F.col("shingle").isNotNull())
-        proj, cols = _digest_cols(sh_inline)
-        hashed = proj.select("doc_id", *cols)
-    return hashed.groupBy("doc_id").agg(
-        *[F.min(f"h_{i}").alias(f"mh_{i}") for i in range(k)]
+        hashed = _digests(sh_inline, "doc_id")
+    minima = ", ".join(f"min(h_{i}) AS mh_{i}" for i in range(k))
+    return (
+        hashed.groupBy("doc_id").agg(F.expr(f"struct({minima})").alias("m")).select("doc_id", "m.*")
     )
 
 
 def _minhash_bands(sig: DataFrame) -> DataFrame:
     """(doc_id, band, bh) — one row per (doc, band), ``bh`` the md5 of the
-    band's ``MINHASH_K // MINHASH_BANDS`` MinHash components (one explode
+    band's ``MINHASH_K // MINHASH_BANDS`` MinHash components (one inline
     over ``sig``)."""
     rows_per_band = MINHASH_K // MINHASH_BANDS
-    band_cols = []
-    for bidx in range(MINHASH_BANDS):
-        cols = [F.col(f"mh_{bidx * rows_per_band + j}") for j in range(rows_per_band)]
-        band_cols.append(
-            F.struct(
-                F.lit(bidx).alias("band"),
-                F.md5(F.concat_ws("|", *cols).cast("binary")).alias("bh"),
-            )
-        )
-    return sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'bh', md5(CAST(concat_ws('|', "
+        + ", ".join(f"mh_{b * rows_per_band + j}" for j in range(rows_per_band))
+        + ") AS BINARY)))"
+        for b in range(MINHASH_BANDS)
     )
+    return sig.selectExpr("doc_id", f"inline(array({bands}))")
 
 
 def _band_candidates(buckets: DataFrame, id_col: str, key: str) -> DataFrame:
@@ -670,17 +658,14 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
         F.explode(F.split(norm_text(F.col("text")), " ")).alias("word"),
     ).where(F.col("word") != "")
     hashed = words.withColumn("h", md5_int64(F.col("word")))
-    bit_sums = hashed.groupBy("doc_id").agg(
-        *[
-            F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"s_{j}")
-            for j in range(SIMHASH_BITS)
-        ]
+    # bit j is set iff more of the doc's words have hash bit j set than
+    # not; the left-deep sum of the bit terms is INT up to bit 30 and
+    # widens to BIGINT at the first BIGINT literal (bit 31)
+    sig = " + ".join(
+        f"CASE WHEN sum((shiftright(h, {j}) & 1) * 2 - 1) > 0 THEN {1 << j} ELSE 0 END"
+        for j in range(SIMHASH_BITS)
     )
-    sig = None
-    for j in range(SIMHASH_BITS):
-        term = F.when(F.col(f"s_{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        sig = term if sig is None else sig + term
-    return bit_sums.select(F.col("doc_id"), sig.cast("bigint").alias("simhash"))
+    return hashed.groupBy("doc_id").agg(F.expr(f"CAST({sig} AS BIGINT)").alias("simhash"))
 
 
 def simhash_pairs(docs: DataFrame) -> DataFrame:

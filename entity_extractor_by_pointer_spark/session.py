@@ -5,7 +5,9 @@ coalescing + skew-join splitting), Arrow enabled for every pandas UDF
 boundary, bounded Arrow batch sizes so the in-UDF encoder and head tensors
 stay within executor memory, and broadcast-join threshold left
 to AQE. Shuffle partitions default to the local core count; on a real
-cluster this is overridden via spark-submit conf.
+cluster this is overridden via spark-submit conf. The codegen cache holds
+the queries' whole working set and PySpark's per-call call-site capture is
+off, so a query's driver work is paid once per process, not once per run.
 """
 
 from __future__ import annotations
@@ -25,6 +27,11 @@ from pyspark.sql import SparkSession  # noqa: E402
 # ~256 docs/batch: GP logits are C·L²·8B ≈ 3·200·200·8 ≈ 1 MB/doc at C=3 —
 # decoded in-UDF and never serialized, but the batch still bounds peak RSS.
 ARROW_BATCH = 256
+# Generated-class cache entries (Spark's default is 100). One pass of all
+# queries() at sf0.001 compiles 1,026 distinct classes, and the five
+# kg_query_mix queries alone 114; at the default size LRU eviction made
+# every pass of the mix recompile 59-94 classes in Janino and re-JIT them.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def get_spark(
@@ -47,6 +54,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # a static SQL conf: it only takes effect when the session is built
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # PySpark otherwise wraps every DataFrame/Column call to record its
+        # Python call site (about five Py4J round trips and a stack walk per
+        # call). Trade-off: a Spark analysis or runtime error no longer
+        # names the Python line that built the failing expression in its
+        # "DataFrame" context; errors this package raises are unaffected.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # one BLAS thread per python worker: the workers ARE the parallelism;
         # nested BLAS threading oversubscribes cores (~1.5× slowdown measured)
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")

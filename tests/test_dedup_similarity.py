@@ -107,6 +107,89 @@ def test_simhash_blocking_is_lossless(spark):
     assert (1, 2) in blocked  # identical text → identical signature
 
 
+def _md5_hex(s):
+    import hashlib
+
+    return hashlib.md5(s.encode()).hexdigest()
+
+
+def _spec_words(text):
+    import re
+
+    return re.sub(r"\s+", " ", text.lower(), flags=re.ASCII).strip(" ").split(" ")
+
+
+def test_signatures_match_python_spec_on_edge_cases(spark, monkeypatch):
+    """``simhash_signatures``, ``minhash_signatures`` (both the distinct-
+    shingle dim and the inline-digest branch) and ``_minhash_bands`` equal a
+    pure-Python spec with the same md5 hashing on: a doc id held by two
+    rows with differing texts (its words and shingles pool), an
+    all-whitespace text (no signature row), a doc whose bit sums tie at 0
+    (the bit stays 0), and a one-word doc whose signature sets bits 30, 31
+    and 59 (where the left-deep sum of bit terms widens from INT to
+    BIGINT)."""
+    import itertools
+
+    from entity_extractor_by_pointer_spark import cache
+
+    def h60(s):
+        return int(_md5_hex(s)[:15], 16)
+
+    high = next(
+        w for w in (f"w{i}" for i in itertools.count()) if all(h60(w) >> j & 1 for j in (30, 31, 59))
+    )
+    rows = [
+        (1, "alpha beta gamma delta"),
+        (1, "One two  THREE four five"),
+        (2, " \t \n "),
+        (3, "tie breaker"),
+        (4, high),
+        (5, f"{high} rides along with six words"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    words, shingles = {}, {}
+    for doc_id, text in rows:
+        w = _spec_words(text)
+        words.setdefault(doc_id, []).extend(x for x in w if x)
+        shingles.setdefault(doc_id, set()).update(
+            " ".join(w[i : i + dd.NGRAM_N]) for i in range(len(w) - dd.NGRAM_N + 1)
+        )
+
+    def bit_sums(ws):
+        return [sum((h60(x) >> j & 1) * 2 - 1 for x in ws) for j in range(dd.SIMHASH_BITS)]
+
+    spec_sim = {
+        d: sum(1 << j for j, s in enumerate(bit_sums(ws)) if s > 0) for d, ws in words.items() if ws
+    }
+    assert 0 in bit_sums(words[3]) and spec_sim[3] >> bit_sums(words[3]).index(0) & 1 == 0
+    assert spec_sim[4] == h60(high) and all(spec_sim[4] >> j & 1 for j in (30, 31, 59))
+    assert {r["doc_id"]: r["simhash"] for r in dd.simhash_signatures(docs).collect()} == spec_sim
+
+    def minhash(sh):
+        out = []
+        for s in range(dd.MINHASH_K // 2):
+            ds = [_md5_hex(f"{x}#{s}") for x in sh]
+            out += [min(int(d[:15], 16) for d in ds), min(int(d[16:31], 16) for d in ds)]
+        return tuple(out)
+
+    spec_mh = {d: minhash(sh) for d, sh in shingles.items() if sh}
+    assert sorted(spec_mh) == [1, 5]
+    rpb = dd.MINHASH_K // dd.MINHASH_BANDS
+    spec_bands = {
+        (d, b, _md5_hex("|".join(str(m) for m in mh[b * rpb : (b + 1) * rpb])))
+        for d, mh in spec_mh.items()
+        for b in range(dd.MINHASH_BANDS)
+    }
+    for ceiling in (cache.BROADCAST_ROWS_MAX, 0):  # distinct-shingle dim, then inline
+        monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", ceiling)
+        sig = dd.minhash_signatures(docs)
+        assert sig.columns == ["doc_id", *[f"mh_{i}" for i in range(dd.MINHASH_K)]]
+        assert {r[0]: tuple(r[1:]) for r in sig.collect()} == spec_mh
+        bands = dd._minhash_bands(sig)
+        assert bands.columns == ["doc_id", "band", "bh"]
+        assert set(map(tuple, bands.collect())) == spec_bands
+
+
 import pytest
 
 

@@ -48,3 +48,53 @@ def test_package_zip_is_removed_at_exit(tmp_path):
     assert sorted(p.name for p in tmp.rglob("*.zip")) == []
     assert sorted(p.name for p in tmp.glob("eeps_*")) == []
     assert run.stdout.split()[-1] == "1"
+
+
+def _load(path):
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(os.path.basename(path)[:-3], path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_codegen_cache_holds_the_query_mix_working_set(spark, tmp_path):
+    """A second pass of the ``kg_query_mix`` queries compiles no generated
+    class: the codegen cache holds the whole working set (at Spark's
+    default 100 entries, LRU eviction recompiles dozens of classes every
+    pass), and the session skips PySpark's per-call call-site capture.
+
+    AQE is off here: it numbers codegen stages in the order concurrent
+    stages happen to be planned, and the number is part of the generated
+    source, so with AQE a pass recompiles a class now and then whatever the
+    cache size. Without it each plan's stage ids are fixed."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+    from entity_extractor_by_pointer_spark.cache import release_all
+    from entity_extractor_by_pointer_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    twin = _load(os.path.join(ROOT, "tools", "gen_scaled_sf.py"))
+    mix = _load(os.path.join(ROOT, "perfbench", "workloads.py")).MIX_QUERIES
+    pq.write_table(twin.gen_documents(np.random.default_rng(7), 80), tmp_path / "documents.parquet")
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    qs = E.queries()
+
+    def one_pass():
+        before = compiles.getCount()
+        for name in mix:
+            release_all()
+            spark.catalog.clearCache()
+            qs[name](spark, str(tmp_path)).collect()
+        return compiles.getCount() - before
+
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert one_pass() > 0
+        assert one_pass() == 0
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -14,6 +14,12 @@ stores are replaced by placeholders, lambda-variable, codegen-stage and adaptive
 query-stage ids are renumbered in order of appearance, and the projections of a distinct-aggregate
 ``Expand`` (whose order varies between runs) are sorted, with their ``gid``
 literals and every ``gid = k`` filter renumbered to match.
+
+A cached relation that the query body's own action (a census ``count`` or
+``collect``) already filled prints its AQE ``Final Plan`` with runtime
+``Statistics(…)`` beside its ``Initial Plan``. The dump keeps the initial
+plan only and numbers the operators as Spark numbers a plan taken before
+any action, so an eager action shows no plan change of its own.
 """
 
 from __future__ import annotations
@@ -83,6 +89,90 @@ def _canonical_expands(plan: str) -> str:
     return plan
 
 
+_FINAL, _INITIAL = "+- == Final Plan ==", "+- == Initial Plan =="
+_OP_ID = re.compile(r" \((\d+)\)")
+
+
+def _col(line: str) -> int:
+    """The column where a tree line's operator name starts."""
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _drop_final_plan(tree: list[str]) -> list[str]:
+    """The tree lines with the first ``Final Plan`` section removed and its
+    ``Initial Plan`` printed as the adaptive plan's only child, as Spark
+    prints an adaptive plan that has not run (with the ``:`` guides of the
+    adaptive plan's open ancestors, which Spark leaves out under the two
+    headers)."""
+    i = next(i for i, line in enumerate(tree) if _FINAL in line)
+    col = tree[i].index(_FINAL)
+    j = next(j for j in range(i + 1, len(tree)) if tree[j].find(_INITIAL) == col)
+    # the adaptive plan's guides, its own marker turned into its guide
+    guides = re.sub(r"[+:]- $", lambda m: m.group()[0].replace("+", " ") + "  ", tree[i - 1][:col])
+    k = j + 2
+    while k < len(tree) and _col(tree[k]) > col:
+        k += 1
+    initial = [guides + "+- " + tree[j + 1][col + 3 :]]
+    initial += [guides + line[col:] for line in tree[j + 2 : k]]
+    return tree[:i] + initial + tree[k:]
+
+
+def _spark_order(tree: list[str]) -> dict[str, str]:
+    """Old operator id -> the id Spark's formatted explain gives it: each
+    node after its children's subtrees and before its inner children's (a
+    cached relation's plan, indented two levels instead of one)."""
+    kids: dict[int, list[tuple[bool, int]]] = {}
+    stack: list[tuple[int, int]] = []  # (column, line index)
+    for n, line in enumerate(tree):
+        col = _col(line)
+        while stack and stack[-1][0] >= col:
+            stack.pop()
+        if stack:
+            kids.setdefault(stack[-1][1], []).append((col - stack[-1][0] == 6, n))
+        stack.append((col, n))
+    ids: dict[str, str] = {}
+
+    def visit(n: int) -> None:
+        for inner, c in kids.get(n, []):
+            if not inner:
+                visit(c)
+        ids.setdefault(_OP_ID.search(tree[n]).group(1), str(len(ids) + 1))
+        for inner, c in kids.get(n, []):
+            if inner:
+                visit(c)
+
+    visit(0)
+    return ids
+
+
+def _initial_plans(plan: str) -> str:
+    """``plan`` with every AQE ``Final Plan`` section (the query stages and
+    their runtime ``Statistics``) and the details of the operators only it
+    held removed, and the remaining operators renumbered in Spark's order."""
+    if _FINAL not in plan:
+        return plan
+    title, rest = plan.split("\n", 1)
+    tree_text, details = rest.split("\n\n\n", 1)
+    details, sub_sep, subqueries = details.partition("\n\n===== Subqueries =====")
+    tree = tree_text.split("\n")
+    while any(_FINAL in line for line in tree):
+        tree = _drop_final_plan(tree)
+    ids = _spark_order(tree)
+    tree = [_OP_ID.sub(lambda m: f" ({ids[m.group(1)]})", line, 1) for line in tree]
+    blocks = {}
+    for block in details.split("\n\n"):
+        old = re.match(r"\((\d+)\) ", block).group(1)
+        if old in ids:
+            head, nl, body = block.partition("\n")
+            # an operator the final plan shares keeps the codegen id it ran with
+            head = f"({ids[old]}) " + re.sub(r" \[codegen id : \d+\]$", "", head[len(old) + 3 :])
+            block = (head + nl + body).replace("isFinalPlan=true", "isFinalPlan=false")
+            blocks[int(ids[old])] = block
+    subqueries = re.sub(r"(?<=Hosting operator id = )(\d+)", lambda m: ids[m.group(1)], subqueries)
+    details = "\n\n".join(blocks[k] for k in sorted(blocks))
+    return "\n".join([title, *tree]) + "\n\n\n" + details + sub_sep + subqueries
+
+
 def _first_seen(plan: str, pattern: str) -> str:
     """Renumber the ids ``pattern``'s group 1 captures in their order of
     first appearance."""
@@ -96,7 +186,7 @@ def _first_seen(plan: str, pattern: str) -> str:
 
 
 def mask_plan(plan: str) -> str:
-    plan = _canonical_expands(plan)
+    plan = _canonical_expands(_initial_plans(plan))
     plan = _IDS.sub("#N", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
     plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
