@@ -7,7 +7,9 @@ stay within executor memory, and broadcast-join threshold left
 to AQE. Shuffle partitions default to the local core count; on a real
 cluster this is overridden via spark-submit conf. The codegen cache holds
 the queries' whole working set and PySpark's per-call call-site capture is
-off, so a query's driver work is paid once per process, not once per run.
+off, so a query's driver work is paid once per process, not once per run,
+and the driver JVM compiles with C1 only, so a run's passes take the same
+time from the first on.
 """
 
 from __future__ import annotations
@@ -32,6 +34,16 @@ ARROW_BATCH = 256
 # kg_query_mix queries alone 114; at the default size LRU eviction made
 # every pass of the mix recompile 59-94 classes in Janino and re-JIT them.
 CODEGEN_CACHE_ENTRIES = 2048
+# Driver JVM flags: C1 only, with the code cache tiered compilation would
+# get (C1 alone defaults to 48 MB, which Spark's code overflows: about 25,000
+# methods were flushed and recompiled at once ~40 s into a run). With C2 the
+# kg_query_mix passes kept getting faster for minutes (4-vCPU host, 300-doc
+# twin: 5.2, 4.6, 4.4, 3.9 ... 3.3 s) while compiler threads took 12 s of CPU
+# in the first pass after warm-up; with these flags the passes held at
+# 5.0-5.7 s on about 10 s of CPU each. Local mode runs the executors in this
+# JVM; on a cluster it only plans. spark.driver.extraJavaOptions comes later
+# on the command line, so a user's -XX:TieredStopAtLevel=4 turns C2 back on.
+DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 
 
 def get_spark(
@@ -52,6 +64,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # read when the driver JVM is launched, so it only acts on the first session
+        .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         # a static SQL conf: it only takes effect when the session is built

@@ -98,3 +98,19 @@ def test_codegen_cache_holds_the_query_mix_working_set(spark, tmp_path):
         assert one_pass() == 0
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def test_driver_jvm_compiles_with_c1_only_and_a_full_code_cache(spark):
+    """The driver JVM runs with ``DRIVER_JAVA_OPTIONS``: JIT tier 1 (C1)
+    only, so a run's passes cost the same from the first after warm-up, and
+    the 240 MB code cache tiered compilation gets, not C1's 48 MB default,
+    which Spark's code overflows into mass flushes and recompiles."""
+    from entity_extractor_by_pointer_spark.session import DRIVER_JAVA_OPTIONS
+
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions") == DRIVER_JAVA_OPTIONS
+    assert bean.getVMOption("TieredStopAtLevel").getValue() == "1"
+    assert bean.getVMOption("ReservedCodeCacheSize").getValue() == str(240 * 1024 * 1024)
