@@ -2355,8 +2355,8 @@ def q_doc_containment(spark, sf_dir):
     """Directional shingle-containment near-dup pairs over the derived
     fragment corpus: |sh(a) ∩ sh(b)| / |sh(a)| ≥ 0.9 — the asymmetric
     signal for quotes/syndication/page-supersets that symmetric Jaccard
-    misses. Shares the blocked-intersection engine (adaptive stop-shingle
-    cap) with the Jaccard query."""
+    misses. Shares the exact blocked-intersection engine with the Jaccard
+    query."""
     return dd.containment_pairs(_containment_corpus(spark, sf_dir))
 
 
@@ -2499,13 +2499,11 @@ def q_doc_chunks(spark, sf_dir):
             SELECT id_a, id_b, jaccard FROM jp WHERE jaccard >= {JACCARD_THRESHOLD}
         """)
 def q_dedup_ngram_jaccard(spark, sf_dir):
-    """ADAPTIVE blocking: a cheap corpus census picks exact shingle blocking
-    for small corpora (the capped path's hot-census/bound-prune stages are
-    pure overhead there — the round-2 bench regression) and df-capped
-    blocking above ``JACCARD_AUTO_DOCS`` rows, where stop-shingles would
-    otherwise explode the candidate join O(df²). The oracle computes EXACT
-    blocking; capped ≡ exact on this corpus family is pytest-pinned
-    (tests/test_dedup_similarity.py) and was oracle-proven in round 2."""
+    """Word-3-gram Jaccard near-dup pairs (≥ 0.8) by EXACT shingle
+    blocking: every pair sharing a shingle meets in the blocking join, the
+    plan the oracle computes. Hot shingles fan the join out O(df²); the
+    no-false-prune size-ratio and constant bounds trim it, AQE splits skewed
+    partitions, and no cap drops a pair."""
     return dd.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 

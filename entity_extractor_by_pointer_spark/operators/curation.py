@@ -62,9 +62,9 @@ def curate_corpus(docs: DataFrame) -> DataFrame:
 
 
 BOILERPLATE_MIN_DF = 4
-# census short-circuit (the ``_cap_for`` pattern, dedup.py): at
-# or below this many docs the df>=BOILERPLATE_MIN_DF hot set is bounded by
-# total_shingle_occurrences / min_df ≤ docs · shingles_per_doc / min_df,
+# census short-circuit: at or below this many docs the df>=BOILERPLATE_MIN_DF
+# hot set is bounded by total_shingle_occurrences / min_df ≤
+# docs · shingles_per_doc / min_df,
 # so with ≲200 distinct shingles per doc (a ~200-word page) the worst case
 # is 20k · 200 / 4 = 1M rows = exactly ``cache.BROADCAST_ROWS_MAX`` — the
 # hot-set count() action is pure overhead there and the hint is applied

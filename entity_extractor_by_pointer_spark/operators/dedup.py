@@ -8,8 +8,9 @@ in whole-stage codegen:
   aggregation makes the shuffle carry one row per (fingerprint, partition).
 - **n-gram Jaccard**: word-3-gram shingles; candidate pairs are generated by
   an equi-join on shingle (only docs sharing ≥1 shingle ever meet — the
-  blocking step that replaces the O(n²) cross join), then exact Jaccard is
-  verified per pair.
+  blocking step that replaces the O(n²) cross join), and the join's pair
+  aggregate counts each intersection exactly. The same engine scores
+  directional containment; neither drops a pair sharing a shingle.
 - **MinHash + LSH**: K md5-derived hash functions → per-doc signature;
   signatures sliced into bands; docs colliding on a full band become
   candidate pairs (equi-join on band hash — again no cross join); exact
@@ -29,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import broadcast_small, cached, fits_broadcast
+from ..cache import cached, fits_broadcast
 from ..functions.textstats import fingerprint64, md5_int64, norm_text
 
 NGRAM_N = 3
@@ -41,14 +42,6 @@ MINHASH_BANDS = 4  # 4 rows per band
 # billions of docs (round-1's 32-bit/8-bit-block variant collapsed to 256
 # buckets per block — a crawl-scale join explosion).
 SIMHASH_BITS = 60
-# adaptive blocking: corpora at/below this row count keep EXACT shingle
-# blocking (the capped path's hot-census + bound-prune + hot-verify stages
-# are pure overhead when no shingle's df can explode the join — the round-2
-# bench regression); above it, stop-shingles get df-capped out of the
-# blocking join. 50k docs × df≲cap bounds the worst per-shingle fan-out to
-# O(cap²) rows — far below one shuffle partition.
-JACCARD_AUTO_DOCS = 50_000
-JACCARD_AUTO_CAP = 16
 # the scorers accept on round(score, 4) ≥ τ, which admits score ≥ τ - 5e-5;
 # every candidate-pruning inequality must therefore use τ - ROUND4_EPS
 # (slightly wider than the exact 0.5e-4 HALF_UP boundary to also absorb
@@ -80,13 +73,6 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
         fp.groupBy("fingerprint")
         .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
     )
-
-
-def _cap_for(n_docs: int) -> int | None:
-    """The one blocking-strategy rule: ``None`` (exact blocking) for
-    corpora at/below ``JACCARD_AUTO_DOCS`` rows, ``JACCARD_AUTO_CAP``
-    above. The engine applies it to its corpus census."""
-    return None if n_docs <= JACCARD_AUTO_DOCS else JACCARD_AUTO_CAP
 
 
 def _shingle_arr_sql(n: int, hashed: bool, positional: bool = False) -> str:
@@ -182,22 +168,11 @@ def _attach_pair_arrays(cand: DataFrame, arr_df: DataFrame) -> DataFrame:
 def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     """(id_a, id_b, jaccard) for pairs with Jaccard ≥ ``JACCARD_THRESHOLD``.
 
-    Blocking join on shingle; Jaccard on distinct-shingle sets. Skew from
-    common shingles is handled two ways: AQE skew-join always, and —
-    at crawl scale — the capped path drops stop-shingles (document
-    frequency > cap) from the BLOCKING join only, bounding the join fan-out
-    to O(df_cap²) per shingle. The capped path then (1) aggregates
-    rare-shingle intersection counts directly (map-side combined — never a
-    materialized candidate list), (2) prunes every pair whose best-possible
-    intersection ``rare_inter + min(hot_a, hot_b)`` cannot reach the
-    threshold (a PPJoin-style upper bound — provably no false prune), and
-    (3) exact-verifies only the tiny survivor set by counting its hot-shingle
-    overlap, so reported scores equal the exact path's. Only pairs whose
-    every shared shingle is hot can be missed (standard near-dup practice).
-    The strategy is :func:`_cap_for` on the corpus census (exact blocking
-    at/below ``JACCARD_AUTO_DOCS`` rows, ``JACCARD_AUTO_CAP`` above — small
-    corpora keep the cheaper exact plan, crawl-scale corpora get the
-    bounded one; plan selection is pytest-pinned at both ends).
+    Blocking join on shingle; Jaccard on distinct-shingle sets. Every pair
+    sharing ≥1 shingle meets in the blocking join, so the pair set and the
+    scores are the oracle's exactly. Skew from common shingles is left to
+    AQE's skew join; the prunes below (size ratio, constant bound) are
+    no-false-prune inequalities, so they cut work without losing a pair.
     """
     # jaccard ≥ τ needs n_inter ≥ τ(n_a+n_b)/(1+τ) — the PPJoin bound
     # every prune below must be valid for the ROUNDED acceptance test the
@@ -207,12 +182,10 @@ def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     # at τ = 0.8) could be dropped that the oracle keeps.
     threshold = JACCARD_THRESHOLD
     t_eps = threshold - ROUND4_EPS
-    bound = F.lit(t_eps / (1.0 + t_eps)) * (F.col("n_a") + F.col("n_b"))
     inter = _pair_intersections(
         docs,
-        bound,
-        # same inequality with both sizes at their corpus-wide minimum — a
-        # constant, so it prunes right at the aggregate (no false prune)
+        # the PPJoin inequality with both sizes at their corpus-wide
+        # minimum — a constant, so it prunes right at the aggregate
         const_bound=lambda n_min: t_eps / (1.0 + t_eps) * 2.0 * n_min,
         # J ≥ τε forces min(n_a,n_b) ≥ τε·max(n_a,n_b): prune inside the join
         size_ratio=t_eps,
@@ -231,161 +204,90 @@ def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
 
 def _pair_intersections(
     docs: DataFrame,
-    qualify_bound,
     const_bound,
     size_ratio: float | None = None,
 ) -> DataFrame:
     """Shared shingle-overlap engine for the set-similarity family
     (:func:`ngram_jaccard_pairs`, :func:`containment_pairs`): returns
     (id_a, id_b, n_inter, n_a, n_b) for every id_a < id_b pair sharing ≥1
-    shingle, with EXACT intersection counts.
+    shingle that survives the caller's no-false-prune bounds, with EXACT
+    intersection counts from one blocking self-join on shingle — the plan
+    the DuckDB oracles compute.
 
-    :func:`_cap_for` on the corpus census picks the strategy. ``None`` is
-    the exact blocking join; a cap runs the capped path: stop-shingles
-    (df > cap) leave the blocking join (bounding fan-out to O(cap²) per
-    shingle), rare intersections aggregate map-side, and pairs whose
-    best-possible intersection ``rare_inter + min(hot_a, hot_b)`` falls
-    below ``qualify_bound`` (a Column over n_a/n_b — each scorer's own
-    no-false-prune inequality) are pruned before the survivor set's hot
-    overlap is counted exactly, so reported counts equal the exact path's.
-    Only pairs whose every shared shingle is hot can be missed (standard
-    near-dup practice)."""
+    ``const_bound(n_min)`` is the scorer's qualify inequality with both set
+    sizes at the corpus-wide minimum, a constant lower bound on n_inter;
+    ``size_ratio`` (Jaccard only) cuts size-incompatible pairs inside the
+    join."""
     # (id, n_sh, shingle-hash) rows: the per-doc set size rides along with
     # every shingle row, so pair sizes fall out of the blocking join itself
     # and the two 114M-row size joins of the r5 engine disappear — the
     # sizes become extra grouping keys (functionally dependent on the ids,
     # so the groups are unchanged). The helper caches the per-doc ARRAY
-    # table; every consumer below re-explodes from that cache (cheap).
+    # table; the explode below reads that cache (cheap).
     arr_df = _hashed_shingle_arrays(docs)
-    # ONE aggregate over the ARRAY table (one row per doc) triples as (a)
-    # the cache fill both paths need anyway, (b) the strategy/widening
-    # census (count == docs.count()), and (c) the corpus-wide minimum
-    # nonempty set size the exact path's constant bound needs — previously
-    # the census was a separate job (a real ~2s pass on the computed
-    # 60k-row containment corpus at sf1.0, where count() is not
-    # metadata-only) and n_min was another.
+    # ONE aggregate over the ARRAY table (one row per doc) doubles as (a)
+    # the cache fill and the widening census (count == docs.count()), and
+    # (b) the corpus-wide minimum nonempty set size the constant bound
+    # needs — previously the census was a separate job (a real ~2s pass on
+    # the computed 60k-row containment corpus at sf1.0, where count() is
+    # not metadata-only) and n_min was another.
     n_docs, n_min = arr_df.agg(
         F.count(F.lit(1)).alias("n"),
         F.min(F.when(F.size("sharr") > 0, F.size("sharr"))).alias("m"),
     ).first()
-    cap = _cap_for(n_docs)
     sh = arr_df.select(
         "doc_id",
         F.size("sharr").alias("n_sh"),
         F.explode("sharr").alias("shingle"),
     )
-
-    if cap is None:
-        a, b = sh.alias("a"), sh.alias("b")
-        joined = a.join(b, "shingle").where(F.col("a.doc_id") < F.col("b.doc_id"))
-        if size_ratio is not None:
-            # J ≥ τ ⟹ inter ≥ τ·max(n_a,n_b) and inter ≤ min(n_a,n_b),
-            # hence min ≥ τ·max: size-incompatible pairs can never qualify.
-            # Applied INSIDE the blocking join, before the pair aggregate —
-            # at sf1.0 this drops the agg input from 114M to 41M groups
-            # with provably no false prune.
-            joined = joined.where(
-                (F.col("b.n_sh") >= F.lit(size_ratio) * F.col("a.n_sh"))
-                & (F.col("a.n_sh") >= F.lit(size_ratio) * F.col("b.n_sh"))
-            )
-        if size_ratio is not None and n_docs > PAIR_AGG_WIDE_DOCS:
-            # widen ONLY this aggregate's exchange: at tens of thousands of
-            # docs the post-size-cut pair aggregate is the query's dominant
-            # stage (tens of millions of groups) and `shuffle.partitions`
-            # (= cores locally) starves it — 4x reducers measured 7.6->4.7s
-            # at 50k docs while every other exchange in the query stays at
-            # the session default (the global-128 experiment that slowed 5
-            # other queries stays rejected). An explicit keyed repartition
-            # is AQE-coalesce-proof, and the width tracks the cluster via
-            # defaultParallelism. Gated on the caller's corpus census (no
-            # extra job): small corpora measured SLOWER with the extra
-            # exchange (1.6->2.6s at 5k docs), and the no-size-cut shape
-            # (containment) measured slower at every width — both keep the
-            # plain map-side-partial aggregate.
-            joined = joined.repartition(
-                joined.sparkSession.sparkContext.defaultParallelism
-                * PAIR_AGG_WIDE_FACTOR,
-                F.col("a.doc_id"),
-                F.col("b.doc_id"),
-            )
-        inter = joined.groupBy(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        ).agg(F.count(F.lit(1)).alias("n_inter"))
-        if n_min is not None:
-            # the scorer's qualify inequality with both set sizes at the
-            # corpus-wide minimum (from the combined census above) is a
-            # CONSTANT lower bound on n_inter — cheap insurance that the
-            # final filter has little left to scan. No false prune: the
-            # caller's per-pair predicate is strictly tighter. (min is
-            # taken over NONEMPTY sets, matching the exploded-row min this
-            # replaced — empty docs join no pair.)
-            inter = inter.where(
-                F.col("n_inter") >= F.lit(float(const_bound(n_min)))
-            )
-        return inter
-
-    # ---- capped path ----
-    # hot shingles (df > cap) are few relative to the corpus but NOT
-    # unconditionally broadcastable — in a billion-doc crawl most natural
-    # 3-grams clear df=16. Census-gate the hint like every other operator
-    # (the count doubles as the cache fill); above the gate the anti/inner
-    # joins shuffle on the shingle key, which AQE handles
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") > cap)
-        .select("shingle")
-    )
-    hot_dim = broadcast_small(hot)
-    block = sh.join(hot_dim, "shingle", "left_anti")
-    a, b = block.alias("a"), block.alias("b")
+    a, b = sh.alias("a"), sh.alias("b")
     joined = a.join(b, "shingle").where(F.col("a.doc_id") < F.col("b.doc_id"))
     if size_ratio is not None:
-        # same no-false-prune size-compatibility cut as the exact path
+        # J ≥ τ ⟹ inter ≥ τ·max(n_a,n_b) and inter ≤ min(n_a,n_b),
+        # hence min ≥ τ·max: size-incompatible pairs can never qualify.
+        # Applied INSIDE the blocking join, before the pair aggregate —
+        # at sf1.0 this drops the agg input from 114M to 41M groups
+        # with provably no false prune.
         joined = joined.where(
             (F.col("b.n_sh") >= F.lit(size_ratio) * F.col("a.n_sh"))
             & (F.col("a.n_sh") >= F.lit(size_ratio) * F.col("b.n_sh"))
         )
-    rare_inter = joined.groupBy(
+    if size_ratio is not None and n_docs > PAIR_AGG_WIDE_DOCS:
+        # widen ONLY this aggregate's exchange: at tens of thousands of
+        # docs the post-size-cut pair aggregate is the query's dominant
+        # stage (tens of millions of groups) and `shuffle.partitions`
+        # (= cores locally) starves it — 4x reducers measured 7.6->4.7s
+        # at 50k docs while every other exchange in the query stays at
+        # the session default (the global-128 experiment that slowed 5
+        # other queries stays rejected). An explicit keyed repartition
+        # is AQE-coalesce-proof, and the width tracks the cluster via
+        # defaultParallelism. Gated on the census above (no extra job):
+        # small corpora measured SLOWER with the extra exchange
+        # (1.6->2.6s at 5k docs), and the no-size-cut shape
+        # (containment) measured slower at every width — both keep the
+        # plain map-side-partial aggregate.
+        joined = joined.repartition(
+            joined.sparkSession.sparkContext.defaultParallelism
+            * PAIR_AGG_WIDE_FACTOR,
+            F.col("a.doc_id"),
+            F.col("b.doc_id"),
+        )
+    inter = joined.groupBy(
         F.col("a.doc_id").alias("id_a"),
         F.col("b.doc_id").alias("id_b"),
         F.col("a.n_sh").alias("n_a"),
         F.col("b.n_sh").alias("n_b"),
-    ).agg(F.count(F.lit(1)).alias("rare_inter"))
-    # per-doc count of HOT shingles → upper bound on the unseen
-    # intersection. Derived from the TINY rare side (n_hot = n_sh − n_rare)
-    # — the former formulation aggregated the hot occurrence table, a pass
-    # over nearly the whole corpus when most shingles clear the cap. No
-    # broadcast hint: AQE sizes the join from runtime stats (the rare
-    # count can approach one row per doc on a crawl-shaped corpus).
-    rare_cnt = block.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_rare"))
-    ra = rare_cnt.select(F.col("doc_id").alias("id_a"), F.col("n_rare").alias("r_a"))
-    rb = rare_cnt.select(F.col("doc_id").alias("id_b"), F.col("n_rare").alias("r_b"))
-    bounded = (
-        rare_inter.join(ra, "id_a", "left")
-        .join(rb, "id_b", "left")
-        .fillna(0, subset=["r_a", "r_b"])
-        .withColumn("h_a", F.col("n_a") - F.col("r_a"))
-        .withColumn("h_b", F.col("n_b") - F.col("r_b"))
-        # n_inter ≤ rare_inter + min(h_a, h_b) — prune what can't qualify
-        .where((F.col("rare_inter") + F.least("h_a", "h_b")) >= qualify_bound)
-    )
-    # survivors are ~the true near-dup pairs; score them EXACTLY with
-    # array_intersect over the cached per-doc arrays (the LSH-verify
-    # pattern — the former hot-overlap machinery re-exploded the hot
-    # occurrence table four times across a two-branch caller). Cached +
-    # censused for the same reason as `hot`: a dup-heavy crawl can leave
-    # an arbitrarily large survivor set, and a forced broadcast of it
-    # would OOM instead of degrading to a shuffle join.
-    cand = broadcast_small(bounded.select("id_a", "id_b", "n_a", "n_b"))
-    return (
-        _attach_pair_arrays(cand, arr_df)
-        .withColumn("n_inter", F.size(F.array_intersect("_sa", "_sb")))
-        .select("id_a", "id_b", "n_inter", "n_a", "n_b")
-    )
+    ).agg(F.count(F.lit(1)).alias("n_inter"))
+    if n_min is not None:
+        # the constant bound is cheap insurance that the final filter has
+        # little left to scan. No false prune: the caller's per-pair
+        # predicate is strictly tighter. (min is taken over NONEMPTY sets,
+        # matching the exploded-row min this replaced — empty docs join no
+        # pair.)
+        inter = inter.where(
+            F.col("n_inter") >= F.lit(float(const_bound(n_min)))
+        )
+    return inter
 
 
 def containment_pairs(docs: DataFrame) -> DataFrame:
@@ -398,24 +300,21 @@ def containment_pairs(docs: DataFrame) -> DataFrame:
     sub-document duplication (quotes, syndication, page supersets) in
     training-data curation.
 
-    Both directions are emitted when both qualify. Shares the
+    Both directions are emitted when both qualify. Shares the exact
     :func:`_pair_intersections` engine with Jaccard — same blocking join,
-    same adaptive stop-shingle cap, but the capped path's no-false-prune
-    inequality is the directional one: containment ≥ τ in SOME direction
-    needs ``n_inter ≥ τ·min(n_a, n_b)``."""
+    but the no-false-prune inequality is the directional one: containment
+    ≥ τ in SOME direction needs ``n_inter ≥ τ·min(n_a, n_b)``."""
     # slackened for the final ROUNDED filter (see ngram_jaccard_pairs):
     # round(containment, 4) ≥ τ admits containment ≥ τ - 5e-5
     threshold = CONTAINMENT_THRESHOLD
     t_eps = threshold - ROUND4_EPS
-    bound = F.lit(t_eps) * F.least("n_a", "n_b")
     inter = _pair_intersections(
         docs,
-        bound,
-        # τ·min(n_a, n_b) ≥ τ·n_min — constant, prunes before the size joins
+        # τ·min(n_a, n_b) ≥ τ·n_min — constant, prunes at the aggregate
         const_bound=lambda n_min: t_eps * n_min,
     )
     # one explode emits both directed rows per pair — a fwd ∪ rev of two
-    # selects evaluated the whole engine subtree twice (verify joins and
+    # selects evaluated the whole engine subtree twice (blocking join and
     # all) for one count
     both = inter.select(
         F.explode(

@@ -1,21 +1,9 @@
-import contextlib
-
 import numpy as np
 
 from entity_extractor_by_pointer_spark.operators import canonicalize
 from entity_extractor_by_pointer_spark.operators import dedup as dd
 from entity_extractor_by_pointer_spark.operators import similarity as sim
 from entity_extractor_by_pointer_spark.operators.canonicalize import connected_components
-
-
-@contextlib.contextmanager
-def _capped_blocking(monkeypatch, cap):
-    """Force the pair engine's capped blocking path with stop-shingle cap
-    ``cap``: every corpus is above a ``JACCARD_AUTO_DOCS`` of -1."""
-    with monkeypatch.context() as m:
-        m.setattr(dd, "JACCARD_AUTO_DOCS", -1)
-        m.setattr(dd, "JACCARD_AUTO_CAP", cap)
-        yield
 
 
 def _docs(spark):
@@ -42,24 +30,6 @@ def test_ngram_jaccard_finds_near_dup(spark, monkeypatch):
     assert pairs[(1, 2)] == 1.0 and pairs[(1, 5)] == 1.0 and pairs[(2, 5)] == 1.0
     assert 0.5 <= pairs[(1, 3)] < 1.0
     assert (1, 4) not in pairs
-
-
-def test_ngram_jaccard_df_pruned_blocking_matches_exact(spark, monkeypatch):
-    """Stop-shingle pruning (blocking only) must find the same ≥τ pairs on
-    testdata, with identical jaccard values (verification uses full sets)."""
-    import pyspark.sql.functions as F  # noqa: F401
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    exact = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dd.ngram_jaccard_pairs(docs).collect()
-    }
-    with _capped_blocking(monkeypatch, 20):
-        pruned = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in dd.ngram_jaccard_pairs(docs).collect()
-        }
-    assert pruned == exact
 
 
 def test_minhash_lsh_finds_exact_and_near_dups(spark, monkeypatch):
@@ -355,22 +325,43 @@ def test_jaccard_prunes_respect_rounding_window(spark):
     assert got == {(1, 2): 0.8}, got
 
 
-def test_jaccard_df_cap_prunes_hot_shingles_from_blocking(spark, monkeypatch):
-    """A pair whose ONLY shared shingles are hotter than the cap must be
-    dropped by capped blocking (and found by exact blocking) — i.e. the cap
-    genuinely bounds the candidate join's per-shingle fan-out."""
-    hot = "the quick brown"  # shared 3-shingle, df = 6 below
-    rows = [(i, f"{hot} fox{i} a{i} b{i} c{i} d{i} e{i}") for i in range(1, 7)]
-    # two docs sharing ONLY the hot shingle with high enough jaccard
-    rows += [(10, "the quick brown"), (11, "the quick brown")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    monkeypatch.setattr(dd, "JACCARD_THRESHOLD", 0.9)
-    exact = {(r["id_a"], r["id_b"]) for r in dd.ngram_jaccard_pairs(docs).collect()}
-    with _capped_blocking(monkeypatch, 4):
-        capped = {(r["id_a"], r["id_b"]) for r in dd.ngram_jaccard_pairs(docs).collect()}
-    assert (10, 11) in exact
-    assert (10, 11) not in capped  # its only shingle has df=8 > cap
-    assert capped <= exact
+def test_pair_engine_is_exact_above_the_former_cap_gate(spark):
+    """Above 50,000 docs the pair engine once dropped stop-shingles (df > 16)
+    from the blocking join, so a pair sharing only hot shingles was lost.
+    Here 50,001 one-word fillers (no shingles) carry the corpus past that
+    size, "the quick brown" is held by 22 docs, and docs 900 and 901 share
+    nothing else: both scorers must still find every pair their exact
+    spec finds, and the plan must have no hot-shingle anti-join."""
+    from pyspark.sql import functions as F
+
+    hot = "the quick brown"
+    rows = [(i, f"{hot} fox{i} a{i} b{i} c{i} d{i} e{i}") for i in range(20)]
+    rows += [(900, hot), (901, hot)]
+    fillers = spark.range(50_001).select(
+        (F.col("id") + 1_000_000).alias("doc_id"),
+        F.concat(F.lit("w"), F.col("id").cast("string")).alias("text"),
+    )
+    docs = spark.createDataFrame(rows, "doc_id long, text string").unionByName(fillers)
+
+    jacc = dd.ngram_jaccard_pairs(docs)
+    assert "LeftAnti" not in jacc._jdf.queryExecution().executedPlan().toString()
+    assert {(r["id_a"], r["id_b"]): r["jaccard"] for r in jacc.collect()} == {(900, 901): 1.0}
+
+    def shingles(text):
+        w = _spec_words(text)
+        return {" ".join(w[j : j + dd.NGRAM_N]) for j in range(len(w) - dd.NGRAM_N + 1)}
+
+    sh = {i: shingles(t) for i, t in rows}
+    spec = {
+        (a, b): round(len(sh[a] & sh[b]) / len(sh[a]), 4)
+        for a in sh
+        for b in sh
+        if a != b and len(sh[a] & sh[b]) / len(sh[a]) >= dd.CONTAINMENT_THRESHOLD
+    }
+    assert len(spec) == 42  # 900 and 901 inside each other and each fox doc
+    cont = dd.containment_pairs(docs)
+    assert "LeftAnti" not in cont._jdf.queryExecution().executedPlan().toString()
+    assert {(r["id_a"], r["id_b"]): r["containment"] for r in cont.collect()} == spec
 
 
 def test_ann_topk_ivf_exact_within_cell(spark, monkeypatch):
@@ -439,62 +430,6 @@ def test_tfidf_terms_hand_computed(spark):
     assert rows["banana"]["tfidf"] == 0.0  # ln(3/3) = 0
     assert rows["apple"]["tfidf"] == round(2 * math.log(3.0 / 1), 6)
     assert rows["cherry"]["tfidf"] == round(1 * math.log(3.0 / 1), 6)
-
-
-def test_capped_jaccard_semantics_on_randomized_corpora(spark, monkeypatch):
-    """Randomized check of the capped path's contract: capped ⊆ exact with
-    identical scores, and every missed pair shares ONLY hot shingles
-    (df > cap) — i.e. the bound-prune never drops a findable pair."""
-    import itertools
-    import random
-
-    rnd = random.Random(20260816)
-    vocab = [f"w{i}" for i in range(12)] + ["the", "of", "and"]  # hot-ish tail
-    for trial in range(6):
-        docs_py = []
-        for i in range(14):
-            n = rnd.randint(0, 9)
-            words = [rnd.choice(vocab) for _ in range(n)]
-            docs_py.append((i, " ".join(words)))
-        # a couple of near-dup pairs
-        docs_py.append((100, docs_py[0][1]))
-        docs_py.append((101, docs_py[1][1] + " tail"))
-        docs = spark.createDataFrame(docs_py, "doc_id long, text string")
-        cap = rnd.choice([1, 2, 3, 5])
-        thr = rnd.choice([0.5, 0.8])
-        monkeypatch.setattr(dd, "JACCARD_THRESHOLD", thr)
-        exact = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in dd.ngram_jaccard_pairs(docs).collect()
-        }
-        with _capped_blocking(monkeypatch, cap):
-            capped = {
-                (r["id_a"], r["id_b"]): r["jaccard"]
-                for r in dd.ngram_jaccard_pairs(docs).collect()
-            }
-        assert set(capped) <= set(exact), (trial, cap, thr)
-        for k, v in capped.items():
-            assert v == exact[k], (trial, k)
-        # python recompute: missed pairs must share only hot shingles
-        def shingles(t):
-            w = " ".join(t.lower().split()).split(" ")
-            w = [x for x in w]
-            return set(
-                " ".join(w[j : j + 3]) for j in range(len(w) - 2)
-            ) if len(w) >= 3 and t.strip() else set()
-
-        sh = {i: shingles(t) for i, t in docs_py}
-        df_count = {}
-        for s in itertools.chain.from_iterable(sh.values()):
-            df_count[s] = df_count.get(s, 0) + 1
-        # rebuild df properly (distinct per doc already via sets)
-        df_count = {}
-        for sset in sh.values():
-            for s in sset:
-                df_count[s] = df_count.get(s, 0) + 1
-        for pair in set(exact) - set(capped):
-            shared = sh[pair[0]] & sh[pair[1]]
-            assert shared and all(df_count[s] > cap for s in shared), (trial, pair, cap)
 
 
 def test_corpus_curation_precedence(spark, monkeypatch):
@@ -605,34 +540,6 @@ def test_winnow_fingerprint_content_defined(spark):
     assert fp[1] == fp[2]
     assert fp[1] != fp[3]
     assert fp[4] is not None and fp[5] is not None  # short docs don't crash
-
-
-def test_jaccard_auto_cap_plan_selection(spark, monkeypatch):
-    """Census-picked blocking: exact plan for corpora at/below
-    ``JACCARD_AUTO_DOCS`` (no hot-shingle anti-join), capped plan above it —
-    at both ends the pair set matches exact blocking."""
-    import entity_extractor_by_pointer_spark.operators.dedup as dd
-
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon zeta") for i in range(6)]
-        + [(10, "one two three four five"), (11, "one two three four five")],
-        "doc_id long, text string",
-    )
-    # exact blocking at the default threshold is the reference
-    ref = sorted(tuple(r) for r in dd.ngram_jaccard_pairs(docs).collect())
-    # census (8 docs) at the threshold → exact (cap resolves to None)
-    monkeypatch.setattr(dd, "JACCARD_AUTO_DOCS", 8)
-    assert dd._cap_for(docs.count()) is None
-    exact_plan = dd.ngram_jaccard_pairs(docs)
-    assert "LeftAnti" not in exact_plan._jdf.queryExecution().executedPlan().toString()
-    # census above threshold → capped
-    monkeypatch.setattr(dd, "JACCARD_AUTO_DOCS", 7)
-    assert dd._cap_for(docs.count()) == dd.JACCARD_AUTO_CAP
-    capped_plan = dd.ngram_jaccard_pairs(docs)
-    assert "LeftAnti" in capped_plan._jdf.queryExecution().executedPlan().toString()
-    # both ends agree with exact blocking
-    assert sorted(tuple(r) for r in exact_plan.collect()) == ref
-    assert sorted(tuple(r) for r in capped_plan.collect()) == ref
 
 
 def test_positional_hash_builder_matches_distinct_array_builder(spark):
@@ -874,51 +781,6 @@ def test_containment_is_directional(spark, monkeypatch):
     # and Jaccard at the same threshold sees nothing
     monkeypatch.setattr(dd, "JACCARD_THRESHOLD", dd.CONTAINMENT_THRESHOLD)
     assert dd.ngram_jaccard_pairs(docs).count() == 0
-
-
-def test_capped_containment_matches_exact(spark, monkeypatch):
-    """The directional no-false-prune bound (n_inter ≥ τ·min(n_a, n_b)):
-    capped ⊆ exact with identical scores on randomized corpora, and equal
-    on testdata where no qualifying pair is hot-only."""
-    import random
-
-    rnd = random.Random(20260817)
-    vocab = [f"w{i}" for i in range(12)] + ["the", "of", "and"]
-    for trial in range(6):
-        docs_py = []
-        for i in range(14):
-            words = [rnd.choice(vocab) for _ in range(rnd.randint(0, 9))]
-            docs_py.append((i, " ".join(words)))
-        docs_py.append((100, docs_py[0][1]))
-        docs_py.append((101, " ".join(docs_py[1][1].split(" ")[:5])))
-        docs = spark.createDataFrame(docs_py, "doc_id long, text string")
-        cap = rnd.choice([1, 2, 3, 5])
-        thr = rnd.choice([0.5, 0.9])
-        monkeypatch.setattr(dd, "CONTAINMENT_THRESHOLD", thr)
-        exact = {
-            (r["id_a"], r["id_b"]): r["containment"]
-            for r in dd.containment_pairs(docs).collect()
-        }
-        with _capped_blocking(monkeypatch, cap):
-            capped = {
-                (r["id_a"], r["id_b"]): r["containment"]
-                for r in dd.containment_pairs(docs).collect()
-            }
-        assert set(capped) <= set(exact), (trial, cap, thr)
-        assert all(capped[k] == exact[k] for k in capped), (trial, cap, thr)
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    monkeypatch.setattr(dd, "CONTAINMENT_THRESHOLD", 0.9)
-    exact = {
-        (r["id_a"], r["id_b"]): r["containment"]
-        for r in dd.containment_pairs(docs).collect()
-    }
-    with _capped_blocking(monkeypatch, 20):
-        capped = {
-            (r["id_a"], r["id_b"]): r["containment"]
-            for r in dd.containment_pairs(docs).collect()
-        }
-    assert capped == exact
 
 
 def test_adaptive_quality_flags_per_language_floor(spark, monkeypatch):

@@ -216,31 +216,6 @@ def test_curation_dim_broadcast_is_census_gated(no_auto_broadcast, monkeypatch, 
     assert "BroadcastHashJoin" not in above, above
 
 
-def test_capped_dedup_dims_broadcast_is_census_gated(no_auto_broadcast, monkeypatch):
-    """The capped pair engine's two dims (hot shingles, survivor pairs)
-    are hinted under the ceiling and joined plain above it."""
-    import re
-
-    from entity_extractor_by_pointer_spark import cache
-    from entity_extractor_by_pointer_spark.operators import dedup as dd
-
-    # 20 copies make the fox shingles hot (df > JACCARD_AUTO_CAP); the three
-    # greek docs share rare shingles, so the survivor set is not empty
-    docs = no_auto_broadcast.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog") for i in range(20)]
-        + [(100 + i, "alpha beta gamma delta epsilon zeta eta theta") for i in range(3)],
-        "doc_id long, text string",
-    )
-    monkeypatch.setattr(dd, "JACCARD_AUTO_DOCS", -1)
-    below = _plan(dd.ngram_jaccard_pairs(docs))
-    assert re.search(r"BroadcastHashJoin \[shingle#\d+L\], \[shingle#\d+L\], LeftAnti", below), below
-    assert re.search(r"BroadcastHashJoin \[id_a#\d+L\], \[id_a#\d+L\], Inner", below), below
-    cache.release_all()  # else the cached survivors keep the hot-set hint
-    monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 0)
-    above = _plan(dd.ngram_jaccard_pairs(docs))
-    assert "BroadcastHashJoin" not in above, above
-
-
 def test_profile_distincts_are_exact_per_column_union(spark):
     """Round-4 verdict item 4 lock (shape updated in r6): profile_table
     counts EXACT distincts as a union of independent per-column
