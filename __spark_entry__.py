@@ -638,9 +638,10 @@ def q_benchmark_contamination(spark, sf_dir):
     """GPT-3-appendix-C-style benchmark DECONTAMINATION: flag documents
     sharing >=1 distinct word-8-gram with any benchmark item. The
     "benchmark" is derived deterministically (30-word prefixes of every
-    97th doc) so both engines build the identical suite; the corpus side is
-    one shingle explode against the census-gated-broadcast benchmark
-    shingle dim."""
+    97th doc) so both engines build the identical suite. Spark compares
+    xxhash64 8-gram hashes where the oracle compares the 8-gram strings:
+    the corpus side is one explode of its cached shingle-hash arrays
+    against the census-gated-broadcast benchmark shingle dim."""
     from entity_extractor_by_pointer_spark.functions.textstats import norm_text
     from entity_extractor_by_pointer_spark.operators.curation import (
         contamination_flags,
@@ -2502,8 +2503,8 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     """Word-3-gram Jaccard near-dup pairs (≥ 0.8) by EXACT shingle
     blocking: every pair sharing a shingle meets in the blocking join, the
     plan the oracle computes. Hot shingles fan the join out O(df²); the
-    no-false-prune size-ratio and constant bounds trim it, AQE splits skewed
-    partitions, and no cap drops a pair."""
+    no-false-prune size-ratio bound trims it, AQE splits skewed partitions,
+    and no cap drops a pair."""
     return dd.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 

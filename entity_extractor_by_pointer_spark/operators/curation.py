@@ -158,28 +158,37 @@ def contamination_flags(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     """(doc_id, n_contam, contaminated) — benchmark DECONTAMINATION, the
     train/test-leak check every serious LLM data pipeline runs (GPT-3
     appendix C / PaLM-style n-gram collision): a document is contaminated
-    when it shares a word-``CONTAM_N``-gram shingle with ANY benchmark item. Docs too short to emit a shingle are clean by
-    definition (n_contam = 0).
+    when it shares a word-``CONTAM_N``-gram shingle with ANY benchmark
+    item; ``n_contam`` counts the doc's distinct shared shingles. Docs too
+    short to emit a shingle are clean by definition (n_contam = 0).
 
-    Scale shape: the corpus side is ONE shingle explode (same normalized
-    tokenization as the dedup family) joined against the DISTINCT benchmark
-    shingle dim — benchmark suites are tiny next to a crawl, so the dim
-    takes ``cache.broadcast_small`` (hinted under
-    ``cache.BROADCAST_ROWS_MAX`` rows, a plain shuffle join above it);
-    the hit count is a map-side-combined groupBy on doc_id. Nothing about
-    the corpus is ever collected or re-scanned."""
-    from .dedup import shingle_df
+    Scale shape: both sides read the cached per-doc xxhash64 shingle
+    arrays of ``dedup._hashed_shingle_arrays(…, CONTAM_N)`` — the same
+    normalized tokenization and the same 8-byte equality the pair engine
+    and the boilerplate census compare. The corpus side is ONE explode of
+    its array table, semi-joined against the DISTINCT benchmark shingle
+    dim — benchmark suites are tiny next to a crawl, so the dim takes
+    ``cache.broadcast_small`` (hinted under ``cache.BROADCAST_ROWS_MAX``
+    rows, a plain shuffle join above it); the hit count is a
+    map-side-combined groupBy on doc_id. Nothing about the corpus is ever
+    collected or re-scanned."""
+    from .dedup import _hashed_shingle_arrays
 
-    # shingle_df dedups WITHIN each row (array_distinct since r6), so a
-    # shingle shared across benchmark items appears once per item here —
-    # the explicit distinct keeps the broadcast dim one-row-per-shingle and
-    # the census below honest (cross-item duplication would inflate it
-    # toward the gate)
-    bench_sh = shingle_df(
-        benchmark.select(F.lit(0).alias("_bid"), F.col("text")), CONTAM_N, id_col="_bid"
-    ).select("shingle").distinct()
+    # the arrays are distinct WITHIN each row, so a shingle shared across
+    # benchmark items appears once per item here — the explicit distinct
+    # keeps the broadcast dim one-row-per-shingle and the census below
+    # honest (cross-item duplication would inflate it toward the gate)
+    bench_sh = (
+        _hashed_shingle_arrays(
+            benchmark.select(F.lit(0).alias("doc_id"), F.col("text")), CONTAM_N
+        )
+        .select(F.explode("sharr").alias("shingle"))
+        .distinct()
+    )
     dim = broadcast_small(bench_sh)
-    doc_sh = shingle_df(docs, CONTAM_N)
+    doc_sh = _hashed_shingle_arrays(docs, CONTAM_N).select(
+        "doc_id", F.explode("sharr").alias("shingle")
+    )
     hits = (
         doc_sh.join(dim, "shingle", "left_semi")
         .groupBy("doc_id")

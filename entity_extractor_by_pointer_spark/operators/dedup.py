@@ -75,59 +75,38 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
     )
 
 
-def _shingle_arr_sql(n: int, hashed: bool, positional: bool = False) -> str:
-    """SQL for a doc's distinct word-n-gram shingle ARRAY — the one place
-    the shingle construction lives (string form over ``w``, xxhash64 form
-    over the word-hash array ``wh``). Short docs (< n words) yield an
-    EMPTY array: Spark's sequence(1, 0) is DESCENDING ([1, 0]) and
-    slice(w, 0, n) throws, so the branch must be guarded, matching the
-    oracle's empty generate_series(1, 0). ``positional=True`` (hashed
-    only) skips the array_distinct so element i is the shingle STARTING at
-    word i — the form a posexplode can rebuild a representative string
-    from; its value set per doc is identical by construction (same
-    ``combine`` expression)."""
-    if hashed:
-        combine = ", ".join(f"wh[i+{j}]" if j else "wh[i]" for j in range(n))
-        dedup_open, dedup_close = ("", "") if positional else ("array_distinct(", ")")
-        return (
-            f"CASE WHEN size(wh) >= {n} THEN "
-            f"{dedup_open}transform(sequence(0, size(wh) - {n}),"
-            f" i -> xxhash64({combine})){dedup_close} "
-            f"ELSE array() END"
-        )
+def _shingle_arr_sql(n: int, positional: bool = False) -> str:
+    """SQL for a doc's distinct word-n-gram shingle ARRAY over the word-hash
+    array ``wh`` — the one place the shingle construction lives: shingle i
+    is the xxhash64 of the n word hashes starting at word i. Short docs
+    (< n words) yield an EMPTY array (sequence(0, -1) would be DESCENDING),
+    matching the oracle's empty generate_series(1, 0). ``positional=True``
+    skips the array_distinct so element i is the shingle STARTING at word
+    i — the form a posexplode can rebuild a representative string from;
+    its value set per doc is identical by construction (same ``combine``
+    expression)."""
+    combine = ", ".join(f"wh[i+{j}]" if j else "wh[i]" for j in range(n))
+    dedup_open, dedup_close = ("", "") if positional else ("array_distinct(", ")")
     return (
-        f"CASE WHEN size(w) >= {n} THEN "
-        f"array_distinct(transform(sequence(1, size(w) - {n - 1}),"
-        f" i -> concat_ws(' ', slice(w, i, {n})))) "
+        f"CASE WHEN size(wh) >= {n} THEN "
+        f"{dedup_open}transform(sequence(0, size(wh) - {n}),"
+        f" i -> xxhash64({combine})){dedup_close} "
         f"ELSE array() END"
-    )
-
-
-def shingle_df(docs: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:
-    """Distinct word n-gram shingles of the ``text`` column per doc: (id, shingle).
-
-    Per-doc dedup happens INSIDE the row (``array_distinct`` over the
-    shingle array before the explode), not via ``dropDuplicates`` — the
-    set semantics are identical, but the r5 formulation shuffled the whole
-    exploded (id, shingle) table just to dedup within each doc."""
-    from ..partitioning import spread_small_scan
-
-    words = spread_small_scan(docs.select(id_col, "text")).select(
-        F.col(id_col), F.split(norm_text(F.col("text")), " ").alias("w")
-    )
-    return words.select(
-        id_col,
-        F.explode(F.expr(_shingle_arr_sql(n, hashed=False))).alias("shingle"),
     )
 
 
 def _hashed_shingle_arrays(docs: DataFrame, n: int = NGRAM_N) -> DataFrame:
     """CACHED (doc_id, sharr) — each doc's distinct word-n-gram shingles as an
-    array of 8-byte xxhash64 values. The pair/verify machinery only ever
-    compares shingles for equality, so the hash replaces the ~25-byte
-    string everywhere (guide §2.3 narrow types); distinct-hash counts are
-    collision-free on every test corpus (a collision needs ~2^32 distinct
-    shingles to become likely).
+    array of 8-byte xxhash64 values, the one shingle representation of the
+    near-dup family (n = ``NGRAM_N`` for the pair engine, MinHash and
+    boilerplate; n = ``curation.CONTAM_N`` for contamination). Every
+    consumer only compares shingles for equality (MinHash rebuilds the
+    string of each DISTINCT hash for its md5 digests), so the hash replaces
+    the ~25-byte string everywhere (guide §2.3 narrow types). A collision
+    needs ~2^32 distinct shingles to become likely, and could only ADD a
+    match (two distinct shingles read as equal), never lose one; at both
+    widths every near-dup query matches its string-shingle oracle
+    hash-exactly at sf0.001, sf0.01 and sf0.1.
 
     The compact ARRAY table (one row per doc) is what gets cached, and
     consumers explode from the InMemoryRelation. This is load-bearing, not
@@ -152,7 +131,7 @@ def _hashed_shingle_arrays(docs: DataFrame, n: int = NGRAM_N) -> DataFrame:
     # (occurrence, distinct) counts of both hashings match exactly at
     # every test SF (verified: 2,620,593 / 27,865 at sf1.0).
     wh = words.select("doc_id", F.expr("transform(w, x -> xxhash64(x))").alias("wh"))
-    return cached(wh.select("doc_id", F.expr(_shingle_arr_sql(n, hashed=True)).alias("sharr")))
+    return cached(wh.select("doc_id", F.expr(_shingle_arr_sql(n)).alias("sharr")))
 
 
 def _attach_pair_arrays(cand: DataFrame, arr_df: DataFrame) -> DataFrame:
@@ -171,25 +150,17 @@ def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     Blocking join on shingle; Jaccard on distinct-shingle sets. Every pair
     sharing ≥1 shingle meets in the blocking join, so the pair set and the
     scores are the oracle's exactly. Skew from common shingles is left to
-    AQE's skew join; the prunes below (size ratio, constant bound) are
-    no-false-prune inequalities, so they cut work without losing a pair.
+    AQE's skew join; the size-ratio prune inside the join is a
+    no-false-prune inequality, so it cuts work without losing a pair.
     """
-    # jaccard ≥ τ needs n_inter ≥ τ(n_a+n_b)/(1+τ) — the PPJoin bound
-    # every prune below must be valid for the ROUNDED acceptance test the
-    # final filter (and the oracle) applies — round(J, 4) ≥ τ admits
-    # J ≥ τ - 5e-5, so the prunes use the slackened τε, not τ. Without the
-    # slack, a pair sitting in the 1e-4 rounding window (e.g. J = 0.79998
-    # at τ = 0.8) could be dropped that the oracle keeps.
+    # the prune must be valid for the ROUNDED acceptance test the final
+    # filter (and the oracle) applies — round(J, 4) ≥ τ admits
+    # J ≥ τ - 5e-5, so it uses the slackened τε, not τ. Without the slack,
+    # a pair sitting in the 1e-4 rounding window (e.g. J = 0.79998 at
+    # τ = 0.8) could be dropped that the oracle keeps.
     threshold = JACCARD_THRESHOLD
-    t_eps = threshold - ROUND4_EPS
-    inter = _pair_intersections(
-        docs,
-        # the PPJoin inequality with both sizes at their corpus-wide
-        # minimum — a constant, so it prunes right at the aggregate
-        const_bound=lambda n_min: t_eps / (1.0 + t_eps) * 2.0 * n_min,
-        # J ≥ τε forces min(n_a,n_b) ≥ τε·max(n_a,n_b): prune inside the join
-        size_ratio=t_eps,
-    )
+    # J ≥ τε forces min(n_a,n_b) ≥ τε·max(n_a,n_b): prune inside the join
+    inter = _pair_intersections(docs, size_ratio=threshold - ROUND4_EPS)
     return (
         inter.withColumn(
             "jaccard",
@@ -202,22 +173,18 @@ def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-def _pair_intersections(
-    docs: DataFrame,
-    const_bound,
-    size_ratio: float | None = None,
-) -> DataFrame:
+def _pair_intersections(docs: DataFrame, size_ratio: float | None = None) -> DataFrame:
     """Shared shingle-overlap engine for the set-similarity family
     (:func:`ngram_jaccard_pairs`, :func:`containment_pairs`): returns
     (id_a, id_b, n_inter, n_a, n_b) for every id_a < id_b pair sharing ≥1
-    shingle that survives the caller's no-false-prune bounds, with EXACT
-    intersection counts from one blocking self-join on shingle — the plan
-    the DuckDB oracles compute.
+    shingle (and, with ``size_ratio``, passing the size-ratio prune), with
+    EXACT intersection counts from one blocking self-join on shingle — the
+    plan the DuckDB oracles compute.
 
-    ``const_bound(n_min)`` is the scorer's qualify inequality with both set
-    sizes at the corpus-wide minimum, a constant lower bound on n_inter;
     ``size_ratio`` (Jaccard only) cuts size-incompatible pairs inside the
-    join."""
+    join. No bound is applied after the pair aggregate: there it would sit
+    in the same Filter as the caller's per-pair predicate, which already
+    implies it, and cut no row of any exchange or aggregate."""
     # (id, n_sh, shingle-hash) rows: the per-doc set size rides along with
     # every shingle row, so pair sizes fall out of the blocking join itself
     # and the two 114M-row size joins of the r5 engine disappear — the
@@ -225,16 +192,6 @@ def _pair_intersections(
     # so the groups are unchanged). The helper caches the per-doc ARRAY
     # table; the explode below reads that cache (cheap).
     arr_df = _hashed_shingle_arrays(docs)
-    # ONE aggregate over the ARRAY table (one row per doc) doubles as (a)
-    # the cache fill and the widening census (count == docs.count()), and
-    # (b) the corpus-wide minimum nonempty set size the constant bound
-    # needs — previously the census was a separate job (a real ~2s pass on
-    # the computed 60k-row containment corpus at sf1.0, where count() is
-    # not metadata-only) and n_min was another.
-    n_docs, n_min = arr_df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.when(F.size("sharr") > 0, F.size("sharr"))).alias("m"),
-    ).first()
     sh = arr_df.select(
         "doc_id",
         F.size("sharr").alias("n_sh"),
@@ -252,7 +209,9 @@ def _pair_intersections(
             (F.col("b.n_sh") >= F.lit(size_ratio) * F.col("a.n_sh"))
             & (F.col("a.n_sh") >= F.lit(size_ratio) * F.col("b.n_sh"))
         )
-    if size_ratio is not None and n_docs > PAIR_AGG_WIDE_DOCS:
+    # the census (count == docs.count(), and the cache fill) runs only for
+    # the size-cut shape: containment never widens, so it pays no job
+    if size_ratio is not None and arr_df.count() > PAIR_AGG_WIDE_DOCS:
         # widen ONLY this aggregate's exchange: at tens of thousands of
         # docs the post-size-cut pair aggregate is the query's dominant
         # stage (tens of millions of groups) and `shuffle.partitions`
@@ -261,9 +220,9 @@ def _pair_intersections(
         # the session default (the global-128 experiment that slowed 5
         # other queries stays rejected). An explicit keyed repartition
         # is AQE-coalesce-proof, and the width tracks the cluster via
-        # defaultParallelism. Gated on the census above (no extra job):
-        # small corpora measured SLOWER with the extra exchange
-        # (1.6->2.6s at 5k docs), and the no-size-cut shape
+        # defaultParallelism. Gated on the census: small corpora measured
+        # SLOWER with the extra exchange (1.6->2.6s at 5k docs), and the
+        # no-size-cut shape
         # (containment) measured slower at every width — both keep the
         # plain map-side-partial aggregate.
         joined = joined.repartition(
@@ -272,22 +231,12 @@ def _pair_intersections(
             F.col("a.doc_id"),
             F.col("b.doc_id"),
         )
-    inter = joined.groupBy(
+    return joined.groupBy(
         F.col("a.doc_id").alias("id_a"),
         F.col("b.doc_id").alias("id_b"),
         F.col("a.n_sh").alias("n_a"),
         F.col("b.n_sh").alias("n_b"),
     ).agg(F.count(F.lit(1)).alias("n_inter"))
-    if n_min is not None:
-        # the constant bound is cheap insurance that the final filter has
-        # little left to scan. No false prune: the caller's per-pair
-        # predicate is strictly tighter. (min is taken over NONEMPTY sets,
-        # matching the exploded-row min this replaced — empty docs join no
-        # pair.)
-        inter = inter.where(
-            F.col("n_inter") >= F.lit(float(const_bound(n_min)))
-        )
-    return inter
 
 
 def containment_pairs(docs: DataFrame) -> DataFrame:
@@ -302,17 +251,10 @@ def containment_pairs(docs: DataFrame) -> DataFrame:
 
     Both directions are emitted when both qualify. Shares the exact
     :func:`_pair_intersections` engine with Jaccard — same blocking join,
-    but the no-false-prune inequality is the directional one: containment
-    ≥ τ in SOME direction needs ``n_inter ≥ τ·min(n_a, n_b)``."""
-    # slackened for the final ROUNDED filter (see ngram_jaccard_pairs):
-    # round(containment, 4) ≥ τ admits containment ≥ τ - 5e-5
+    with no size-ratio prune (a short doc wholly inside a long one is
+    exactly the pair containment exists to find)."""
     threshold = CONTAINMENT_THRESHOLD
-    t_eps = threshold - ROUND4_EPS
-    inter = _pair_intersections(
-        docs,
-        # τ·min(n_a, n_b) ≥ τ·n_min — constant, prunes at the aggregate
-        const_bound=lambda n_min: t_eps * n_min,
-    )
+    inter = _pair_intersections(docs)
     # one explode emits both directed rows per pair — a fwd ∪ rev of two
     # selects evaluated the whole engine subtree twice (blocking join and
     # all) for one count
@@ -335,50 +277,37 @@ def containment_pairs(docs: DataFrame) -> DataFrame:
     return both.where(F.col("containment") >= threshold)
 
 
-def minhash_signatures(docs: DataFrame, hashed_arrays: DataFrame | None = None) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, mh_0 … mh_{k-1}), k = ``MINHASH_K``: min over shingles of
     seeded md5-derived hashes.
 
     One md5 digest yields TWO independent 60-bit hash functions (hex chars
     1-15 and 17-31), so k functions cost k/2 digests — the md5 is the
     dominant per-shingle cost. Mirrored exactly in the DuckDB oracle SQL.
-    Pass ``hashed_arrays`` (a cached per-doc xxhash64 array table from
-    :func:`_hashed_shingle_arrays`) to share a caller's materialization.
 
-    The k/2 digests are computed once per DISTINCT shingle (a census-gated
-    broadcast dim keyed on the word-tuple xxhash64), not once per
-    (doc, shingle) row: on repetitive corpora the distinct vocabulary is
-    orders of magnitude smaller than the occurrence table (sf1.0: 27.9k
-    distinct vs 2.6M rows — a 94x cut in md5 work), and identical strings
-    hash identically so the per-doc minima are unchanged. Above the
-    broadcast gate (a crawl-scale vocabulary, where the dedup factor is ~1
-    and a dim join would add a shuffle for nothing) the digests are
-    computed inline per row exactly as before."""
-    k = MINHASH_K
-
-    def _digests(src, key):
-        # one md5 digest per seed s, split into two 60-bit halves (the
-        # projection's subexpression elimination computes each digest once)
-        halves = []
-        for s in range(k // 2):
-            d = f"md5(CAST(concat(shingle, '#{s}') AS BINARY))"
-            halves += [
-                f"CAST(conv(substring({d}, {start}, 15), 16, 10) AS BIGINT) AS h_{2 * s + i}"
-                for i, start in enumerate((1, 17))
-            ]
-        return src.selectExpr(key, *halves)
-
-    # the per-doc rows only need an 8-byte join
-    # key, so per-occurrence STRING shingles are never built (the 2.6M
-    # interpreted concat_ws builds were the pass's dominant cost) — the
-    # census runs over cheap word-tuple xxhash64 rows, keeping ONE
-    # representative (doc, word-offset) per distinct hash, and only the
-    # ~1/100th distinct vocabulary gets its string rebuilt for the md5
-    # digests. explode_outer + notnull dodges the InferFiltersFromGenerate
-    # trap (a plain explode gains an inferred size()>0 filter whose
-    # pushdown inlines the whole array build interpreted above the scan).
+    The k/2 digests are computed once per DISTINCT shingle (a dim keyed on
+    the word-tuple xxhash64), not once per (doc, shingle) row: on repetitive
+    corpora the distinct vocabulary is orders of magnitude smaller than the
+    occurrence table (sf1.0: 27.9k distinct vs 2.6M rows — a 94x cut in md5
+    work), and identical strings hash identically so the per-doc minima are
+    unchanged. The per-doc rows explode the cached
+    :func:`_hashed_shingle_arrays` table, the one the pair engine and the
+    LSH verify read. The vocabulary census decides only whether the
+    representative join and the digest-dim join carry a broadcast hint:
+    under ``cache.BROADCAST_ROWS_MAX`` rows they do, above it they are
+    plain joins."""
     from ..partitioning import spread_small_scan
 
+    k = MINHASH_K
+    # the per-doc rows only need an 8-byte join key, so per-occurrence
+    # STRING shingles are never built (the 2.6M interpreted concat_ws
+    # builds were the pass's dominant cost) — the census runs over cheap
+    # word-tuple xxhash64 rows, keeping ONE representative (doc,
+    # word-offset) per distinct hash, and only the ~1/100th distinct
+    # vocabulary gets its string rebuilt for the md5 digests.
+    # explode_outer + notnull dodges the InferFiltersFromGenerate trap (a
+    # plain explode gains an inferred size()>0 filter whose pushdown
+    # inlines the whole array build interpreted above the scan).
     # _th (an xxhash64 of the text) tells apart rows that share a doc id, so
     # the representative join below picks exactly one text
     words = spread_small_scan(docs.select("doc_id", "text")).select(
@@ -393,60 +322,43 @@ def minhash_signatures(docs: DataFrame, hashed_arrays: DataFrame | None = None) 
         "doc_id",
         "_th",
         F.posexplode_outer(
-            F.expr(_shingle_arr_sql(NGRAM_N, hashed=True, positional=True))
+            F.expr(_shingle_arr_sql(NGRAM_N, positional=True))
         ).alias("pos", "_hsh"),
     ).where(F.col("_hsh").isNotNull())
     reps = cached(
         occ.groupBy("_hsh").agg(F.min(F.struct("doc_id", "_th", "pos")).alias("r"))
     )
-    if fits_broadcast(reps.count()):
-        # rebuild one string per DISTINCT shingle: broadcast the (hash,
-        # doc, text hash, offset) representatives back onto the word arrays
-        # (equal strings share a hash, so any representative yields the
-        # same string — and therefore the same digests)
-        rep_rows = reps.select(
-            "_hsh",
-            F.col("r.doc_id").alias("doc_id"),
-            F.col("r._th").alias("_th"),
-            F.col("r.pos").alias("pos"),
-        )
-        vocab = F.broadcast(rep_rows).join(
-            words, ["doc_id", "_th"]
-        ).select(
-            "_hsh",
-            F.concat_ws(
-                " ", F.slice("w", F.col("pos") + 1, NGRAM_N)
-            ).alias("shingle"),
-        )
-        dim = _digests(vocab, "_hsh")
-        if hashed_arrays is not None:
-            # a caller with more consumers shares its cached array table
-            rows_src = hashed_arrays.select(
-                "doc_id", F.explode("sharr").alias("_hsh")
-            )
-        else:
-            # signatures are this caller's only array consumer — explode
-            # inline off the scan (explode_outer dodges the inferred
-            # filter, see above) instead of paying a cache fill
-            rows_src = wh_words.select(
-                "doc_id",
-                F.explode_outer(
-                    F.expr(_shingle_arr_sql(NGRAM_N, hashed=True))
-                ).alias("_hsh"),
-            ).where(F.col("_hsh").isNotNull())
-        rows = rows_src.join(F.broadcast(dim), "_hsh")
-        hashed = rows.select("doc_id", *[F.col(f"h_{i}") for i in range(k)])
-    else:
-        # crawl-scale vocabulary (dedup factor ~1): inline digests per
-        # occurrence row, straight off the scan — a dim join would add a
-        # shuffle for nothing
-        sh_inline = words.select(
-            "doc_id",
-            F.explode_outer(
-                F.expr(_shingle_arr_sql(NGRAM_N, hashed=False))
-            ).alias("shingle"),
-        ).where(F.col("shingle").isNotNull())
-        hashed = _digests(sh_inline, "doc_id")
+    hint = F.broadcast if fits_broadcast(reps.count()) else (lambda df: df)
+    # rebuild one string per DISTINCT shingle: join the (hash, doc, text
+    # hash, offset) representatives back onto the word arrays (equal
+    # strings share a hash, so any representative yields the same string —
+    # and therefore the same digests)
+    rep_rows = reps.select(
+        "_hsh",
+        F.col("r.doc_id").alias("doc_id"),
+        F.col("r._th").alias("_th"),
+        F.col("r.pos").alias("pos"),
+    )
+    vocab = hint(rep_rows).join(words, ["doc_id", "_th"]).select(
+        "_hsh",
+        F.concat_ws(" ", F.slice("w", F.col("pos") + 1, NGRAM_N)).alias("shingle"),
+    )
+    # one md5 digest per seed s, split into two 60-bit halves (the
+    # projection's subexpression elimination computes each digest once)
+    halves = []
+    for s in range(k // 2):
+        d = f"md5(CAST(concat(shingle, '#{s}') AS BINARY))"
+        halves += [
+            f"CAST(conv(substring({d}, {start}, 15), 16, 10) AS BIGINT) AS h_{2 * s + i}"
+            for i, start in enumerate((1, 17))
+        ]
+    dim = vocab.selectExpr("_hsh", *halves)
+    rows = (
+        _hashed_shingle_arrays(docs)
+        .select("doc_id", F.explode("sharr").alias("_hsh"))
+        .join(hint(dim), "_hsh")
+    )
+    hashed = rows.select("doc_id", *[F.col(f"h_{i}") for i in range(k)])
     minima = ", ".join(f"min(h_{i}) AS mh_{i}" for i in range(k))
     return (
         hashed.groupBy("doc_id").agg(F.expr(f"struct({minima})").alias("m")).select("doc_id", "m.*")
@@ -486,17 +398,17 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
 
     Only the DISTINCT vocabulary is ever materialized as strings (inside
     the signature pass, where md5 needs them); both the signature rows and
-    the exact-verify pass read the per-doc xxhash64 shingle ARRAYS — one
-    cheap hashed cache shared with the pair engine, in place of the
-    ~10x-heavier string-array cache earlier rounds filled here. The
-    verify scores each candidate pair with ``array_intersect`` — the r5
-    verify shuffled the full 2.6M-row (id, shingle-string) table twice to
-    count overlaps for a few thousand candidate pairs."""
+    the exact-verify pass read the per-doc xxhash64 shingle ARRAYS — the
+    one cached table :func:`_hashed_shingle_arrays` builds, which Spark's
+    cache manager serves to both. The verify scores each candidate pair
+    with ``array_intersect`` — the r5 verify shuffled the full 2.6M-row
+    (id, shingle-string) table twice to count overlaps for a few thousand
+    candidate pairs."""
     arr_h = _hashed_shingle_arrays(docs)
     # one row per doc, k minhash columns — persisting it keeps the k-hash
     # aggregation (the dominant per-shingle md5 cost) out of BOTH sides of
     # the banded self-join
-    sig = cached(minhash_signatures(docs, hashed_arrays=arr_h))
+    sig = cached(minhash_signatures(docs))
     cand = _band_candidates(_minhash_bands(sig), "doc_id", "bh")
     # verify candidates with exact Jaccard via the per-doc hash arrays
     # (the same cached table the signature rows exploded from) — the

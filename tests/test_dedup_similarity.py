@@ -42,7 +42,8 @@ def test_minhash_lsh_finds_exact_and_near_dups(spark, monkeypatch):
 def test_minhash_signatures_with_duplicate_doc_id(spark, monkeypatch):
     """A doc id held by two rows with different text: the distinct-shingle
     dim must rebuild each shingle from the one text its representative came
-    from, so the signatures equal the inline-digest branch's."""
+    from, so the signatures with the dim joins hinted (under the broadcast
+    ceiling) equal those with plain joins (above it)."""
     docs = spark.createDataFrame(
         [
             (1, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -53,13 +54,13 @@ def test_minhash_signatures_with_duplicate_doc_id(spark, monkeypatch):
         ],
         "doc_id long, text string",
     )
-    dim = sorted(tuple(r) for r in dd.minhash_signatures(docs).collect())
+    hinted = sorted(tuple(r) for r in dd.minhash_signatures(docs).collect())
     from entity_extractor_by_pointer_spark import cache
 
     monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 0)
-    inline = sorted(tuple(r) for r in dd.minhash_signatures(docs).collect())
-    assert len(dim) == 4
-    assert dim == inline
+    plain = sorted(tuple(r) for r in dd.minhash_signatures(docs).collect())
+    assert len(hinted) == 4
+    assert hinted == plain
 
 
 def test_simhash_blocking_is_lossless(spark):
@@ -90,10 +91,10 @@ def _spec_words(text):
 
 
 def test_signatures_match_python_spec_on_edge_cases(spark, monkeypatch):
-    """``simhash_signatures``, ``minhash_signatures`` (both the distinct-
-    shingle dim and the inline-digest branch) and ``_minhash_bands`` equal a
-    pure-Python spec with the same md5 hashing on: a doc id held by two
-    rows with differing texts (its words and shingles pool), an
+    """``simhash_signatures``, ``minhash_signatures`` (its dim joins both
+    hinted and plain) and ``_minhash_bands`` equal a pure-Python spec with
+    the same md5 hashing on: a doc id held by two rows with differing
+    texts (its words and shingles pool), an
     all-whitespace text (no signature row), a doc whose bit sums tie at 0
     (the bit stays 0), and a one-word doc whose signature sets bits 30, 31
     and 59 (where the left-deep sum of bit terms widens from INT to
@@ -150,7 +151,7 @@ def test_signatures_match_python_spec_on_edge_cases(spark, monkeypatch):
         for d, mh in spec_mh.items()
         for b in range(dd.MINHASH_BANDS)
     }
-    for ceiling in (cache.BROADCAST_ROWS_MAX, 0):  # distinct-shingle dim, then inline
+    for ceiling in (cache.BROADCAST_ROWS_MAX, 0):  # hinted dim joins, then plain
         monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", ceiling)
         sig = dd.minhash_signatures(docs)
         assert sig.columns == ["doc_id", *[f"mh_{i}" for i in range(dd.MINHASH_K)]]
@@ -571,7 +572,7 @@ def test_positional_hash_builder_matches_distinct_array_builder(spark):
         "doc_id",
         "w",
         F.posexplode_outer(
-            F.expr(dd._shingle_arr_sql(dd.NGRAM_N, hashed=True, positional=True))
+            F.expr(dd._shingle_arr_sql(dd.NGRAM_N, positional=True))
         ).alias("pos", "h"),
     ).where(F.col("h").isNotNull())
     from_positional = {(r["doc_id"], r["h"]) for r in pos_rows.collect()}
@@ -906,6 +907,66 @@ def test_contamination_flags_hand_computed(spark):
     assert got[2] == (0, False)
     assert got[3] == (0, False)
     assert got[4] == (0, False)
+
+
+def test_contamination_flags_match_string_spec_randomized(spark):
+    """Seeded corpora vs a pure-Python spec over STRING word-8-grams: the
+    operator compares 8-byte shingle hashes, and must count exactly the
+    distinct benchmark 8-grams each doc shares. Every trial carries a
+    repeated benchmark item, a benchmark item too short for a shingle, docs
+    shorter than 8 words, docs sharing only a 7-gram with an item, and a
+    doc holding one benchmark 8-gram twice; case and whitespace vary."""
+    import random
+
+    from entity_extractor_by_pointer_spark.operators.curation import (
+        CONTAM_N,
+        contamination_flags,
+    )
+
+    def shingles(text):
+        w = _spec_words(text)
+        return {" ".join(w[i : i + CONTAM_N]) for i in range(len(w) - CONTAM_N + 1)}
+
+    def noisy(words):
+        return rng.choice(["", " ", "\t"]) + "".join(
+            (w.upper() if rng.random() < 0.2 else w) + rng.choice([" ", "  ", "\n"])
+            for w in words
+        )
+
+    rng = random.Random(23)
+    vocab = [f"w{i}" for i in range(12)]
+    for trial in range(3):
+        items = [rng.choices(vocab, k=rng.randint(CONTAM_N, 16)) for _ in range(4)]
+        bench_texts = [" ".join(it) for it in items]
+        bench_texts += [bench_texts[0], " ".join(vocab[: CONTAM_N - 1])]
+        filler = ["zz", "yy"]  # outside the vocab: never extends an overlap
+        texts = []
+        for it in items:
+            s = rng.randint(0, len(it) - CONTAM_N)
+            gram = it[s : s + CONTAM_N]
+            texts += [
+                rng.choices(vocab, k=rng.randint(0, 6)) + gram + rng.choices(vocab, k=3),
+                filler + gram[:-1] + filler,  # a 7-gram of the item only
+                gram + filler + gram,  # one benchmark 8-gram, twice
+                rng.choices(vocab, k=rng.randint(0, CONTAM_N - 1)),  # too short
+                rng.choices(vocab, k=rng.randint(CONTAM_N, 20)),
+            ]
+        docs = spark.createDataFrame(
+            [(i, noisy(t)) for i, t in enumerate(texts)], "doc_id long, text string"
+        )
+        bench = spark.createDataFrame([(noisy(t.split(" ")),) for t in bench_texts], "text string")
+        bench_set = set().union(*(shingles(t) for t in bench_texts))
+        want = {}
+        for r in docs.collect():
+            n = len(shingles(r["text"]) & bench_set)
+            want[r["doc_id"]] = (n, n >= 1)
+        got = {
+            r["doc_id"]: (r["n_contam"], r["contaminated"])
+            for r in contamination_flags(docs, bench).collect()
+        }
+        assert got == want, (trial, got, want)
+        assert all(want[5 * k + 2][0] == 1 for k in range(len(items)))  # twice, counted once
+        assert all(want[5 * k + 1][0] == 0 for k in range(len(items)))  # 7-gram only
 
 
 def test_source_stats_hand_computed(spark):

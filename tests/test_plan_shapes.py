@@ -202,15 +202,32 @@ def _balance(spark):
     return balance_sources(docs)
 
 
-@pytest.mark.parametrize("build", [_contamination, _balance], ids=["contamination", "balance"])
-def test_curation_dim_broadcast_is_census_gated(no_auto_broadcast, monkeypatch, build):
-    """The benchmark-shingle dim (contamination) and the per-source
-    threshold dim (balance) are hinted under the ceiling and joined plain
-    above it."""
+def _minhash(spark):
+    from entity_extractor_by_pointer_spark.operators import dedup as dd
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon"), (2, "one two three four five")],
+        "doc_id long, text string",
+    )
+    return dd.minhash_signatures(docs)
+
+
+@pytest.mark.parametrize(
+    "build, n_hinted",
+    [(_contamination, 1), (_balance, 1), (_minhash, 2)],
+    ids=["contamination", "balance", "minhash"],
+)
+def test_census_gated_dims_broadcast_only_under_ceiling(
+    no_auto_broadcast, monkeypatch, build, n_hinted
+):
+    """Every census-gated dim is hinted under the ceiling and joined plain
+    above it: the benchmark-shingle dim (contamination), the per-source
+    threshold dim (balance), and MinHash's representative and digest dims
+    (two joins, one vocabulary census)."""
     from entity_extractor_by_pointer_spark import cache
 
     below = _plan(build(no_auto_broadcast))
-    assert "BroadcastHashJoin" in below, below
+    assert below.count("BroadcastHashJoin") == n_hinted, below
     monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 0)
     above = _plan(build(no_auto_broadcast))
     assert "BroadcastHashJoin" not in above, above

@@ -13,6 +13,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
+# DuckDB shares this process with the Spark driver (8g heap, see
+# session.get_spark); left at its default (80% of RAM) an expensive oracle
+# and the driver together exhaust a 16 GB host. Above the limit DuckDB
+# spills to a temp dir in the process's private scratch dir.
+DUCKDB_MEMORY_LIMIT = "4GB"
 
 
 def value_hash(cols: list[str], rows: list[tuple]) -> str:
@@ -48,12 +53,17 @@ def main(only: list[str] | None = None) -> int:
     import duckdb
 
     import __spark_entry__ as entry_mod
-    from entity_extractor_by_pointer_spark.session import get_spark
+    from entity_extractor_by_pointer_spark.session import get_spark, scratch_dir
     from entity_extractor_by_pointer_spark.sources.tables import TABLES
 
     spark = get_spark(master="local[16]")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
+    con = duckdb.connect(
+        config={
+            "memory_limit": DUCKDB_MEMORY_LIMIT,
+            "temp_directory": os.path.join(scratch_dir(), "duckdb_tmp"),
+        }
+    )
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
