@@ -640,8 +640,9 @@ def q_benchmark_contamination(spark, sf_dir):
     "benchmark" is derived deterministically (30-word prefixes of every
     97th doc) so both engines build the identical suite. Spark compares
     xxhash64 8-gram hashes where the oracle compares the 8-gram strings:
-    the corpus side is one explode of its cached shingle-hash arrays
-    against the census-gated-broadcast benchmark shingle dim."""
+    the corpus side is one explode of its cached shingle-hash arrays,
+    semi-joined plain against the benchmark shingle dim, which the planner
+    broadcasts from its real size."""
     from entity_extractor_by_pointer_spark.functions.textstats import norm_text
     from entity_extractor_by_pointer_spark.operators.curation import (
         contamination_flags,
@@ -2280,7 +2281,7 @@ def q_doc_boilerplate(spark, sf_dir):
     """Repeated-passage (boilerplate) census per document: distinct shingle
     count, count with corpus df ≥ 4, and their ratio — the C4/RefinedWeb
     boilerplate-removal signal. One shingle scan feeds census + per-doc
-    counts; the hot set is broadcast."""
+    counts; the hot set is joined plain and the planner broadcasts it."""
     from entity_extractor_by_pointer_spark.operators.curation import boilerplate_stats
 
     return boilerplate_stats(_t(spark, sf_dir, "documents"))

@@ -17,21 +17,22 @@ Contract:
   fixtures). ``release_all`` is safe at any time — Spark recomputes an
   unpersisted frame from lineage if it is used again.
 
-The same module owns the broadcast ceiling: a frame whose size depends on
-the data is hinted for broadcast only under a censused row count
-(:func:`broadcast_small`, or :func:`fits_broadcast` where the caller
-already holds the count).
+The same module owns the broadcast ceiling of forced hints:
+:func:`fits_broadcast` tells a caller that already holds a dim's row count
+whether the dim may carry one. Its one caller is MinHash, whose digest dim
+is the output of a join, so the planner's static size estimate would never
+broadcast it. Every other data-dependent dim is joined plain and left to
+``autoBroadcastJoinThreshold``, which broadcasts from the dim's real size.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-# the one broadcast ceiling for data-dependent dims: short rows, so ~1M rows
-# ≈ tens of MB. Forced hints override autoBroadcastJoinThreshold and OOM at
-# crawl scale instead of degrading (round-3/4 judge pattern).
+# the one ceiling on forced broadcast hints of data-dependent dims: short
+# rows, so ~1M rows ≈ tens of MB. Forced hints override
+# autoBroadcastJoinThreshold and OOM at crawl scale instead of degrading.
 BROADCAST_ROWS_MAX = 1_000_000
 
 _LIVE: list[DataFrame] = []
@@ -47,14 +48,6 @@ def cached(df: DataFrame) -> DataFrame:
 def fits_broadcast(rows: int) -> bool:
     """Whether a dim of ``rows`` rows may carry a forced broadcast hint."""
     return rows <= BROADCAST_ROWS_MAX
-
-
-def broadcast_small(df: DataFrame) -> DataFrame:
-    """Cache ``df``, count it (the count doubles as the cache fill) and
-    hint it for broadcast iff :func:`fits_broadcast` — above the ceiling
-    the join is left plain and AQE decides."""
-    df = cached(df)
-    return F.broadcast(df) if fits_broadcast(df.count()) else df
 
 
 def release_all() -> int:

@@ -19,7 +19,8 @@ in whole-stage codegen:
 - **SimHash**: W-bit signature from md5 word hashes; near-dups = signature
   pairs within Hamming distance d, candidates blocked on signature bands.
 - **embedding cosine**: exact pairwise cosine above a threshold (baseline);
-  the ANN module (``similarity.py``) provides the LSH-bucketed scale path.
+  :func:`embedding_cosine_pairs_blocked` is the LSH-bucketed scale path
+  (its seeded hyperplanes come from ``similarity.lsh_planes``).
 
 The md5-int64 primitive is shared with DuckDB so every operator has an exact
 SQL oracle.
@@ -632,7 +633,7 @@ def embedding_cosine_pairs(
     """Exact near-duplicate pairs by cosine ≥ threshold (baseline path).
 
     O(n²/2) — correct at any scale but quadratic; the LSH-bucketed variant
-    in ``similarity.py`` is the crawl-scale path. Dot products run as
+    :func:`embedding_cosine_pairs_blocked` is the crawl-scale path. Dot products run as
     built-in higher-order functions (zip_with + aggregate) in doubles.
     """
     n = embeddings.select(

@@ -96,7 +96,7 @@ def test_kmeans_assignment_is_aggregate_not_window(spark):
     release_all()
 
 
-def test_pmi_df_broadcast_is_census_gated(spark):
+def test_pmi_df_joins_always_broadcast(spark):
     """The PMI marginal joins always carry the broadcast hint: the df table
     has one row per canonical entity, at most 9, so no census gates it.
     With autoBroadcastJoinThreshold disabled, the hint is the ONLY way a
@@ -118,41 +118,6 @@ def test_pmi_df_broadcast_is_census_gated(spark):
         release_all()
 
 
-def test_boilerplate_hot_broadcast_is_census_gated(spark, monkeypatch):
-    from entity_extractor_by_pointer_spark import cache
-    from entity_extractor_by_pointer_spark.cache import release_all
-    from entity_extractor_by_pointer_spark.operators import curation
-    from entity_extractor_by_pointer_spark.operators.curation import boilerplate_stats
-
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog") for i in range(10)]
-        + [(100 + i, f"unique text number {i} with words {i*7}") for i in range(5)],
-        "doc_id long, text string",
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        hot_max = cache.BROADCAST_ROWS_MAX
-        below = _plan(boilerplate_stats(docs))
-        assert "BroadcastHashJoin" in below, below
-        # 15 docs, at/below the census threshold: the hint is applied without
-        # counting the hot set, so even a 1-row ceiling does not withhold it
-        monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 1)
-        uncensused = _plan(boilerplate_stats(docs))
-        assert "BroadcastHashJoin" in uncensused, uncensused
-        # censused tier (15 docs above the threshold forces the hot-set
-        # count): hint withheld above the ceiling, applied under it
-        monkeypatch.setattr(curation, "BOILERPLATE_CENSUS_DOCS", 14)
-        censused_big = _plan(boilerplate_stats(docs))
-        assert "BroadcastHashJoin" not in censused_big, censused_big
-        monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", hot_max)
-        censused = _plan(boilerplate_stats(docs))
-        assert "BroadcastHashJoin" in censused, censused
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        release_all()
-
-
 @pytest.fixture
 def no_auto_broadcast(spark):
     """autoBroadcastJoinThreshold off, so a forced hint is the only way a
@@ -166,71 +131,63 @@ def no_auto_broadcast(spark):
     release_all()
 
 
-def test_broadcast_ceiling_is_inclusive(no_auto_broadcast, monkeypatch):
-    """``fits_broadcast`` and ``broadcast_small`` read the one ceiling at
-    call time: a dim of exactly ``BROADCAST_ROWS_MAX`` rows is hinted, one
-    row more is not."""
+def test_broadcast_ceiling_is_inclusive(monkeypatch):
+    """``fits_broadcast`` reads the one ceiling at call time: a dim of
+    exactly ``BROADCAST_ROWS_MAX`` rows may be hinted, one row more may
+    not."""
     from entity_extractor_by_pointer_spark import cache
 
-    spark = no_auto_broadcast
     monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 5)
     assert cache.fits_broadcast(5) and not cache.fits_broadcast(6)
-    fact = spark.range(20)
-    at = _plan(fact.join(cache.broadcast_small(spark.range(5)), "id"))
-    assert "BroadcastHashJoin" in at, at
-    above = _plan(fact.join(cache.broadcast_small(spark.range(6)), "id"))
-    assert "BroadcastHashJoin" not in above, above
 
 
-def _contamination(spark):
-    from entity_extractor_by_pointer_spark.operators.curation import contamination_flags
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    docs = spark.createDataFrame(
-        [(1, base + " extra words"), (2, "short doc")], "doc_id long, text string"
-    )
-    bench = spark.createDataFrame([(base,)], "text string")
-    return contamination_flags(docs, bench)
-
-
-def _balance(spark):
-    from entity_extractor_by_pointer_spark.operators.curation import balance_sources
-
-    docs = spark.createDataFrame(
-        [(i, f"s{i % 3}") for i in range(30)], "doc_id long, source string"
-    )
-    return balance_sources(docs)
-
-
-def _minhash(spark):
+def test_minhash_dims_broadcast_only_under_ceiling(no_auto_broadcast, monkeypatch):
+    """MinHash's representative and digest dims (two joins, one vocabulary
+    census) are hinted under the ceiling and joined plain above it."""
+    from entity_extractor_by_pointer_spark import cache
     from entity_extractor_by_pointer_spark.operators import dedup as dd
 
-    docs = spark.createDataFrame(
+    docs = no_auto_broadcast.createDataFrame(
         [(1, "alpha beta gamma delta epsilon"), (2, "one two three four five")],
         "doc_id long, text string",
     )
-    return dd.minhash_signatures(docs)
+    below = _plan(dd.minhash_signatures(docs))
+    assert below.count("BroadcastHashJoin") == 2, below
+    monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 0)
+    above = _plan(dd.minhash_signatures(docs))
+    assert "BroadcastHashJoin" not in above, above
 
 
 @pytest.mark.parametrize(
-    "build, n_hinted",
-    [(_contamination, 1), (_balance, 1), (_minhash, 2)],
-    ids=["contamination", "balance", "minhash"],
+    "query",
+    [E.q_doc_boilerplate, E.q_benchmark_contamination, E.q_source_balance],
+    ids=["boilerplate", "contamination", "balance"],
 )
-def test_census_gated_dims_broadcast_only_under_ceiling(
-    no_auto_broadcast, monkeypatch, build, n_hinted
-):
-    """Every census-gated dim is hinted under the ceiling and joined plain
-    above it: the benchmark-shingle dim (contamination), the per-source
-    threshold dim (balance), and MinHash's representative and digest dims
-    (two joins, one vocabulary census)."""
-    from entity_extractor_by_pointer_spark import cache
+def test_curation_dims_carry_no_forced_hint(spark, query):
+    """The curation dims (boilerplate's hot-shingle set, the benchmark
+    shingle dim, the per-source threshold dim) are joined plain: with
+    autoBroadcastJoinThreshold off no broadcast appears, and at the session
+    default AQE broadcasts them from their real size. The parquet queries
+    carry size statistics; ``_plan`` reads the initial plan, so the second
+    half reads the final plan after ``collect()``."""
+    from entity_extractor_by_pointer_spark.cache import release_all
 
-    below = _plan(build(no_auto_broadcast))
-    assert below.count("BroadcastHashJoin") == n_hinted, below
-    monkeypatch.setattr(cache, "BROADCAST_ROWS_MAX", 0)
-    above = _plan(build(no_auto_broadcast))
-    assert "BroadcastHashJoin" not in above, above
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        off = _plan(query(spark, SF))
+        assert "BroadcastHashJoin" not in off, off
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        release_all()
+    try:
+        df = query(spark, SF)
+        df.collect()
+        final = _plan(df)
+        assert "isFinalPlan=true" in final, final
+        assert "BroadcastHashJoin" in final, final
+    finally:
+        release_all()
 
 
 def test_profile_distincts_are_exact_per_column_union(spark):
