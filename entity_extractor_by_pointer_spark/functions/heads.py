@@ -101,16 +101,17 @@ def add_mask_tril(logits: np.ndarray, mask: np.ndarray) -> np.ndarray:
 
 
 class GlobalPointerHead:
-    """EffiGlobalPointer head: hidden states → (B, C, L, L) span logits.
+    """EffiGlobalPointer head: hidden states → span scores, in float32 (like
+    the reference's torch-default tensors).
 
-    Runs in float32 (like the reference's torch-default tensors) and applies
-    padding/tril exclusion as a single ADDITIVE penalty pass instead of the
-    reference's multiplicative ``x*mask + (−1e12)(1−mask)`` — on every valid
-    (unmasked, start ≤ end) cell the logit is bit-identical, and invalid
-    cells stay ≤ −1e12, so decoded spans and their scores are unchanged
-    while the (B, C, L, L) tensor is touched once, not six times.
-    ``add_mask_tril`` above remains the reference-exact spec; the
-    equivalence is pinned by ``tests/test_heads.py``.
+    ``qk_and_bias`` is the scoring form production runs: the fused decode in
+    ``PointerNerModel.predict_batch`` assembles only the start rows that can
+    fire. ``raw_scores`` assembles the full (B, C, L, L) tensor from the same
+    pieces; it is the spec that decode is pinned against. Neither applies the
+    reference's padding/tril mask: on every valid (unmasked, start ≤ end)
+    cell the unmasked logit equals the reference-masked one bit for bit, and
+    the decoders enforce validity. ``add_mask_tril`` above remains the
+    reference-exact mask; ``tests/test_heads.py`` pins the equality.
     """
 
     def __init__(self, hidden_size: int, num_labels: int):
@@ -123,11 +124,11 @@ class GlobalPointerHead:
         self.num_labels = num_labels
 
     def raw_scores(self, hidden: np.ndarray) -> np.ndarray:
-        """(B, C, L, L) span scores WITHOUT the validity penalty.
+        """(B, C, L, L) span scores WITHOUT the reference's validity mask.
 
         On every valid cell this equals the reference-masked output
-        bit-for-bit (the penalty adds exactly 0.0 there). Callers that skip
-        the penalty must enforce validity at decode time — ``decode_gp``
+        bit-for-bit (the mask leaves those cells unchanged). Callers must
+        enforce validity at decode time — ``decode_gp``
         already checks ``start ≤ end`` and offset-mapping membership, which
         after per-doc cropping is precisely the valid set. This full tensor
         is the spec the fused decode in ``PointerNerModel.predict_batch`` is
@@ -167,17 +168,6 @@ class GlobalPointerHead:
         qk = (qw @ kw.transpose(0, 2, 1)) * np.float32(1.0 / INNER_DIM**0.5)
         dense = (hidden @ self.w2 + self.b2).transpose(0, 2, 1) * np.float32(0.5)
         return qk, dense
-
-    def __call__(self, hidden: np.ndarray, attention_mask: np.ndarray) -> np.ndarray:
-        # hidden: (B, L, H); attention_mask: (B, L)
-        logits = self.raw_scores(hidden)
-        seq_len = logits.shape[-1]
-        # additive penalty: padding rows/cols and the strict lower triangle
-        m = attention_mask.astype(np.float32)
-        valid = m[:, :, None] * m[:, None, :]  # (B, L, L)
-        valid *= np.triu(np.ones((seq_len, seq_len), dtype=np.float32))
-        logits += ((valid - 1.0) * np.float32(NEG_INF))[:, None]
-        return logits
 
 
 class BinaryPointerHead:

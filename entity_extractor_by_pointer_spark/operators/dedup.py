@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..cache import cached, fits_broadcast
 from ..functions.textstats import fingerprint64, md5_int64, norm_text
+from .similarity import _dot, _norm, lsh_planes
 
 NGRAM_N = 3
 MINHASH_K = 16
@@ -558,19 +559,10 @@ def embedding_cosine_pairs_blocked(embeddings: DataFrame) -> DataFrame:
     is ≥ 3e-7 (measured), eleven orders above float64 summation-order noise,
     so bucket signs are stable regardless of fold order.
     """
-    from .similarity import lsh_planes
-
     n_bands, n_ppb = 10, 16
     planes = lsh_planes(n_bands * n_ppb)
-    n = embeddings.select(
-        F.col("vec_id"),
-        F.col("embedding").cast("array<double>").alias("v"),
-        F.sqrt(
-            F.aggregate(
-                F.col("embedding").cast("array<double>"), F.lit(0.0), lambda acc, x: acc + x * x
-            )
-        ).alias("norm"),
-    )
+    v = F.col("embedding").cast("array<double>")
+    n = embeddings.select(F.col("vec_id"), v.alias("v"), _norm(v).alias("norm"))
     n = cached(n)
 
     import numpy as np
@@ -612,9 +604,7 @@ def embedding_cosine_pairs_blocked(embeddings: DataFrame) -> DataFrame:
     cand = _band_candidates(buckets, "vec_id", "bucket")
     va = n.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
     vb = n.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+    dot = _dot(F.col("va"), F.col("vb"))
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -633,20 +623,15 @@ def embedding_cosine_pairs(
     """Exact near-duplicate pairs by cosine ≥ threshold (baseline path).
 
     O(n²/2) — correct at any scale but quadratic; the LSH-bucketed variant
-    :func:`embedding_cosine_pairs_blocked` is the crawl-scale path. Dot products run as
-    built-in higher-order functions (zip_with + aggregate) in doubles.
+    :func:`embedding_cosine_pairs_blocked` is the crawl-scale path. Dots and norms
+    are the ANN operators' ordered folds (``similarity._dot``/``_norm``) in doubles.
     """
-    n = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        F.sqrt(F.aggregate(F.col(vec_col).cast("array<double>"), F.lit(0.0), lambda acc, x: acc + x * x)).alias("norm"),
-    )
+    v = F.col(vec_col).cast("array<double>")
+    n = embeddings.select(F.col(id_col), v.alias("v"), _norm(v).alias("norm"))
     a = n.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
     b = n.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
     pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+    dot = _dot(F.col("va"), F.col("vb"))
     return (
         pairs.withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 4))
         .where(F.col("cosine") >= threshold)

@@ -1,17 +1,19 @@
 """Similarity search over embedding columns.
 
-- ``ann_topk_bruteforce``: exact cosine top-k — the correctness baseline.
-  Query set × corpus as a broadcast join (queries are small), dot products
-  as built-in higher-order functions, per-query top-k via window rank.
-- ``ann_topk_lsh``: the scale path — random-hyperplane LSH buckets the
-  corpus; each query only scans its own bucket (plus optional multi-probe
-  neighbors). Hyperplanes are seeded numpy constants baked into the plan as
-  array literals, so the same planes are reproducible in the DuckDB oracle.
-- ``ivf_assign``: IVF-style coarse quantization — assign each vector to the
-  nearest of K seeded centroids; the probe path scans matching cells only.
+One exact cosine top-k kernel (``_cosine_topk``: the query batch broadcast,
+ordered-fold dot products over doubles, a per-query window rank) under three
+candidate rules, i.e. join keys:
+
+- ``ann_topk_bruteforce``: none, every corpus vector (a broadcast
+  nested-loop join) — the correctness baseline.
+- ``ann_topk_lsh``: the query's random-hyperplane LSH bucket. The seeded
+  numpy planes are baked into the plan as array literals, so the DuckDB
+  oracle reproduces the same buckets.
+- ``ann_topk_ivf``: the query's ``nprobe`` nearest cells of a corpus that
+  ``ivf_assign`` quantized to K seeded centroids.
 
 At 100 TB the broadcast side is the query batch and the corpus stays
-partitioned; no shuffle of the corpus happens in either path (bucketing is a
+partitioned; no shuffle of the corpus happens in any path (bucketing is a
 narrow projection + the final top-k is a partial aggregation per partition
 coalesced by AQE).
 """
@@ -43,30 +45,40 @@ def _norm(v):
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
 
 
-def ann_topk_bruteforce(embeddings: DataFrame, queries: DataFrame, k: int) -> DataFrame:
-    """(query_id, neighbor_id, rank): exact cosine top-k per query, over
-    (vec_id, embedding) rows.
+def _cosine_topk(corpus: DataFrame, queries: DataFrame, k: int, key: str | None = None) -> DataFrame:
+    """(query_id, neighbor_id, rank): the exact cosine top-k of each query
+    among the corpus vectors, both sides ``(vec_id, embedding[, key])`` rows.
 
-    Ties broken by neighbor id ascending for determinism.
+    Vectors are cast to double; a query is never its own neighbour, and ties
+    break by neighbor id ascending. With ``key``, a query scores only the
+    corpus rows that share its key (an equi-join); without it, every corpus
+    row (a broadcast nested-loop join). A zero-norm vector on either side of
+    a scored pair divides by zero: under ANSI mode (Spark's default) the
+    query raises ``DIVIDE_BY_ZERO``.
     """
-    corpus = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("vc"),
-        _norm(F.col("embedding").cast("array<double>")).alias("nc"),
+
+    def side(df, id_name, v_name, n_name):
+        v = F.col("embedding").cast("array<double>")
+        keyed = [F.col(key)] if key else []
+        return df.select(F.col("vec_id").alias(id_name), v.alias(v_name), *keyed, _norm(v).alias(n_name))
+
+    scored = (
+        side(corpus, "neighbor_id", "vc", "nc")
+        .join(F.broadcast(side(queries, "query_id", "vq", "nq")), key)
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cosine", _dot(F.col("vq"), F.col("vc")) / (F.col("nq") * F.col("nc")))
     )
-    qs = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("vq"),
-        _norm(F.col("embedding").cast("array<double>")).alias("nq"),
-    )
-    joined = corpus.join(F.broadcast(qs), F.col("query_id") != F.col("neighbor_id"))
-    scored = joined.withColumn("cosine", _dot(F.col("vq"), F.col("vc")) / (F.col("nq") * F.col("nc")))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank")
     )
+
+
+def ann_topk_bruteforce(embeddings: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank): exact cosine top-k over every corpus vector."""
+    return _cosine_topk(embeddings, queries, k)
 
 
 def lsh_planes(n_planes: int = LSH_PLANES) -> np.ndarray:
@@ -86,41 +98,15 @@ def bucket_expr(vec_col, planes: np.ndarray):
 def ann_topk_lsh(embeddings: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's bucket under
     the seeded :func:`lsh_planes`."""
-    planes = lsh_planes()
-    corpus = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("vc"),
-    ).withColumn("bucket", bucket_expr(F.col("vc"), planes)).withColumn("nc", _norm(F.col("vc")))
-    qs = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("vq"),
-    ).withColumn("bucket", bucket_expr(F.col("vq"), planes)).withColumn("nq", _norm(F.col("vq")))
-    joined = corpus.join(F.broadcast(qs), "bucket").where(F.col("query_id") != F.col("neighbor_id"))
-    scored = joined.withColumn("cosine", _dot(F.col("vq"), F.col("vc")) / (F.col("nq") * F.col("nc")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
+    bucket = bucket_expr(F.col("embedding").cast("array<double>"), lsh_planes())
+    return _cosine_topk(
+        embeddings.withColumn("bucket", bucket), queries.withColumn("bucket", bucket), k, "bucket"
     )
 
 
 def ivf_centroids() -> np.ndarray:
     c = np.random.default_rng(LSH_SEED + 1).normal(0, 1.0, (IVF_CELLS, ANN_DIM))
     return c / np.linalg.norm(c, axis=1, keepdims=True)
-
-
-def best_cell_expr(v, centroids: np.ndarray):
-    """Column: nearest-centroid index by cosine (ties → lowest index:
-    array_position finds the FIRST max — mirrored in the oracle's ORDER BY
-    cell ASC). Built as an array argmax so each centroid score is computed
-    exactly once; a when-chain argmax re-embeds every prior score expression
-    in each branch and blows up the codegen tree (~10× slower measured)."""
-    nv = _norm(v)
-    scores = F.array(
-        *[_dot(v, F.array(*[F.lit(float(x)) for x in c])) / nv for c in centroids]
-    )
-    return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
 
 
 def ivf_assign(embeddings: DataFrame) -> DataFrame:
@@ -133,15 +119,18 @@ def ivf_assign(embeddings: DataFrame) -> DataFrame:
 
     v = F.col("embedding").cast("array<double>")
     return spread_small_scan(embeddings.select("vec_id", "embedding")).select(
-        F.col("vec_id"), v.alias("embedding"), best_cell_expr(v, ivf_centroids()).alias("cell")
+        F.col("vec_id"), v.alias("embedding"), top_cells_expr(v, ivf_centroids(), 1)[0].alias("cell")
     )
 
 
 def top_cells_expr(v, centroids: np.ndarray, nprobe: int):
     """Column: the ``nprobe`` nearest centroid indices by cosine, ordered
-    best-first (ties → lower cell, matching ``best_cell_expr`` and the
-    oracle's ``ORDER BY score DESC, cell ASC``). Scores are the same
-    ordered-fold doubles as ``best_cell_expr``, so nprobe=1 reduces to it."""
+    best-first (ties → lower cell, matching the oracle's ``ORDER BY score
+    DESC, cell ASC``). Built as one sorted array of (score, cell) structs so
+    each centroid score is computed exactly once; a when-chain argmax
+    re-embeds every prior score expression in each branch and blows up the
+    codegen tree (~10× slower measured). A zero-norm ``v`` divides by zero:
+    under ANSI mode (Spark's default) the query raises ``DIVIDE_BY_ZERO``."""
     nv = _norm(v)
     entries = F.array(
         *[
@@ -168,30 +157,12 @@ def ann_topk_ivf(assigned: DataFrame, queries: DataFrame, nprobe: int = 1) -> Da
     centroid math over the corpus, no corpus shuffle. Exact within the
     probed cells; recall across cells is the standard IVF trade-off that
     ``nprobe`` trades back."""
-    centroids = ivf_centroids()
-    corpus = assigned.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("vc"),
-        F.col("cell").cast("int").alias("cell"),
-    ).withColumn("nc", _norm(F.col("vc")))
-    qs = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("vq"),
-    )
-    qs = qs.withColumn(
-        "cell", F.explode(top_cells_expr(F.col("vq"), centroids, nprobe))
-    ).withColumn("nq", _norm(F.col("vq")))
-    joined = corpus.join(F.broadcast(qs), "cell").where(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = joined.withColumn(
-        "cosine", _dot(F.col("vq"), F.col("vc")) / (F.col("nq") * F.col("nc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= ANN_K)
-        .select("query_id", "neighbor_id", "rank")
+    cells = top_cells_expr(F.col("embedding").cast("array<double>"), ivf_centroids(), nprobe)
+    return _cosine_topk(
+        assigned.withColumn("cell", F.col("cell").cast("int")),
+        queries.withColumn("cell", F.explode(cells)),
+        ANN_K,
+        "cell",
     )
 
 

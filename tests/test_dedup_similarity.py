@@ -263,6 +263,68 @@ def test_ann_bruteforce_matches_numpy(spark):
         assert [n for _rk, n in sorted(by_q[q])] == order
 
 
+def _fold_dot(a, b):
+    """Left-to-right double fold: the arithmetic of ``similarity._dot``."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
+def test_ann_topk_lsh_matches_spec(spark):
+    """``ann_topk_lsh`` against a spec: a vector's bucket is the sign pattern
+    of its projections on ``lsh_planes()``, and a query's neighbours are the
+    exact cosine top-k of the other vectors in its bucket, ties to the lower
+    id. The spec folds dots and norms in Spark's order, so equal vectors
+    score equal bits: every base vector has three copies, so ties decide
+    ranks (a query's own copies tie at the top)."""
+    import math
+
+    rng = np.random.default_rng(12)
+    # a shared direction plus noise packs the vectors into a few buckets
+    base = rng.normal(size=sim.ANN_DIM) + 0.9 * rng.normal(size=(16, sim.ANN_DIM))
+    vecs = [[float(x) for x in base[i % 16]] for i in range(48)]  # i, i+16, i+32 equal
+    df = spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<double>")
+    k, n_q = 4, 6
+    got = {}
+    for r in sim.ann_topk_lsh(df, df.where(f"vec_id < {n_q}"), k).collect():
+        got.setdefault(r["query_id"], []).append((r["rank"], r["neighbor_id"]))
+
+    planes = [p.tolist() for p in sim.lsh_planes()]
+    bucket = [sum(1 << p for p, pl in enumerate(planes) if _fold_dot(v, pl) > 0) for v in vecs]
+    norm = [math.sqrt(_fold_dot(v, v)) for v in vecs]
+    n_cut = 0
+    for q in range(n_q):
+        mates = [c for c in range(48) if c != q and bucket[c] == bucket[q]]
+        cos = {c: _fold_dot(vecs[q], vecs[c]) / (norm[q] * norm[c]) for c in mates}
+        want = sorted(mates, key=lambda c: (-cos[c], c))[:k]
+        assert [n for _rk, n in sorted(got.get(q, []))] == want
+        assert want[:2] == [q + 16, q + 32]
+        n_cut += len(mates) > k
+    # the spec is not vacuous: buckets exclude candidates, and the top-k cuts
+    assert len({bucket[q] for q in range(n_q)}) > 1 and n_cut > 0
+
+
+def test_ann_topk_raises_on_zero_norm_vector(spark):
+    """A zero vector has no cosine. Under ANSI mode (Spark's default) the
+    brute-force and LSH top-k and the IVF assignment divide by its zero norm
+    and raise ``DIVIDE_BY_ZERO``."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    rng = np.random.default_rng(13)
+    zero = [0.0] * sim.ANN_DIM
+    rows = [(0, zero), (1, zero)]  # both in LSH bucket 0, so they meet there
+    rows += [(i, [float(x) for x in rng.normal(size=sim.ANN_DIM)]) for i in range(2, 10)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    qs = df.where("vec_id = 0")
+    for run in (
+        lambda: sim.ann_topk_bruteforce(df, qs, 3).collect(),
+        lambda: sim.ann_topk_lsh(df, qs, 3).collect(),
+        lambda: sim.ivf_assign(df).collect(),
+    ):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            run()
+
+
 def test_ivf_assign_covers_all_vectors(spark):
     rng = np.random.default_rng(6)
     df = spark.createDataFrame(
@@ -649,16 +711,6 @@ def test_ann_topk_ivf_materialized_probe_and_nprobe(spark, tmp_path, monkeypatch
     }
     got1 = {(r[0], r[1]) for r in assigned}
     assert len(got2 & brute) >= len(got1 & brute)
-
-    # nprobe=1 via top_cells_expr == best_cell_expr (same argmax tie rule)
-    from pyspark.sql import functions as F
-
-    cents = sim.ivf_centroids()
-    both = df.select(
-        sim.best_cell_expr(F.col("embedding"), cents).alias("best"),
-        sim.top_cells_expr(F.col("embedding"), cents, 1)[0].alias("top1"),
-    )
-    assert both.where("best != top1").count() == 0
 
 
 def test_boilerplate_stats_hand_computed(spark, monkeypatch):

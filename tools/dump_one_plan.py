@@ -201,7 +201,9 @@ def mask_plan(plan: str) -> str:
 
 def masked_plans(names: list[str]):
     """(name, masked formatted plan) of each named queries() entry."""
-    spark = get_spark(master="local[8]")
+    # both fixed: the task slots and the shuffle partition count are printed
+    # in the plans, so the dump must not read them from the caller's shell
+    spark = get_spark(master="local[8]", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry_mod.queries()
     for name in names:
